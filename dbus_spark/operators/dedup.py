@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbus_spark.operators.text import fingerprint, tokens
+from dbus_spark.session import _n_partitions
 
 
 def _h32(c: Column, hash_fn: str = "md5") -> Column:
@@ -542,9 +543,7 @@ def _segment_pairs(
     # partition by work, not bytes). repartition(N, cols) pins it; N
     # follows the session's shuffle sizing, so it scales with the
     # cluster rather than the local core count.
-    n_part = int(
-        keyed.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_part = _n_partitions(keyed.sparkSession)
     part = keyed.repartition(
         n_part, *[F.col(c) for c in key_cols]
     ).sortWithinPartitions(*key_cols)
@@ -892,7 +891,7 @@ def _bucketed_hamming_pairs(
     # sketch stream is tiny in bytes (AQE folded sf1.0's 1.6M rows to
     # 13 partitions) but pair enumeration is quadratic per segment, so
     # the n_sub spread only works if the partition count holds
-    n_part = int(sk.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = _n_partitions(sk.sparkSession)
     if packed_mode:
         # shuffle on the segment identity (sub excluded — every row of
         # a segment must land together), sort on the full packed key

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbus_spark.session import _n_partitions
+
 
 def _dvec(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -188,7 +190,7 @@ def _pin_groups(df: DataFrame, *cols: str) -> DataFrame:
     as ONE post-coalesce partition (guide §2.5: partition by work, not
     bytes). N follows spark.sql.shuffle.partitions, the knob that
     already scales with the cluster."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = _n_partitions(df.sparkSession)
     return df.repartition(n, *[F.col(c) for c in cols])
 
 

@@ -6,8 +6,10 @@ engine/engine.go:215-265, engine/router.go:67-197). Here the "router"
 is Catalyst plan branching: every plugin's emission is a DataFrame
 carrying an ``ident`` column, and each consumer's input is the union
 of upstream emissions filtered by its matcher predicate — a fully
-declarative plan that Catalyst prunes per-sink (filter pushdown does
-what the reference's inverted-bitmap matcher does by hand).
+declarative plan. Emissions whose plan-fixed ident a matcher rejects
+are left out of its union when the plan is built (streaming plans get
+no help from Catalyst there); filter pushdown does the rest of what
+the reference's inverted-bitmap matcher does by hand.
 """
 
 from dbus_spark.pipeline.matcher import exact_match, wildcard_match

@@ -19,9 +19,12 @@ Semantics re-created 1:1:
   (engine/input.go:72-75); Filters may rewrite it (the 1→N
   demultiplex of MysqlbinlogFilter, plugins/filter/mysql/
   MysqlbinlogFilter.go:37-55);
-- every emission is offered to every Filter/Output matcher; a match
-  routes a (shared, immutable) copy — refcount fan-out
-  (engine/router.go:108-144) is free on immutable DataFrames;
+- every emission is offered to every Filter/Output matcher that could
+  accept it; a match routes a (shared, immutable) copy — refcount
+  fan-out (engine/router.go:108-144) is free on immutable DataFrames.
+  An emission whose ident the plan fixes (an Input's name, a filter's
+  ``out_ident``) is offered only to matchers accepting that ident, so
+  each routed output reads its source once;
 - packets matching nothing are dropped (engine/router.go:135-140);
   ``Pipeline.unmatched()`` exposes them for the watchdog metric.
 
@@ -40,7 +43,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbus_spark.pipeline.matcher import build_matcher
+from dbus_spark.pipeline.matcher import build_matcher, matches_ident
 from dbus_spark.schema import IDENT_COL
 
 # --- plugin registry (reference: engine/plugin.go:33-46) -------------
@@ -450,6 +453,12 @@ for _name, _factory in [
 ]:
     register_plugin(_name, _factory)
 
+# filters that stamp ``out_ident`` on every row they emit (_restamp)
+_RESTAMPING = frozenset({
+    "PredicateFilter", "RegexFilter", "RenameFilter", "SplitFilter",
+    "CountFilter", "SortFilter",
+})
+
 
 # --- the DAG ----------------------------------------------------------
 
@@ -462,6 +471,21 @@ class _Plugin:
     matches: list[str]
     options: dict
     impl: Callable = field(repr=False, default=None)
+
+
+def _static_ident(p: _Plugin, carries_ident: bool = False) -> str | None:
+    """The ident the plan stamps on every row ``p`` emits, or None when
+    its rows carry their own (dynamic) idents.
+
+    An Input's rows get its name (input.go:72-75) unless its frame
+    brings an ``ident`` column (``carries_ident``); a restamping filter's
+    rows get its ``out_ident``. RekeyFilter, MockFilter, a restamping
+    filter without ``out_ident`` and any custom filter are dynamic."""
+    if p.kind == "Input":
+        return None if carries_ident else p.name
+    if p.class_name in _RESTAMPING:
+        return p.options.get("out_ident")
+    return None
 
 
 class Pipeline:
@@ -492,58 +516,105 @@ class Pipeline:
 
     # -- plan construction --------------------------------------------
 
+    def _producers(self) -> list[_Plugin]:
+        """Inputs, then Filters, each in config order — the order
+        emissions are built and offered in."""
+        ps = list(self.plugins.values())
+        return [p for p in ps if p.kind == "Input"] + [
+            p for p in ps if p.kind == "Filter"
+        ]
+
+    def _upstream(
+        self, consumer: _Plugin, static: dict[str, str | None]
+    ) -> tuple[list[str], list[str]]:
+        """(every producer ``consumer`` sees, those it is offered).
+
+        ``static`` maps producer name → static ident in
+        :meth:`_producers` order; a Filter sees only the producers
+        before it (config order), an Output sees them all. A producer
+        is offered unless the matcher is empty or rejects its static
+        ident — the plan-time form of the router's per-packet match
+        (router.go:117-133)."""
+        names = list(static)
+        if consumer.name in static:
+            names = names[: names.index(consumer.name)]
+        offered = [
+            n
+            for n in names
+            if consumer.matches
+            and (static[n] is None or matches_ident(consumer.matches, static[n]))
+        ]
+        return names, offered
+
     def _emissions(
-        self, spark: SparkSession, sources: dict[str, DataFrame] | None
-    ) -> dict[str, DataFrame]:
-        """Emitted stream of every Input and Filter, ident attached."""
+        self,
+        spark: SparkSession,
+        sources: dict[str, DataFrame] | None,
+        prune: bool = True,
+    ) -> tuple[dict[str, DataFrame], dict[str, str | None]]:
+        """Emitted stream of every Input and Filter, ident attached, and
+        each one's static ident (all None when not pruning, so every
+        producer is offered to every matcher)."""
         sources = sources or {}
         emitted: dict[str, DataFrame] = {}
-        for p in self.plugins.values():
-            if p.kind != "Input":
-                continue
-            df = p.impl(spark, sources, p.name)
-            if IDENT_COL not in df.columns:
-                # ident defaults to the input's name (input.go:72-75)
-                df = df.withColumn(IDENT_COL, F.lit(p.name))
+        static: dict[str, str | None] = {}
+        for p in self._producers():
+            if p.kind == "Input":
+                df = p.impl(spark, sources, p.name)
+                ident = _static_ident(p, IDENT_COL in df.columns)
+                if ident is not None:
+                    df = df.withColumn(IDENT_COL, F.lit(ident))
+            else:
+                # each filter sees inputs + earlier filters
+                df = p.impl(self._route_into(p, emitted, static))
+                ident = _static_ident(p)
             emitted[p.name] = df
-        # filters in config order; each sees inputs + earlier filters
-        for p in self.plugins.values():
-            if p.kind != "Filter":
-                continue
-            upstream = self._route_into(p, emitted)
-            if upstream is None:
-                raise ValueError(
-                    f"filter {p.name!r} matches nothing upstream"
-                )
-            emitted[p.name] = p.impl(upstream)
-        return emitted
+            static[p.name] = ident if prune else None
+        return emitted, static
 
     @staticmethod
-    def _union(dfs: list[DataFrame]) -> DataFrame | None:
-        if not dfs:
-            return None
+    def _union(dfs: list[DataFrame]) -> DataFrame:
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
         )
 
     def _route_into(
-        self, consumer: _Plugin, emitted: dict[str, DataFrame]
-    ) -> DataFrame | None:
+        self,
+        consumer: _Plugin,
+        emitted: dict[str, DataFrame],
+        static: dict[str, str | None],
+    ) -> DataFrame:
         """Union of upstream emissions this consumer's matcher accepts.
 
         Routing is value-based: the predicate runs on the ident COLUMN,
-        so a RekeyFilter's dynamic idents route correctly — but we only
-        offer a producer's stream to the matcher if its static idents
-        could possibly match, which is exactly the plan pruning the
-        reference's router does per-packet (router.go:117-133).
+        so a RekeyFilter's dynamic idents route correctly. A producer
+        whose static ident the matcher rejects is not offered at all
+        (:meth:`_upstream`): streaming plans skip Catalyst's
+        PruneFilters, so its always-false branch would still scan the
+        whole source every micro-batch. The result keeps the columns,
+        order and types of the union of every upstream, so pruning
+        changes no schema; when nothing can match, that (empty) union
+        is the result.
         """
         pred = build_matcher(consumer.matches)
-        parts = [
-            df.filter(pred)
-            for name, df in emitted.items()
-            if name != consumer.name
-        ]
-        return self._union(parts)
+        names, offered = self._upstream(consumer, static)
+        if not offered:  # nothing can match: the empty unpruned union
+            offered = names
+        routed = self._union([emitted[n].filter(pred) for n in offered])
+        if len(offered) == len(names) or 1 == len(
+            {tuple((f.name, f.dataType) for f in emitted[n].schema) for n in names}
+        ):
+            return routed
+        # a pruned producer had columns or types of its own
+        full = self._union([emitted[n].filter(pred) for n in names])
+        return routed.select(
+            *[
+                (F.col(f.name) if f.name in routed.columns else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in full.schema
+            ]
+        )
 
     # -- execution ------------------------------------------------------
 
@@ -551,16 +622,23 @@ class Pipeline:
         self, spark: SparkSession, sources: dict[str, DataFrame] | None = None
     ) -> dict[str, DataFrame]:
         """Routed DataFrame per Output plugin (the lazily-planned DAG)."""
-        emitted = self._emissions(spark, sources)
-        out: dict[str, DataFrame] = {}
-        for p in self.plugins.values():
-            if p.kind != "Output":
-                continue
-            df = self._route_into(p, emitted)
-            if df is None:
-                raise ValueError(f"output {p.name!r} matches nothing")
-            out[p.name] = df
-        return out
+        return self._outputs(spark, sources, prune=True)
+
+    def _outputs(
+        self,
+        spark: SparkSession,
+        sources: dict[str, DataFrame] | None,
+        prune: bool,
+    ) -> dict[str, DataFrame]:
+        """``prune=False`` offers every emission to every matcher: the
+        plan shape that checkpoints written before route pruning
+        record."""
+        emitted, static = self._emissions(spark, sources, prune)
+        return {
+            p.name: self._route_into(p, emitted, static)
+            for p in self.plugins.values()
+            if p.kind == "Output"
+        }
 
     def run(
         self, spark: SparkSession, sources: dict[str, DataFrame] | None = None
@@ -573,9 +651,9 @@ class Pipeline:
 
     def to_dot(self) -> str:
         """Graphviz dot of the plugin DAG (engine/diagram.go:10-67
-        analog). Edges are static: producer → consumer whenever the
-        consumer's match list could accept the producer's name or its
-        rewritten idents (value-level routing stays dynamic)."""
+        analog). Edges are the offers routing makes (:meth:`_upstream`);
+        with no frames to look at, every Input is drawn as stamping its
+        own name (value-level routing stays dynamic)."""
         lines = ["digraph pipeline {", "  rankdir=LR;"]
         shapes = {"Input": "box", "Filter": "ellipse", "Output": "cds"}
         for p in self.plugins.values():
@@ -583,47 +661,37 @@ class Pipeline:
                 f'  "{p.name}" [shape={shapes[p.kind]} '
                 f'label="{p.name}\\n{p.class_name}"];'
             )
-        producers = [
-            p for p in self.plugins.values() if p.kind in ("Input", "Filter")
-        ]
+        static = {p.name: _static_ident(p) for p in self._producers()}
         for c in self.plugins.values():
-            if c.kind == "Input" or not c.matches:
+            if c.kind == "Input":
                 continue
-            for prod in producers:
-                if prod.name == c.name:
-                    continue
-                static_idents = {prod.name}
-                if prod.kind == "Filter":
-                    # a re-key filter can emit anything → offer edge
-                    static_idents.add("*any*")
-                if any(
-                    m in static_idents or "*any*" in static_idents
-                    for m in c.matches
-                ):
-                    lines.append(f'  "{prod.name}" -> "{c.name}";')
+            for prod in self._upstream(c, static)[1]:
+                lines.append(f'  "{prod}" -> "{c.name}";')
         lines.append("}")
         return "\n".join(lines)
 
     def unmatched(
         self, spark: SparkSession, sources: dict[str, DataFrame] | None = None
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Rows no Filter/Output matcher accepts — the reference logs
         and recycles these (router.go:135-140); we expose them as a
-        DataFrame for the watchdog metric."""
-        emitted = self._emissions(spark, sources)
-        consumers = [
-            p for p in self.plugins.values() if p.kind in ("Filter", "Output")
-        ]
+        DataFrame for the watchdog metric. A row counts as matched only
+        by a consumer it is offered to (:meth:`_upstream`)."""
+        emitted, static = self._emissions(spark, sources)
+        offers = {
+            c.name: self._upstream(c, static)[1]
+            for c in self.plugins.values()
+            if c.kind in ("Filter", "Output")
+        }
         parts = []
         for name, df in emitted.items():
             preds = [
-                build_matcher(c.matches)
-                for c in consumers
-                if c.name != name
+                build_matcher(self.plugins[c].matches)
+                for c, offered in offers.items()
+                if name in offered
             ]
             if preds:
-                anymatch = reduce(lambda a, b: a | b, preds)
-                parts.append(df.filter(~anymatch))
+                parts.append(df.filter(~reduce(lambda a, b: a | b, preds)))
             else:
                 parts.append(df)
         return self._union(parts)

@@ -59,6 +59,18 @@ def wildcard_match(patterns: list[str], col: str = IDENT_COL) -> Column:
     return pred
 
 
+def matches_ident(matches: list[str], ident: str) -> bool:
+    """Whether ``build_matcher(matches)`` accepts one known ident —
+    the same rule evaluated in Python, for routing decisions made when
+    the plan is built."""
+    return any(
+        re.search(wildcard_to_regex(m), ident) is not None
+        if "*" in m
+        else m == ident
+        for m in matches
+    )
+
+
 def build_matcher(matches: list[str], col: str = IDENT_COL) -> Column:
     """Pick exact vs wildcard automatically (configs mix both)."""
     if any("*" in m for m in matches):

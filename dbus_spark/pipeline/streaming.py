@@ -27,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from dbus_spark.pipeline.dag import Pipeline
 from dbus_spark.schema import TRANSCRIPT_SCHEMA
 from dbus_spark.sinks import IdempotentKeyedSink
+from dbus_spark.streaming.checkpoint import recorded_source_count
 
 # class name → factory(options) -> fn(df, name, checkpoint) -> query
 STREAM_SINKS: dict[str, Callable] = {}
@@ -122,6 +123,14 @@ for _n, _f in [
     register_stream_sink(_n, _f)
 
 
+def _plan_sources(df: DataFrame) -> int:
+    """Sources a query over ``df`` records per offsets entry: one per
+    streaming leaf of the analyzed plan (a source read by two union
+    branches counts twice)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return sum(leaves.apply(i).isStreaming() for i in range(leaves.size()))
+
+
 class StreamingPipeline:
     """Run a Pipeline's outputs as streaming queries."""
 
@@ -142,6 +151,14 @@ class StreamingPipeline:
 
     def _start_one(self, spark: SparkSession, name: str) -> StreamingQuery:
         out_df = self.pipeline.outputs(spark, self.sources)[name]
+        recorded = recorded_source_count(self._ckpt(name))
+        if recorded is not None and recorded != _plan_sources(out_df):
+            # a checkpoint written before route pruning records one
+            # source per unpruned branch, and Spark resumes it only with
+            # as many; keep that plan shape for this checkpoint
+            out_df = self.pipeline._outputs(spark, self.sources, prune=False)[
+                name
+            ]
         plug = self.pipeline.plugins[name]
         factory = STREAM_SINKS.get(plug.class_name)
         if factory is None:

@@ -106,3 +106,15 @@ def get_spark(
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _n_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int, for
+    stages that pin their partition count. Platforms that allow a
+    non-numeric value there (``auto``) get ``defaultParallelism``
+    instead of a plan-construction crash."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism

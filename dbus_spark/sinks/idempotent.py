@@ -20,16 +20,37 @@ with three mechanisms, strongest first:
 3. **key-level anti-join MERGE** (``dedup_mode="anti_join"``): for
    upstreams that can re-emit a key in a *different* epoch (raw
    at-least-once streams), only keys absent from all other epochs are
-   kept. The probe excludes the current epoch's partition (partition
-   pruning on the ``batch`` column), so a failed partial write never
-   blocks its own retry.
+   kept. The probe never lists the current epoch's directory, so a
+   failed partial write never blocks its own retry.
+
+One micro-batch is one lean job chain: the dedup/anti-join plan and
+its write. Nothing else is launched per epoch:
+
+- **counts ride the write.** With ``track_counts`` the epoch's row
+  count is an ``observe`` metric (``CollectMetrics``) on the written
+  plan itself, read back after the write — exact, and with no second
+  job, no ``persist`` and no re-scan. Metering stays off the data path,
+  the reference's RouterTrack lesson (in-path metrics cost it
+  2.1M->1.6M pkt/s, engine/router.go:111).
+- **the key probe is typed, not inferred.** The anti-join reads the
+  other epochs' directories with the key schema taken from the batch
+  itself, so no schema-inference job runs per batch, and only the key
+  columns are read (column pruning): it scales with key volume, not row
+  width.
+- **the probe is a shuffled hash join, never a broadcast.** The probe
+  side is small, so the planner would broadcast it; but a broadcast
+  relation is built on the driver and outlives the batch until the
+  cleaner drops it, so a long stream's driver heap grows by one key
+  set per epoch. The ``shuffle_hash`` hint builds the hash table in the
+  tasks instead, where it dies with the batch; the batch side is
+  already hash-partitioned on the keys by ``dropDuplicates``, so only
+  the probe side is shuffled.
 
 On a production cluster the target is an Iceberg table and the whole
 sink is a single ``MERGE INTO t USING batch ON (conv_id, turn_idx)
 WHEN NOT MATCHED THEN INSERT`` with metadata-pruned scans —
 ``merge_sql()`` emits exactly that statement. The parquet form here
-preserves the semantics; the anti-join reads only the key columns
-(column pruning) and scales with key volume, not row width.
+preserves the semantics.
 """
 
 from __future__ import annotations
@@ -37,8 +58,9 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class IdempotentKeyedSink:
@@ -73,10 +95,8 @@ class IdempotentKeyedSink:
             {"conv_id": "string", "turn_idx": "int"} if keys is None else {}
         )
         self.dedup_mode = dedup_mode
-        # per-epoch row counts in the markers cost one extra job per
-        # micro-batch (persist + count); turn off on latency-sensitive
-        # paths — exactly the reference's RouterTrack lesson (metrics
-        # on the hot path cost 2.1M->1.6M pkt/s, engine/router.go:111)
+        # per-epoch row counts in the markers, observed on the write
+        # itself (no extra job); off leaves rows_appended null
         self.track_counts = track_counts
         # aggregated micro-batch output is often tiny relative to the
         # upstream shuffle width; writing shuffle-partition-many files
@@ -123,28 +143,24 @@ class IdempotentKeyedSink:
             # foreachBatch consumes every partition) and do nothing
             batch_df.write.format("noop").mode("overwrite").save()
             return 0
-        spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates(self.keys)
         others = [b for b in self._epoch_ids() if b != batch_id]
         if self.dedup_mode == "anti_join" and others:
-            existing_keys = (
-                spark.read.parquet(self.data_path)
-                .filter(F.col("batch") != batch_id)
-                .select(*self.keys)
+            existing_keys = batch_df.sparkSession.read.schema(
+                StructType([batch_df.schema[k] for k in self.keys])
+            ).parquet(*[self._epoch_dir(b) for b in others])
+            fresh = fresh.join(
+                existing_keys.hint("shuffle_hash"), on=self.keys, how="left_anti"
             )
-            fresh = fresh.join(existing_keys, on=self.keys, how="left_anti")
         if self.coalesce_output:
             fresh = fresh.coalesce(self.coalesce_output)
         if self.track_counts:
-            fresh = fresh.persist()
-            n = fresh.count()
-        else:
-            n = None
+            rows = Observation()
+            fresh = fresh.observe(rows, F.count(F.lit(1)).alias("n"))
         # overwrite THIS epoch's partition: replays and partial writes
         # of the same epoch converge to the same bytes
         fresh.write.mode("overwrite").parquet(self._epoch_dir(batch_id))
-        if self.track_counts:
-            fresh.unpersist()
+        n = rows.get["n"] if self.track_counts else None
         self._commit_marker(batch_id, n)
         return n if n is not None else 0
 

@@ -70,6 +70,17 @@ def list_offsets(checkpoint_dir: str) -> list[BatchOffsets]:
     return out
 
 
+def recorded_source_count(checkpoint_dir: str) -> int | None:
+    """Sources the checkpoint's latest offsets entry records (None
+    before the first batch). The log line layout is a version header,
+    the batch metadata, then one offset (or ``-``) per source; a
+    restart must present that many sources."""
+    offsets = _read_log(os.path.join(checkpoint_dir, "offsets"))
+    if not offsets:
+        return None
+    return len(offsets[max(offsets)]) - 2
+
+
 def file_source_batches(
     checkpoint_dir: str, source_idx: int = 0
 ) -> list[list[str]]:

@@ -764,3 +764,22 @@ def test_grouped_distinct_both_arms(spark):
         assert abs(ap[k]["n_distinct"] - ex[k]["n_distinct"]) <= max(
             3, 0.06 * ex[k]["n_distinct"]
         ), k
+
+
+def test_n_partitions_falls_back_on_non_numeric_conf():
+    """The pinned-partition stages read spark.sql.shuffle.partitions
+    through one helper; a platform value like 'auto' falls back to
+    defaultParallelism instead of crashing plan construction."""
+    from types import SimpleNamespace
+
+    from dbus_spark.session import _n_partitions
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert _n_partitions(stub("12")) == 12
+    assert _n_partitions(stub("auto")) == 7
+    assert _n_partitions(stub(None)) == 7

@@ -271,3 +271,79 @@ def test_read_hides_uncommitted_epoch(spark, tmp_path):
         os.path.join(str(tmp_path / "out2"), "data", "batch=0")
     )
     assert sink2.read(spark).count() == 0
+
+
+def _marker_rows(sink, epoch):
+    import json
+
+    with open(sink._marker(epoch)) as f:
+        return json.load(f)["rows_appended"]
+
+
+def _epoch_rows(sink, epoch):
+    import pandas as pd
+
+    return len(pd.read_parquet(sink._epoch_dir(epoch)))
+
+
+def test_rows_appended_equals_epoch_rows(spark, tmp_path, df):
+    """The observed count in each marker is the rows that epoch's
+    directory holds: new keys, an all-redelivered anti-join epoch (0),
+    and a mix of both."""
+    sink = _sink(tmp_path, "anti_join")
+    mix = spark.createDataFrame(
+        [("c1", 2, "b"), ("c3", 1, "e")], ["conv_id", "turn_idx", "text"]
+    )
+    for epoch, batch, want in ((0, df, 2), (1, df, 0), (2, mix, 1)):
+        assert sink.write_batch(batch, epoch) == want
+        assert _marker_rows(sink, epoch) == _epoch_rows(sink, epoch) == want
+    assert sink.read(spark).count() == 3
+
+
+def test_rows_appended_coalesced_stage_a(spark, tmp_path):
+    """fused.py's stage-A sink shape (epoch_overwrite, counts on, one
+    part file per epoch): the count still equals the epoch's rows."""
+    from dbus_spark.sinks import IdempotentKeyedSink
+
+    sink = IdempotentKeyedSink(
+        str(tmp_path / "bus"),
+        keys=["doc_id"],
+        dedup_mode="epoch_overwrite",
+        track_counts=True,
+        coalesce_output=1,
+        key_types={"doc_id": "bigint"},
+    )
+    batch = spark.range(0, 50, 1, 4).selectExpr("id % 37 AS doc_id", "id AS v")
+    assert sink.write_batch(batch, 0) == 37
+    assert _marker_rows(sink, 0) == _epoch_rows(sink, 0) == 37
+    parts = [
+        f for f in os.listdir(sink._epoch_dir(0)) if f.endswith(".parquet")
+    ]
+    assert len(parts) == 1
+
+
+def test_track_counts_launches_no_extra_job(spark, tmp_path, df):
+    """Counting rides the write: an anti-join write_batch with
+    track_counts=True launches no more jobs than with it off."""
+    from dbus_spark.sinks import IdempotentKeyedSink
+
+    sc = spark.sparkContext
+    more = spark.createDataFrame(
+        [("c1", 2, "b"), ("c3", 1, "e")], ["conv_id", "turn_idx", "text"]
+    )
+
+    def jobs(track_counts: bool) -> int:
+        group = f"sink-jobs-{track_counts}"
+        sink = IdempotentKeyedSink(
+            str(tmp_path / group), track_counts=track_counts
+        )
+        sink.write_batch(df, 0)  # an earlier epoch, so the probe runs
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            sink.write_batch(more, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counted, uncounted = jobs(True), jobs(False)
+    assert 0 < counted <= uncounted

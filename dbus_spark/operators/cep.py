@@ -38,15 +38,15 @@ stream == batch-replay equivalence is structural, not coincidental.
 
 from __future__ import annotations
 
-import pickle
 import re
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dbus_spark.operators.state import callback, keyed_apply, to_columns
 
 
 def classify(
@@ -66,7 +66,8 @@ def classify(
     for name, pred in symbols.items():
         cond = F.expr(pred) if isinstance(pred, str) else pred
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    assert expr is not None, "classify() needs at least one symbol"
+    if expr is None:
+        raise ValueError("classify() needs at least one symbol")
     return df.withColumn(sym_col, expr.otherwise(F.lit(default)))
 
 
@@ -95,7 +96,8 @@ def match_sequence(
     is O(rows) regardless of match density, which is what lets the
     same query run on 10^12 turns.
     """
-    assert len(pattern) >= 1
+    if not pattern:
+        raise ValueError("match_sequence() needs a non-empty pattern")
     order_cols = [order] if isinstance(order, str) else list(order)
     L = len(pattern)
     w = Window.partitionBy(key).orderBy(*order_cols)
@@ -210,6 +212,13 @@ def _contract_runs(
     )
 
 
+def _check_quantifier(mn: int, mx: int | None) -> None:
+    if mn < 1:
+        raise ValueError("quantifier min must be >= 1 (runs are non-empty)")
+    if mx is not None and mx < mn:
+        raise ValueError(f"bad quantifier ({mn},{mx})")
+
+
 def match_quantified(
     df: DataFrame,
     pattern: list[tuple],
@@ -243,10 +252,10 @@ def match_quantified(
     spanning first run start → last run end, plus ``len_i`` columns
     (the matched run length per position).
     """
-    assert len(pattern) >= 1
+    if not pattern:
+        raise ValueError("match_quantified() needs a non-empty pattern")
     for elem, mn, mx in pattern:
-        assert mn >= 1, "quantifier min must be >= 1 (runs are non-empty)"
-        assert mx is None or mx >= mn, f"bad quantifier ({mn},{mx})"
+        _check_quantifier(mn, mx)
     order_cols = [order] if isinstance(order, str) else list(order)
     o0 = order_cols[0]
     runs = _contract_runs(df, key, order_cols, ts, sym)
@@ -314,7 +323,8 @@ def funnel(
     collect_list-per-key fold whose per-key arrays would be unbounded
     on a 10^12-turn log.
     """
-    assert len(stages) >= 1
+    if not stages:
+        raise ValueError("funnel() needs at least one stage")
     counts: list[tuple[int, str, int]] = []
     cached: list[DataFrame] = []
     reached: DataFrame | None = None
@@ -352,8 +362,9 @@ def funnel(
 # mechanism; Spark cannot chain two applyInPandasWithState stages in
 # one query, measured and documented in pipeline/fused.py).  Exact
 # duplicate (key, order) rows are dropped defensively.
-
-_CEP_FMT_V1 = b"\x01"
+#
+# Every twin below is a pure ``step`` over the shared keyed-state
+# scaffold (operators/state.py: codec, timeout policy, bucketing).
 
 _MATCH_SCHEMA = T.StructType(
     [
@@ -365,7 +376,36 @@ _MATCH_SCHEMA = T.StructType(
     ]
 )
 
-_CEP_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
+
+def _interval_us(df: DataFrame, within: str | None) -> int | None:
+    """An INTERVAL body ("1 hour", "30 minutes") in microseconds, read
+    with Spark's own interval parser so the literal means exactly what
+    the batch twin's filter means."""
+    if within is None:
+        return None
+    return int(
+        df.sparkSession.createDataFrame([(0,)], "x int")
+        .select(
+            F.expr(
+                f"unix_micros(timestamp'2000-01-01' + INTERVAL {within})"
+                " - unix_micros(timestamp'2000-01-01')"
+            ).alias("us")
+        )
+        .head()[0]
+    )
+
+
+def _stream_src(
+    df: DataFrame, key: str, value: Column, order: str, ts: str
+) -> DataFrame:
+    """The generic ``key, <value>, order, ts`` frame every streaming
+    twin feeds its state step."""
+    return df.select(
+        F.col(key).alias("key"),
+        value,
+        F.col(order).cast("long").alias("order"),
+        F.col(ts).alias("ts"),
+    )
 
 
 def _match_block(
@@ -409,62 +449,33 @@ def _match_block(
     )
 
 
-def _cep_load(state) -> pd.DataFrame:
-    (blob,) = state.get
-    blob = bytes(blob)
-    assert blob[:1] == _CEP_FMT_V1
-    cols = pickle.loads(blob[1:])
-    return pd.DataFrame(cols)
+def _deadline_swept(tail: pd.DataFrame, wm: int, emits: list):
+    """Evict rows whose event-time deadline the watermark passed; the
+    key's timer re-arms at the earliest surviving deadline."""
+    tail = tail[tail["deadline"].to_numpy() > wm]
+    if not len(tail):
+        return None, emits, None
+    return tail, emits, tail["deadline"].min()
 
 
-def _cep_save(state, tail: pd.DataFrame) -> None:
-    payload = {c: tail[c].to_numpy() for c in tail.columns}
-    state.update((_CEP_FMT_V1 + pickle.dumps(payload, protocol=5),))
-
-
-_TAIL_COLS = ["key", "sym", "order", "ts_us", "deadline"]
+def _empty_tail() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "key": np.array([], object),
+            "sym": np.array([], object),
+            "order": np.array([], np.int64),
+            "ts_us": np.array([], np.int64),
+            "deadline": np.array([], np.int64),
+        }
+    )
 
 
 def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
     L = len(pattern)
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            tail = _cep_load(state)
-            tail = tail[tail["deadline"].to_numpy() > wm]
-            if len(tail):
-                _cep_save(state, tail)
-                state.setTimeoutTimestamp(
-                    max(int(tail["deadline"].min()), wm + 1)
-                )
-            else:
-                state.remove()
-            return
-
-        tail = (
-            _cep_load(state)
-            if state.exists
-            else pd.DataFrame(
-                {
-                    "key": np.array([], object),
-                    "sym": np.array([], object),
-                    "order": np.array([], np.int64),
-                    "ts_us": np.array([], np.int64),
-                    "deadline": np.array([], np.int64),
-                }
-            )
-        )
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+    def step(tail, new, wm):
+        emits = []
+        if new is not None:
             ts_us = new["ts"].to_numpy("datetime64[us]").view(np.int64)
             # deadline is EVENT-time based (row ts + ttl), not
             # watermark-based: the watermark starts at 0 and jumps to
@@ -524,8 +535,8 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
             tail = pd.concat(
                 [tail[~on_t], keep_tail], ignore_index=True, copy=False
             )
-            if len(k):
-                yield pd.DataFrame(
+            emits.append(
+                pd.DataFrame(
                     {
                         "key": k,
                         "start_order": so,
@@ -534,14 +545,10 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
                         "end_ts": ets,
                     }
                 )
-        tail = tail[tail["deadline"].to_numpy() > wm]
-        if len(tail):
-            _cep_save(state, tail)
-            state.setTimeoutTimestamp(max(int(tail["deadline"].min()), wm + 1))
-        else:
-            state.remove()
+            )
+        return _deadline_swept(tail, wm, emits)
 
-    return fn
+    return callback(step, _empty_tail, pd.DataFrame, to_columns)
 
 
 def streaming_match_sequence(
@@ -567,40 +574,13 @@ def streaming_match_sequence(
     longer silence is missed — the bounded-state trade every 10^12-turn
     deployment has to pick, stated rather than hidden.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    within_us = None
-    if within is not None:
-        # reuse Spark's own interval parser so "1 hour"/"30 minutes"
-        # literals mean exactly what the batch twin's filter means
-        within_us = int(
-            df.sparkSession.createDataFrame([(0,)], "x int")
-            .select(
-                F.expr(
-                    f"unix_micros(timestamp'2000-01-01' + INTERVAL {within})"
-                    " - unix_micros(timestamp'2000-01-01')"
-                ).alias("us")
-            )
-            .head()[0]
-        )
-    src = df.select(
-        F.col(key).alias("key"),
-        F.col(sym).alias("sym"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-    )
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            _make_cep_fn(list(pattern), within_us, ttl_ms),
-            outputStructType=_MATCH_SCHEMA,
-            stateStructType=_CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_apply(
+        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        _make_cep_fn(list(pattern), _interval_us(df, within), ttl_ms),
+        _MATCH_SCHEMA,
+        "key",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )
 
 
@@ -671,24 +651,8 @@ def match_absence(
 # just delivered incrementally.
 
 
-def _cep_load2(state) -> tuple[pd.DataFrame, pd.DataFrame]:
-    (blob,) = state.get
-    blob = bytes(blob)
-    assert blob[:1] == _CEP_FMT_V1
-    p, f = pickle.loads(blob[1:])
-    return pd.DataFrame(p), pd.DataFrame(f)
-
-
-def _cep_save2(state, pending: pd.DataFrame, frontier: pd.DataFrame) -> None:
-    payload = (
-        {c: pending[c].to_numpy() for c in pending.columns},
-        {c: frontier[c].to_numpy() for c in frontier.columns},
-    )
-    state.update((_CEP_FMT_V1 + pickle.dumps(payload, protocol=5),))
-
-
-def _empty_pending_abs() -> pd.DataFrame:
-    return pd.DataFrame(
+def _empty_absence() -> tuple[pd.DataFrame, pd.DataFrame]:
+    pending = pd.DataFrame(
         {
             "key": np.array([], object),
             "order": np.array([], np.int64),
@@ -696,16 +660,24 @@ def _empty_pending_abs() -> pd.DataFrame:
             "deadline_us": np.array([], np.int64),
         }
     )
-
-
-def _empty_frontier_abs() -> pd.DataFrame:
-    return pd.DataFrame(
+    frontier = pd.DataFrame(
         {
             "key": np.array([], object),
             "max_order": np.array([], np.int64),
             "last_ts_us": np.array([], np.int64),
         }
     )
+    return pending, frontier
+
+
+def _load_absence(obj) -> tuple[pd.DataFrame, pd.DataFrame]:
+    p, f = obj
+    return pd.DataFrame(p), pd.DataFrame(f)
+
+
+def _dump_absence(st: tuple[pd.DataFrame, pd.DataFrame]) -> tuple:
+    pending, frontier = st
+    return to_columns(pending), to_columns(frontier)
 
 
 def _emit_frame(sub: pd.DataFrame) -> pd.DataFrame:
@@ -721,45 +693,11 @@ def _emit_frame(sub: pd.DataFrame) -> pd.DataFrame:
 def _make_absence_fn(
     first: str, absent: str, within_us: int, ttl_ms: int
 ):
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
+    def step(st, new, wm):
+        pending, frontier = st
         wm_us = wm * 1000
-
-        if state.hasTimedOut:
-            pending, frontier = _cep_load2(state)
-            due = pending["deadline_us"].to_numpy() <= wm_us
-            emit = pending[due]
-            pending = pending[~due]
-            frontier = frontier[
-                frontier["last_ts_us"].to_numpy() // 1000 + ttl_ms > wm
-            ]
-            if len(pending) or len(frontier):
-                _cep_save2(state, pending, frontier)
-                nxt = int(pending["deadline_us"].min() // 1000) if len(
-                    pending
-                ) else wm + ttl_ms
-                state.setTimeoutTimestamp(max(nxt, wm + 1))
-            else:
-                state.remove()
-            if len(emit):
-                yield _emit_frame(emit)
-            return
-
-        pending, frontier = (
-            _cep_load2(state)
-            if state.exists
-            else (_empty_pending_abs(), _empty_frontier_abs())
-        )
-        chunks = [p for p in pdfs if len(p)]
         emits: list[pd.DataFrame] = []
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+        if new is not None:
             new = pd.DataFrame(
                 {
                     "key": new["key"].to_numpy(object),
@@ -857,7 +795,7 @@ def _make_absence_fn(
                     .sort_values("max_order")
                     .drop_duplicates("key", keep="last")
                 )
-        # watermark sweep (same as the timeout path)
+        # watermark sweep (the whole of a timeout call)
         due = pending["deadline_us"].to_numpy() <= wm_us
         if due.any():
             emits.append(_emit_frame(pending[due]))
@@ -865,18 +803,16 @@ def _make_absence_fn(
         frontier = frontier[
             frontier["last_ts_us"].to_numpy() // 1000 + ttl_ms > wm
         ]
-        if len(pending) or len(frontier):
-            _cep_save2(state, pending, frontier)
-            nxt = int(pending["deadline_us"].min() // 1000) if len(
-                pending
-            ) else wm + ttl_ms
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-        else:
-            state.remove()
-        for e in emits:
-            yield e
+        if not (len(pending) or len(frontier)):
+            return None, emits, None
+        nxt = (
+            pending["deadline_us"].min() // 1000
+            if len(pending)
+            else wm + ttl_ms
+        )
+        return (pending, frontier), emits, nxt
 
-    return fn
+    return callback(step, _empty_absence, _load_absence, _dump_absence)
 
 
 def streaming_match_absence(
@@ -911,26 +847,6 @@ def streaming_match_absence(
     query's session (what the tests do) — on a live 10^12-turn bus
     the distinction is moot, data never stops.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    within_us = int(
-        df.sparkSession.createDataFrame([(0,)], "x int")
-        .select(
-            F.expr(
-                f"unix_micros(timestamp'2000-01-01' + INTERVAL {within})"
-                " - unix_micros(timestamp'2000-01-01')"
-            ).alias("us")
-        )
-        .head()[0]
-    )
-    src = df.select(
-        F.col(key).alias("key"),
-        F.col(sym).alias("sym"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-    )
     out_schema = T.StructType(
         [
             T.StructField("key", T.StringType()),
@@ -938,16 +854,13 @@ def streaming_match_absence(
             T.StructField("start_ts", T.TimestampType()),
         ]
     )
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            _make_absence_fn(first, absent, within_us, ttl_ms),
-            outputStructType=out_schema,
-            stateStructType=_CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_apply(
+        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        _make_absence_fn(first, absent, _interval_us(df, within), ttl_ms),
+        out_schema,
+        "key",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )
 
 
@@ -1001,30 +914,9 @@ def _empty_funnel_state() -> pd.DataFrame:
 def _make_funnel_fn(n_stages: int, ttl_ms: int):
     L = n_stages
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            st = _cep_load(state)
-            st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
-            if len(st):
-                _cep_save(state, st)
-                state.setTimeoutTimestamp(wm + ttl_ms)
-            else:
-                state.remove()
-            return
-
-        st = _cep_load(state) if state.exists else _empty_funnel_state()
-        chunks = [p for p in pdfs if len(p)]
+    def step(st, new, wm):
         emits: list[pd.DataFrame] = []
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+        if new is not None:
             new = pd.DataFrame(
                 {
                     "key": new["key"].to_numpy(object),
@@ -1133,17 +1025,11 @@ def _make_funnel_fn(n_stages: int, ttl_ms: int):
                     ls.to_numpy(np.int64),
                 )
                 st = st.reset_index(drop=True)
-        # TTL sweep
+        # TTL sweep (the whole of a timeout call)
         st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
-        if len(st):
-            _cep_save(state, st)
-            state.setTimeoutTimestamp(max(wm + ttl_ms, wm + 1))
-        else:
-            state.remove()
-        for e in emits:
-            yield e
+        return (st if len(st) else None), emits, wm + ttl_ms
 
-    return fn
+    return callback(step, _empty_funnel_state, pd.DataFrame, to_columns)
 
 
 def streaming_funnel(
@@ -1176,32 +1062,21 @@ def streaming_funnel(
     dbus's multi-stage routing counters (engine/router metrics,
     funkygao/dbus engine/router.go) — re-expressed as event-time CEP.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     L = len(stages)
-    assert 1 <= L <= 62
+    if not 1 <= L <= 62:
+        # stage i is bit i of one signed long: 63+ stages overflow it
+        raise ValueError(f"streaming_funnel needs 1..62 stages, got {L}")
     mask: Column = F.lit(0)
     for i, (_, pred) in enumerate(stages):
         cond = F.expr(pred) if isinstance(pred, str) else pred
         mask = mask + F.when(cond, F.lit(1 << i)).otherwise(F.lit(0))
-    src = df.select(
-        F.col(key).alias("key"),
-        mask.cast("long").alias("mask"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-    )
-    out = (
-        src.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            _make_funnel_fn(L, ttl_ms),
-            outputStructType=_FUNNEL_EMIT_SCHEMA,
-            stateStructType=_CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    out = keyed_apply(
+        _stream_src(df, key, mask.cast("long").alias("mask"), order, ts),
+        _make_funnel_fn(L, ttl_ms),
+        _FUNNEL_EMIT_SCHEMA,
+        "key",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )
     names = F.array(*[F.lit(n) for n, _ in stages])
     return out.select(
@@ -1354,31 +1229,9 @@ def _quant_match_runs(
 def _make_quant_fn(pattern: list[tuple], within_us: int | None, ttl_ms: int):
     L = len(pattern)
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            tail = _cep_load(state)
-            tail = tail[tail["deadline"].to_numpy() > wm]
-            if len(tail):
-                _cep_save(state, tail)
-                state.setTimeoutTimestamp(
-                    max(int(tail["deadline"].min()), wm + 1)
-                )
-            else:
-                state.remove()
-            return
-
-        tail = _cep_load(state) if state.exists else _empty_runs()
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+    def step(tail, new, wm):
+        emits = []
+        if new is not None:
             new = (
                 pd.DataFrame(
                     {
@@ -1499,15 +1352,10 @@ def _make_quant_fn(pattern: list[tuple], within_us: int | None, ttl_ms: int):
                     copy=False,
                 )
                 if out is not None:
-                    yield out
-        tail = tail[tail["deadline"].to_numpy() > wm]
-        if len(tail):
-            _cep_save(state, tail)
-            state.setTimeoutTimestamp(max(int(tail["deadline"].min()), wm + 1))
-        else:
-            state.remove()
+                    emits.append(out)
+        return _deadline_swept(tail, wm, emits)
 
-    return fn
+    return callback(step, _empty_runs, pd.DataFrame, to_columns)
 
 
 def streaming_match_quantified(
@@ -1537,41 +1385,15 @@ def streaming_match_quantified(
     in-order exactly-once input contract and TTL eviction trade as
     :func:`streaming_match_sequence`.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     for elem, mn, mx in pattern:
-        assert mn >= 1, "quantifier min must be >= 1 (runs are non-empty)"
-        assert mx is None or mx >= mn, f"bad quantifier ({mn},{mx})"
-    within_us = None
-    if within is not None:
-        within_us = int(
-            df.sparkSession.createDataFrame([(0,)], "x int")
-            .select(
-                F.expr(
-                    f"unix_micros(timestamp'2000-01-01' + INTERVAL {within})"
-                    " - unix_micros(timestamp'2000-01-01')"
-                ).alias("us")
-            )
-            .head()[0]
-        )
-    src = df.select(
-        F.col(key).alias("key"),
-        F.col(sym).alias("sym"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-    )
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            _make_quant_fn(list(pattern), within_us, ttl_ms),
-            outputStructType=_quant_match_schema(len(pattern)),
-            stateStructType=_CEP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        _check_quantifier(mn, mx)
+    return keyed_apply(
+        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        _make_quant_fn(list(pattern), _interval_us(df, within), ttl_ms),
+        _quant_match_schema(len(pattern)),
+        "key",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )
 
 

@@ -37,6 +37,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbus_spark.operators.state import callback, keyed_apply
+
 __all__ = [
     "sample_mixture",
     "sample_token_budget",
@@ -627,11 +629,7 @@ def streaming_token_budget_filter(
     cells).  No watermark or TTL: a budget is a job-lifetime fact,
     not a window.
     """
-    import pickle
-
-    import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from dbus_spark.operators.text import token_count
 
@@ -639,19 +637,25 @@ def streaming_token_budget_filter(
     staged = df.withColumn("_tb_n", token_count(text_col).cast("long"))
     out_schema = T.StructType([df.schema[c] for c in in_cols])
     budget_map = {k: int(v) for k, v in budgets.items()}
+    return keyed_apply(
+        staged,
+        _make_budget_fn(budget_map, strata_col, id_col, ts, in_cols),
+        out_schema,
+        strata_col,
+    )
 
-    def fn(key, pdfs, state):
-        (stratum,) = key
-        budget = budget_map.get(stratum)
-        chunks = [p for p in pdfs if len(p)]
-        if budget is None or not chunks:
-            return
-        cum = pickle.loads(bytes(state.get[0])) if state.exists else 0
-        batch = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True, copy=False)
-        )
+
+def _make_budget_fn(
+    budget_map: dict, strata_col: str, id_col: str, ts: str, in_cols: list
+):
+    """State: the stratum's running token total (one int)."""
+
+    def step(cum, batch, wm):
+        if batch is None:
+            return cum, [], None
+        budget = budget_map.get(batch[strata_col].iat[0])
+        if budget is None:
+            return None, [], None
         batch = batch.sort_values([ts, id_col], kind="stable").reset_index(
             drop=True
         )
@@ -662,23 +666,9 @@ def streaming_token_budget_filter(
                 keep.append(True)
             else:
                 keep.append(False)
-        state.update((pickle.dumps(cum),))
-        out = batch.loc[keep, in_cols]
-        if len(out):
-            yield out
+        return cum, [batch.loc[keep, in_cols]], None
 
-    return (
-        staged.groupBy(strata_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=T.StructType(
-                [T.StructField("blob", T.BinaryType())]
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return callback(step, int, timeout=False)
 
 
 def streaming_shard_assign(
@@ -700,11 +690,7 @@ def streaming_shard_assign(
     id) arrival order here.  Output: input columns + ``n_bytes`` +
     ``shard_idx``.
     """
-    import pickle
-
-    import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     in_cols = df.columns
     staged = df.withColumn(
@@ -717,18 +703,21 @@ def streaming_shard_assign(
             T.StructField("shard_idx", T.IntegerType()),
         ]
     )
-    budget = int(shard_bytes)
+    return keyed_apply(
+        staged,
+        _make_shard_fn(int(shard_bytes), id_col, ts, in_cols),
+        out_schema,
+        strata_col,
+    )
 
-    def fn(key, pdfs, state):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        cum = pickle.loads(bytes(state.get[0])) if state.exists else 0
-        batch = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True, copy=False)
-        )
+
+def _make_shard_fn(budget: int, id_col: str, ts: str, in_cols: list):
+    """State: the stratum's running byte total (one int)."""
+    import pandas as pd
+
+    def step(cum, batch, wm):
+        if batch is None:
+            return cum, [], None
         batch = batch.sort_values([ts, id_col], kind="stable").reset_index(
             drop=True
         )
@@ -737,16 +726,9 @@ def streaming_shard_assign(
         for n in sizes:
             shards.append(cum // budget)
             cum += int(n)
-        state.update((pickle.dumps(cum),))
         out = batch[in_cols].copy()
         out["n_bytes"] = sizes
         out["shard_idx"] = pd.array(shards, dtype="int32")
-        yield out
+        return cum, [out], None
 
-    return staged.groupBy(strata_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=T.StructType([T.StructField("blob", T.BinaryType())]),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return callback(step, int, timeout=False)

@@ -21,8 +21,9 @@ store and never builds one — pkg/idempotent/repository.go:1-5):
   n_state_buckets)`` coarse groups (the ordering operator's
   key-coarsening idiom — a handful of fat state cells instead of one
   tiny cell per LSH bucket). Each cell holds per-bucket rep
-  signatures as plain numpy arrays (version-tagged pickle, the
-  ordering wire-format contract);
+  signatures as plain numpy arrays, saved, versioned and timed out by
+  the shared keyed-state scaffold (``operators/state.py``: wire
+  format, legacy rule, step contract);
 - verdicts: each band row comes back with ``is_dup``; a doc is a
   duplicate iff ANY band says so. All of a doc's band rows are
   produced from the same input batch, so the OR is a plain batch
@@ -55,9 +56,6 @@ re-read from state.
 
 from __future__ import annotations
 
-import pickle
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 
@@ -70,8 +68,7 @@ from dbus_spark.operators.dedup import (
     minhash_coeffs,
     minhash_sig_col,
 )
-
-_STATE_FMT_V1 = b"\x01"
+from dbus_spark.operators.state import callback, keyed_apply
 
 # polynomial-rolling base for combining token hashes into shingle
 # hashes (any constant < MINHASH_P works; part of the sig scheme)
@@ -209,28 +206,18 @@ def minhash_sigs_pandas(
     return out
 
 
-_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
-
-
-def _load_cell(state) -> dict:
-    (blob,) = state.get
-    blob = bytes(blob)
-    if blob[:1] == _STATE_FMT_V1:
-        raw = pickle.loads(blob[1:])
-    else:  # untagged legacy blob (raw pickle starts 0x80)
-        raw = pickle.loads(blob)
+def _load_cell(raw: list) -> dict:
     return {
         b: (ids, mat.reshape(len(ids), -1), last)
         for b, ids, mat, last in raw
     }
 
 
-def _save_cell(state, cell: dict) -> None:
-    raw = [
+def _dump_cell(cell: dict) -> list:
+    return [
         (b, ids, np.ascontiguousarray(mat).reshape(-1), last)
         for b, (ids, mat, last) in cell.items()
     ]
-    state.update((_STATE_FMT_V1 + pickle.dumps(raw, protocol=5),))
 
 
 def _prune_cell(cell: dict, cutoff_ms: int) -> dict:
@@ -251,33 +238,10 @@ def _make_cell_fn(
     max_reps: int,
     ts_col: str = "ts",
 ):
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        cutoff = wm - rep_ttl_ms
-
-        if state.hasTimedOut:
-            cell = _prune_cell(_load_cell(state), cutoff)
-            if cell:
-                _save_cell(state, cell)
-                state.setTimeoutTimestamp(wm + rep_ttl_ms)
-            else:
-                state.remove()
-            return
-
-        cell = _prune_cell(_load_cell(state), cutoff) if state.exists else {}
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            if cell:
-                _save_cell(state, cell)
-                state.setTimeoutTimestamp(wm + rep_ttl_ms)
-            else:
-                state.remove()
-            return
-        batch = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True, copy=False)
-        )
+    def step(cell, batch, wm):
+        cell = _prune_cell(cell, wm - rep_ttl_ms)
+        if batch is None:
+            return (cell or None), [], wm + rep_ttl_ms
         # earlier-arrived order: (ts, id) — ties break on id
         batch = batch.sort_values(
             [ts_col, "_ndid"], kind="stable"
@@ -386,11 +350,6 @@ def _make_cell_fn(
             elif b in cell:
                 del cell[b]
 
-        if cell:
-            _save_cell(state, cell)
-            state.setTimeoutTimestamp(wm + rep_ttl_ms)
-        else:
-            state.remove()
         # emit only rows that can change the resolve outcome: the
         # band-0 row (payload carrier — guarantees every doc appears)
         # plus any dup verdict. A not-dup non-band-0 row contributes
@@ -400,9 +359,9 @@ def _make_cell_fn(
         emit = (batch["band"].to_numpy() == 0) | dup
         out = batch.loc[emit, out_cols].copy()
         out["is_dup"] = dup[emit]
-        yield out
+        return (cell or None), [out], wm + rep_ttl_ms
 
-    return fn
+    return callback(step, dict, _load_cell, _dump_cell)
 
 
 def streaming_neardup_verdicts(
@@ -429,8 +388,6 @@ def streaming_neardup_verdicts(
     same micro-batch). Shuffle is |docs|·n_bands rows in (text rides
     along once per band, the batch band join's geometry) but only
     ~|docs| + |dup verdicts| rows back out."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if n_hashes % n_bands != 0:
         # a non-divisible split would silently exclude the trailing
         # n_hashes % n_bands signature slots from every band key while
@@ -519,22 +476,19 @@ def streaming_neardup_verdicts(
             T.StructField("is_dup", T.BooleanType()),
         ]
     )
-    return (
-        banded.withWatermark(ts, watermark)
-        .groupBy("_ndgrp")
-        .applyInPandasWithState(
-            _make_cell_fn(
-                out_cols,
-                min_est_jaccard,
-                rep_ttl_ms,
-                max_reps_per_bucket,
-                ts_col=ts,
-            ),
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_apply(
+        banded,
+        _make_cell_fn(
+            out_cols,
+            min_est_jaccard,
+            rep_ttl_ms,
+            max_reps_per_bucket,
+            ts_col=ts,
+        ),
+        out_schema,
+        "_ndgrp",
+        watermark=watermark,
+        ts=ts,
     )
 
 
@@ -572,24 +526,22 @@ def neardup_filter_foreach_batch(sink_fn, id_col: str = "doc_id"):
 # ---------------------------------------------------------------------------
 
 
-def _load_emb_cell(state):
-    (blob,) = state.get
-    blob = bytes(blob)
-    raw = pickle.loads(blob[1:] if blob[:1] == _STATE_FMT_V1 else blob)
+def _empty_emb_cell() -> tuple:
+    return (
+        np.array([], dtype=np.int64),
+        np.empty((0, 0), dtype=np.float32),
+        np.array([], dtype=np.int64),
+    )
+
+
+def _load_emb_cell(raw: tuple) -> tuple:
     ids, mat, last = raw
     return ids, mat.reshape(len(ids), -1), last
 
 
-def _save_emb_cell(state, ids, mat, last) -> None:
-    state.update(
-        (
-            _STATE_FMT_V1
-            + pickle.dumps(
-                (ids, np.ascontiguousarray(mat).reshape(-1), last),
-                protocol=5,
-            ),
-        )
-    )
+def _dump_emb_cell(cell: tuple) -> tuple:
+    ids, mat, last = cell
+    return ids, np.ascontiguousarray(mat).reshape(-1), last
 
 
 def _make_emb_cell_fn(
@@ -602,44 +554,18 @@ def _make_emb_cell_fn(
 ):
     thr = np.float32(threshold)
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        cutoff = wm - rep_ttl_ms
+    def step(cell, batch, wm):
+        r_ids, r_mat, r_last = cell
+        keep = r_last >= wm - rep_ttl_ms
+        if not keep.all():
+            r_ids, r_mat, r_last = r_ids[keep], r_mat[keep], r_last[keep]
 
-        def prune(ids, mat, last):
-            keep = last >= cutoff
-            return (ids[keep], mat[keep], last[keep]) if not keep.all() else (
-                ids, mat, last
-            )
+        def result(emits):
+            kept = (r_ids, r_mat, r_last) if len(r_ids) else None
+            return kept, emits, wm + rep_ttl_ms
 
-        if state.hasTimedOut:
-            ids, mat, last = prune(*_load_emb_cell(state))
-            if len(ids):
-                _save_emb_cell(state, ids, mat, last)
-                state.setTimeoutTimestamp(wm + rep_ttl_ms)
-            else:
-                state.remove()
-            return
-
-        if state.exists:
-            r_ids, r_mat, r_last = prune(*_load_emb_cell(state))
-        else:
-            r_ids = np.array([], dtype=np.int64)
-            r_mat = np.empty((0, 0), dtype=np.float32)
-            r_last = np.array([], dtype=np.int64)
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            if len(r_ids):
-                _save_emb_cell(state, r_ids, r_mat, r_last)
-                state.setTimeoutTimestamp(wm + rep_ttl_ms)
-            else:
-                state.remove()
-            return
-        batch = (
-            chunks[0]
-            if len(chunks) == 1
-            else pd.concat(chunks, ignore_index=True, copy=False)
-        )
+        if batch is None:
+            return result([])
         # earlier-arrived order, then collapse same-id redeliveries
         # inside the batch (an id names content; cross-batch copies
         # match their own rep at cosine ~1.0)
@@ -657,13 +583,7 @@ def _make_emb_cell_fn(
             null_rows = batch.loc[nullv, out_cols].copy()
             batch = batch.loc[~nullv].reset_index(drop=True)
             if not len(batch):
-                if len(r_ids):
-                    _save_emb_cell(state, r_ids, r_mat, r_last)
-                    state.setTimeoutTimestamp(wm + rep_ttl_ms)
-                else:
-                    state.remove()
-                yield null_rows
-                return
+                return result([null_rows])
         else:
             null_rows = None
         V = np.stack(batch["_sdvec"].to_numpy()).astype(np.float32)
@@ -720,17 +640,12 @@ def _make_emb_cell_fn(
                 )
                 r_mat = np.vstack([r_mat, V[take]])
                 r_last = np.concatenate([r_last, ts_ms[take]])
-        if len(r_ids):
-            _save_emb_cell(state, r_ids, r_mat, r_last)
-            state.setTimeoutTimestamp(wm + rep_ttl_ms)
-        else:
-            state.remove()
         out = batch.loc[~dup, out_cols]
         if null_rows is not None:
             out = pd.concat([out, null_rows], ignore_index=True)
-        yield out.copy()
+        return result([out.copy()])
 
-    return fn
+    return callback(step, _empty_emb_cell, _load_emb_cell, _dump_emb_cell)
 
 
 def streaming_semdedup_filter(
@@ -773,8 +688,6 @@ def streaming_semdedup_filter(
     through as kept — under-dedup, never over-drop, the family's
     documented cap contract).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from dbus_spark.operators.similarity import (
         _centroid_dots,
         ivf_centroids,
@@ -800,21 +713,18 @@ def streaming_semdedup_filter(
         [df.schema[c] for c in in_cols]
         + [T.StructField("cell", T.IntegerType())]
     )
-    return (
-        staged.withWatermark(ts, watermark)
-        .groupBy("cell")
-        .applyInPandasWithState(
-            _make_emb_cell_fn(
-                out_cols,
-                threshold,
-                rep_ttl_ms,
-                max_reps_per_cell,
-                ts_col=ts,
-                id_field=id_col,
-            ),
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_apply(
+        staged,
+        _make_emb_cell_fn(
+            out_cols,
+            threshold,
+            rep_ttl_ms,
+            max_reps_per_cell,
+            ts_col=ts,
+            id_field=id_col,
+        ),
+        out_schema,
+        "cell",
+        watermark=watermark,
+        ts=ts,
     )

@@ -10,8 +10,12 @@ without the interval the state grows without bound).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dbus_spark.operators.state import callback, keyed_apply, to_columns
 
 
 def correlate_user_tool(
@@ -151,93 +155,8 @@ def asof_join(
 # the identical timestamp IS visible (<= semantics), several same-ts
 # right rows resolve to the greatest order.
 
-_ASOF_FMT_V1 = b"\x01"
 
-
-def streaming_asof_join(
-    df: DataFrame,
-    is_right,
-    right_cols: list[str],
-    key: str = "conv_id",
-    order: str = "turn_idx",
-    ts: str = "ts",
-    watermark: str = "10 minutes",
-    ttl_ms: int = 600_000,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Streaming as-of join over one stream: rows where ``is_right``
-    (a Column or SQL string) holds are reference rows whose
-    ``right_cols`` values become visible to every LATER (or same-ts)
-    row of the same key; all other rows are probes, emitted as
-    ``key, order, ts, *right_cols`` with the as-of values (null when
-    no reference row precedes).  Emission is exactly-once by
-    construction: a probe row is processed in exactly one micro-batch
-    (after the redelivery frontier guard).
-
-    Reference anchor: funkygao/dbus keeps per-table latest-schema
-    registers beside the binlog stream (pkg/myslave/table.go:7-40);
-    this is that register generalized to event-time as-of semantics,
-    matching operators/join.py::asof_join row-for-row (pinned by
-    tests/test_cep... test_asof_stream tests and the
-    asof_stream_replica driver row).
-
-    Boundary condition on the equal-ts tie rule (advisor, r6): the
-    batch rule "a right row at the identical ts is visible, greatest
-    order wins" holds in streaming only when that right row does not
-    FOLLOW the probe across a micro-batch boundary. Append-mode
-    emission is final: a same-ts right arriving in a LATER micro-batch
-    cannot retroactively re-match an already-emitted probe. Stream ==
-    batch is therefore guaranteed for any split where equal-ts rights
-    precede their probes in arrival order (the in-order input contract
-    this operator documents: compose after ordered_turns_stream).
-    """
-    import pickle
-    from typing import Iterable
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    _RESERVED = {"key", "order", "ts", "_is_r", "_bkt"}
-    clash = set(right_cols) & _RESERVED
-    if clash:
-        # same guard as asof_join's right_cols/left clash: a collision
-        # with the internal frame names would duplicate columns in
-        # ``src`` and break the state fn (advisor finding, r6)
-        raise ValueError(
-            f"streaming_asof_join: right_cols {sorted(clash)} collide "
-            f"with internal column names {sorted(_RESERVED)} — rename "
-            "the column before joining"
-        )
-    cond = F.expr(is_right) if isinstance(is_right, str) else is_right
-    src = df.select(
-        F.col(key).alias("key"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-        cond.alias("_is_r"),
-        *[F.col(c) for c in right_cols],
-    ).withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets)).cast("int")
-    )
-    right_types = {
-        c: df.schema[c].dataType.simpleString() for c in right_cols
-    }
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("order", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-        + [
-            T.StructField(
-                c, T._parse_datatype_string(right_types[c])
-            )
-            for c in right_cols
-        ]
-    )
-    state_schema = T.StructType([T.StructField("blob", T.BinaryType())])
+def _make_asof_fn(right_cols: list[str], ttl_ms: int):
     NEG = np.int64(-(2**62))
 
     def _empty_state() -> pd.DataFrame:
@@ -252,42 +171,9 @@ def streaming_asof_join(
             cols[c] = np.array([], object)
         return pd.DataFrame(cols)
 
-    def fn(
-        _k: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            (blob,) = state.get
-            st = pickle.loads(bytes(blob)[1:])
-            st = pd.DataFrame(st)
-            st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
-            if len(st):
-                state.update(
-                    (
-                        _ASOF_FMT_V1
-                        + pickle.dumps(
-                            {c: st[c].to_numpy() for c in st.columns},
-                            protocol=5,
-                        ),
-                    )
-                )
-                state.setTimeoutTimestamp(wm + ttl_ms)
-            else:
-                state.remove()
-            return
-        if state.exists:
-            (blob,) = state.get
-            st = pd.DataFrame(pickle.loads(bytes(blob)[1:]))
-        else:
-            st = _empty_state()
-        chunks = [p for p in pdfs if len(p)]
+    def step(st, new, wm):
         emits: list[pd.DataFrame] = []
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+        if new is not None:
             new = pd.DataFrame(
                 {
                     "key": new["key"].to_numpy(object),
@@ -436,32 +322,92 @@ def streaming_asof_join(
                     st["r_ord"] = NEG
                     for c in right_cols:
                         st[c] = None
-        # TTL sweep + save
+        # TTL sweep (the whole of a timeout call)
         st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
-        if len(st):
-            state.update(
-                (
-                    _ASOF_FMT_V1
-                    + pickle.dumps(
-                        {c: st[c].to_numpy() for c in st.columns},
-                        protocol=5,
-                    ),
-                )
-            )
-            state.setTimeoutTimestamp(max(wm + ttl_ms, wm + 1))
-        else:
-            state.remove()
-        for e in emits:
-            yield e
+        return (st if len(st) else None), emits, wm + ttl_ms
 
-    return (
-        src.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return callback(step, _empty_state, pd.DataFrame, to_columns)
+
+
+def streaming_asof_join(
+    df: DataFrame,
+    is_right,
+    right_cols: list[str],
+    key: str = "conv_id",
+    order: str = "turn_idx",
+    ts: str = "ts",
+    watermark: str = "10 minutes",
+    ttl_ms: int = 600_000,
+    n_buckets: int = 64,
+) -> DataFrame:
+    """Streaming as-of join over one stream: rows where ``is_right``
+    (a Column or SQL string) holds are reference rows whose
+    ``right_cols`` values become visible to every LATER (or same-ts)
+    row of the same key; all other rows are probes, emitted as
+    ``key, order, ts, *right_cols`` with the as-of values (null when
+    no reference row precedes).  Emission is exactly-once by
+    construction: a probe row is processed in exactly one micro-batch
+    (after the redelivery frontier guard).
+
+    Reference anchor: funkygao/dbus keeps per-table latest-schema
+    registers beside the binlog stream (pkg/myslave/table.go:7-40);
+    this is that register generalized to event-time as-of semantics,
+    matching operators/join.py::asof_join row-for-row (pinned by
+    tests/test_cep... test_asof_stream tests and the
+    asof_stream_replica driver row).
+
+    Boundary condition on the equal-ts tie rule (advisor, r6): the
+    batch rule "a right row at the identical ts is visible, greatest
+    order wins" holds in streaming only when that right row does not
+    FOLLOW the probe across a micro-batch boundary. Append-mode
+    emission is final: a same-ts right arriving in a LATER micro-batch
+    cannot retroactively re-match an already-emitted probe. Stream ==
+    batch is therefore guaranteed for any split where equal-ts rights
+    precede their probes in arrival order (the in-order input contract
+    this operator documents: compose after ordered_turns_stream).
+    """
+    from pyspark.sql import types as T
+
+    _RESERVED = {"key", "order", "ts", "_is_r", "_bkt"}
+    clash = set(right_cols) & _RESERVED
+    if clash:
+        # same guard as asof_join's right_cols/left clash: a collision
+        # with the internal frame names would duplicate columns in
+        # ``src`` and break the state fn (advisor finding, r6)
+        raise ValueError(
+            f"streaming_asof_join: right_cols {sorted(clash)} collide "
+            f"with internal column names {sorted(_RESERVED)} — rename "
+            "the column before joining"
         )
+    cond = F.expr(is_right) if isinstance(is_right, str) else is_right
+    src = df.select(
+        F.col(key).alias("key"),
+        F.col(order).cast("long").alias("order"),
+        F.col(ts).alias("ts"),
+        cond.alias("_is_r"),
+        *[F.col(c) for c in right_cols],
+    )
+    right_types = {
+        c: df.schema[c].dataType.simpleString() for c in right_cols
+    }
+    out_schema = T.StructType(
+        [
+            T.StructField("key", T.StringType()),
+            T.StructField("order", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+        + [
+            T.StructField(
+                c, T._parse_datatype_string(right_types[c])
+            )
+            for c in right_cols
+        ]
+    )
+    return keyed_apply(
+        src,
+        _make_asof_fn(list(right_cols), ttl_ms),
+        out_schema,
+        "key",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )

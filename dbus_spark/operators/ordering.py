@@ -10,7 +10,10 @@ order, regardless of arrival order or redelivery.
 Batch path: window-function dedup (pure Catalyst, no Python).
 
 Streaming path: ``applyInPandasWithState`` keyed on a **hash bucket of
-conv_id**, not conv_id itself (key coarsening). Rationale, measured in
+conv_id**, not conv_id itself (key coarsening), through the shared
+keyed-state scaffold ``operators/state.py`` (bucketing rule, wire
+format, timeout policy); this module keeps only the bucket
+transition. Rationale, measured in
 round 1: with per-conv keys the cost is dominated by per-key machinery
 — one Arrow frame, one state get/update and one Python call per
 conversation per micro-batch (~1.5 ms each) — while the actual
@@ -66,9 +69,6 @@ first-class knob, not an accident:
 
 from __future__ import annotations
 
-import pickle
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 
@@ -76,11 +76,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dbus_spark.operators.state import callback, keyed_apply, to_columns
+
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
-_STATE_SCHEMA = "state binary"
 _COLS = ["turn_idx", "role", "text", "tool", "ts"]
 _ALL = ["conv_id", *_COLS]
 
@@ -116,26 +117,16 @@ def dedup_within_watermark(
     )
 
 
-# --- bucket state (de)serialization ------------------------------------
+# --- bucket state ------------------------------------------------------
 #
-# One binary state cell per bucket holding (meta, pending): meta is a
-# frame indexed by conv_id with int64 columns (next_idx, deadline),
-# pending a frame [conv_id, *_COLS] of out-of-order rows. The wire
-# format is a 1-byte format-version tag followed by pickle-5 of PLAIN
-# NUMPY ARRAYS (ids, int64 columns, datetime64 ts, object strings) —
-# ~20x cheaper than a per-conv JSON round-trip, and version-stable:
-# numpy's array pickle format is a stable public contract, unlike
-# pickled pandas objects whose internals shift between pandas releases
-# (a checkpoint must outlive library upgrades). Frames are rebuilt
-# from the arrays on load. The version byte (0x01; a raw pickle blob
-# always starts with 0x80, so the tag is unambiguous) lets future
-# format changes resume old checkpoints; untagged blobs from earlier
-# releases — the 4-tuple-of-arrays form and the original
-# (meta, pending)-DataFrame form — are still decoded via fallback, so
-# a checkpoint written by any prior release resumes across upgrades.
-
-
-_STATE_FMT_V1 = b"\x01"
+# One state cell per bucket holding (meta, pending): meta is a frame
+# indexed by conv_id with int64 columns (next_idx, deadline), pending a
+# frame [conv_id, *_COLS] of out-of-order rows. The payload is a
+# 4-tuple of PLAIN NUMPY ARRAYS (ids, next_idx, deadline, pending
+# columns) -- ~20x cheaper than a per-conv JSON round-trip -- under the
+# tagged wire format of ``operators/state.py``. Blobs from earlier
+# releases still load: the untagged 4-tuple through the scaffold's
+# legacy rule, and the original (meta, pending) pandas 2-tuple here.
 
 
 def _empty_meta() -> pd.DataFrame:
@@ -158,19 +149,14 @@ def _empty_pending() -> pd.DataFrame:
     )
 
 
-def _load(state) -> tuple[pd.DataFrame, pd.DataFrame]:
-    (blob,) = state.get
-    blob = bytes(blob)
-    if blob[:1] == _STATE_FMT_V1:
-        obj = pickle.loads(blob[1:])
-    else:
-        # legacy untagged checkpoint: raw pickle (starts 0x80) of either
-        # the 4-tuple-of-numpy-arrays form or the original
-        # (meta, pending) pandas 2-tuple
-        obj = pickle.loads(blob)
-        if isinstance(obj, tuple) and len(obj) == 2:
-            meta, pending = obj
-            return meta, pd.DataFrame(pending)
+def _empty_state() -> tuple[pd.DataFrame, pd.DataFrame]:
+    return _empty_meta(), _empty_pending()
+
+
+def _load_state(obj) -> tuple[pd.DataFrame, pd.DataFrame]:
+    if isinstance(obj, tuple) and len(obj) == 2:
+        meta, pending = obj  # legacy (meta, pending) pandas 2-tuple
+        return meta, pd.DataFrame(pending)
     ids, ni, dl, pend = obj
     meta = pd.DataFrame(
         {"next_idx": ni, "deadline": dl}, index=pd.Index(ids, dtype=object)
@@ -178,14 +164,14 @@ def _load(state) -> tuple[pd.DataFrame, pd.DataFrame]:
     return meta, pd.DataFrame(pend)
 
 
-def _save(state, meta: pd.DataFrame, pending: pd.DataFrame) -> None:
-    payload = (
+def _dump_state(st: tuple[pd.DataFrame, pd.DataFrame]) -> tuple:
+    meta, pending = st
+    return (
         meta.index.to_numpy(dtype=object),
         meta["next_idx"].to_numpy("int64"),
         meta["deadline"].to_numpy("int64"),
-        {c: pending[c].to_numpy() for c in pending.columns},
+        to_columns(pending),
     )
-    state.update((_STATE_FMT_V1 + pickle.dumps(payload, protocol=5),))
 
 
 def _advance_bucket(
@@ -314,56 +300,22 @@ def _force_flush(
 
 
 def _make_bucket_fn(timeout_ms: int, max_pending: int = 100_000):
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state
-    ) -> Iterable[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-
-        if state.hasTimedOut:
-            meta, pending = _load(state)
-            emit, meta, pending = _flush_expired(meta, pending, wm)
-            if len(meta):
-                _save(state, meta, pending)
-                state.setTimeoutTimestamp(
-                    max(int(meta["deadline"].min()), wm + 1)
-                )
-            else:
-                state.remove()
-            if len(emit):
-                yield emit[_ALL]
-            return
-
-        meta, pending = (
-            _load(state) if state.exists else (_empty_meta(), _empty_pending())
-        )
-        chunks = [p[_ALL] for p in pdfs if len(p)]
+    def step(st, new, wm):
+        meta, pending = st
         emits = []
-        if chunks:
-            new = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True, copy=False)
-            )
+        if new is not None:
             emit, meta, pending = _advance_bucket(
-                meta, pending, new, wm + timeout_ms
+                meta, pending, new[_ALL], wm + timeout_ms
             )
-            if len(emit):
-                emits.append(emit)
+            emits.append(emit)
         flushed, meta, pending = _flush_expired(meta, pending, wm)
-        if len(flushed):
-            emits.append(flushed)
         forced, meta, pending = _force_flush(meta, pending, max_pending)
-        if len(forced):
-            emits.append(forced)
-        if len(meta):
-            _save(state, meta, pending)
-            state.setTimeoutTimestamp(max(int(meta["deadline"].min()), wm + 1))
-        else:
-            state.remove()
-        for e in emits:
-            yield e[_ALL]
+        emits = [e[_ALL] for e in (*emits, flushed, forced)]
+        if not len(meta):
+            return None, emits, None
+        return (meta, pending), emits, meta["deadline"].min()
 
-    return fn
+    return callback(step, _empty_state, _load_state, _dump_state)
 
 
 def ordered_turns_stream(
@@ -389,20 +341,11 @@ def ordered_turns_stream(
     buffered suffix emits (early instead of at its deadline), never
     whether rows emit.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    bucketed = df.withColumn(
-        "_bkt",
-        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-    )
-    return (
-        bucketed.withWatermark("ts", watermark)
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            _make_bucket_fn(flush_after_ms, max_pending_per_bucket),
-            outputStructType=OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_apply(
+        df,
+        _make_bucket_fn(flush_after_ms, max_pending_per_bucket),
+        OUT_SCHEMA,
+        "conv_id",
+        n_buckets=n_buckets,
+        watermark=watermark,
     )

@@ -12,8 +12,11 @@ import pytest
 from dbus_spark.operators.cep import (
     classify,
     funnel,
+    match_quantified,
     match_runs,
     match_sequence,
+    streaming_funnel,
+    streaming_match_quantified,
     streaming_match_sequence,
 )
 
@@ -1383,3 +1386,35 @@ def test_stream_funnel_kill_resume(spark, turns_pd, tmp_path):
         for r in out.itertuples(index=False)
     } == exp
     assert not out.duplicated(["key", "stage_idx"]).any()
+
+
+# --- input contracts fail loudly (ValueError, not a strippable assert) --
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        pytest.param(lambda df: match_sequence(df, []), id="empty_pattern"),
+        pytest.param(lambda df: classify(df, {}), id="no_symbols"),
+        pytest.param(lambda df: funnel(df, []), id="no_stages"),
+        pytest.param(
+            lambda df: match_quantified(df, [("user", 0, None)], sym="role"),
+            id="quantifier_min_0",
+        ),
+        pytest.param(
+            lambda df: streaming_match_quantified(
+                df, [("user", 3, 2)], sym="role"
+            ),
+            id="quantifier_max_below_min",
+        ),
+        pytest.param(
+            lambda df: streaming_funnel(
+                df, [(f"s{i}", "true") for i in range(63)]
+            ),
+            id="funnel_63_stages",
+        ),
+    ],
+)
+def test_cep_input_contracts_raise_value_error(turns_df, call):
+    with pytest.raises(ValueError):
+        call(turns_df)

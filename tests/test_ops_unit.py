@@ -483,6 +483,7 @@ def test_ordering_state_wire_format_versioned_and_legacy():
     import pandas as pd
 
     from dbus_spark.operators import ordering as O
+    from dbus_spark.operators import state as S
 
     meta = pd.DataFrame(
         {"next_idx": np.array([3], "int64"),
@@ -504,9 +505,9 @@ def test_ordering_state_wire_format_versioned_and_legacy():
 
     # current format round-trips and is tagged
     st = FakeState()
-    O._save(st, meta, pending)
-    assert st.blob[:1] == O._STATE_FMT_V1
-    m2, p2 = O._load(st)
+    st.update((S.encode(O._dump_state((meta, pending))),))
+    assert st.blob[:1] == S.FORMAT_V1
+    m2, p2 = O._load_state(S.decode(st.get[0]))
     pd.testing.assert_frame_equal(m2, meta)
     assert len(p2) == 0
 
@@ -520,12 +521,12 @@ def test_ordering_state_wire_format_versioned_and_legacy():
         ),
         protocol=5,
     )
-    m3, _ = O._load(FakeState(legacy4))
+    m3, _ = O._load_state(S.decode(FakeState(legacy4).get[0]))
     pd.testing.assert_frame_equal(m3, meta)
 
     # legacy (meta, pending) pandas 2-tuple (r2 format)
     legacy2 = pickle.dumps((meta, pending), protocol=5)
-    m4, _ = O._load(FakeState(legacy2))
+    m4, _ = O._load_state(S.decode(FakeState(legacy2).get[0]))
     pd.testing.assert_frame_equal(m4, meta)
 
 

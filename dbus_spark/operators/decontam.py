@@ -21,16 +21,10 @@ it is doc-count-, not token-count-, sized.
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-# Java \s == [ \t\n\x0B\f\r]; Spark trim strips 0x20 only — keep
-# empty tokens exactly as Spark's split does (tab-edged text parity,
-# same contract as dedup.shingles_exploded_arrow)
-_JAVA_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
-
+from dbus_spark.operators import tokenize as tk
 from dbus_spark.operators.dedup import shingles_exploded_arrow
 
 
@@ -106,14 +100,15 @@ def collect_bench_ngrams(
     the returned frozenset ships to executors inside the streaming
     filter's closure, the decontam analog of a broadcast join side.
     Accepts a DataFrame or an iterable of strings; tokenization is the
-    same Java-whitespace-parity split the batch operator uses."""
+    same Java-whitespace-parity split the batch operator uses, and a
+    null text adds no n-gram."""
     if isinstance(benchmark, DataFrame):
         texts = [r[0] for r in benchmark.select(text_col).collect()]
     else:
         texts = list(benchmark)
     out = set()
     for t in texts:
-        toks = _JAVA_WS_RE.split(t.strip(" "))
+        toks = tk.split(t)
         for i in range(len(toks) - n + 1):
             out.add(" ".join(toks[i : i + n]))
     return frozenset(out)
@@ -171,12 +166,14 @@ def streaming_decontam_filter(
     via a vectorized probe — the 100 TB arm (the near-dup kernel
     lesson: per-row gram-string building dominates; rolling int64
     hashes through C kernels removes it).  Verdicts agree short of a
-    64-bit collision (pinned by a test).  ``mode='bloom'`` (with the
-    bitset from :func:`bloom_bench_ngrams`) is the giant-exclusion-
-    set arm: ~4.6x smaller closure than the hash array, one-sided
-    error — every doc hash-mode drops, bloom-mode drops (no false
-    PASSES; pinned by a test), plus an FP-rate's worth of clean docs
-    over-dropped."""
+    hash collision (pinned by a test): the token hashes are
+    ``tokenize.token_hashes``, exact on NUL-bearing tokens too, and
+    the verdict is ``tokenize.contamination_verdict``.
+    ``mode='bloom'`` (with the bitset from :func:`bloom_bench_ngrams`)
+    is the giant-exclusion-set arm: ~4.6x smaller closure than the
+    hash array, one-sided error — every doc hash-mode drops,
+    bloom-mode drops (no false PASSES; pinned by a test), plus an
+    FP-rate's worth of clean docs over-dropped."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -195,23 +192,13 @@ def streaming_decontam_filter(
 
         @pandas_udf("boolean")
         def _clean(texts: pd.Series) -> pd.Series:
-            t = texts.reset_index(drop=True)
-            doc_of, grams = ngram_hash_arrays(t, n)
-            keep = np.ones(len(t), dtype=bool)
-            if len(grams):
-                # distinct (doc, gram) via a PACKED 1-D key — 2-D
-                # np.unique(axis=0) was 2.2 s vs 0.05 s packed at 40k
-                # docs (measured); gram < P < 2^31 so 31 bits suffice
-                key = (doc_of.astype(np.int64) << np.int64(31)) | grams
-                uk = np.unique(key)
-                d = uk >> np.int64(31)
-                g = uk & np.int64((1 << 31) - 1)
-                hit = probe(g)
-                n_grams = np.bincount(d, minlength=len(t))
-                n_hit = np.bincount(d, weights=hit, minlength=len(t))
-                hasg = n_grams > 0
-                keep[hasg] = n_hit[hasg] / n_grams[hasg] <= max_frac
-            return pd.Series(keep, dtype=bool)
+            doc_of, grams = ngram_hash_arrays(texts, n)
+            return pd.Series(
+                tk.contamination_verdict(
+                    doc_of, grams, len(texts), probe, max_frac
+                ),
+                dtype=bool,
+            )
 
     else:
 
@@ -222,7 +209,7 @@ def streaming_decontam_filter(
                 if t is None:
                     flags.append(True)
                     continue
-                toks = _JAVA_WS_RE.split(t.strip(" "))
+                toks = tk.split(t)
                 grams = {
                     " ".join(toks[i : i + n])
                     for i in range(len(toks) - n + 1)
@@ -276,7 +263,7 @@ def excise_contaminated_spans(
             spans = t.split(delim)
             kept = []
             for sp in spans:
-                toks = _JAVA_WS_RE.split(sp.strip(" "))
+                toks = tk.split(sp)
                 dirty = any(
                     " ".join(toks[i : i + n]) in bench
                     for i in range(len(toks) - n + 1)

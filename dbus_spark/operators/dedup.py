@@ -38,7 +38,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbus_spark.operators import tokenize as tk
 from dbus_spark.operators.text import fingerprint, tokens
+from dbus_spark.operators.tokenize import MINHASH_P
 from dbus_spark.session import _n_partitions
 
 
@@ -131,41 +133,29 @@ def shingles_exploded_arrow(
     an interpreted slice+array_join per shingle (~15 µs each, measured:
     3.9 s for 260k shingles at sf0.1); this path batches it all.
 
-    Parity detail (a review caught the naive version diverging): Spark
-    ``trim`` strips ONLY 0x20 spaces and Java ``\\s`` is ASCII-only,
-    while pandas ``.str.strip()`` / Python ``\\s`` are Unicode-aware —
-    so this path strips spaces explicitly and splits on the ASCII
-    whitespace class, keeping tab-edged and NBSP-containing texts
-    byte-identical to the JVM tokenization (pinned by a parity test
-    with hostile whitespace)."""
+    Tokenization, n-grams and the per-doc distinct are the shared
+    primitives of ``operators/tokenize.py`` (Java-whitespace and NUL
+    parity, pinned by parity tests with hostile texts)."""
+    import numpy as np
     import pandas as pd
-
-    # Java \s == [ \t\n\x0B\f\r]; Spark trim == strip 0x20 only
-    _JAVA_WS = r"[ \t\n\x0b\f\r]+"
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
-            toks = (
-                pdf[text_col]
-                .str.strip(" ")
-                .str.split(_JAVA_WS, regex=True)
-                .explode()
+            sh = tk.ngrams(tk.split_series(pdf[text_col]), n)
+            row = sh.index.to_numpy()
+            # array_distinct parity: distinct (row, shingle) codes
+            codes, _ = tk.distinct(sh)
+            _, first = np.unique(
+                (row << 32) | codes.astype(np.int64), return_index=True
             )
-            g = toks.groupby(level=0)
-            sh = toks
-            for k in range(1, n):
-                sh = sh + " " + g.shift(-k)
-            sh = sh.dropna()
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy()[sh.index.to_numpy()],
-                    "s": sh.to_numpy(),
+                    id_col: pdf[id_col].to_numpy()[row[first]],
+                    "s": sh.to_numpy()[first],
                 }
-            ).drop_duplicates()  # array_distinct parity, per doc
-            yield out
+            )
 
     id_type = df.schema[id_col].dataType.simpleString()
     return df.select(id_col, text_col).mapInPandas(
@@ -255,15 +245,10 @@ def _winnow_fingerprints_arrow(
     (short/null docs emit a null fingerprint row). k-grams are
     extracted as fixed-width byte views (ASCII fast path) and uniqued
     per batch before hashing — one md5 per DISTINCT k-gram instead of
-    one interpreted HOF step per position."""
-    import hashlib
-    import re
-
+    one interpreted HOF step per position (``tokenize.distinct_md5``)."""
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
-
-    ws = re.compile(_JAVA_WS)
 
     def gen(it):
         for pdf in it:
@@ -272,7 +257,9 @@ def _winnow_fingerprints_arrow(
             ids = pdf[id_col].to_numpy()
             texts = pdf[text_col].tolist()
             norms: list[str | None] = [
-                None if t is None else ws.sub(" ", t.strip(" ").lower())
+                None
+                if t is None
+                else tk.JAVA_WS.sub(" ", t.strip(" ").lower())
                 for t in texts
             ]
             # gather every k-gram of the batch as fixed-width bytes
@@ -285,9 +272,10 @@ def _winnow_fingerprints_arrow(
                 if s.isascii():
                     a = np.frombuffer(s.encode(), dtype=np.uint8)
                     wins = sliding_window_view(a, k)
+                    # V, not S: an S{k} item drops trailing NULs
                     subs = (
                         np.ascontiguousarray(wins)
-                        .view(f"S{k}")
+                        .view(f"V{k}")
                         .ravel()
                     )
                 else:
@@ -308,20 +296,10 @@ def _winnow_fingerprints_arrow(
             out_fps: list[np.ndarray] = []
             null_ids: list[object] = []
             if all_subs:
-                flat = np.concatenate(all_subs)
-                # hash-based factorize, not np.unique: a sort-based
+                # hash-based distinct, not np.unique: a sort-based
                 # unique over millions of OBJECT grams was 6.2 s of a
-                # 10k-doc batch vs 0.47 s factorized (the pool is
-                # NaN-free by construction, and downstream only needs
-                # uh[inv] — unique ORDER is irrelevant to the hashes)
-                inv, uniq = pd.factorize(flat)
-                uh = np.array(
-                    [
-                        int(hashlib.md5(u).hexdigest()[:8], 16)
-                        for u in uniq
-                    ],
-                    dtype=np.int64,
-                )
+                # 10k-doc batch vs 0.47 s hashed
+                inv, uh = tk.distinct_md5(np.concatenate(all_subs))
                 pos = 0
                 for rid, subs in zip(ids, subs_per_doc):
                     if subs is None:
@@ -1039,11 +1017,11 @@ def simhash_neardup_pairs_blocked(
     ).distinct()
 
 
-# Affine MinHash permutations over the prime field GF(p), p = 2^31-1.
-# One (expensive, md5-based) base hash per shingle, then n cheap
-# arithmetic permutations h_i(x) = (a_i*x + b_i) mod p -- the classic
-# formulation; a_i*x stays < 2^62 so 64-bit arithmetic never overflows.
-MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
+# Affine MinHash permutations over the prime field GF(p), p =
+# MINHASH_P = 2^31-1. One (expensive, md5-based) base hash per shingle,
+# then n cheap arithmetic permutations h_i(x) = (a_i*x + b_i) mod p --
+# the classic formulation; a_i*x stays < 2^62 so 64-bit arithmetic
+# never overflows.
 
 
 def minhash_coeffs(n_hashes: int, seed: int = 1337) -> list[tuple[int, int]]:
@@ -1119,13 +1097,10 @@ def _minhash_signature_arrow(
     shingles (fewer than ``shingle_n`` tokens, incl. null text) emit
     the same all-null signature the Catalyst array_min-over-empty
     produces."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
     coeffs = np.asarray(minhash_coeffs(n_hashes), dtype=np.int64)
-    _JAVA_WS = r"[ \t\n\x0b\f\r]+"
     id_type = df.schema[id_col].dataType.simpleString()
     null_sig = [None] * n_hashes
 
@@ -1133,47 +1108,17 @@ def _minhash_signature_arrow(
         for pdf in it:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
-            toks = (
-                pdf[text_col]
-                .str.strip(" ")
-                .str.split(_JAVA_WS, regex=True)
-                .explode()
-            )
-            toks = toks[toks.notna()]
-            g = toks.groupby(level=0)
-            sh = toks
-            for j in range(1, shingle_n):
-                sh = sh + " " + g.shift(-j)
-            sh = sh.dropna()
-            sdf = pd.DataFrame(
-                {"i": sh.index.to_numpy(), "s": sh.to_numpy()}
-            ).drop_duplicates()  # array_distinct parity, per doc
+            sh = tk.ngrams(tk.split_series(pdf[text_col]), shingle_n)
             sigs: list = [null_sig] * len(pdf)
-            if len(sdf):
-                # factorize, not sort-based object unique (NaN-free
-                # pool; unique order irrelevant — see winnow kernel)
-                inv, uniq = pd.factorize(sdf["s"].to_numpy())
-                uh = (
-                    np.array(
-                        [
-                            int(
-                                hashlib.md5(u.encode("utf-8")).hexdigest()[
-                                    :8
-                                ],
-                                16,
-                            )
-                            for u in uniq
-                        ],
-                        dtype=np.int64,
-                    )
-                    % MINHASH_P
+            if len(sh):
+                inv, uh = tk.distinct_md5(sh)
+                # array_distinct parity: distinct (doc, shingle) codes,
+                # sorted by doc, so a searchsorted segmentation is valid
+                key = np.unique(
+                    (sh.index.to_numpy() << 32) | inv.astype(np.int64)
                 )
-                base = uh[inv]
-                # doc index is non-decreasing: explode + group-shift +
-                # dropna + per-doc drop_duplicates all preserve row
-                # order, so a searchsorted segmentation is valid
-                doc_of = sdf["i"].to_numpy()
+                doc_of = key >> 32
+                base = uh[key & 0xFFFFFFFF] % MINHASH_P
                 perms = (
                     base[:, None] * coeffs[None, :, 0]
                     + coeffs[None, :, 1]
@@ -1325,32 +1270,6 @@ def lsh_estimated_jaccard(
     return out
 
 
-# Java \s == [ \t\n\x0B\f\r]; Spark trim == strip 0x20 only (the same
-# parity contract as shingles_exploded_arrow)
-_JAVA_WS = r"[ \t\n\x0b\f\r]+"
-
-
-def _java_split_tokens(texts) -> list[list[str]]:
-    """Replicate ``F.split(F.trim(c), r"\\s+")`` (operators.text.tokens)
-    in Python, byte-for-byte: strip 0x20 only, then split on the Java
-    ASCII whitespace class. Spark's ``split`` calls
-    ``Pattern.split(s, -1)`` (limit -1: trailing empty strings KEPT,
-    unlike ``String.split``'s default), which is exactly Python
-    ``re.split`` semantics — leading and trailing empties both survive
-    ("\\ta\\t" → ["", "a", ""]) and "" → [""]. Pinned against the
-    Catalyst form by the parity test."""
-    import re
-
-    ws = re.compile(_JAVA_WS)
-    out = []
-    for t in texts:
-        if t is None:
-            out.append(None)
-        else:
-            out.append(ws.split(t.strip(" ")))
-    return out
-
-
 def _simhash_arrow(
     df: DataFrame,
     id_col: str,
@@ -1363,8 +1282,6 @@ def _simhash_arrow(
     per batch: tokens are uniqued before hashing (one md5 per DISTINCT
     token per batch instead of one interpreted HOF step per token ×
     bit), bit votes are one numpy reduceat over the token stream."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -1376,54 +1293,31 @@ def _simhash_arrow(
         for pdf in it:
             if not len(pdf):
                 continue
-            tok_lists = _java_split_tokens(pdf[text_col].tolist())
-            counts = np.array(
-                [0 if t is None else len(t) for t in tok_lists],
-                dtype=np.int64,
-            )
+            toks = tk.split_series(pdf[text_col])
+            counts = np.bincount(toks.index.to_numpy(), minlength=len(pdf))
             sk = np.zeros(len(pdf), dtype=np.int64)
-            flat = np.array(
-                [t for ts in tok_lists if ts is not None for t in ts],
-                dtype=object,
-            )
-            if len(flat):
-                # factorize, not sort-based object unique (NaN-free
-                # pool; unique order irrelevant — see winnow kernel)
-                inv, uniq = pd.factorize(flat)
-                uh = np.array(
-                    [
-                        int(
-                            hashlib.md5(u.encode("utf-8")).hexdigest()[
-                                :hexlen
-                            ],
-                            16,
-                        )
-                        for u in uniq
-                    ],
-                    dtype=np.uint64,
-                )
+            if len(toks):
+                inv, uh = tk.distinct_md5(toks, hexlen)
                 # ±1 votes per (token, bit), summed per row via
-                # reduceat over the flat token stream (offsets clipped:
-                # a zero-count row repeats its neighbor's offset and is
-                # zeroed right after — the classic reduceat edge)
+                # reduceat over the flat token stream, at the offsets
+                # of the rows that have tokens only: a token-less (null)
+                # row's offset repeats its neighbor's or, at the end of
+                # the batch, is past the stream
                 bits = (
-                    (uh[inv, None] >> shifts[None, :]) & np.uint64(1)
+                    (uh.astype(np.uint64)[inv, None] >> shifts[None, :])
+                    & np.uint64(1)
                 ).astype(np.int64) * 2 - 1
                 offsets = np.concatenate([[0], np.cumsum(counts)[:-1]])
-                votes = np.add.reduceat(
-                    bits, np.minimum(offsets, len(flat) - 1), axis=0
-                )
-                votes[counts == 0] = 0
+                has = counts > 0
+                votes = np.zeros((len(pdf), n_bits), dtype=np.int64)
+                votes[has] = np.add.reduceat(bits, offsets[has], axis=0)
                 sk = ((votes > 0) * weights[None, :]).sum(axis=1)
             # null text → null sketch (Catalyst: split(null) is null and
             # the vote fold stays null)
-            if (counts == 0).any():
-                isnull = np.array(
-                    [t is None for t in tok_lists], dtype=bool
-                )
-                if isnull.any():
-                    sk = sk.astype(object)
-                    sk[isnull] = None
+            isnull = pdf[text_col].isna().to_numpy()
+            if isnull.any():
+                sk = sk.astype(object)
+                sk[isnull] = None
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(), "simhash": sk}
             )

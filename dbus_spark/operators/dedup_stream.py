@@ -62,6 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from dbus_spark.operators import tokenize as tk
 from dbus_spark.operators.dedup import (
     MINHASH_P,
     _shingle_hashes,
@@ -74,34 +75,6 @@ from dbus_spark.operators.state import callback, keyed_apply
 # hashes (any constant < MINHASH_P works; part of the sig scheme)
 _ROLL_B = 1_000_003
 
-# Java \s is ASCII-only and Spark trim strips 0x20 only — the JVM
-# tokenization parity lesson (see dedup.shingles_exploded_arrow)
-_JAVA_WS = r"[ \t\n\x0b\f\r]+"
-
-
-def token_hash_arrays(
-    texts: pd.Series,
-) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
-    """Tokenize-and-hash stage shared by the n-gram kernel and the
-    fused LM probe: ``(doc_of, token_hash, notna)`` — one int64 hash
-    per token (``hash_pandas_object % MINHASH_P``, the same scheme
-    ``text.hash_unigram_lm`` builds its tables with), ``doc_of`` the
-    owning text's positional index, ``notna`` False for the single
-    NaN token a null text explodes to.  Tokenization is the Java-\\s+
-    parity split (see ``dedup.shingles_exploded_arrow``)."""
-    toks = (
-        texts.reset_index(drop=True)
-        .str.strip(" ")
-        .str.split(_JAVA_WS, regex=True)
-        .explode()
-    )
-    doc_of_t = toks.index.to_numpy()
-    th = (
-        pd.util.hash_pandas_object(toks, index=False).to_numpy()
-        % np.uint64(MINHASH_P)
-    ).astype(np.int64)
-    return doc_of_t, th, toks.notna().to_numpy()
-
 
 def ngram_hash_arrays(
     texts: pd.Series, shingle_n: int
@@ -110,18 +83,18 @@ def ngram_hash_arrays(
     one int64 polynomial-roll hash per in-document token n-gram, with
     ``doc_of`` the (non-decreasing) positional index of the owning
     text.  This is exactly the shingle-hash stage of
-    :func:`minhash_sigs_pandas` (same tokenization parity, same roll
-    scheme, same null handling), factored out so other map-side
-    consumers (streaming decontam's hash mode) get the measured fast
-    path instead of re-growing a per-row string-concat loop."""
-    doc_of_t, th, notna = token_hash_arrays(texts)
-    return _ngram_roll(doc_of_t, th, notna, shingle_n)
+    :func:`minhash_sigs_pandas` (tokenization and token hashes from
+    ``operators/tokenize.py``, same roll scheme), factored out so
+    other map-side consumers (streaming decontam's hash mode) get the
+    measured fast path instead of re-growing a per-row string-concat
+    loop."""
+    toks = tk.split_series(texts)
+    return _ngram_roll(toks.index.to_numpy(), tk.token_hashes(toks), shingle_n)
 
 
 def _ngram_roll(
     doc_of_t: np.ndarray,
     th: np.ndarray,
-    notna: np.ndarray,
     shingle_n: int,
 ) -> "tuple[np.ndarray, np.ndarray]":
     """Roll token hashes into in-document n-gram hashes — split from
@@ -136,11 +109,6 @@ def _ngram_roll(
     # a window is a shingle iff it stays inside one doc; doc_of is
     # non-decreasing, so equal endpoints ⇒ the whole window matches
     valid = doc_of_t[:m] == doc_of_t[shingle_n - 1 : m + shingle_n - 1]
-    # a null text explodes to a single NaN token (always alone in
-    # its doc): masking the window START kills exactly those
-    # windows — matters only for shingle_n == 1, where the NaN
-    # "shingle" would otherwise match across null docs
-    valid &= notna[:m]
     return doc_of_t[:m][valid], acc[valid]
 
 
@@ -157,7 +125,7 @@ def minhash_sigs_pandas(
     per document in interpreted HOF evaluation (measured: 8.2 s for a
     12.5k-doc micro-batch — the whole operator's budget); this batches
     the same construction through C kernels. Hashing differs from the
-    Catalyst form (``hash_pandas_object`` vs xxhash64), which is fine:
+    Catalyst form (``tokenize.token_hashes`` vs xxhash64), which is fine:
     the stateful operator only ever compares ITS OWN sketches — but it
     also means the signature scheme is part of the checkpoint contract
     (don't change n_hashes/shingle_n/hash on a live checkpoint).
@@ -180,7 +148,7 @@ def minhash_sigs_pandas(
     # < 2^62 (operands < P = 2^31-1), so no int64 overflow. This
     # changes the signature scheme vs r4 — part of the checkpoint
     # contract (don't upgrade across a live checkpoint), same as the
-    # hash_pandas_object-vs-xxhash64 note above.
+    # token_hashes-vs-xxhash64 note above.
     doc_of, base = ngram_hash_arrays(texts, shingle_n)
     # one (shingles × n_hashes) affine-permutation matrix, then a
     # per-doc segmented min (doc_of is non-decreasing: explode+shift

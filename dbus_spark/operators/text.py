@@ -13,6 +13,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbus_spark.operators import tokenize as tk
+
 # Small public stopword/marker lists (language ID by stopword voting —
 # the classic n-gram/function-word heuristic, deterministic).
 LANG_MARKERS: dict[str, list[str]] = {
@@ -166,27 +168,26 @@ def repetition_metrics(
 
     Execution (r7): every gram of a document lives inside its own row,
     so the whole computation is ONE map-side Arrow pass — tokenize
-    with the Java-\\s parity split, per-doc value counts, and the
+    (``operators/tokenize.py``), per-doc value counts, and the
     HALF_UP round replica — instead of two explode → (doc, gram) count
     → per-doc max/sum aggregation pipelines joined doc-keyed (6
     exchanges + a join on a 5.5M-row gram stream at sf1.0; measured
-    3.3 s → map-side ~1 s). Row-identical to the Catalyst twin
-    (:func:`repetition_metrics_catalyst`, kept for parity tests) incl.
-    the NULL bigram share of < 2-token docs and the absence of
-    null-text docs."""
+    3.3 s → map-side ~1 s). Row-identical to the Catalyst twin (kept
+    in the parity tests) incl. the NULL bigram share of < 2-token docs
+    and the absence of null-text docs."""
     import numpy as np
 
-    # Java \s == [ \t\n\x0B\f\r]; Spark trim == strip 0x20 only (the
-    # hashed_ngram_features tokenization-parity contract)
-    _JAVA_WS = r"[ \t\n\x0b\f\r]+"
     id_type = df.schema[id_col].dataType.simpleString()
 
     def _per_row_share(grams: pd.Series) -> "tuple":
         """(row positions, round4(max/sum)) over a (row-indexed) gram
-        series — counts per (row, gram), then segment max/sum."""
-        cnt = grams.groupby([grams.index, grams]).size()
-        row_of = cnt.index.get_level_values(0).to_numpy()
-        vals = cnt.to_numpy(np.int64)
+        series — counts per (row, gram code), then segment max/sum."""
+        codes, _ = tk.distinct(grams)
+        key, vals = np.unique(
+            (grams.index.to_numpy() << 32) | codes.astype(np.int64),
+            return_counts=True,
+        )
+        row_of = key >> 32
         starts = np.concatenate(
             [[0], np.flatnonzero(row_of[1:] != row_of[:-1]) + 1]
         )
@@ -198,18 +199,11 @@ def repetition_metrics(
         for pdf in it:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
-            toks = (
-                pdf[col]
-                .str.strip(" ")
-                .str.split(_JAVA_WS, regex=True)
-                .explode()
-            )
-            toks = toks[toks.notna()]  # null text -> absent from output
+            toks = tk.split_series(pdf[col])  # null text -> absent
             if not len(toks):
                 continue
             u_rows, u_share = _per_row_share(toks)
-            bigrams = (toks + " " + toks.groupby(level=0).shift(-1)).dropna()
+            bigrams = tk.ngrams(toks, 2)
             b_share_by_row = np.full(len(pdf), np.nan)
             if len(bigrams):
                 b_rows, b_share = _per_row_share(bigrams)
@@ -232,48 +226,6 @@ def repetition_metrics(
             "top_bigram_share double"
         ),
     )
-
-
-def repetition_metrics_catalyst(
-    df: DataFrame, id_col: str = "doc_id", col: str = "text"
-) -> DataFrame:
-    """The Catalyst aggregation form — two explode → per-(doc, gram)
-    count → per-doc max/sum pipelines sharing the doc-keyed shuffle,
-    joined on the doc id; the parity reference for the Arrow kernel."""
-    toks = tokens(col)
-    uni = df.select(F.col(id_col), F.explode(toks).alias("g"))
-
-    # bind the token array as a lambda VARIABLE (singleton-array
-    # transform): referencing the split expression inside the bigram
-    # lambda would re-tokenize the text once per bigram (the winnow
-    # O(n²) inlining trap)
-    def _bigrams(tk: Column) -> Column:
-        idx = F.when(
-            F.size(tk) >= 2, F.sequence(F.lit(0), F.size(tk) - 2)
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(
-            idx, lambda i: F.concat_ws(" ", F.get(tk, i), F.get(tk, i + 1))
-        )
-
-    bi_arr = F.get(F.transform(F.array(toks), _bigrams), 0)
-    # explode_outer (not explode: the InferFiltersFromGenerate
-    # re-evaluation trap) emits a NULL gram for docs with < 2 tokens —
-    # drop it AFTER the generate, or the NULL group counts as a real
-    # bigram and top_bigram_share reads 1.0 instead of NULL for such
-    # docs (review finding: diverged from the oracle on 1-token docs)
-    bi = df.select(
-        F.col(id_col), F.explode_outer(bi_arr).alias("g")
-    ).filter(F.col("g").isNotNull())
-
-    def share(ex):
-        per = ex.groupBy(id_col, "g").agg(F.count("*").alias("n"))
-        return per.groupBy(id_col).agg(
-            F.round(F.max("n") / F.sum("n"), 4).alias("share")
-        )
-
-    u = share(uni).withColumnRenamed("share", "top_token_share")
-    b = share(bi).withColumnRenamed("share", "top_bigram_share")
-    return u.join(b, on=id_col, how="left")
 
 
 def char_entropy(
@@ -566,22 +518,15 @@ def hash_unigram_lm(lm: DataFrame) -> tuple:
     """Trained LM as ``(sorted int64 token-hash array, aligned lp6
     array)`` — the 100 TB closure form (~16 bytes/vocab entry, C-speed
     searchsorted probes, no Python string hashing per token).  Token
-    hashing reuses the streaming kernel's scheme
-    (``pd.util.hash_pandas_object % MINHASH_P``), so probe and build
-    agree byte-for-byte; two vocab tokens colliding at 64→31 bits
-    would let one lp6 stand for both (same collision contract as the
-    decontam hash arm)."""
+    hashing is ``tokenize.token_hashes``, the scheme every probe uses,
+    so probe and build agree byte-for-byte, NUL-bearing tokens
+    included; two vocab tokens colliding at 64→31 bits would let one
+    lp6 stand for both (same collision contract as the decontam hash
+    arm)."""
     import numpy as np
-    import pandas as pd
-
-    from dbus_spark.operators.dedup_stream import MINHASH_P
 
     rows = lm.select("token", "lp6").collect()
-    toks = pd.Series([r["token"] for r in rows], dtype=object)
-    h = (
-        pd.util.hash_pandas_object(toks, index=False).to_numpy()
-        % np.uint64(MINHASH_P)
-    ).astype(np.int64)
+    h = tk.token_hashes(pd.Series([r["token"] for r in rows], dtype=object))
     lp = np.asarray([r["lp6"] for r in rows], dtype=np.int64)
     order = np.argsort(h, kind="stable")
     return h[order], lp[order]
@@ -614,9 +559,7 @@ def lm_quality_filter(
     ``mode='exact'`` takes the dict from :func:`collect_unigram_lm`
     (string-keyed, oracle-parity); ``mode='hash'`` takes the arrays
     from :func:`hash_unigram_lm` (vectorized searchsorted probe, the
-    at-scale arm)."""
-    import numpy as np
-    import pandas as pd
+    at-scale arm: ``tokenize.lm_verdict``)."""
     from pyspark.sql.functions import pandas_udf
 
     if mode not in ("exact", "hash"):
@@ -625,57 +568,34 @@ def lm_quality_filter(
     cut = float(max_logppl)
 
     if mode == "hash":
-        from dbus_spark.operators.dedup_stream import MINHASH_P
-
-        h_sorted, lp_arr = lm
 
         @pandas_udf("boolean")
         def _keep(texts: pd.Series) -> pd.Series:
-            t = texts.reset_index(drop=True)
-            toks = (
-                t.str.strip(" ")
-                .str.split(r"[ \t\n\x0b\f\r]+", regex=True)
-                .explode()
+            toks = tk.split_series(texts)
+            return pd.Series(
+                tk.lm_verdict(
+                    toks.index.to_numpy(),
+                    tk.token_hashes(toks),
+                    len(texts),
+                    lm,
+                    oov,
+                    cut,
+                ),
+                dtype=bool,
             )
-            keep = np.ones(len(t), dtype=bool)
-            nn = toks.notna()
-            if not nn.any():
-                return pd.Series(keep, dtype=bool)
-            toks = toks[nn]
-            doc_of = toks.index.to_numpy()
-            th = (
-                pd.util.hash_pandas_object(toks, index=False).to_numpy()
-                % np.uint64(MINHASH_P)
-            ).astype(np.int64)
-            pos = np.searchsorted(h_sorted, th)
-            pos_c = np.clip(pos, 0, len(h_sorted) - 1)
-            found = len(h_sorted) > 0
-            hit = (
-                (h_sorted[pos_c] == th) if found else np.zeros(len(th), bool)
-            )
-            lp = np.where(hit, lp_arr[pos_c] if found else 0, oov)
-            n = np.bincount(doc_of, minlength=len(t))
-            s = np.bincount(doc_of, weights=lp, minlength=len(t))
-            has = n > 0
-            score = np.round(-s[has] / (n[has] * 1e6), 4)
-            keep[has] = score <= cut
-            return pd.Series(keep, dtype=bool)
 
     else:
 
         @pandas_udf("boolean")
         def _keep(texts: pd.Series) -> pd.Series:
-            import re
-
-            ws = re.compile(r"[ \t\n\x0b\f\r]+")
             flags = []
             for t in texts:
                 if t is None:
                     flags.append(True)
                     continue
-                tk = ws.split(t.strip(" "))
-                s = sum(lm.get(w, oov) for w in tk)
-                flags.append(round(-s / (len(tk) * 1e6), 4) <= cut)
+                toks = tk.split(t)
+                s = sum(lm.get(w, oov) for w in toks)
+                flags.append(round(-s / (len(toks) * 1e6), 4) <= cut)
             return pd.Series(flags, dtype=bool)
 
     return df.filter(_keep(F.col(text_col)))
@@ -801,95 +721,36 @@ def hashed_ngram_features(
     parity contract as the minhash shingle hash
     (operators/dedup.py::_h32).
 
-    Execution (r7): an Arrow batch kernel — tokenize with the Java-\\s
-    parity split, build bigrams by group-wise shift-concat, and md5
+    Execution (r7): an Arrow batch kernel — tokenize and build bigrams
+    with the shared primitives (``operators/tokenize.py``), and md5
     each DISTINCT feature string once per batch instead of once per
     occurrence (the Catalyst form paid an interpreted md5+conv per
     occurrence: measured 3-5 s of the 4.4 s query at sf1.0; the corpus
     vocabulary is orders of magnitude smaller than the occurrence
-    stream).  Byte-identical rows to the Catalyst twin
-    (:func:`hashed_ngram_features_catalyst`, kept for parity tests)."""
-    import hashlib
-
-    import numpy as np
-
-    # Java \s == [ \t\n\x0B\f\r]; Spark trim == strip 0x20 only (the
-    # shingles_exploded_arrow tokenization-parity contract)
-    _JAVA_WS = r"[ \t\n\x0b\f\r]+"
+    stream).  Byte-identical rows to the Catalyst twin (kept in the
+    parity tests)."""
     id_type = df.schema[id_col].dataType.simpleString()
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            pdf = pdf.reset_index(drop=True)
-            toks = (
-                pdf[text_col]
-                .str.strip(" ")
-                .str.split(_JAVA_WS, regex=True)
-                .explode()
-            )
-            toks = toks[toks.notna()]  # null text -> no feature rows
-            g = toks.groupby(level=0)
-            bigrams = (toks + " " + g.shift(-1)).dropna()
-            feats = pd.concat([toks, bigrams])
+            toks = tk.split_series(pdf[text_col])  # null -> no rows
+            feats = pd.concat([toks, tk.ngrams(toks, 2)])
             if not len(feats):
                 continue
-            # factorize, not sort-based object unique (NaN-free pool;
-            # unique order irrelevant — see the winnow kernel note)
-            inv, uniq = pd.factorize(feats.to_numpy())
-            hb = np.fromiter(
-                (
-                    int(hashlib.md5(u.encode("utf-8")).hexdigest()[:8], 16)
-                    % n_buckets
-                    for u in uniq
-                ),
-                dtype=np.int64,
-                count=len(uniq),
-            )
+            inv, h = tk.distinct_md5(feats)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy()[
                         feats.index.to_numpy()
                     ],
-                    "bucket": hb[inv],
+                    "bucket": (h % n_buckets)[inv],
                 }
             )
 
     return df.select(id_col, text_col).mapInPandas(
         gen, schema=f"{id_col} {id_type}, bucket long"
-    )
-
-
-def hashed_ngram_features_catalyst(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 65536,
-) -> DataFrame:
-    """The JVM-side twin of :func:`hashed_ngram_features` (split +
-    transform + md5-derived h32 per occurrence) — the parity reference
-    the Arrow kernel is pinned against."""
-    from dbus_spark.operators.dedup import _h32
-
-    toks = tokens(text_col)
-    # bigrams: t[i] + ' ' + t[i+1]; guard size<2 — Spark's sequence(1,0)
-    # would yield a DEScending [1,0], not an empty list
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(
-        F.col(id_col),
-        F.explode(F.concat(toks, bigrams)).alias("_feat"),
-    ).select(
-        id_col,
-        (_h32(F.col("_feat")) % F.lit(n_buckets)).alias("bucket"),
     )
 
 
@@ -1097,33 +958,19 @@ def streaming_dsir_filter(
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from dbus_spark.operators.dedup_stream import token_hash_arrays
-
-    rh, rlp = raw_lm
-    th_s, tlp = target_lm
     cut = float(min_logratio)
     rfl, tfl = int(raw_floor_lp6), int(target_floor_lp6)
 
-    def _probe(h_sorted, lp_arr, hashes, floor):
-        if not len(h_sorted):
-            return np.full(len(hashes), floor, dtype=np.int64)
-        pos = np.clip(np.searchsorted(h_sorted, hashes), 0, len(h_sorted) - 1)
-        hit = h_sorted[pos] == hashes
-        return np.where(hit, lp_arr[pos], floor)
-
     @pandas_udf("boolean")
     def _keep(texts: pd.Series) -> pd.Series:
-        t = texts.reset_index(drop=True)
-        doc_of, th, notna = token_hash_arrays(t)
-        keep = np.ones(len(t), dtype=bool)
-        if not notna.any():
-            return pd.Series(keep, dtype=bool)
-        doc_of, th = doc_of[notna], th[notna]
-        lr = _probe(rh, rlp, th, rfl)
-        lt = _probe(th_s, tlp, th, tfl)
-        n = np.bincount(doc_of, minlength=len(t))
+        toks = tk.split_series(texts)
+        doc_of, th = toks.index.to_numpy(), tk.token_hashes(toks)
+        keep = np.ones(len(texts), dtype=bool)
+        lr = tk.lm_probe(raw_lm, th, rfl)
+        lt = tk.lm_probe(target_lm, th, tfl)
+        n = np.bincount(doc_of, minlength=len(texts))
         s = np.bincount(doc_of, weights=(lt - lr).astype(np.float64),
-                        minlength=len(t))
+                        minlength=len(texts))
         has = n > 0
         score = np.round(s[has] / (n[has] * 1e6), 4)
         keep[has] = score >= cut

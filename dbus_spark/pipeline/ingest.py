@@ -51,63 +51,36 @@ def doc_enrich_policy_udf(
     semantics of ``streaming_decontam_filter``.  ``lm`` (the arrays
     from ``text.hash_unigram_lm``) folds the hash-arm semantics of
     ``text.lm_quality_filter`` into the same pass — the token hashes
-    are computed ONCE and feed both the n-gram roll and the LM probe
-    (`dedup_stream.token_hash_arrays`).  Nondeterministic for the
-    same reason as ``doc_enrich_v``: a downstream filter must not
-    re-evaluate the pass."""
+    are computed ONCE and feed both the n-gram roll and the LM probe.
+    Both verdicts are the ``operators/tokenize.py`` ones the staged
+    filters call.  Nondeterministic for the same reason as
+    ``doc_enrich_v``: a downstream filter must not re-evaluate the
+    pass."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
 
     from dbus_spark.functions.vectorized import doc_enrich_frame
-    from dbus_spark.operators.dedup_stream import (
-        _ngram_roll,
-        token_hash_arrays,
-    )
+    from dbus_spark.operators import tokenize as tk
+    from dbus_spark.operators.dedup_stream import _ngram_roll
 
     if lm is not None and (lm_max_logppl is None or lm_oov_lp6 is None):
         raise ValueError("lm requires lm_max_logppl and lm_oov_lp6")
-    h_sorted, lp_arr = lm if lm is not None else (None, None)
 
     @pandas_udf("struct<quality: double, n_tokens: int, clean: boolean>")
     def _f(s: pd.Series) -> pd.DataFrame:
         out = doc_enrich_frame(s)
-        t = s.reset_index(drop=True)
-        doc_of_t, th, notna = token_hash_arrays(t)
-        doc_of, grams = _ngram_roll(doc_of_t, th, notna, n)
-        keep = np.ones(len(t), dtype=bool)
-        if len(grams):
-            key = (doc_of.astype(np.int64) << np.int64(31)) | grams
-            uk = np.unique(key)
-            d = uk >> np.int64(31)
-            g = uk & np.int64((1 << 31) - 1)
-            hit = np.isin(g, bench_hashes)
-            n_grams = np.bincount(d, minlength=len(t))
-            n_hit = np.bincount(d, weights=hit, minlength=len(t))
-            hasg = n_grams > 0
-            keep[hasg] = n_hit[hasg] / n_grams[hasg] <= max_frac
-        if lm is not None and notna.any():
-            tdoc = doc_of_t[notna]
-            tth = th[notna]
-            pos = np.searchsorted(h_sorted, tth)
-            pos_c = np.clip(pos, 0, max(len(h_sorted) - 1, 0))
-            in_vocab = (
-                (h_sorted[pos_c] == tth)
-                if len(h_sorted)
-                else np.zeros(len(tth), bool)
+        toks = tk.split_series(s)
+        doc_of_t, th = toks.index.to_numpy(), tk.token_hashes(toks)
+        doc_of, grams = _ngram_roll(doc_of_t, th, n)
+        keep = tk.contamination_verdict(
+            doc_of, grams, len(s), lambda g: np.isin(g, bench_hashes),
+            max_frac,
+        )
+        if lm is not None:
+            keep &= tk.lm_verdict(
+                doc_of_t, th, len(s), lm, lm_oov_lp6, lm_max_logppl
             )
-            lp = np.where(
-                in_vocab,
-                lp_arr[pos_c] if len(h_sorted) else 0,
-                int(lm_oov_lp6),
-            )
-            nt = np.bincount(tdoc, minlength=len(t))
-            st = np.bincount(tdoc, weights=lp, minlength=len(t))
-            has = nt > 0
-            score = np.round(-st[has] / (nt[has] * 1e6), 4)
-            lm_keep = np.ones(len(t), dtype=bool)
-            lm_keep[has] = score <= float(lm_max_logppl)
-            keep &= lm_keep
         out["clean"] = keep
         return out
 

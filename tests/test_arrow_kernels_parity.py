@@ -5,8 +5,9 @@ Every operator rewritten this round keeps its oracle check in
 test_entry_oracle.py (value-exact vs DuckDB on the fixtures); these
 tests pin the HOSTILE-INPUT corners the fixtures don't exercise —
 Java-vs-Python whitespace classes, empty/null texts, trailing
-separators, ties — against the still-present Catalyst reference
-implementations."""
+separators, NUL characters, ties — against the still-present Catalyst
+reference implementations (two of them, used only here, live in this
+file)."""
 
 import hashlib
 
@@ -14,10 +15,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbus_spark.operators import dedup as D
 from dbus_spark.operators import similarity as S
+from dbus_spark.operators import tokenize as TK
+from dbus_spark.operators.text import tokens
 
 HOSTILE = [
     (0, "plain token salad words here"),
@@ -35,6 +39,14 @@ HOSTILE = [
     (12, "exactly8"),  # == k for winnowing
     (13, "abcdefghijk"),  # a few k-grams, fewer than w windows
     (14, "repeat repeat repeat repeat repeat repeat repeat"),
+    # U+0000 is an ordinary Java character; pandas' C-string hashing
+    # cuts at it ("a\x00" == "a") and numpy S-views drop trailing NULs
+    (15, "a\x00 a b c"),
+    (16, "x y\x00 p q x y\x00 r s"),
+    (17, "word\x00 other word\x00 more word other"),
+    (18, "\x00" * 12 + "aaaa"),
+    (19, "ab\x00\x00\x00\x00\x00\x00\x00\x00 ab\x00 ab"),
+    (20, None),  # a null text last in its Arrow batch
 ]
 
 
@@ -46,6 +58,80 @@ def hostile_df(spark):
 def _rows(df, cols):
     return sorted(
         tuple(r[c] for c in cols) for r in df.collect()
+    )
+
+
+def repetition_metrics_catalyst(
+    df: DataFrame, id_col: str = "doc_id", col: str = "text"
+) -> DataFrame:
+    """The Catalyst aggregation form — two explode → per-(doc, gram)
+    count → per-doc max/sum pipelines sharing the doc-keyed shuffle,
+    joined on the doc id; the parity reference for the Arrow kernel."""
+    toks = tokens(col)
+    uni = df.select(F.col(id_col), F.explode(toks).alias("g"))
+
+    # bind the token array as a lambda VARIABLE (singleton-array
+    # transform): referencing the split expression inside the bigram
+    # lambda would re-tokenize the text once per bigram (the winnow
+    # O(n²) inlining trap)
+    def _bigrams(tk: Column) -> Column:
+        idx = F.when(
+            F.size(tk) >= 2, F.sequence(F.lit(0), F.size(tk) - 2)
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(
+            idx, lambda i: F.concat_ws(" ", F.get(tk, i), F.get(tk, i + 1))
+        )
+
+    bi_arr = F.get(F.transform(F.array(toks), _bigrams), 0)
+    # explode_outer (not explode: the InferFiltersFromGenerate
+    # re-evaluation trap) emits a NULL gram for docs with < 2 tokens —
+    # drop it AFTER the generate, or the NULL group counts as a real
+    # bigram and top_bigram_share reads 1.0 instead of NULL for such
+    # docs (review finding: diverged from the oracle on 1-token docs)
+    bi = df.select(
+        F.col(id_col), F.explode_outer(bi_arr).alias("g")
+    ).filter(F.col("g").isNotNull())
+
+    def share(ex):
+        per = ex.groupBy(id_col, "g").agg(F.count("*").alias("n"))
+        return per.groupBy(id_col).agg(
+            F.round(F.max("n") / F.sum("n"), 4).alias("share")
+        )
+
+    u = share(uni).withColumnRenamed("share", "top_token_share")
+    b = share(bi).withColumnRenamed("share", "top_bigram_share")
+    return u.join(b, on=id_col, how="left")
+
+
+def hashed_ngram_features_catalyst(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = 65536,
+) -> DataFrame:
+    """The JVM-side twin of :func:`hashed_ngram_features` (split +
+    transform + md5-derived h32 per occurrence) — the parity reference
+    the Arrow kernel is pinned against."""
+    from dbus_spark.operators.dedup import _h32
+
+    toks = tokens(text_col)
+    # bigrams: t[i] + ' ' + t[i+1]; guard size<2 — Spark's sequence(1,0)
+    # would yield a DEScending [1,0], not an empty list
+    bigrams = F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - 1),
+            lambda i: F.concat_ws(
+                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return df.select(
+        F.col(id_col),
+        F.explode(F.concat(toks, bigrams)).alias("_feat"),
+    ).select(
+        id_col,
+        (_h32(F.col("_feat")) % F.lit(n_buckets)).alias("bucket"),
     )
 
 
@@ -77,8 +163,9 @@ def test_winnow_arrow_matches_catalyst_md5(spark, hostile_df):
 
 
 def test_java_split_tokens_matches_spark_split(spark, hostile_df):
-    """The Python tokenizer replica vs F.split(F.trim(c), r"\\s+") —
-    the exact expression operators.text.tokens builds."""
+    """The Python tokenizer replica, scalar and series forms, vs
+    F.split(F.trim(c), r"\\s+") — the exact expression
+    operators.text.tokens builds (a null text has no tokens)."""
     ref = {
         r["doc_id"]: r["toks"]
         for r in hostile_df.select(
@@ -87,9 +174,12 @@ def test_java_split_tokens_matches_spark_split(spark, hostile_df):
         ).collect()
     }
     texts = [t for _, t in HOSTILE]
-    got = D._java_split_tokens(texts)
-    for (i, _), g in zip(HOSTILE, got):
-        assert g == ref[i], f"doc {i}: {g!r} != {ref[i]!r}"
+    series = TK.split_series(pd.Series(texts, dtype=object))
+    by_pos = {p: list(g) for p, g in series.groupby(level=0)}
+    for pos, (i, t) in enumerate(HOSTILE):
+        want = ref[i] if ref[i] is not None else []
+        assert TK.split(t) == want, f"doc {i}: {TK.split(t)!r} != {want!r}"
+        assert by_pos.get(pos, []) == want, f"doc {i} (series form)"
 
 
 def _brute_pairs_pd(ids, V, threshold):
@@ -181,7 +271,7 @@ def test_hashed_ngram_features_arrow_matches_catalyst(spark, hostile_df):
         ["doc_id", "bucket"],
     )
     ref = _rows(
-        TX.hashed_ngram_features_catalyst(hostile_df, n_buckets=64),
+        hashed_ngram_features_catalyst(hostile_df, n_buckets=64),
         ["doc_id", "bucket"],
     )
     assert got == ref
@@ -308,7 +398,7 @@ def test_repetition_metrics_arrow_matches_catalyst(spark, hostile_df):
         ["doc_id", "top_token_share", "top_bigram_share"],
     )
     ref = _rows(
-        TX.repetition_metrics_catalyst(hostile_df),
+        repetition_metrics_catalyst(hostile_df),
         ["doc_id", "top_token_share", "top_bigram_share"],
     )
     assert got == ref

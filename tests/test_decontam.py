@@ -97,7 +97,11 @@ def test_streaming_filter_matches_batch_decontaminate(spark):
         streaming_decontam_filter,
     )
 
-    docs, bench = _docs(spark), _bench(spark)
+    docs = _docs(spark)
+    # a null benchmark text adds no n-gram on either side
+    bench = _bench(spark).union(
+        spark.createDataFrame([(101, None)], "doc_id long, text string")
+    )
     grams = collect_bench_ngrams(bench, n=3)
     for max_frac in (0.0, 0.2):
         batch_kept = {

@@ -400,7 +400,8 @@ def test_minhash_kernel_matches_slow_reference():
     (window validity, doc boundaries, sentinel rows) that replaced the
     r4 shingle-string path."""
     from dbus_spark.operators.dedup import MINHASH_P, minhash_coeffs
-    from dbus_spark.operators.dedup_stream import _ROLL_B, _JAVA_WS
+    from dbus_spark.operators.dedup_stream import _ROLL_B
+    from dbus_spark.operators.tokenize import JAVA_WS as _JAVA_WS
 
     import re
 
@@ -457,3 +458,17 @@ def test_minhash_kernel_matches_slow_reference():
     # identical texts -> identical signatures; sentinels unique per id
     assert list(got[0]) == list(got[6])
     assert list(got[2]) != list(got[3]) != list(got[4])
+
+
+def test_minhash_sketch_of_nul_text_is_batch_independent():
+    """A token holding U+0000 hashes by all of its bytes in every
+    batch. pandas' C-string hashing of an all-string batch would merge
+    "alpha\x00" into an earlier "alpha" and make the sketch depend on
+    the other documents of the micro-batch."""
+    nul = "alpha\x00 beta\x00x gamma delta"
+    alone = minhash_sigs_pandas(pd.Series([nul]), pd.Series([1]))
+    after = minhash_sigs_pandas(
+        pd.Series(["alpha beta gamma delta", nul]), pd.Series([0, 1])
+    )
+    assert list(alone[0]) == list(after[1])
+    assert list(after[0]) != list(after[1])

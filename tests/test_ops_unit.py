@@ -416,6 +416,7 @@ def test_arrow_shingles_match_catalyst_on_hostile_whitespace(spark):
         "a b c d e",     # EM SPACE (unicode ws, not Java \s)
         "",                   # empty
         "one two",            # too short for 3-grams
+        "x y\x00 p q x y\x00 r s",  # NUL inside a token is a char
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"

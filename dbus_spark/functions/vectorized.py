@@ -3,7 +3,7 @@
 The BASELINE.json input_hint mandates that all text transforms run as
 vectorized Arrow pandas UDFs with no per-row Python: each UDF below
 receives whole Arrow batches as pandas Series and answers with
-C-backed pandas/numpy kernels (str ops, hash_pandas_object) — no
+C-backed pandas/numpy kernels (str ops, hash_array) — no
 Python-level row loop anywhere.
 
 Besides the mandate, these have a scale property the JVM higher-order
@@ -16,6 +16,7 @@ these are the throughput path.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -31,12 +32,27 @@ def token_count_v(s: pd.Series) -> pd.Series:
     return s.str.split().str.len().fillna(0).astype("int32")
 
 
+def fingerprint64(s: pd.Series) -> np.ndarray:
+    """64-bit fingerprint of each whitespace-normalized, lower-cased
+    text: ``pandas.util.hash_array`` of its UTF-8 bytes, one text at a
+    time (``categorize=False``), so NUL-exact and independent of the
+    batch; a null text gets -1. For NUL-free texts this is the value
+    ``hash_pandas_object`` gives, whose factorize step compares an
+    all-string batch as C strings (the NUL rule of
+    ``operators/tokenize.py``)."""
+    norm = s.str.strip().str.lower().str.replace(r"\s+", " ", regex=True)
+    out = np.full(len(norm), -1, dtype=np.int64)
+    ok = norm.notna().to_numpy()
+    out[ok] = pd.util.hash_array(norm.to_numpy()[ok], categorize=False)
+    return out
+
+
 @pandas_udf(T.LongType())
 def fingerprint64_v(s: pd.Series) -> pd.Series:
-    """64-bit normalized-text fingerprint (vectorized hash; not the
-    md5 oracle fingerprint — use operators.text.fingerprint for that)."""
-    norm = s.str.strip().str.lower().str.replace(r"\s+", " ", regex=True)
-    return pd.util.hash_pandas_object(norm, index=False).astype("int64")
+    """64-bit normalized-text fingerprint (:func:`fingerprint64`; not
+    the md5 oracle fingerprint — use operators.text.fingerprint for
+    that)."""
+    return pd.Series(fingerprint64(s), index=s.index)
 
 
 # whitespace-delimited whole-token match: identical tokenization to
@@ -188,13 +204,10 @@ def turn_enrich_frame(s: pd.Series) -> pd.DataFrame:
         .astype(float)
         .round(4)
     )
-    # 64-bit fingerprint (identical expression to fingerprint64_v)
-    norm = s.str.strip().str.lower().str.replace(r"\s+", " ", regex=True)
-    fp64 = pd.util.hash_pandas_object(norm, index=False).astype("int64")
     return pd.DataFrame(
         {
             "n_tokens": n_tok_f.fillna(0).astype("int32"),
-            "fp64": fp64.to_numpy(),
+            "fp64": fingerprint64(s),
             "lang": best,
             "stop_ratio": stop_ratio,
             "quality": quality,

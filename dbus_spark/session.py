@@ -9,6 +9,7 @@ AQE, shuffle-partition sizing, Arrow batching, and state-store tuning.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +51,25 @@ _DEFAULT_CONFS = {
     "spark.memory.fraction": "0.7",
 }
 
+# Local masters commit micro-batches through the FileSystem-API
+# checkpoint manager. Spark's default, the FileContext manager, renames
+# each checkpoint file (offsets, commits, source log, one state delta
+# per store instance) through FileContext, which asks for the link
+# status of the source, the target and their .crc files; without
+# libhadoop (pip-installed PySpark ships none) each such call forks a
+# `readlink` child, about 4.5 ms apiece and ~100 per micro-batch of a
+# windowed query. On a POSIX disk both managers write the same files
+# (.crc side files and permission bits included) with the same
+# temp-file-then-rename protocol, and rename(2) replaces the target
+# atomically. A cluster master keeps Spark's default: its checkpoints
+# live on a distributed store, where FileContext's rename is the one
+# that refuses an existing target atomically.
+_LOCAL_MASTER = re.compile(r"local(\[(\d+|\*)(,\d+)?\])?")
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "dbus_spark",
@@ -66,7 +86,17 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions if shuffle_partitions is not None else cpus
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in _session_confs(master, shuffle, extra_confs).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
 
+
+def _session_confs(
+    master: str, shuffle: int, extra_confs: dict[str, str] | None
+) -> dict[str, str]:
+    """The confs :func:`get_spark` sets, in order; a later key wins, so
+    ``extra_confs`` overrides every default."""
     # Micro-batch state store, parameterized (SPARK_GRAFT_STATE_STORE
     # = hdfs | rocksdb). Default: the in-memory HDFS-backed provider —
     # every stateful operator in this engine keeps deliberately
@@ -94,18 +124,18 @@ def get_spark(
             f"SPARK_GRAFT_STATE_STORE must be one of {sorted(providers)}, "
             f"got {store!r}"
         )
-
-    builder = SparkSession.builder.appName(app_name).master(master)
-    builder = builder.config(
-        "spark.sql.streaming.stateStore.providerClass", providers[store]
-    )
-    for k, v in _DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle))
-    builder = builder.config("spark.default.parallelism", str(shuffle))
-    for k, v in (extra_confs or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    confs = {
+        "spark.sql.streaming.stateStore.providerClass": providers[store],
+        **_DEFAULT_CONFS,
+        "spark.sql.shuffle.partitions": str(shuffle),
+        "spark.default.parallelism": str(shuffle),
+    }
+    if _LOCAL_MASTER.fullmatch(master):
+        confs["spark.sql.streaming.checkpointFileManagerClass"] = (
+            _LOCAL_CHECKPOINT_MANAGER
+        )
+    confs.update(extra_confs or {})
+    return confs
 
 
 def _n_partitions(spark: SparkSession) -> int:

@@ -16,7 +16,11 @@ with three mechanisms, strongest first:
    This alone gives exactly-once when every key is emitted in exactly
    one epoch (true for append-mode window aggregations).
 2. **batch-id bookkeeping**: a marker per committed epoch short-cuts
-   replays entirely (and records per-epoch lineage).
+   replays entirely (and records per-epoch lineage). The marker is the
+   epoch's one commit record: it gates every read, and the epoch write
+   leaves no ``_SUCCESS`` file (no reader would look at it, and on a
+   local disk without libhadoop it and its ``.crc`` cost two forked
+   ``chmod`` children per epoch).
 3. **key-level anti-join MERGE** (``dedup_mode="anti_join"``): for
    upstreams that can re-emit a key in a *different* epoch (raw
    at-least-once streams), only keys absent from all other epochs are
@@ -158,8 +162,11 @@ class IdempotentKeyedSink:
             rows = Observation()
             fresh = fresh.observe(rows, F.count(F.lit(1)).alias("n"))
         # overwrite THIS epoch's partition: replays and partial writes
-        # of the same epoch converge to the same bytes
-        fresh.write.mode("overwrite").parquet(self._epoch_dir(batch_id))
+        # of the same epoch converge to the same bytes; the marker, not
+        # a _SUCCESS file, is the epoch's commit record
+        fresh.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).parquet(self._epoch_dir(batch_id))
         n = rows.get["n"] if self.track_counts else None
         self._commit_marker(batch_id, n)
         return n if n is not None else 0

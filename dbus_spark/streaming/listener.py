@@ -9,9 +9,11 @@ in-path metrics (engine/router.go:111-114); listener metrics cost the
 hot loop nothing.
 
 Per micro-batch we record: input rows/sec, processed rows/sec, batch
-duration, state rows + memory, watermark gap (the reference's
-"mylag" alert analog), and per-source start/end offsets — the
-per-partition lineage required by the north rule.
+duration and every phase of it (the progress ``durationMs`` record:
+``latestOffset``, ``queryPlanning``, ``addBatch``, ``walCommit``,
+``commitOffsets``, ...), state rows + memory, watermark gap (the
+reference's "mylag" alert analog), and per-source start/end offsets —
+the per-partition lineage required by the north rule.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ class BatchMetric:
     state_memory_bytes: int
     watermark: str | None
     sources: list[dict] = field(default_factory=list)
+    # the progress durationMs record: phase name -> ms
+    phases_ms: dict[str, int] = field(default_factory=dict)
 
 
 class MetricsListener(StreamingQueryListener):
@@ -55,6 +59,7 @@ class MetricsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         state = p.get("stateOperators") or []
+        phases = {k: int(v) for k, v in (p.get("durationMs") or {}).items()}
         metric = BatchMetric(
             batch_id=p.get("batchId", -1),
             run_id=str(p.get("runId", "")),
@@ -64,9 +69,7 @@ class MetricsListener(StreamingQueryListener):
             process_rows_per_sec=float(
                 p.get("processedRowsPerSecond", 0.0) or 0.0
             ),
-            duration_ms=int(
-                (p.get("durationMs") or {}).get("triggerExecution", 0)
-            ),
+            duration_ms=phases.get("triggerExecution", 0),
             state_rows=sum(int(s.get("numRowsTotal", 0)) for s in state),
             state_memory_bytes=sum(
                 int(s.get("memoryUsedBytes", 0)) for s in state
@@ -81,6 +84,7 @@ class MetricsListener(StreamingQueryListener):
                 }
                 for s in (p.get("sources") or [])
             ],
+            phases_ms=phases,
         )
         with self._lock:
             self.batches.append(metric)
@@ -104,11 +108,11 @@ class MetricsListener(StreamingQueryListener):
         data = [b for b in batches if b.input_rows > 0]
         if not data:
             return {"batches": 0}
-        def _p95(ms: list[int]) -> int | None:
+        def _pct(ms: list[int], q: float) -> int | None:
             if not ms:
                 return None
             s = sorted(ms)
-            return s[min(len(s) - 1, int(len(s) * 0.95))]
+            return s[min(len(s) - 1, int(len(s) * q))]
 
         # warm p95 excludes the first batch of EACH run (kill/resume
         # restarts get a fresh run_id and pay cold costs again): plan
@@ -130,8 +134,15 @@ class MetricsListener(StreamingQueryListener):
             "sustained_rows_per_sec": (
                 total_rows / total_sec if total_sec > 0 else 0.0
             ),
-            "p95_batch_ms": _p95([b.duration_ms for b in data]),
-            "p95_batch_ms_warm": _p95(warm),
+            "p95_batch_ms": _pct([b.duration_ms for b in data], 0.95),
+            "p95_batch_ms_warm": _pct(warm, 0.95),
             "max_state_rows": max(b.state_rows for b in data),
             "last_watermark": data[-1].watermark,
+            # p50 of each phase over the batches that report it
+            "p50_phase_ms": {
+                k: _pct(
+                    [b.phases_ms[k] for b in data if k in b.phases_ms], 0.5
+                )
+                for k in sorted({k for b in data for k in b.phases_ms})
+            },
         }

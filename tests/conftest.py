@@ -11,8 +11,9 @@ def spark():
         master="local[4]",
         shuffle_partitions=8,
         extra_confs={
-            # tiny state store for test speed; RocksDB stays the
-            # production default in session.py
+            # the in-memory HDFS-backed store, session.py's default
+            # too; pinned here so the tests run on it even when
+            # SPARK_GRAFT_STATE_STORE selects RocksDB
             "spark.sql.streaming.stateStore.providerClass": (
                 "org.apache.spark.sql.execution.streaming.state."
                 "HDFSBackedStateStoreProvider"

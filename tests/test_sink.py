@@ -347,3 +347,53 @@ def test_track_counts_launches_no_extra_job(spark, tmp_path, df):
 
     counted, uncounted = jobs(True), jobs(False)
     assert 0 < counted <= uncounted
+
+
+@pytest.mark.parametrize("mode", ["anti_join", "epoch_overwrite"])
+def test_marker_is_the_epochs_one_commit_record(spark, tmp_path, df, mode):
+    """An epoch directory holds its data files and no ``_SUCCESS``: the
+    ``_batches`` marker is the epoch's one commit record. Reads,
+    snapshots, the epoch history and the anti-join replay see the same
+    rows as with the marker file beside a ``_SUCCESS``; an epoch written
+    with a ``_SUCCESS`` (the earlier layout) still reads the same."""
+    sink = _sink(tmp_path, mode)
+    # epoch 0 in the earlier layout: the default write leaves _SUCCESS
+    df.dropDuplicates(["conv_id", "turn_idx"]).write.mode(
+        "overwrite"
+    ).parquet(sink._epoch_dir(0))
+    sink._commit_marker(0, 2)
+    assert "_SUCCESS" in os.listdir(sink._epoch_dir(0))
+    mix = spark.createDataFrame(
+        [("c1", 2, "b"), ("c3", 1, "e")], ["conv_id", "turn_idx", "text"]
+    )
+    more = spark.createDataFrame(
+        [("c4", 1, "f")], ["conv_id", "turn_idx", "text"]
+    )
+    sink.write_batch(mix, 1)
+    sink.write_batch(more, 2)
+    for epoch in (1, 2):
+        names = os.listdir(sink._epoch_dir(epoch))
+        assert [n for n in names if n.endswith(".parquet")], names
+        assert not [n for n in names if "_SUCCESS" in n], names
+
+    def keys(frame):
+        return sorted(
+            (r.conv_id, r.turn_idx, r.text) for r in frame.collect()
+        )
+
+    first = [("c1", 1, "a"), ("c1", 2, "b")]
+    later = [("c3", 1, "e"), ("c4", 1, "f")]
+    if mode == "epoch_overwrite":  # no cross-epoch dedup, by design
+        later.append(("c1", 2, "b"))
+    committed = sorted(first + later)
+    assert sink.epochs() == [0, 1, 2]
+    assert keys(sink.read(spark)) == committed
+    assert keys(sink.read_as_of(spark, 0)) == first
+    assert len(keys(sink.read_as_of(spark, 1))) == len(committed) - 1
+    # replays: the marker short-circuits a committed epoch, and the
+    # anti-join drops keys already committed by another epoch
+    assert sink.write_batch(mix, 1) == 0
+    if mode == "anti_join":
+        assert sink.write_batch(df, 3) == 0
+        assert sink.epochs() == [0, 1, 2, 3]
+        assert keys(sink.read(spark)) == committed

@@ -111,9 +111,10 @@ def test_doc_enrich_v_matches_single_column_udfs(spark):
 def test_turn_enrich_fused_matches_singles(spark):
     """r7: the fused one-crossing enrich struct must equal the five
     single-column UDFs on hostile inputs (null, empty, punctuation,
-    tabs, unicode whitespace)."""
+    tabs, unicode whitespace, U+0000)."""
     from dbus_spark.functions.vectorized import (
         fingerprint64_v,
+        turn_enrich_frame,
         turn_enrich_v,
     )
 
@@ -129,15 +130,21 @@ def test_turn_enrich_fused_matches_singles(spark):
         ("el los las que y " * 40,),
         ("x",),
     ]
-    df = spark.createDataFrame(rows, ["text"])
-    got = df.select(
-        turn_enrich_v("text").alias("e"),
-        token_count_v("text").alias("n_tokens"),
-        fingerprint64_v("text").alias("fp64"),
-        lang_id_v("text").alias("lang"),
-        stopword_ratio_v("text").alias("stop_ratio"),
-        quality_score_v("text").alias("quality"),
-    ).collect()
+    # texts equal up to a NUL, in one Arrow batch without a null: a
+    # hash that compares C strings gives them one fingerprint
+    nul_rows = [("a\x00 first",), ("a\x00 second",), ("the\x00 cat",)]
+    got = []
+    for part in (rows, nul_rows):
+        df = spark.createDataFrame(part, ["text"]).coalesce(1)
+        got += df.select(
+            "text",
+            turn_enrich_v("text").alias("e"),
+            token_count_v("text").alias("n_tokens"),
+            fingerprint64_v("text").alias("fp64"),
+            lang_id_v("text").alias("lang"),
+            stopword_ratio_v("text").alias("stop_ratio"),
+            quality_score_v("text").alias("quality"),
+        ).collect()
     for r in got:
         e = r["e"]
         assert e["n_tokens"] == r["n_tokens"]
@@ -148,3 +155,36 @@ def test_turn_enrich_fused_matches_singles(spark):
             e["quality"] == r["quality"]
             or (e["quality"] is None and r["quality"] is None)
         )
+        # the fingerprint of a text does not depend on its batch
+        alone = turn_enrich_frame(pd.Series([r["text"]]))["fp64"][0]
+        assert e["fp64"] == alone, r["text"]
+    assert len({r["fp64"] for r in got[-len(nul_rows):]}) == len(nul_rows)
+
+
+def test_fp64_is_nul_exact_and_batch_independent():
+    """``fp64`` hashes every byte of the normalized text, one text at a
+    time: texts equal up to a NUL differ, a text's value is the same in
+    any batch, and NUL-free texts and nulls keep the values
+    ``hash_pandas_object`` gave them."""
+    from dbus_spark.functions.vectorized import turn_enrich_frame
+
+    def fp(texts):
+        return turn_enrich_frame(pd.Series(texts, dtype=object))[
+            "fp64"
+        ].tolist()
+
+    nul = ["a\x00 first", "a\x00 second", "a\x00", "a"]
+    assert fp(nul) == [fp([t])[0] for t in nul]
+    assert len(set(fp(nul))) == len(nul)
+    assert fp(["a\x00 second"]) == [-8112799508425030236]
+
+    plain = ["The  Cat\tsat", "x", "", " ", None, "le chat"]
+    norm = (
+        pd.Series(plain, dtype=object)
+        .str.strip()
+        .str.lower()
+        .str.replace(r"\s+", " ", regex=True)
+    )
+    legacy = pd.util.hash_pandas_object(norm, index=False).astype("int64")
+    assert fp(plain) == legacy.tolist()
+    assert fp([None]) == [-1]

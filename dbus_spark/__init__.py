@@ -17,6 +17,13 @@ Layout
 - ``dbus_spark.sinks``      — idempotent keyed MERGE sink
 - ``dbus_spark.streaming``  — listener metrics, checkpoint helpers
 - ``dbus_spark.functions``  — scalar function surface (SURVEY.md §2.6)
+
+Importing the package also stops zip importers from re-reading their
+archives at the start of every Python task (``_worker_import``).
 """
 
+from dbus_spark._worker_import import gate_zip_invalidation
+
 __version__ = "0.1.0"
+
+gate_zip_invalidation()

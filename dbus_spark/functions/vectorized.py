@@ -27,9 +27,36 @@ from pyspark.sql.functions import pandas_udf
 from dbus_spark.operators.text import LANG_MARKERS, _LANG_ORDER, STOPWORDS
 
 
+def _n_tokens(s: pd.Series) -> pd.Series:
+    """Whitespace-token count of each text: float64, NaN for a null
+    text — float also on an all-null batch, whose ``str.len()`` is an
+    object Series that ``fillna`` would only downcast with a
+    deprecation warning."""
+    return s.str.split().str.len().astype("float64")
+
+
+def _quality(s: pd.Series, n_tok: pd.Series) -> pd.Series:
+    """Composite quality score from the text and its token count
+    (:func:`_n_tokens`): length band + alpha ratio + mean token length
+    band; NaN for a null text."""
+    n_chars = s.str.len().clip(lower=1)
+    alpha = s.str.count(r"[A-Za-z]")
+    n_tok = n_tok.clip(lower=1)
+    mean_tok = (n_chars - n_tok + 1) / n_tok
+    len_band = ((n_chars >= 32) & (n_chars <= 100_000)).astype(float)
+    tok_band = ((mean_tok >= 2.0) & (mean_tok <= 12.0)).astype(float)
+    return (
+        (0.4 * (alpha / n_chars) + 0.3 * len_band + 0.3 * tok_band)
+        .astype(float)
+        .round(4)
+    )
+
+
+# The UDF bodies call module-level helpers, so cloudpickle ships them by
+# reference and a worker that runs one imports ``dbus_spark``.
 @pandas_udf(T.IntegerType())
 def token_count_v(s: pd.Series) -> pd.Series:
-    return s.str.split().str.len().fillna(0).astype("int32")
+    return _n_tokens(s).fillna(0).astype("int32")
 
 
 def fingerprint64(s: pd.Series) -> np.ndarray:
@@ -86,45 +113,26 @@ def lang_id_v(s: pd.Series) -> pd.Series:
 def stopword_ratio_v(s: pd.Series) -> pd.Series:
     low = s.str.lower()
     n_stop = sum(_tok_count(low, w) for w in STOPWORDS)
-    n_tok = s.str.split().str.len()
-    return (n_stop / n_tok).fillna(0.0).round(4)
+    return (n_stop / _n_tokens(s)).fillna(0.0).round(4)
 
 
 @pandas_udf(T.DoubleType())
 def quality_score_v(s: pd.Series) -> pd.Series:
-    """Composite quality score: length band + alpha ratio + mean token
-    length band — the cheap pre-dedup filter of a training pipeline."""
-    n_chars = s.str.len().clip(lower=1)
-    alpha = s.str.count(r"[A-Za-z]")
-    n_tok = s.str.split().str.len().clip(lower=1)
-    mean_tok = (n_chars - n_tok + 1) / n_tok
-    len_band = ((n_chars >= 32) & (n_chars <= 100_000)).astype(float)
-    tok_band = ((mean_tok >= 2.0) & (mean_tok <= 12.0)).astype(float)
-    return (
-        (0.4 * (alpha / n_chars) + 0.3 * len_band + 0.3 * tok_band)
-        .astype(float)
-        .round(4)
-    )
+    """Composite quality score (:func:`_quality`) — the cheap pre-dedup
+    filter of a training pipeline."""
+    return _quality(s, _n_tokens(s))
 
 
 def doc_enrich_frame(s: pd.Series) -> pd.DataFrame:
     """The plain-pandas enrich kernel shared by ``doc_enrich_v`` and
     the fused policy variant (``pipeline.ingest.doc_enrich_policy_udf``)
     — one tokenization pass producing quality + token count."""
-    n_chars = s.str.len().clip(lower=1)
-    alpha = s.str.count(r"[A-Za-z]")
-    n_tok_raw = s.str.split().str.len().fillna(0)
-    n_tok = n_tok_raw.clip(lower=1)
-    mean_tok = (n_chars - n_tok + 1) / n_tok
-    len_band = ((n_chars >= 32) & (n_chars <= 100_000)).astype(float)
-    tok_band = ((mean_tok >= 2.0) & (mean_tok <= 12.0)).astype(float)
-    q = (
-        (0.4 * (alpha / n_chars) + 0.3 * len_band + 0.3 * tok_band)
-        .astype(float)
-        .round(4)
-    )
+    n_tok = _n_tokens(s)
     return pd.DataFrame(
-        {"quality": q, "n_tokens": n_tok_raw.astype("int32")}
+        {
+            "quality": _quality(s, n_tok),
+            "n_tokens": n_tok.fillna(0).astype("int32"),
+        }
     )
 
 
@@ -163,7 +171,7 @@ def turn_enrich_frame(s: pd.Series) -> pd.DataFrame:
     it equals the word)."""
     low = s.str.lower()
     toks = low.str.split()
-    n_tok_f = toks.str.len()  # float64, NaN for null text
+    n_tok_f = toks.str.len().astype("float64")  # as _n_tokens
     flat = toks.explode().dropna()
 
     def count_in(words) -> pd.Series:
@@ -192,25 +200,13 @@ def turn_enrich_frame(s: pd.Series) -> pd.DataFrame:
     # NaN ratio → 0.0)
     n_stop = count_in(STOPWORDS)
     stop_ratio = (n_stop / n_tok_f).fillna(0.0).round(4)
-    # quality (identical expression to quality_score_v)
-    n_chars = s.str.len().clip(lower=1)
-    alpha = s.str.count(r"[A-Za-z]")
-    n_tok_c = n_tok_f.clip(lower=1)
-    mean_tok = (n_chars - n_tok_c + 1) / n_tok_c
-    len_band = ((n_chars >= 32) & (n_chars <= 100_000)).astype(float)
-    tok_band = ((mean_tok >= 2.0) & (mean_tok <= 12.0)).astype(float)
-    quality = (
-        (0.4 * (alpha / n_chars) + 0.3 * len_band + 0.3 * tok_band)
-        .astype(float)
-        .round(4)
-    )
     return pd.DataFrame(
         {
             "n_tokens": n_tok_f.fillna(0).astype("int32"),
             "fp64": fingerprint64(s),
             "lang": best,
             "stop_ratio": stop_ratio,
-            "quality": quality,
+            "quality": _quality(s, n_tok_f),
         }
     )
 

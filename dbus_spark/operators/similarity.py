@@ -569,7 +569,8 @@ def kmeans_centroids(
     # is unchanged (the 100 TB shape: one scan per round, partial
     # sums to the driver).
     train = df.select(id_col, vec_col)
-    n_rows = train.count()
+    # a LIMIT probe: only "at most the threshold?" matters
+    n_rows = train.limit(small_input_threshold + 1).count()
     if n_rows <= small_input_threshold:
         pdf = train.toPandas()
         ids = pdf[id_col].to_numpy()

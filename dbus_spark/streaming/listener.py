@@ -11,9 +11,12 @@ hot loop nothing.
 Per micro-batch we record: input rows/sec, processed rows/sec, batch
 duration and every phase of it (the progress ``durationMs`` record:
 ``latestOffset``, ``queryPlanning``, ``addBatch``, ``walCommit``,
-``commitOffsets``, ...), state rows + memory, watermark gap (the
-reference's "mylag" alert analog), and per-source start/end offsets —
-the per-partition lineage required by the north rule.
+``commitOffsets``, ...), state rows + memory, the rows the stateful
+operators dropped as later than the watermark (late data lost
+silently), each stateful operator's commit and update times and store
+instance count, watermark gap (the reference's "mylag" alert analog),
+and per-source start/end offsets — the per-partition lineage required
+by the north rule.
 """
 
 from __future__ import annotations
@@ -24,6 +27,14 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+
+_STATE_OPERATOR_KEYS = (
+    "operatorName",
+    "commitTimeMs",
+    "allUpdatesTimeMs",
+    "numStateStoreInstances",
+)
 
 
 @dataclass
@@ -41,6 +52,11 @@ class BatchMetric:
     sources: list[dict] = field(default_factory=list)
     # the progress durationMs record: phase name -> ms
     phases_ms: dict[str, int] = field(default_factory=dict)
+    # numRowsDroppedByWatermark summed over the stateful operators
+    rows_dropped_by_watermark: int = 0
+    # one dict of _STATE_OPERATOR_KEYS per stateful operator; its
+    # commitTimeMs and allUpdatesTimeMs are task-summed, not wall time
+    state_operators: list[dict] = field(default_factory=list)
 
 
 class MetricsListener(StreamingQueryListener):
@@ -85,6 +101,12 @@ class MetricsListener(StreamingQueryListener):
                 for s in (p.get("sources") or [])
             ],
             phases_ms=phases,
+            rows_dropped_by_watermark=sum(
+                int(s.get("numRowsDroppedByWatermark", 0)) for s in state
+            ),
+            state_operators=[
+                {k: s.get(k) for k in _STATE_OPERATOR_KEYS} for s in state
+            ],
         )
         with self._lock:
             self.batches.append(metric)
@@ -137,6 +159,9 @@ class MetricsListener(StreamingQueryListener):
             "p95_batch_ms": _pct([b.duration_ms for b in data], 0.95),
             "p95_batch_ms_warm": _pct(warm, 0.95),
             "max_state_rows": max(b.state_rows for b in data),
+            "rows_dropped_by_watermark": sum(
+                b.rows_dropped_by_watermark for b in data
+            ),
             "last_watermark": data[-1].watermark,
             # p50 of each phase over the batches that report it
             "p50_phase_ms": {

@@ -55,12 +55,25 @@ def test_listener_keeps_every_phase_of_recorded_progress():
     ]
     for line, batch in zip(lines, listener.batches):
         assert batch.phases_ms == json.loads(line)["durationMs"]
+    assert b.rows_dropped_by_watermark == 0
+    assert [b.state_operators for b in listener.batches] == [
+        [
+            {
+                "operatorName": "stateStoreSave",
+                "commitTimeMs": commit,
+                "allUpdatesTimeMs": updates,
+                "numStateStoreInstances": 2,
+            }
+        ]
+        for commit, updates in ((66, 238), (22, 63), (9, 64))
+    ]
 
     s = listener.summary(b.run_id)
     assert s["batches"] == 3
     assert s["total_input_rows"] == 451
     assert s["p95_batch_ms"] == 4619
     assert s["p95_batch_ms_warm"] == 1077
+    assert s["rows_dropped_by_watermark"] == 0
     # p50 of each phase over the three batches
     assert s["p50_phase_ms"] == {
         "addBatch": 962,
@@ -97,3 +110,53 @@ def test_listener_phases_skip_empty_and_missing_records():
     s = listener.summary("r")
     assert s["batches"] == 1
     assert s["p50_phase_ms"] == {}
+
+
+def test_listener_sums_rows_dropped_by_watermark():
+    """Late rows dropped by every stateful operator of a batch add up,
+    per batch and over the run."""
+    def op(name, dropped):
+        return {
+            "operatorName": name,
+            "numRowsDroppedByWatermark": dropped,
+            "commitTimeMs": 5,
+            "allUpdatesTimeMs": 7,
+            "numStateStoreInstances": 4,
+        }
+
+    listener = MetricsListener()
+    _replay(
+        listener,
+        [
+            json.dumps(
+                {
+                    "batchId": 0,
+                    "runId": "r",
+                    "numInputRows": 10,
+                    "stateOperators": [op("a", 3), op("b", 4)],
+                }
+            ),
+            json.dumps(
+                {
+                    "batchId": 1,
+                    "runId": "r",
+                    "numInputRows": 10,
+                    "stateOperators": [op("a", 5)],
+                }
+            ),
+            json.dumps({"batchId": 2, "runId": "r", "numInputRows": 10}),
+        ],
+    )
+    assert [b.rows_dropped_by_watermark for b in listener.batches] == [
+        7,
+        5,
+        0,
+    ]
+    assert [len(b.state_operators) for b in listener.batches] == [2, 1, 0]
+    assert listener.batches[0].state_operators[1] == {
+        "operatorName": "b",
+        "commitTimeMs": 5,
+        "allUpdatesTimeMs": 7,
+        "numStateStoreInstances": 4,
+    }
+    assert listener.summary("r")["rows_dropped_by_watermark"] == 12

@@ -142,6 +142,40 @@ def test_kmeans_spark_matches_local_replica_and_roundtrips(spark, tmp_path):
     assert S.load_centroids(p) == cs
 
 
+def test_kmeans_size_probe_picks_the_path_at_the_threshold(
+    spark, monkeypatch
+):
+    """The strategy probe counts at most ``threshold + 1`` rows: a
+    table of exactly ``threshold`` rows trains on the driver, one row
+    more trains distributed, and both give the replica's centroids."""
+    import numpy as np
+    import pandas as pd
+
+    from dbus_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    pdf = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
+    n = len(pdf)
+    cl = S.kmeans_centroids_local(
+        np.stack(pdf["embedding"].to_numpy()), n_centroids=8, n_iter=2
+    )
+    local_calls = []
+    replica = S.kmeans_centroids_local
+    monkeypatch.setattr(
+        S,
+        "kmeans_centroids_local",
+        lambda *a, **k: local_calls.append(1) or replica(*a, **k),
+    )
+    for threshold, on_driver in ((n, True), (n - 1, False)):
+        del local_calls[:]
+        cs = S.kmeans_centroids(
+            emb, dim=64, n_centroids=8, n_iter=2,
+            small_input_threshold=threshold,
+        )
+        assert bool(local_calls) == on_driver
+        assert cs == cl
+
+
 def test_knn_ivf_probe_join_shape(spark):
     """IVF ANN: the probe side must broadcast and the candidate join
     must be on the cell key — never an all-pairs product."""

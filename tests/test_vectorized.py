@@ -1,6 +1,7 @@
 """Arrow pandas-UDF text transforms (the input_hint throughput path)."""
 
 import pandas as pd
+import pytest
 
 from dbus_spark.functions.vectorized import (
     doc_enrich_v,
@@ -188,3 +189,46 @@ def test_fp64_is_nul_exact_and_batch_independent():
     legacy = pd.util.hash_pandas_object(norm, index=False).astype("int64")
     assert fp(plain) == legacy.tolist()
     assert fp([None]) == [-1]
+
+
+@pytest.mark.filterwarnings("error::FutureWarning")
+@pytest.mark.parametrize(
+    "texts",
+    [[None, None], [None, "the cat and the hat is a cat", None]],
+    ids=["all_null", "mixed"],
+)
+def test_enrich_kernels_on_null_batches(texts):
+    """A null text gets 0 tokens, fp64 -1, ``und``, ratio 0.0 and a
+    NaN quality, also when every text of the batch is null (whose
+    ``str.len()`` is an object Series), without leaning on pandas'
+    deprecated ``fillna`` downcast."""
+    from dbus_spark.functions.vectorized import (
+        doc_enrich_frame,
+        turn_enrich_frame,
+    )
+
+    s = pd.Series(texts, dtype=object)
+    null = s.isna().to_numpy()
+    turn = turn_enrich_frame(s)
+    doc = doc_enrich_frame(s)
+    assert turn["n_tokens"].dtype == "int32"
+    assert doc["n_tokens"].dtype == "int32"
+    assert turn["n_tokens"][null].tolist() == [0] * null.sum()
+    assert turn["fp64"][null].tolist() == [-1] * null.sum()
+    assert turn["lang"][null].tolist() == ["und"] * null.sum()
+    assert turn["stop_ratio"][null].tolist() == [0.0] * null.sum()
+    assert turn["quality"][null].isna().all()
+    assert doc["n_tokens"][null].tolist() == [0] * null.sum()
+    assert doc["quality"][null].isna().all()
+    if not null.all():
+        assert turn[~null].to_dict("list") == {
+            "n_tokens": [8],
+            "fp64": [3800797827017677322],
+            "lang": ["en"],
+            "stop_ratio": [0.625],
+            "quality": [0.6],
+        }
+        assert doc[~null].to_dict("list") == {
+            "quality": [0.6],
+            "n_tokens": [8],
+        }

@@ -87,7 +87,10 @@ def fingerprint64_v(s: pd.Series) -> pd.Series:
 # would also count punctuation-adjacent words ("the," counts for \bthe\b
 # but is not a whitespace token)
 def _tok_count(low: pd.Series, word: str) -> pd.Series:
-    return low.str.count(rf"(?<!\S){word}(?!\S)")
+    """Whole-token matches of ``word`` per text: float64, NaN for a null
+    text, like :func:`_n_tokens` (an all-null batch counts to an object
+    Series otherwise)."""
+    return low.str.count(rf"(?<!\S){word}(?!\S)").astype("float64")
 
 
 @pandas_udf(T.StringType())
@@ -100,7 +103,7 @@ def lang_id_v(s: pd.Series) -> pd.Series:
         for lang, markers in LANG_MARKERS.items()
     }
     best = pd.Series("und", index=s.index)
-    best_score = pd.Series(0, index=s.index)
+    best_score = pd.Series(0.0, index=s.index)
     for lang in reversed(_LANG_ORDER):
         sc = scores[lang]
         take = sc >= best_score.where(best_score > 1, 1)

@@ -18,9 +18,8 @@ with three mechanisms, strongest first:
 2. **batch-id bookkeeping**: a marker per committed epoch short-cuts
    replays entirely (and records per-epoch lineage). The marker is the
    epoch's one commit record: it gates every read, and the epoch write
-   leaves no ``_SUCCESS`` file (no reader would look at it, and on a
-   local disk without libhadoop it and its ``.crc`` cost two forked
-   ``chmod`` children per epoch).
+   leaves no ``_SUCCESS`` file (no reader would look at it, and it and
+   its ``.crc`` are two more files to create per epoch).
 3. **key-level anti-join MERGE** (``dedup_mode="anti_join"``): for
    upstreams that can re-emit a key in a *different* epoch (raw
    at-least-once streams), only keys absent from all other epochs are

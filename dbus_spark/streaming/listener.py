@@ -33,7 +33,9 @@ _STATE_OPERATOR_KEYS = (
     "operatorName",
     "commitTimeMs",
     "allUpdatesTimeMs",
+    "allRemovalsTimeMs",
     "numStateStoreInstances",
+    "numShufflePartitions",
 )
 
 
@@ -55,7 +57,8 @@ class BatchMetric:
     # numRowsDroppedByWatermark summed over the stateful operators
     rows_dropped_by_watermark: int = 0
     # one dict of _STATE_OPERATOR_KEYS per stateful operator; its
-    # commitTimeMs and allUpdatesTimeMs are task-summed, not wall time
+    # commitTimeMs, allUpdatesTimeMs and allRemovalsTimeMs are
+    # task-summed, not wall time
     state_operators: list[dict] = field(default_factory=list)
 
 

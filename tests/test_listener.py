@@ -62,10 +62,16 @@ def test_listener_keeps_every_phase_of_recorded_progress():
                 "operatorName": "stateStoreSave",
                 "commitTimeMs": commit,
                 "allUpdatesTimeMs": updates,
+                "allRemovalsTimeMs": removals,
                 "numStateStoreInstances": 2,
+                "numShufflePartitions": 2,
             }
         ]
-        for commit, updates in ((66, 238), (22, 63), (9, 64))
+        for commit, updates, removals in (
+            (66, 238, 335),
+            (22, 63, 31),
+            (9, 64, 38),
+        )
     ]
 
     s = listener.summary(b.run_id)
@@ -121,7 +127,9 @@ def test_listener_sums_rows_dropped_by_watermark():
             "numRowsDroppedByWatermark": dropped,
             "commitTimeMs": 5,
             "allUpdatesTimeMs": 7,
+            "allRemovalsTimeMs": 2,
             "numStateStoreInstances": 4,
+            "numShufflePartitions": 4,
         }
 
     listener = MetricsListener()
@@ -157,6 +165,8 @@ def test_listener_sums_rows_dropped_by_watermark():
         "operatorName": "b",
         "commitTimeMs": 5,
         "allUpdatesTimeMs": 7,
+        "allRemovalsTimeMs": 2,
         "numStateStoreInstances": 4,
+        "numShufflePartitions": 4,
     }
     assert listener.summary("r")["rows_dropped_by_watermark"] == 12

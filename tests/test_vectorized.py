@@ -204,6 +204,8 @@ def test_enrich_kernels_on_null_batches(texts):
     deprecated ``fillna`` downcast."""
     from dbus_spark.functions.vectorized import (
         doc_enrich_frame,
+        lang_id_v,
+        stopword_ratio_v,
         turn_enrich_frame,
     )
 
@@ -211,6 +213,13 @@ def test_enrich_kernels_on_null_batches(texts):
     null = s.isna().to_numpy()
     turn = turn_enrich_frame(s)
     doc = doc_enrich_frame(s)
+    lang = lang_id_v.func(s)
+    ratio = stopword_ratio_v.func(s)
+    assert ratio.dtype == "float64"
+    assert lang[null].tolist() == ["und"] * null.sum()
+    assert ratio[null].tolist() == [0.0] * null.sum()
+    assert lang[~null].tolist() == turn["lang"][~null].tolist()
+    assert ratio[~null].tolist() == turn["stop_ratio"][~null].tolist()
     assert turn["n_tokens"].dtype == "int32"
     assert doc["n_tokens"].dtype == "int32"
     assert turn["n_tokens"][null].tolist() == [0] * null.sum()

@@ -16,7 +16,6 @@ dedup.py docstring).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +28,7 @@ from dbus_spark.operators import similarity as S
 from dbus_spark.operators import text as TX
 from dbus_spark.pipeline import Pipeline
 from dbus_spark.pipeline.matcher import wildcard_match
+from dbus_spark.pipeline.streaming import replay
 from dbus_spark.sources.batch import load_table
 
 
@@ -205,36 +205,67 @@ def _session_roles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("roles", "type_seq")
 
 
+def _events_pd(
+    spark: SparkSession, sf_dir: str, *cols, by=("ts", "event_id")
+):
+    """The events fixture's ``cols`` as pandas, sorted into the order a
+    replica streams them."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .select(*cols)
+        .toPandas()
+        .sort_values(list(by))
+    )
+
+
+def _flush_rows(pdf, key: str, first):
+    """Close a window-family replica's stream: two rows under the dummy
+    key ``_flush``, ``first`` and ``2 * first`` past the last event.
+    The first advances the watermark past every real window; the
+    second's micro-batch emits under it (emission uses the previous
+    batch's advance, the two-watermark rule tests/oracle_pd.py
+    encodes).  The caller filters the dummy key out."""
+    last = pdf["ts"].max()
+    return [
+        pdf.iloc[:1].assign(
+            **{key: "_flush"}, event_id=10**15 + j, ts=last + first * (j + 1)
+        )
+        for j in (0, 1)
+    ]
+
+
+def _replica_frame(spark: SparkSession, out, ddl: str, longs=()):
+    """A replica's collected rows as a frame of the oracle's ``ddl``:
+    its columns by name and in its order, ``longs`` cast to int64 first
+    (the stream hands keys back as strings).  No rows give an empty
+    frame of that schema."""
+    if not len(out):
+        return spark.createDataFrame([], ddl)
+    names = [f.split()[0] for f in ddl.split(",")]
+    out = out.astype({c: "int64" for c in longs})
+    return spark.createDataFrame(out[names], ddl)
+
+
 def _session_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows driver-checked on the STREAMING path:
     sessionize() (Spark session_window state) over the events fixture
     as a 4-file stream with a 10-minute watermark, append mode.
     End-of-stream: two cascading far-future sentinel rows under a
-    dummy key — the first advances the watermark past every real
-    session's close, the second's micro-batch emits under that
-    watermark (emission uses the previous batch's advance; the
-    two-watermark rule tests/oracle_pd.py encodes) — then the dummy
-    key is filtered out.  Oracle = the batch gaps-and-islands SQL of
-    session_roles: stream must land on batch verdicts exactly."""
-    import numpy as np
+    dummy key (``_flush_rows``), then the dummy key is filtered out.
+    Oracle = the batch gaps-and-islands SQL of session_roles: stream
+    must land on batch verdicts exactly."""
     import pandas as pd
 
     from dbus_spark.operators import sessionize
 
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.col("event_id"),
-            F.col("event_type"),
-            "ts",
-        )
-        .toPandas()
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
+    pdf = _events_pd(
+        spark,
+        sf_dir,
+        F.col("user_id").cast("string").alias("user_id"),
+        "event_id",
+        "event_type",
+        "ts",
     )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    base_ts = pdf["ts"].max() + pd.Timedelta(hours=1)
 
     def build(src):
         return sessionize(
@@ -247,44 +278,19 @@ def _session_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="10 minutes",
         ).withColumnRenamed("roles", "type_seq")
 
-    def sentinel_rows(j):
-        return pd.DataFrame(
-            {
-                "user_id": ["_flush"],
-                "event_id": [10**15 + j],
-                "event_type": ["_flush"],
-                "ts": [base_ts + pd.Timedelta(hours=2 * j)],
-            }
-        )
-
-    out = _run_sentinel_window_stream(
+    out = replay(
         spark,
         pdf,
         "user_id string, event_id long, event_type string, ts timestamp",
         build,
-        sentinel_rows,
-        "session",
+        then=_flush_rows(pdf, "user_id", pd.Timedelta(hours=1)),
     )
-    out = out[out["user_id"] != "_flush"]
-    if not len(out):
-        return spark.createDataFrame(
-            [],
-            "user_id bigint, session_start timestamp, "
-            "last_ts timestamp, n_turns bigint, type_seq string",
-        )
-    out = pd.DataFrame(
-        {
-            "user_id": out["user_id"].astype(np.int64),
-            "session_start": out["session_start"],
-            "last_ts": out["last_ts"],
-            "n_turns": out["n_turns"].astype(np.int64),
-            "type_seq": out["type_seq"],
-        }
-    )
-    return spark.createDataFrame(
-        out,
+    return _replica_frame(
+        spark,
+        out[out["user_id"] != "_flush"],
         "user_id bigint, session_start timestamp, last_ts timestamp, "
         "n_turns bigint, type_seq string",
+        longs=("user_id", "n_turns"),
     )
 
 
@@ -318,23 +324,16 @@ def _window_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     two cascading dummy-key sentinels as the session replica; the
     emitted windows must equal the batch tumbling_window oracle
     exactly (every real window closes once the watermark passes it)."""
-    import numpy as np
     import pandas as pd
 
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.col("event_id"),
-            F.col("value"),
-            "ts",
-        )
-        .toPandas()
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
+    pdf = _events_pd(
+        spark,
+        sf_dir,
+        F.col("user_id").cast("string").alias("user_id"),
+        "event_id",
+        "value",
+        "ts",
     )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    base_ts = pdf["ts"].max() + pd.Timedelta(hours=2)
 
     def build(src):
         return W.windowed_agg(
@@ -348,95 +347,20 @@ def _window_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             watermark="10 minutes",
         )
 
-    def sentinel_rows(j):
-        return pd.DataFrame(
-            {
-                "user_id": ["_flush"],
-                "event_id": [10**15 + j],
-                "value": [0.0],
-                "ts": [base_ts + pd.Timedelta(hours=3 * j)],
-            }
-        )
-
-    out = _run_sentinel_window_stream(
+    out = replay(
         spark,
         pdf,
         "user_id string, event_id long, value double, ts timestamp",
         build,
-        sentinel_rows,
-        "tumbling",
+        then=_flush_rows(pdf, "user_id", pd.Timedelta(hours=2)),
     )
-    out = out[out["user_id"] != "_flush"]
-    if not len(out):
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, window_end timestamp, "
-            "user_id bigint, n_events bigint, sum_value double",
-        )
-    out = pd.DataFrame(
-        {
-            "window_start": out["window_start"],
-            "window_end": out["window_end"],
-            "user_id": out["user_id"].astype(np.int64),
-            "n_events": out["n_events"].astype(np.int64),
-            "sum_value": out["sum_value"],
-        }
-    )
-    return spark.createDataFrame(
-        out,
+    return _replica_frame(
+        spark,
+        out[out["user_id"] != "_flush"],
         "window_start timestamp, window_end timestamp, "
         "user_id bigint, n_events bigint, sum_value double",
+        longs=("user_id", "n_events"),
     )
-
-
-def _run_sentinel_window_stream(
-    spark: SparkSession,
-    pdf,
-    schema: str,
-    build,
-    sentinel_rows,
-    tag: str,
-):
-    """Shared driver for the window-family replicas: write ``pdf`` as
-    a 4-file stream, run ``build(src)`` in append mode, then feed two
-    cascading far-future sentinel batches (``sentinel_rows(j)`` for
-    j=0,1 — the first advances the watermark past every real window,
-    the second's batch emits under it), and return the collected
-    output as one pandas frame."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
-    tmp = tempfile.mkdtemp(prefix=f"winrep_{tag}_")
-    try:
-        in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        for i, idx in enumerate(np.array_split(np.arange(len(pdf)), 4)):
-            pdf.iloc[idx].to_parquet(
-                os.path.join(in_dir, f"b-{i:04d}.parquet"),
-                index=False,
-                row_group_size=2000,
-            )
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q, got = _collect_stream(build(src), os.path.join(tmp, "ck"))
-        for j in (0, 1):
-            sent = sentinel_rows(j)
-            sent["ts"] = sent["ts"].astype("datetime64[us]")
-            sent.to_parquet(
-                os.path.join(in_dir, f"b-999{8 + j}.parquet"), index=False
-            )
-            q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
-        return pd.concat(got, ignore_index=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _salted_window_stream_replica(
@@ -449,23 +373,16 @@ def _salted_window_stream_replica(
     equal the batch tumbling_window_salted oracle exactly; this is the
     north rule's 'salted two-phase aggregation' executing its
     streaming form under the driver's hash check."""
-    import numpy as np
     import pandas as pd
 
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.col("event_id"),
-            F.col("value"),
-            "ts",
-        )
-        .toPandas()
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
+    pdf = _events_pd(
+        spark,
+        sf_dir,
+        F.col("user_id").cast("string").alias("user_id"),
+        "event_id",
+        "value",
+        "ts",
     )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    base_ts = pdf["ts"].max() + pd.Timedelta(hours=2)
 
     def build(src):
         return W.salted_windowed_agg(
@@ -481,44 +398,19 @@ def _salted_window_stream_replica(
             watermark="10 minutes",
         )
 
-    def sentinel_rows(j):
-        return pd.DataFrame(
-            {
-                "user_id": ["_flush"],
-                "event_id": [10**15 + j],
-                "value": [0.0],
-                "ts": [base_ts + pd.Timedelta(hours=3 * j)],
-            }
-        )
-
-    out = _run_sentinel_window_stream(
+    out = replay(
         spark,
         pdf,
         "user_id string, event_id long, value double, ts timestamp",
         build,
-        sentinel_rows,
-        "salted",
+        then=_flush_rows(pdf, "user_id", pd.Timedelta(hours=2)),
     )
-    out = out[out["user_id"] != "_flush"]
-    if not len(out):
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, window_end timestamp, "
-            "user_id bigint, n_events bigint, max_v double",
-        )
-    out = pd.DataFrame(
-        {
-            "window_start": out["window_start"],
-            "window_end": out["window_end"],
-            "user_id": out["user_id"].astype(np.int64),
-            "n_events": out["n_events"].astype(np.int64),
-            "max_v": out["max_v"],
-        }
-    )
-    return spark.createDataFrame(
-        out,
+    return _replica_frame(
+        spark,
+        out[out["user_id"] != "_flush"],
         "window_start timestamp, window_end timestamp, user_id bigint, "
         "n_events bigint, max_v double",
+        longs=("user_id", "n_events"),
     )
 
 
@@ -532,15 +424,7 @@ def _sliding_window_stream_replica(
     oracle exactly."""
     import pandas as pd
 
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select(F.col("event_type"), F.col("event_id"), "ts")
-        .toPandas()
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
-    )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    base_ts = pdf["ts"].max() + pd.Timedelta(days=3)
+    pdf = _events_pd(spark, sf_dir, "event_type", "event_id", "ts")
 
     def build(src):
         return W.windowed_agg(
@@ -552,39 +436,18 @@ def _sliding_window_stream_replica(
             watermark="10 minutes",
         ).drop("window_end")
 
-    def sentinel_rows(j):
-        return pd.DataFrame(
-            {
-                "event_type": ["_flush"],
-                "event_id": [10**15 + j],
-                "ts": [base_ts + pd.Timedelta(days=2 * j)],
-            }
-        )
-
-    out = _run_sentinel_window_stream(
+    out = replay(
         spark,
         pdf,
         "event_type string, event_id long, ts timestamp",
         build,
-        sentinel_rows,
-        "sliding",
+        then=_flush_rows(pdf, "event_type", pd.Timedelta(days=3)),
     )
-    out = out[out["event_type"] != "_flush"]
-    if not len(out):
-        return spark.createDataFrame(
-            [],
-            "window_start timestamp, event_type string, n_events bigint",
-        )
-    out = pd.DataFrame(
-        {
-            "window_start": out["window_start"],
-            "event_type": out["event_type"],
-            "n_events": out["n_events"].astype("int64"),
-        }
-    )
-    return spark.createDataFrame(
-        out,
+    return _replica_frame(
+        spark,
+        out[out["event_type"] != "_flush"],
         "window_start timestamp, event_type string, n_events bigint",
+        longs=("n_events",),
     )
 
 
@@ -592,51 +455,18 @@ def _interval_join_stream_replica(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The stateful stream-stream interval join driver-checked: the
-    events fixture streams as TWO sources (click side, purchase side,
-    same 4-file directory), watermarked on both event-time columns;
-    Spark sizes the join state from the interval condition (clicks
-    retained 30 min + watermark past their time).  Inner joins emit
-    eagerly on match, so the in-order finite replay needs no
+    events fixture streams as a 4-file source joined with itself
+    (click side, purchase side), watermarked on both event-time
+    columns; Spark sizes the join state from the interval condition
+    (clicks retained 30 min + watermark past their time).  Inner joins
+    emit eagerly on match, so the in-order finite replay needs no
     end-of-stream flush; the matched set must equal the batch
     interval_join oracle exactly."""
-    import shutil
-    import tempfile
+    pdf = _events_pd(spark, sf_dir, "user_id", "event_id", "event_type", "ts")
 
-    import numpy as np
-    import pandas as pd
-
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_id", "event_type", "ts")
-        .toPandas()
-        .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
-    )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    tmp = tempfile.mkdtemp(prefix="ijoin_replica_")
-    try:
-        in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        for i, idx in enumerate(np.array_split(np.arange(len(pdf)), 4)):
-            pdf.iloc[idx].to_parquet(
-                os.path.join(in_dir, f"b-{i:04d}.parquet"),
-                index=False,
-                row_group_size=2000,
-            )
-
-        def _src():
-            return (
-                spark.readStream.schema(
-                    "user_id long, event_id long, event_type string, "
-                    "ts timestamp"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-
+    def build(src):
         clicks = (
-            _src()
-            .filter("event_type = 'click'")
+            src.filter("event_type = 'click'")
             .select(
                 "user_id",
                 F.col("event_id").alias("click_id"),
@@ -645,8 +475,7 @@ def _interval_join_stream_replica(
             .withWatermark("click_ts", "10 minutes")
         )
         buys = (
-            _src()
-            .filter("event_type = 'purchase'")
+            src.filter("event_type = 'purchase'")
             .select(
                 F.col("user_id").alias("p_user_id"),
                 F.col("event_id").alias("purchase_id"),
@@ -662,25 +491,22 @@ def _interval_join_stream_replica(
                 <= F.expr("click_ts + INTERVAL 30 MINUTES")
             )
         )
-        v = clicks.join(buys, cond, "inner").select(
+        return clicks.join(buys, cond, "inner").select(
             "user_id", "click_id", "purchase_id"
         )
-        q, got = _collect_stream(v, os.path.join(tmp, "ck"))
-        q.stop()
-        q.awaitTermination(60)
-        out = pd.concat(got, ignore_index=True)
-        if not len(out):
-            return spark.createDataFrame(
-                [], "user_id bigint, click_id bigint, purchase_id bigint"
-            )
-        out = out.astype(
-            {c: np.int64 for c in ("user_id", "click_id", "purchase_id")}
-        )
-        return spark.createDataFrame(
-            out, "user_id bigint, click_id bigint, purchase_id bigint"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    out = replay(
+        spark,
+        pdf,
+        "user_id long, event_id long, event_type string, ts timestamp",
+        build,
+    )
+    return _replica_frame(
+        spark,
+        out,
+        "user_id bigint, click_id bigint, purchase_id bigint",
+        longs=("user_id", "click_id", "purchase_id"),
+    )
 
 
 def _asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,12 +543,6 @@ def _asof_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     set must equal the batch union-and-carry oracle exactly,
     including the tie rules (click visible at equal ts, max click_id
     among same-ts clicks)."""
-    import shutil
-    import tempfile
-
-    import numpy as np
-    import pandas as pd
-
     from dbus_spark.operators.join import streaming_asof_join
 
     pdf = (
@@ -739,30 +559,12 @@ def _asof_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .toPandas()
         .sort_values(["ts", "event_id"])
-        .reset_index(drop=True)
     )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     # nullable long: plain astype would make parquet DOUBLE
     pdf["click_id"] = pdf["click_id"].astype("Int64")
-    tmp = tempfile.mkdtemp(prefix="asof_replica_")
-    try:
-        in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        for i, idx in enumerate(np.array_split(np.arange(len(pdf)), 4)):
-            pdf.iloc[idx].to_parquet(
-                os.path.join(in_dir, f"b-{i:04d}.parquet"),
-                index=False,
-                row_group_size=2000,
-            )
-        src = (
-            spark.readStream.schema(
-                "user_id string, event_id long, event_type string, "
-                "click_id long, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        v = streaming_asof_join(
+
+    def build(src):
+        return streaming_asof_join(
             src,
             is_right="event_type = 'click'",
             right_cols=["click_id"],
@@ -773,26 +575,22 @@ def _asof_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             ttl_ms=86_400_000,
             n_buckets=8,
         )
-        q, got = _collect_stream(v, os.path.join(tmp, "ck"))
-        q.stop()
-        q.awaitTermination(60)
-        out = pd.concat(got, ignore_index=True)
-        if not len(out):
-            return spark.createDataFrame(
-                [], "user_id bigint, purchase_id bigint, click_id bigint"
-            )
-        out = pd.DataFrame(
-            {
-                "user_id": out["key"].astype(np.int64),
-                "purchase_id": out["order"].astype(np.int64),
-                "click_id": nullable_long_object(out["click_id"]),
-            }
-        )
-        return spark.createDataFrame(
-            out, "user_id bigint, purchase_id bigint, click_id bigint"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    out = replay(
+        spark,
+        pdf,
+        "user_id string, event_id long, event_type string, "
+        "click_id long, ts timestamp",
+        build,
+    )
+    out = out.rename(columns={"key": "user_id", "order": "purchase_id"})
+    out["click_id"] = nullable_long_object(out["click_id"])
+    return _replica_frame(
+        spark,
+        out,
+        "user_id bigint, purchase_id bigint, click_id bigint",
+        longs=("user_id", "purchase_id"),
+    )
 
 
 def _cdc_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,68 +743,23 @@ def _cep_absence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_events_files(spark: SparkSession, sf_dir: str, tag: str):
-    """Serve the events fixture as a file stream: globally event_id-
-    ordered (= ts-ordered in this corpus, the per-key in-order input
-    contract of the CEP twins), split into 4 sequential files so the
-    run crosses micro-batch boundaries.  Returns (src_df, tmp_dir,
-    in_dir, ordered_pandas)."""
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix=f"cep_replica_{tag}_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    pdf = (
-        load_table(spark, sf_dir, "events")
-        .select(
-            F.col("user_id").cast("string").alias("key"),
-            F.col("event_id").alias("order"),
-            F.col("event_type").alias("sym"),
-            "ts",
-        )
-        .toPandas()
-        .sort_values("order")
-        .reset_index(drop=True)
+def _cep_events_pd(spark: SparkSession, sf_dir: str):
+    """The events fixture for the CEP twins: globally event_id-ordered
+    (= ts-ordered in this corpus, the per-key in-order input contract
+    of the CEP twins), replayed as 4 files so the run crosses
+    micro-batch boundaries."""
+    return _events_pd(
+        spark,
+        sf_dir,
+        F.col("user_id").cast("string").alias("key"),
+        F.col("event_id").alias("order"),
+        F.col("event_type").alias("sym"),
+        "ts",
+        by=("order",),
     )
-    # microsecond unit: pandas' default ns-timestamps write a parquet
-    # physical type Spark's streaming schema ("ts timestamp") rejects
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    import numpy as np
-
-    parts = np.array_split(np.arange(len(pdf)), 4)
-    for i, idx in enumerate(parts):
-        pdf.iloc[idx].to_parquet(
-            os.path.join(in_dir, f"b-{i:04d}.parquet"), index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "key string, order long, sym string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    return src, tmp, in_dir, pdf
 
 
-def _collect_stream(out_df, ck_dir: str):
-    """Run a streaming DataFrame to end-of-available-input, collecting
-    every append batch; returns (query, list_of_pandas).  Caller stops
-    the query (or drives more input first)."""
-    import pandas as pd
-
-    got: list = []
-
-    def _sink(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        out_df.writeStream.outputMode("append")
-        .option("checkpointLocation", ck_dir)
-        .foreachBatch(_sink)
-        .start()
-    )
-    q.processAllAvailable()
-    return q, got
+_CEP_EVENTS = "key string, order long, sym string, ts timestamp"
 
 
 def _cep_funnel_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,8 +771,6 @@ def _cep_funnel_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     cep_funnel — the stream must land on the batch verdicts exactly.
     Per-key state is two scalars (n_reached, last_reached_ts); stage
     predicates are a JVM-side bitmask, no text reaches Python."""
-    import shutil
-
     from dbus_spark.operators.cep import streaming_funnel
 
     stages = [
@@ -1027,9 +778,9 @@ def _cep_funnel_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("click", "sym = 'click'"),
         ("purchase", "sym = 'purchase'"),
     ]
-    src, tmp, _in_dir, _pdf = _stream_events_files(spark, sf_dir, "funnel")
-    try:
-        v = streaming_funnel(
+
+    def build(src):
+        return streaming_funnel(
             src,
             stages,
             key="key",
@@ -1039,37 +790,19 @@ def _cep_funnel_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             ttl_ms=86_400_000,
             n_buckets=8,
         )
-        q, got = _collect_stream(v, os.path.join(tmp, "ck"))
-        q.stop()
-        q.awaitTermination(60)
-        import pandas as pd
 
-        adv = pd.concat(got, ignore_index=True)
-        adv_df = (
-            spark.createDataFrame(
-                adv[["key", "stage_idx"]],
-                "key string, stage_idx int",
-            )
-            if len(adv)
-            else spark.createDataFrame([], "key string, stage_idx int")
-        )
-        stages_df = spark.createDataFrame(
-            [(i, n) for i, (n, _) in enumerate(stages)],
-            "stage_idx int, stage string",
-        )
-        counts = adv_df.groupBy("stage_idx").agg(
-            F.count("*").alias("_n")
-        )
-        return (
-            stages_df.join(counts, "stage_idx", "left")
-            .select(
-                "stage_idx",
-                "stage",
-                F.coalesce("_n", F.lit(0)).cast("bigint").alias("n_keys"),
-            )
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    adv = replay(spark, _cep_events_pd(spark, sf_dir), _CEP_EVENTS, build)
+    adv_df = _replica_frame(spark, adv, "key string, stage_idx int")
+    stages_df = spark.createDataFrame(
+        [(i, n) for i, (n, _) in enumerate(stages)],
+        "stage_idx int, stage string",
+    )
+    counts = adv_df.groupBy("stage_idx").agg(F.count("*").alias("_n"))
+    return stages_df.join(counts, "stage_idx", "left").select(
+        "stage_idx",
+        "stage",
+        F.coalesce("_n", F.lit(0)).cast("bigint").alias("n_keys"),
+    )
 
 
 def _cep_absence_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,16 +813,14 @@ def _cep_absence_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA path — the documented stream-end flush idiom, giving exact
     batch-verdict equality on finite input.  Oracle = the same SQL as
     cep_absence."""
-    import shutil
-
-    import numpy as np
     import pandas as pd
 
     from dbus_spark.operators.cep import streaming_match_absence
 
-    src, tmp, in_dir, pdf = _stream_events_files(spark, sf_dir, "absence")
-    try:
-        v = streaming_match_absence(
+    pdf = _cep_events_pd(spark, sf_dir)
+
+    def build(src):
+        return streaming_match_absence(
             src,
             first="view",
             absent="click",
@@ -1102,48 +833,27 @@ def _cep_absence_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             ttl_ms=86_400_000,
             n_buckets=8,
         )
-        q, got = _collect_stream(v, os.path.join(tmp, "ck"))
-        # flush sentinels: per key, order past its max, ts past every
-        # possible deadline — closes all pending entries via the
-        # same-key-row-past-deadline rule (never matches `first`)
-        flush_ts = pdf["ts"].max() + pd.Timedelta(hours=24, minutes=1)
-        sent = (
-            pdf.groupby("key", sort=False)["order"]
-            .max()
-            .reset_index()
-            .assign(
-                order=lambda d: d["order"] + 1,
-                sym="_flush",
-                ts=flush_ts,
-            )
-        )
-        sent["ts"] = sent["ts"].astype("datetime64[us]")
-        sent.to_parquet(
-            os.path.join(in_dir, "b-9999.parquet"), index=False
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
-        out = pd.concat(got, ignore_index=True)
-        if not len(out):
-            return spark.createDataFrame(
-                [],
-                "user_id bigint, start_event_id bigint, "
-                "start_ts timestamp",
-            )
-        out = pd.DataFrame(
-            {
-                "user_id": out["key"].astype(np.int64),
-                "start_event_id": out["start_order"].astype(np.int64),
-                "start_ts": out["start_ts"],
-            }
-        )
-        return spark.createDataFrame(
-            out,
-            "user_id bigint, start_event_id bigint, start_ts timestamp",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    # flush sentinels: per key, order past its max, ts past every
+    # possible deadline — closes all pending entries via the
+    # same-key-row-past-deadline rule (never matches `first`)
+    flush_ts = pdf["ts"].max() + pd.Timedelta(hours=24, minutes=1)
+    sent = (
+        pdf.groupby("key", sort=False)["order"]
+        .max()
+        .reset_index()
+        .assign(order=lambda d: d["order"] + 1, sym="_flush", ts=flush_ts)
+    )
+    out = replay(spark, pdf, _CEP_EVENTS, build, then=(sent,))
+    out = out.rename(
+        columns={"key": "user_id", "start_order": "start_event_id"}
+    )
+    return _replica_frame(
+        spark,
+        out,
+        "user_id bigint, start_event_id bigint, start_ts timestamp",
+        longs=("user_id", "start_event_id"),
+    )
 
 
 def _ordered_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,10 +872,7 @@ def _ordered_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture has no gaps, so every conversation's received set becomes
     contiguous by end-of-input and the contiguity rule emits
     everything without waiting on the watermark."""
-    import shutil
-    import tempfile
-
-    import numpy as np
+    import pandas as pd
 
     from dbus_spark.operators.ordering import ordered_turns_stream
 
@@ -1187,49 +894,25 @@ def _ordered_stream_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("_eid"),
         )
     )
-    pdf = base.toPandas().sort_values("_arr").reset_index(drop=True)
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    pdf = base.toPandas().sort_values("_arr")
     dup = pdf[pdf["_eid"] % 7 == 0]
-    feed = __import__("pandas").concat([pdf, dup], ignore_index=True)
+    feed = pd.concat([pdf, dup], ignore_index=True)
     feed = feed.drop(columns=["_arr", "_eid"])
-    tmp = tempfile.mkdtemp(prefix="ordered_replica_")
-    try:
-        in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        parts = np.array_split(np.arange(len(feed)), 5)
-        for i, idx in enumerate(parts):
-            feed.iloc[idx].to_parquet(
-                os.path.join(in_dir, f"b-{i:04d}.parquet"),
-                index=False,
-                row_group_size=2000,
-            )
-        src = (
-            spark.readStream.schema(
-                "conv_id string, turn_idx int, role string, "
-                "text string, tool string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+
+    def build(src):
         # watermark wider than the fixture's event-time span: arrival
         # order is a full shuffle, so event-time regression between
         # micro-batches must never late-drop a real turn
-        v = ordered_turns_stream(
+        return ordered_turns_stream(
             src, watermark="100 days", flush_after_ms=60_000, n_buckets=8
         )
-        q, got = _collect_stream(v, os.path.join(tmp, "ck"))
-        q.stop()
-        q.awaitTermination(60)
-        import pandas as pd
 
-        out = pd.concat(got, ignore_index=True)
-        return spark.createDataFrame(
-            out,
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    )
+    out = replay(spark, feed, schema, build, n_files=5)
+    return _replica_frame(spark, out, schema)
 
 
 def _cep_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:

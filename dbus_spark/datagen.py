@@ -233,7 +233,10 @@ def write_stream_batches(
     files (micro-batch fixture for the file-stream source). Returns the
     file paths in arrival order. ``start_index`` offsets the file
     numbering so later calls append to a live drop directory without
-    clobbering files the stream already consumed.
+    clobbering files the stream already consumed. Any frame will do:
+    an ``_arrival`` column is dropped when present, and
+    ``datetime64[ns]`` columns are written as microseconds (parquet
+    ``TIMESTAMP(NANOS)`` is rejected by Spark's ``timestamp`` reader).
 
     ``row_group_size`` keeps the files SPLITTABLE: pandas' default
     writes each file as one row group, and a parquet split cannot
@@ -243,7 +246,9 @@ def write_stream_batches(
     from this alone). Real crawl/transcript shards are
     multi-row-group."""
     os.makedirs(out_dir, exist_ok=True)
-    body = df.drop(columns=["_arrival"])
+    body = df.drop(columns=["_arrival"], errors="ignore")
+    ns = body.select_dtypes("datetime64[ns]").columns
+    body = body.astype({c: "datetime64[us]" for c in ns})
     paths = []
     for i, chunk in enumerate(np.array_split(np.arange(len(body)), n_files)):
         p = os.path.join(out_dir, f"batch-{start_index + i:05d}.parquet")

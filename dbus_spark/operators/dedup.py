@@ -627,7 +627,8 @@ def _bucketed_hamming_pairs(
     max_hamming: int | None,
     emit_hamming: bool,
     n_sub: int = 1,
-    key_widths: list[int] | None = None,
+    *,
+    key_widths: list[int],
 ) -> DataFrame:
     """Within-bucket pair enumeration + popcount verify, fully
     vectorized: shuffle the sketch rows once on the bucket key(s),
@@ -661,63 +662,19 @@ def _bucketed_hamming_pairs(
     # sort compares one long — measured several-fold on the per-task
     # read wall at 32 concurrent local tasks. Sort order of the packed
     # long equals the multi-column (keys..., gi, gj, sub) order
-    # exactly (non-negative fields, high-to-low layout), and the
-    # kernel decodes the same arrays, so results are identical.
-    packed_mode = key_widths is not None
+    # exactly (non-negative fields, high-to-low layout).
     sb = max(1, (n_sub - 1).bit_length())  # bits for each of gi/gj/sub
-    if packed_mode:
-        if len(key_widths) != len(key_cols):
-            raise ValueError("key_widths must align with key_cols")
-        if sum(key_widths) + 3 * sb > 62:
-            raise ValueError("packed segment key exceeds 62 bits")
-        kp = F.col(key_cols[0]).cast("long")
-        for c, w in zip(key_cols[1:], key_widths[1:]):
-            kp = F.shiftleft(kp, w).bitwiseOR(F.col(c).cast("long"))
-        if n_sub > 1:
-            sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast(
-                "long"
-            )
-            grp = F.array(
-                *[
-                    F.struct(
-                        F.least(F.col("_sub"), F.lit(q)).alias("gi"),
-                        F.greatest(F.col("_sub"), F.lit(q)).alias("gj"),
-                    )
-                    for q in range(n_sub)
-                ]
-            )
-            sk = (
-                sk.withColumn("_kp", kp)
-                .withColumn("_sub", sub)
-                .select(
-                    "_kp", id_col, "simhash", "_sub",
-                    F.explode(grp).alias("_g"),
-                )
-                .select(
-                    F.shiftleft(
-                        F.shiftleft(
-                            F.shiftleft(F.col("_kp"), sb).bitwiseOR(
-                                F.col("_g.gi").cast("long")
-                            ),
-                            sb,
-                        ).bitwiseOR(F.col("_g.gj").cast("long")),
-                        sb,
-                    )
-                    .bitwiseOR(F.col("_sub"))
-                    .alias("_packed"),
-                    id_col,
-                    "simhash",
-                )
-            )
-        else:
-            sk = sk.select(
-                F.shiftleft(kp, 3 * sb).alias("_packed"),
-                id_col,
-                "simhash",
-            )
-        seg_cols = sort_cols = shuffle_cols = ["_packed"]  # unused below
-    elif n_sub > 1:
-        sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast("int")
+    if len(key_widths) != len(key_cols):
+        raise ValueError("key_widths must align with key_cols")
+    if sum(key_widths) + 3 * sb > 62:
+        raise ValueError("packed segment key exceeds 62 bits")
+    kp = F.col(key_cols[0]).cast("long")
+    for c, w in zip(key_cols[1:], key_widths[1:]):
+        kp = F.shiftleft(kp, w).bitwiseOR(F.col(c).cast("long"))
+    if n_sub > 1:
+        sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast(
+            "long"
+        )
         grp = F.array(
             *[
                 F.struct(
@@ -728,24 +685,34 @@ def _bucketed_hamming_pairs(
             ]
         )
         sk = (
-            sk.withColumn("_sub", sub)
+            sk.withColumn("_kp", kp)
+            .withColumn("_sub", sub)
             .select(
-                *key_cols, id_col, "simhash", "_sub",
+                "_kp", id_col, "simhash", "_sub",
                 F.explode(grp).alias("_g"),
             )
             .select(
-                *key_cols, id_col, "simhash", "_sub",
-                F.col("_g.gi").alias("_gi"), F.col("_g.gj").alias("_gj"),
+                F.shiftleft(
+                    F.shiftleft(
+                        F.shiftleft(F.col("_kp"), sb).bitwiseOR(
+                            F.col("_g.gi").cast("long")
+                        ),
+                        sb,
+                    ).bitwiseOR(F.col("_g.gj").cast("long")),
+                    sb,
+                )
+                .bitwiseOR(F.col("_sub"))
+                .alias("_packed"),
+                id_col,
+                "simhash",
             )
         )
-        seg_cols = list(key_cols) + ["_gi", "_gj"]
-        sort_cols = seg_cols + ["_sub"]
-        shuffle_cols = seg_cols
     else:
-        sk = sk.withColumn("_sub", F.lit(0).cast("int"))
-        seg_cols = list(key_cols)
-        sort_cols = seg_cols
-        shuffle_cols = seg_cols
+        sk = sk.select(
+            F.shiftleft(kp, 3 * sb).alias("_packed"),
+            id_col,
+            "simhash",
+        )
 
     def _empty():
         d = {
@@ -767,11 +734,8 @@ def _bucketed_hamming_pairs(
             else pd.concat(chunks, ignore_index=True)
         )
         n = len(pdf)
-        if packed_mode:
-            pk = pdf["_packed"].to_numpy(np.int64)
-            keyarrs = [pk >> sb]  # segment identity excludes sub
-        else:
-            keyarrs = [pdf[c].to_numpy(np.int64) for c in seg_cols]
+        pk = pdf["_packed"].to_numpy(np.int64)
+        seg = pk >> sb  # segment identity excludes sub
         ids = pdf[id_col].to_numpy(np.int64)
         sks = pdf["simhash"].to_numpy(np.int64)
         # 32-bit fast path: xor + popcount at half the memory traffic
@@ -782,23 +746,17 @@ def _bucketed_hamming_pairs(
             else None
         )
         change = np.zeros(n, dtype=bool)
-        for a in keyarrs:
-            change[1:] |= a[1:] != a[:-1]
+        change[1:] = seg[1:] != seg[:-1]
         starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
         lens = np.diff(np.concatenate([starts, [n]]))
         seg_of_row = np.repeat(np.arange(len(starts)), lens)
         pos = np.arange(n) - starts[seg_of_row]
         if n_sub > 1:
-            if packed_mode:
-                submask = (1 << sb) - 1
-                seg_start = keyarrs[0][starts]
-                gi = (seg_start >> sb) & submask
-                gj = seg_start & submask
-                subv = pk & submask
-            else:
-                gi = pdf["_gi"].to_numpy(np.int64)[starts]
-                gj = pdf["_gj"].to_numpy(np.int64)[starts]
-                subv = pdf["_sub"].to_numpy(np.int64)
+            submask = (1 << sb) - 1
+            seg_start = seg[starts]
+            gi = (seg_start >> sb) & submask
+            gj = seg_start & submask
+            subv = pk & submask
             diag_seg = gi == gj
             # cross segments: a-side (sub == gi) sorts first
             is_a = subv == gi[seg_of_row]
@@ -870,22 +828,15 @@ def _bucketed_hamming_pairs(
     # 13 partitions) but pair enumeration is quadratic per segment, so
     # the n_sub spread only works if the partition count holds
     n_part = _n_partitions(sk.sparkSession)
-    if packed_mode:
-        # shuffle on the segment identity (sub excluded — every row of
-        # a segment must land together), sort on the full packed key
-        part = sk.repartition(
-            n_part, F.shiftright(F.col("_packed"), sb)
-        ).sortWithinPartitions("_packed")
-        sel = ["_packed", id_col, "simhash"]
-    else:
-        part = sk.repartition(
-            n_part, *[F.col(c) for c in shuffle_cols]
-        ).sortWithinPartitions(*sort_cols)
-        sel = list(dict.fromkeys(sort_cols + [id_col, "simhash"]))
+    # shuffle on the segment identity (sub excluded — every row of a
+    # segment must land together), sort on the full packed key
+    part = sk.repartition(
+        n_part, F.shiftright(F.col("_packed"), sb)
+    ).sortWithinPartitions("_packed")
     schema = f"id_a long, id_b long" + (
         ", hamming integer" if emit_hamming else ""
     )
-    return part.select(*sel).mapInPandas(gen, schema=schema).select(
+    return part.mapInPandas(gen, schema=schema).select(
         *out_cols
     )
 

@@ -19,11 +19,15 @@ use streaming sink factories registered alongside the batch ones.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from dbus_spark.datagen import write_stream_batches
 from dbus_spark.pipeline.dag import Pipeline
 from dbus_spark.schema import TRANSCRIPT_SCHEMA
 from dbus_spark.sinks import IdempotentKeyedSink
@@ -244,3 +248,62 @@ def peek(
     q.awaitTermination()
     rows = spark.sql(f"SELECT * FROM _peek LIMIT {n}").collect()
     return rows
+
+
+def replay(
+    spark: SparkSession,
+    frame: pd.DataFrame,
+    schema,
+    build: Callable[[DataFrame], DataFrame],
+    n_files: int = 4,
+    then=(),
+) -> pd.DataFrame:
+    """Replay ``frame`` as a file stream and return what ``build`` emits.
+
+    ``frame`` is written as ``n_files`` parquet files, then each frame
+    of ``then`` as one more file (``datagen.write_stream_batches``).
+    They are read with ``schema``, one file per trigger, into
+    ``build(src)`` in append mode, and every emitted batch is
+    collected. Each file is moved into the source directory only after
+    the previous one has been drained: ``FileStreamSource`` orders new
+    files by modification time at millisecond resolution, so two small
+    files written back to back can tie and swap (a flush sentinel
+    overtaking the rows it closes), and a rename never shows a reader a
+    half-written file.
+
+    Returns the batches as one frame; when nothing was emitted, an
+    empty frame with the query's output columns."""
+    tmp = tempfile.mkdtemp(prefix="replay_")
+    try:
+        staged = os.path.join(tmp, "staged")
+        paths = write_stream_batches(frame, staged, n_files)
+        for j, extra in enumerate(then):
+            paths += write_stream_batches(
+                extra, staged, 1, start_index=n_files + j
+            )
+        in_dir = os.path.join(tmp, "in")
+        os.makedirs(in_dir)
+        src = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        out = build(src)
+        got: list[pd.DataFrame] = []
+        q = (
+            out.writeStream.outputMode("append")
+            .option("checkpointLocation", os.path.join(tmp, "ck"))
+            .foreachBatch(lambda df, _epoch: got.append(df.toPandas()))
+            .start()
+        )
+        try:
+            for p in paths:
+                os.rename(p, os.path.join(in_dir, os.path.basename(p)))
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        if not got:
+            return pd.DataFrame(columns=out.columns)
+        return pd.concat(got, ignore_index=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

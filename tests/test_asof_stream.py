@@ -4,13 +4,13 @@ tie rules identical (right visible at equal ts; max order wins among
 same-ts rights)."""
 
 import datetime as dt
-import os
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from dbus_spark.operators.join import asof_join, streaming_asof_join
+from dbus_spark.pipeline.streaming import replay
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +52,6 @@ def events_pd():
                 )
                 oid += 1
     pdf = pd.DataFrame(rows)
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     pdf["ref_id"] = pdf["ref_id"].astype("Int64")
     return pdf.sort_values(["ts", "order"]).reset_index(drop=True)
 
@@ -81,47 +80,23 @@ def _batch_expected(spark, pdf) -> set:
     }
 
 
-def _run_stream(spark, pdf, tmp_path, n_files, tag):
-    in_dir = tmp_path / f"in_asof_{tag}"
-    os.makedirs(in_dir)
-    parts = np.array_split(np.arange(len(pdf)), n_files)
-    for i, idx in enumerate(parts):
-        pdf.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "user string, order long, kind string, ref_id long, "
-            "ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+def _run_stream(spark, pdf, n_files):
+    out = replay(
+        spark,
+        pdf,
+        "user string, order long, kind string, ref_id long, ts timestamp",
+        lambda src: streaming_asof_join(
+            src,
+            is_right="kind = 'click'",
+            right_cols=["ref_id"],
+            key="user",
+            order="order",
+            ts="ts",
+            n_buckets=8,
+            ttl_ms=86_400_000,
+        ),
+        n_files,
     )
-    v = streaming_asof_join(
-        src,
-        is_right="kind = 'click'",
-        right_cols=["ref_id"],
-        key="user",
-        order="order",
-        ts="ts",
-        n_buckets=8,
-        ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(b, _e):
-        got.append(b.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck_asof_{tag}"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert not out.duplicated(["key", "order"]).any()
     return {
         (
@@ -136,23 +111,23 @@ def _run_stream(spark, pdf, tmp_path, n_files, tag):
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def test_asof_stream_matches_batch_single(spark, events_pd, tmp_path):
+def test_asof_stream_matches_batch_single(spark, events_pd):
     exp = _batch_expected(spark, events_pd)
-    got = _run_stream(spark, events_pd, tmp_path, 1, "one")
+    got = _run_stream(spark, events_pd, 1)
     assert got == exp
     # the fixture must exercise both no-ref nulls and ties
     assert any(v is None for _, _, v in exp)
     assert len(exp) > 300
 
 
-def test_asof_stream_split_equivalence(spark, events_pd, tmp_path):
+def test_asof_stream_split_equivalence(spark, events_pd):
     """Register state must carry across micro-batches: a probe in
     batch k attributes to a reference row from batch j < k."""
     exp = _batch_expected(spark, events_pd)
-    assert _run_stream(spark, events_pd, tmp_path, 7, "split") == exp
+    assert _run_stream(spark, events_pd, 7) == exp
 
 
-def test_asof_stream_dedups_redelivery(spark, events_pd, tmp_path):
+def test_asof_stream_dedups_redelivery(spark, events_pd):
     """Byte-identical redelivery of a prefix must not re-emit probes
     or regress the register."""
     exp = _batch_expected(spark, events_pd)
@@ -160,11 +135,11 @@ def test_asof_stream_dedups_redelivery(spark, events_pd, tmp_path):
         [events_pd, events_pd.head(len(events_pd) // 2)],
         ignore_index=True,
     )
-    got = _run_stream(spark, feed, tmp_path, 5, "dup")
+    got = _run_stream(spark, feed, 5)
     assert got == exp
 
 
-def test_asof_register_atomic_with_null_right_col(spark, tmp_path):
+def test_asof_register_atomic_with_null_right_col(spark):
     """The register fold must take the newest right row ATOMICALLY
     (advisor r6): when the latest click carries a NULL in one right_col
     and the probe arrives in a LATER micro-batch, the carried values
@@ -183,44 +158,28 @@ def test_asof_register_atomic_with_null_right_col(spark, tmp_path):
             "aux": pd.array(["A", None, None], dtype="string"),
             "ts": pd.to_datetime(
                 [base + dt.timedelta(seconds=s) for s in (0, 60, 120)]
-            ).astype("datetime64[us]"),
+            ),
         }
     )
-    in_dir = tmp_path / "in_asof_tear"
-    os.makedirs(in_dir)
     # split so the probe is in its own micro-batch: the register must
     # be read back from STATE, not recomputed from the live batch
-    rows.iloc[:2].to_parquet(in_dir / "b-0000.parquet", index=False)
-    rows.iloc[2:].to_parquet(in_dir / "b-0001.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "user string, order long, kind string, ref_id long, "
-            "aux string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    out = replay(
+        spark,
+        rows,
+        "user string, order long, kind string, ref_id long, "
+        "aux string, ts timestamp",
+        lambda src: streaming_asof_join(
+            src,
+            is_right="kind = 'click'",
+            right_cols=["ref_id", "aux"],
+            key="user",
+            order="order",
+            ts="ts",
+            n_buckets=4,
+            ttl_ms=86_400_000,
+        ),
+        n_files=2,
     )
-    v = streaming_asof_join(
-        src,
-        is_right="kind = 'click'",
-        right_cols=["ref_id", "aux"],
-        key="user",
-        order="order",
-        ts="ts",
-        n_buckets=4,
-        ttl_ms=86_400_000,
-    )
-    got = []
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_asof_tear"))
-        .foreachBatch(lambda b, _e: got.append(b.toPandas()))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert len(out) == 1
     r = out.iloc[0]
     # atomic register: BOTH carried columns come from click order=2

@@ -19,8 +19,10 @@ from dbus_spark.operators.cep import (
     streaming_match_quantified,
     streaming_match_sequence,
 )
+from dbus_spark.pipeline.streaming import replay
 
 PATTERN = ["user", "assistant", "tool"]
+TURNS = "conv_id string, turn_idx long, role string, ts timestamp"
 
 
 # --- fixtures ----------------------------------------------------------
@@ -182,108 +184,62 @@ def test_funnel_ordered_cascade(spark):
 # --- streaming ---------------------------------------------------------
 
 
-def _run_cep_stream(spark, turns_pd, tmp_path, n_files, within=None):
-    in_dir = tmp_path / f"in_{n_files}"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    parts = np.array_split(np.arange(len(ordered)), n_files)
-    for i, idx in enumerate(parts):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
+def _run_cep_stream(spark, turns_pd, n_files, within=None):
     # ttl far beyond the fixture's event-time span: these tests pin the
     # stream == batch contract, not the (documented) eviction trade
-    v = streaming_match_sequence(
-        src, PATTERN, key="conv_id", order="turn_idx", sym="role",
-        within=within, n_buckets=8, ttl_ms=86_400_000,
+    out = replay(
+        spark,
+        turns_pd.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_match_sequence(
+            src, PATTERN, key="conv_id", order="turn_idx", sym="role",
+            within=within, n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files,
     )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck_{n_files}"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     return {
         (r.key, r.start_order, r.end_order)
         for r in out.itertuples(index=False)
     }
 
 
-def test_stream_matches_batch_single(spark, turns_pd, tmp_path):
+def test_stream_matches_batch_single(spark, turns_pd):
     exp = _pd_matches(turns_pd, PATTERN)
-    assert _run_cep_stream(spark, turns_pd, tmp_path, 1) == exp
+    assert _run_cep_stream(spark, turns_pd, 1) == exp
 
 
-def test_stream_matches_batch_split(spark, turns_pd, tmp_path):
+def test_stream_matches_batch_split(spark, turns_pd):
     """Matches spanning micro-batch boundaries must still fire (state
     tail), and none may fire twice (end-order threshold)."""
     exp = _pd_matches(turns_pd, PATTERN)
-    assert _run_cep_stream(spark, turns_pd, tmp_path, 7) == exp
+    assert _run_cep_stream(spark, turns_pd, 7) == exp
 
 
-def test_stream_within_matches_batch(spark, turns_pd, tmp_path):
+def test_stream_within_matches_batch(spark, turns_pd):
     within = pd.Timedelta(minutes=90)
     exp = _pd_matches(turns_pd, PATTERN, within=within)
-    got = _run_cep_stream(
-        spark, turns_pd, tmp_path, 5, within="90 minutes"
-    )
+    got = _run_cep_stream(spark, turns_pd, 5, within="90 minutes")
     assert got == exp
     # the bound must bite on this fixture or the test proves nothing
     assert got != _pd_matches(turns_pd, PATTERN)
 
 
-def test_stream_dedups_redelivered_rows(spark, turns_pd, tmp_path):
+def test_stream_dedups_redelivered_rows(spark, turns_pd):
     """An exact (key, order) redelivery in a later file must not
     create new matches: first copy (already in state) wins."""
     dup = turns_pd.sort_values("ts").head(len(turns_pd) // 2)
     exp = _pd_matches(turns_pd, PATTERN)
-    in_dir = tmp_path / "in_dup"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    ordered.to_parquet(in_dir / "b-0000.parquet", index=False)
-    dup.tail(200).to_parquet(in_dir / "b-0001.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    out = replay(
+        spark,
+        turns_pd.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_match_sequence(
+            src, PATTERN, key="conv_id", order="turn_idx", sym="role",
+            n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files=1,
+        then=(dup.tail(200),),
     )
-    v = streaming_match_sequence(
-        src, PATTERN, key="conv_id", order="turn_idx", sym="role",
-        n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_dup"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert (
         {(r.key, r.start_order, r.end_order) for r in out.itertuples(index=False)}
         == exp
@@ -425,61 +381,35 @@ class _no_data_batches:
         self.spark.conf.set(self.KEY, self.prev)
 
 
-def _run_absence_stream(spark, turns_pd, tmp_path, n_files):
+def _run_absence_stream(spark, turns_pd, n_files):
     from dbus_spark.operators.cep import streaming_match_absence
 
-    in_dir = tmp_path / f"in_abs_{n_files}"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    parts = np.array_split(np.arange(len(ordered)), n_files)
-    for i, idx in enumerate(parts):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    v = streaming_match_absence(
-        src, first="user", absent="tool", within="5 minutes",
-        key="conv_id", order="turn_idx", sym="role",
-        watermark="10 minutes", n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
     with _no_data_batches(spark):
-        q = (
-            v.writeStream.outputMode("append")
-            .option(
-                "checkpointLocation", str(tmp_path / f"ck_abs_{n_files}")
-            )
-            .foreachBatch(collect)
-            .start()
+        out = replay(
+            spark,
+            turns_pd.sort_values("ts"),
+            TURNS,
+            lambda src: streaming_match_absence(
+                src, first="user", absent="tool", within="5 minutes",
+                key="conv_id", order="turn_idx", sym="role",
+                watermark="10 minutes", n_buckets=8, ttl_ms=86_400_000,
+            ),
+            n_files,
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert not out.duplicated(["key", "start_order"]).any()
     return {(r.key, r.start_order) for r in out.itertuples(index=False)}
 
 
-def test_stream_absence_matches_replica(spark, turns_pd, tmp_path):
+def test_stream_absence_matches_replica(spark, turns_pd):
     exp = _pd_absence_emitted(
         turns_pd, "user", "tool",
         pd.Timedelta(minutes=5), pd.Timedelta(minutes=10),
     )
     assert len(exp) > 10
-    assert _run_absence_stream(spark, turns_pd, tmp_path, 1) == exp
+    assert _run_absence_stream(spark, turns_pd, 1) == exp
 
 
-def test_stream_absence_split_equivalence(spark, turns_pd, tmp_path):
+def test_stream_absence_split_equivalence(spark, turns_pd):
     """The emitted set must not depend on the micro-batch split:
     pending entries carry across batches; in-stream resolution and
     the final-watermark sweep land on the same verdicts."""
@@ -487,7 +417,7 @@ def test_stream_absence_split_equivalence(spark, turns_pd, tmp_path):
         turns_pd, "user", "tool",
         pd.Timedelta(minutes=5), pd.Timedelta(minutes=10),
     )
-    assert _run_absence_stream(spark, turns_pd, tmp_path, 7) == exp
+    assert _run_absence_stream(spark, turns_pd, 7) == exp
 
 
 def test_stream_absence_kill_resume(spark, turns_pd, tmp_path):
@@ -591,55 +521,28 @@ def test_match_sequence_alternation(turns_df, turns_pd):
     assert narrow < exp
 
 
-def test_stream_alternation_matches_batch(spark, turns_pd, tmp_path):
-    from dbus_spark.operators.cep import streaming_match_sequence
-
-    in_dir = tmp_path / "in_alt"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    for i, idx in enumerate(np.array_split(np.arange(len(ordered)), 5)):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+def test_stream_alternation_matches_batch(spark, turns_pd):
+    out = replay(
+        spark,
+        turns_pd.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_match_sequence(
+            src, ALT_PATTERN, key="conv_id", order="turn_idx", sym="role",
+            n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files=5,
     )
-    v = streaming_match_sequence(
-        src, ALT_PATTERN, key="conv_id", order="turn_idx", sym="role",
-        n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_alt"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert {
         (r.key, r.start_order, r.end_order)
         for r in out.itertuples(index=False)
     } == _pd_matches_alt(turns_pd, ALT_PATTERN)
 
 
-def test_stream_ttl_eviction_contract(spark, tmp_path):
+def test_stream_ttl_eviction_contract(spark):
     """The documented bounded-state trade: a key silent for longer
     than ttl has its tail evicted, so a pattern straddling the gap is
     missed — while a within <= ttl match is never lost (the invariant
     the operator docstring states)."""
-    from dbus_spark.operators.cep import streaming_match_sequence
-
     base = dt.datetime(2026, 1, 1)
     rows = [
         # c1: user,assistant then a 2h silence, then tool — the match
@@ -661,42 +564,18 @@ def test_stream_ttl_eviction_contract(spark, tmp_path):
     pdf = pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "role", "ts"]
     )
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    in_dir = tmp_path / "in_ttl"
-    os.makedirs(in_dir)
-    ordered = pdf.sort_values("ts").reset_index(drop=True)
     # one row per file: the 2h gap lands across micro-batches
-    for i in range(len(ordered)):
-        ordered.iloc[[i]].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    out = replay(
+        spark,
+        pdf.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_match_sequence(
+            src, PATTERN, key="conv_id", order="turn_idx", sym="role",
+            watermark="1 minute", n_buckets=1, ttl_ms=600_000,
+        ),
+        n_files=len(pdf),
     )
-    v = streaming_match_sequence(
-        src, PATTERN, key="conv_id", order="turn_idx", sym="role",
-        watermark="1 minute", n_buckets=1, ttl_ms=600_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_ttl"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
-    keys = set(out["key"]) if len(out) else set()
+    keys = set(out["key"])
     assert "c2" in keys  # tight match survived
     assert "c1" not in keys  # straddling match evicted — the trade
 
@@ -855,44 +734,17 @@ def _flush_pd(turns_pd: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def _run_quant_stream(spark, pdf, tmp_path, n_files, tag, within=None):
-    from dbus_spark.operators.cep import streaming_match_quantified
-
-    in_dir = tmp_path / f"qin_{tag}"
-    os.makedirs(in_dir)
-    ordered = pdf.sort_values("ts").reset_index(drop=True)
-    parts = np.array_split(np.arange(len(ordered)), n_files)
-    for i, idx in enumerate(parts):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+def _run_quant_stream(spark, pdf, n_files, within=None):
+    return replay(
+        spark,
+        pdf.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_match_quantified(
+            src, QPATTERN, key="conv_id", order="turn_idx", sym="role",
+            within=within, n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files,
     )
-    v = streaming_match_quantified(
-        src, QPATTERN, key="conv_id", order="turn_idx", sym="role",
-        within=within, n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"qck_{tag}"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
-    return out
 
 
 def _quant_set(out: pd.DataFrame) -> set:
@@ -902,7 +754,7 @@ def _quant_set(out: pd.DataFrame) -> set:
     }
 
 
-def test_stream_quantified_matches_batch(spark, turns_pd, tmp_path):
+def test_stream_quantified_matches_batch(spark, turns_pd):
     """With a per-key flush sentinel, the stream must emit exactly the
     batch twin's match set — for single-batch AND split replays (runs
     straddling micro-batch boundaries must merge, and no match may
@@ -910,33 +762,31 @@ def test_stream_quantified_matches_batch(spark, turns_pd, tmp_path):
     pdf = _flush_pd(turns_pd)
     exp = _pd_quantified(turns_pd, QPATTERN)
     assert len(exp) > 20
-    one = _quant_set(_run_quant_stream(spark, pdf, tmp_path, 1, "one"))
+    one = _quant_set(_run_quant_stream(spark, pdf, 1))
     assert one == exp
-    many = _quant_set(_run_quant_stream(spark, pdf, tmp_path, 9, "many"))
+    many = _quant_set(_run_quant_stream(spark, pdf, 9))
     assert many == exp
 
 
-def test_stream_quantified_within(spark, turns_pd, tmp_path):
+def test_stream_quantified_within(spark, turns_pd):
     pdf = _flush_pd(turns_pd)
     exp = _pd_quantified(
         turns_pd, QPATTERN, within=dt.timedelta(minutes=30)
     )
     got = _quant_set(
-        _run_quant_stream(
-            spark, pdf, tmp_path, 5, "within", within="30 minutes"
-        )
+        _run_quant_stream(spark, pdf, 5, within="30 minutes")
     )
     assert got == exp
     assert got != _pd_quantified(turns_pd, QPATTERN)  # bound bites
 
 
-def test_stream_quantified_open_run_holds(spark, turns_pd, tmp_path):
+def test_stream_quantified_open_run_holds(spark, turns_pd):
     """Without the flush sentinel, matches whose FINAL run is the
     key's last run never emit (closure proves maximality) — and
     everything else still does."""
     exp_all = _pd_quantified(turns_pd, QPATTERN)
     got = _quant_set(
-        _run_quant_stream(spark, turns_pd, tmp_path, 4, "noflush")
+        _run_quant_stream(spark, turns_pd, 4)
     )
     assert got <= exp_all
     # the held-back matches are exactly those ending at a conv's tail
@@ -947,52 +797,24 @@ def test_stream_quantified_open_run_holds(spark, turns_pd, tmp_path):
     assert exp_all - got == held_back
 
 
-def test_stream_quantified_redelivery(spark, turns_pd, tmp_path):
+def test_stream_quantified_redelivery(spark, turns_pd):
     """Redelivered (at-least-once) tail rows must not re-extend or
     re-emit: replay the last file's rows once more."""
-    pdf = _flush_pd(turns_pd)
-    ordered = pdf.sort_values("ts").reset_index(drop=True)
+    ordered = _flush_pd(turns_pd).sort_values("ts")
     n = len(ordered)
-    in_dir = tmp_path / "qin_redeliver"
-    os.makedirs(in_dir)
     # files: first 80% in 4 files, then the tail, then the tail AGAIN
-    cuts = np.array_split(np.arange(int(n * 0.8)), 4)
-    for i, idx in enumerate(cuts):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
     tailpart = ordered.iloc[int(n * 0.8):]
-    tailpart.to_parquet(in_dir / "b-0004.parquet", index=False)
-    tailpart.to_parquet(in_dir / "b-0005.parquet", index=False)
-
-    from dbus_spark.operators.cep import streaming_match_quantified
-
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+    out = replay(
+        spark,
+        ordered.iloc[: int(n * 0.8)],
+        TURNS,
+        lambda src: streaming_match_quantified(
+            src, QPATTERN, key="conv_id", order="turn_idx", sym="role",
+            n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files=4,
+        then=(tailpart, tailpart),
     )
-    v = streaming_match_quantified(
-        src, QPATTERN, key="conv_id", order="turn_idx", sym="role",
-        n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "qck_redeliver"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert not out.duplicated(["key", "start_order"]).any()
     assert _quant_set(out) == _pd_quantified(turns_pd, QPATTERN)
 
@@ -1138,43 +960,17 @@ def _pd_funnel_advances(pdf: pd.DataFrame, stage_syms: list) -> set:
     return out
 
 
-def _run_funnel_stream(spark, turns_pd, tmp_path, n_files):
-    from dbus_spark.operators.cep import streaming_funnel
-
-    in_dir = tmp_path / f"in_fun_{n_files}"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    parts = np.array_split(np.arange(len(ordered)), n_files)
-    for i, idx in enumerate(parts):
-        ordered.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+def _run_funnel_stream(spark, turns_pd, n_files):
+    out = replay(
+        spark,
+        turns_pd.sort_values("ts"),
+        TURNS,
+        lambda src: streaming_funnel(
+            src, FUNNEL_STAGES, key="conv_id", order="turn_idx",
+            n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files,
     )
-    v = streaming_funnel(
-        src, FUNNEL_STAGES, key="conv_id", order="turn_idx",
-        n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck_fun_{n_files}"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     # exactly-once advances: a key reaches a stage at most once
     assert not out.duplicated(["key", "stage_idx"]).any()
     # stage names resolve from stage_idx
@@ -1185,25 +981,25 @@ def _run_funnel_stream(spark, turns_pd, tmp_path, n_files):
     }
 
 
-def test_stream_funnel_matches_reference_single(spark, turns_pd, tmp_path):
+def test_stream_funnel_matches_reference_single(spark, turns_pd):
     exp = _pd_funnel_advances(turns_pd, [n for n, _ in FUNNEL_STAGES])
     assert len(exp) > 60  # all 40 convs reach stage 0; most go deeper
-    assert _run_funnel_stream(spark, turns_pd, tmp_path, 1) == exp
+    assert _run_funnel_stream(spark, turns_pd, 1) == exp
 
 
-def test_stream_funnel_split_equivalence(spark, turns_pd, tmp_path):
+def test_stream_funnel_split_equivalence(spark, turns_pd):
     """Advance events must not depend on the micro-batch split: the
     (n_reached, last_ts) frontier carries across batches."""
     exp = _pd_funnel_advances(turns_pd, [n for n, _ in FUNNEL_STAGES])
-    assert _run_funnel_stream(spark, turns_pd, tmp_path, 7) == exp
+    assert _run_funnel_stream(spark, turns_pd, 7) == exp
 
 
 def test_stream_funnel_aggregates_to_batch_counts(
-    spark, turns_df, turns_pd, tmp_path
+    spark, turns_df, turns_pd
 ):
     """The advance log replayed to end-of-stream aggregates to exactly
     the batch operator's per-stage n_keys — the twin contract."""
-    adv = _run_funnel_stream(spark, turns_pd, tmp_path, 5)
+    adv = _run_funnel_stream(spark, turns_pd, 5)
     batch = {
         (r["stage_idx"], r["n_keys"])
         for r in funnel(
@@ -1218,11 +1014,9 @@ def test_stream_funnel_aggregates_to_batch_counts(
     assert stream_counts == batch
 
 
-def test_stream_funnel_ordered_cascade(spark, tmp_path):
+def test_stream_funnel_ordered_cascade(spark):
     """Out-of-order stage events must not advance (purchase before
     click) — mirrors test_funnel_ordered_cascade on the batch side."""
-    from dbus_spark.operators.cep import streaming_funnel
-
     base = dt.datetime(2026, 1, 1)
     rows = pd.DataFrame(
         [
@@ -1236,45 +1030,24 @@ def test_stream_funnel_ordered_cascade(spark, tmp_path):
         ],
         columns=["conv_id", "turn_idx", "role", "ts"],
     )
-    rows["ts"] = rows["ts"].astype("datetime64[us]")
-    in_dir = tmp_path / "in_cascade"
-    os.makedirs(in_dir)
-    rows.sort_values(["ts", "conv_id"]).to_parquet(
-        in_dir / "b-0000.parquet", index=False
+    out = replay(
+        spark,
+        rows.sort_values(["ts", "conv_id"]),
+        TURNS,
+        lambda src: streaming_funnel(
+            src,
+            [
+                ("view", "role = 'view'"),
+                ("click", "role = 'click'"),
+                ("purchase", "role = 'purchase'"),
+            ],
+            key="conv_id",
+            order="turn_idx",
+            n_buckets=4,
+            ttl_ms=86_400_000,
+        ),
+        n_files=1,
     )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .parquet(str(in_dir))
-    )
-    v = streaming_funnel(
-        src,
-        [
-            ("view", "role = 'view'"),
-            ("click", "role = 'click'"),
-            ("purchase", "role = 'purchase'"),
-        ],
-        key="conv_id",
-        order="turn_idx",
-        n_buckets=4,
-        ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_cascade"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     reached = {
         (r.key, r.stage_idx) for r in out.itertuples(index=False)
     }
@@ -1284,44 +1057,21 @@ def test_stream_funnel_ordered_cascade(spark, tmp_path):
     assert reached == {("k1", 0), ("k1", 1), ("k1", 2), ("k2", 0), ("k2", 1)}
 
 
-def test_stream_funnel_dedups_redelivered_rows(spark, turns_pd, tmp_path):
+def test_stream_funnel_dedups_redelivered_rows(spark, turns_pd):
     """Exact (key, order) redelivery in a later file must not advance
     anything twice (frontier guard) nor resurrect completed keys."""
-    from dbus_spark.operators.cep import streaming_funnel
-
-    in_dir = tmp_path / "in_fun_dup"
-    os.makedirs(in_dir)
-    ordered = turns_pd.sort_values("ts").reset_index(drop=True)
-    ordered.to_parquet(in_dir / "b-0000.parquet", index=False)
-    ordered.head(len(ordered) // 2).to_parquet(
-        in_dir / "b-0001.parquet", index=False
+    ordered = turns_pd.sort_values("ts")
+    out = replay(
+        spark,
+        ordered,
+        TURNS,
+        lambda src: streaming_funnel(
+            src, FUNNEL_STAGES, key="conv_id", order="turn_idx",
+            n_buckets=8, ttl_ms=86_400_000,
+        ),
+        n_files=1,
+        then=(ordered.head(len(ordered) // 2),),
     )
-    src = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    v = streaming_funnel(
-        src, FUNNEL_STAGES, key="conv_id", order="turn_idx",
-        n_buckets=8, ttl_ms=86_400_000,
-    )
-    got = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.toPandas())
-
-    q = (
-        v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_fun_dup"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert not out.duplicated(["key", "stage_idx"]).any()
     exp = _pd_funnel_advances(turns_pd, [n for n, _ in FUNNEL_STAGES])
     assert {

@@ -303,40 +303,18 @@ def test_export_shards_roundtrip(spark, tmp_path):
         assert per[(r.lang, r.shard_idx)] == r.n_docs
 
 
-def _run_budget_stream(spark, pdf, tmp_path, n_files, budgets):
-    import os
-
-    import numpy as np
-    import pandas as pd
-
+def _run_budget_stream(spark, pdf, n_files, budgets):
     from dbus_spark.operators.corpus import streaming_token_budget_filter
+    from dbus_spark.pipeline.streaming import replay
 
-    in_dir = tmp_path / f"in_{n_files}"
-    os.makedirs(in_dir)
-    for i, idx in enumerate(np.array_split(np.arange(len(pdf)), n_files)):
-        pdf.iloc[idx].to_parquet(in_dir / f"b-{i:04d}.parquet", index=False)
-    src = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    kept = streaming_token_budget_filter(src, budgets)
-    got = []
-    q = (
-        kept.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck_{n_files}"))
-        .foreachBatch(lambda b, e: got.append(b.select("doc_id").toPandas()))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    import pandas as pd
-
-    out = pd.concat(got, ignore_index=True) if got else pd.DataFrame(
-        {"doc_id": []}
+    out = replay(
+        spark,
+        pdf,
+        "doc_id long, text string, lang string, ts timestamp",
+        lambda src: streaming_token_budget_filter(src, budgets).select(
+            "doc_id"
+        ),
+        n_files,
     )
     assert out["doc_id"].is_unique
     return set(out["doc_id"])
@@ -370,15 +348,15 @@ def _budget_replica(pdf, budgets):
     return keep
 
 
-def test_streaming_token_budget_matches_replica(spark, tmp_path):
+def test_streaming_token_budget_matches_replica(spark):
     pdf = _budget_corpus()
     budgets = {"en": 40, "fr": 25}
     expected = _budget_replica(pdf, budgets)
     assert 0 < len(expected) < len(pdf)
     # skip-and-continue must actually trigger: some doc overflows but a
     # later smaller one still fits
-    assert _run_budget_stream(spark, pdf, tmp_path, 1, budgets) == expected
-    assert _run_budget_stream(spark, pdf, tmp_path, 5, budgets) == expected
+    assert _run_budget_stream(spark, pdf, 1, budgets) == expected
+    assert _run_budget_stream(spark, pdf, 5, budgets) == expected
 
 
 def test_streaming_token_budget_kill_resume(spark, tmp_path):
@@ -432,25 +410,24 @@ def test_streaming_token_budget_kill_resume(spark, tmp_path):
     assert set(out["doc_id"]) == expected
 
 
-def test_streaming_shard_assign_matches_replica(spark, tmp_path):
+def test_streaming_shard_assign_matches_replica(spark):
     """Arrival-order shard assignment == python replica of the
     offset-bucket rule over any micro-batch split; state carries the
     running byte offset across batches."""
-    import os
-
     import numpy as np
     import pandas as pd
 
     from dbus_spark.operators.corpus import streaming_shard_assign
+    from dbus_spark.pipeline.streaming import replay
 
     rows = [
         (i, "x" * (40 + (i * 17) % 60), ["en", "fr"][i % 2])
         for i in range(40)
     ]
     pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang"])
-    pdf["ts"] = (
-        pd.Timestamp("2026-01-01") + pd.to_timedelta(np.arange(40), unit="s")
-    ).astype("datetime64[us]")
+    pdf["ts"] = pd.Timestamp("2026-01-01") + pd.to_timedelta(
+        np.arange(40), unit="s"
+    )
 
     exp, cum = {}, {}
     for _, r in pdf.sort_values(["ts", "doc_id"]).iterrows():
@@ -459,33 +436,15 @@ def test_streaming_shard_assign_matches_replica(spark, tmp_path):
         cum[r["lang"]] = c + len(r["text"])
 
     for n_files in (1, 4):
-        in_dir = tmp_path / f"in_{n_files}"
-        os.makedirs(in_dir)
-        for i, idx in enumerate(np.array_split(np.arange(len(pdf)), n_files)):
-            pdf.iloc[idx].to_parquet(in_dir / f"b-{i:04d}.parquet", index=False)
-        src = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir))
+        out = replay(
+            spark,
+            pdf,
+            "doc_id long, text string, lang string, ts timestamp",
+            lambda src: streaming_shard_assign(src, 100).select(
+                "doc_id", "shard_idx"
+            ),
+            n_files,
         )
-        got = []
-        q = (
-            streaming_shard_assign(src, 100)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ck_{n_files}"))
-            .foreachBatch(
-                lambda b, e: got.append(
-                    b.select("doc_id", "shard_idx").toPandas()
-                )
-            )
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination(60)
-        out = pd.concat(got, ignore_index=True)
         assert out["doc_id"].is_unique
         assert dict(zip(out.doc_id, out.shard_idx)) == exp, n_files
 

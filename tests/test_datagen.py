@@ -1,5 +1,10 @@
+import hashlib
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from dbus_spark.datagen import (
     TranscriptKnobs,
@@ -7,6 +12,7 @@ from dbus_spark.datagen import (
     generate_embeddings,
     generate_rows_events,
     generate_transcripts,
+    write_stream_batches,
 )
 
 
@@ -14,6 +20,34 @@ def test_determinism():
     a = generate_transcripts(n_convs=30, seed=7)
     b = generate_transcripts(n_convs=30, seed=7)
     pd.testing.assert_frame_equal(a, b)
+
+
+def _sha256(path):
+    with open(path, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()
+
+
+def test_write_stream_batches_bytes_and_timestamp_unit(tmp_path):
+    # a transcript frame (with ``_arrival``) gives the bytes the
+    # original writer gave: drop ``_arrival``, split by position,
+    # ``to_parquet`` each part with the row-group size
+    pdf = generate_transcripts(n_convs=40, seed=11)
+    paths = write_stream_batches(pdf, str(tmp_path / "a"), n_files=3)
+    body = pdf.drop(columns=["_arrival"])
+    os.makedirs(tmp_path / "ref")
+    for i, idx in enumerate(np.array_split(np.arange(len(body)), 3)):
+        ref = tmp_path / "ref" / f"batch-{i:05d}.parquet"
+        body.iloc[idx].to_parquet(ref, index=False, row_group_size=2000)
+        assert os.path.basename(paths[i]) == ref.name
+        assert _sha256(paths[i]) == _sha256(ref)
+    # any frame: no ``_arrival`` needed, nanoseconds written as micros
+    ns = pd.DataFrame(
+        {"id": [1, 2], "ts": pd.to_datetime(["2026-01-01", "2026-01-02"])}
+    )
+    assert ns["ts"].dtype == "datetime64[ns]"
+    (path,) = write_stream_batches(ns, str(tmp_path / "b"), n_files=1)
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("us")
+    assert pd.read_parquet(path)["ts"].tolist() == ns["ts"].tolist()
 
 
 def test_schema_and_invariants(transcripts_pd):

@@ -7,7 +7,7 @@ import pandas as pd
 
 from dbus_spark.datagen import generate_transcripts, write_stream_batches
 from dbus_spark.pipeline import Pipeline
-from dbus_spark.pipeline.streaming import StreamingPipeline, peek
+from dbus_spark.pipeline.streaming import StreamingPipeline, peek, replay
 from dbus_spark.sinks import IdempotentKeyedSink
 from dbus_spark.streaming.checkpoint import (
     list_offsets,
@@ -110,6 +110,50 @@ def test_peek(spark, tmp_path):
     rows = peek(spark, str(tmp_path / "in"), n=5)
     assert len(rows) == 5
     assert {"conv_id", "turn_idx", "text"} <= set(rows[0].asDict())
+
+
+def test_replay_reads_ns_keeps_columns_and_orders_then(spark):
+    from pyspark.sql import functions as F
+
+    frame = pd.DataFrame(
+        {
+            "id": range(6),
+            "ts": pd.to_datetime("2026-01-01 00:00:00.000001")
+            + pd.to_timedelta(range(6), unit="s"),
+        }
+    )
+    assert frame["ts"].dtype == "datetime64[ns]"
+    # a nanosecond column reads back under ``ts timestamp``, unchanged
+    out = replay(spark, frame, "id long, ts timestamp", lambda src: src)
+    assert list(out["id"]) == list(frame["id"])
+    assert list(out["ts"]) == list(frame["ts"])
+    # nothing emitted: an empty frame with the query's output columns
+    out = replay(
+        spark,
+        frame,
+        "id long, ts timestamp",
+        lambda src: src.filter("id < 0").select(
+            "id", F.col("ts").alias("at")
+        ),
+    )
+    assert len(out) == 0
+    assert list(out.columns) == ["id", "at"]
+    # each ``then`` frame is one more file, streamed after the split
+    # files and in its own position
+    first = frame.iloc[:1].assign(id=100)
+    second = frame.iloc[:1].assign(id=200)
+    out = replay(
+        spark,
+        frame,
+        "id long, ts timestamp",
+        lambda src: src.select("id", F.input_file_name().alias("f")),
+        n_files=2,
+        then=(first, second),
+    )
+    assert list(out["id"]) == [0, 1, 2, 3, 4, 5, 100, 200]
+    files = [os.path.basename(f) for f in out["f"]]
+    assert files[-2:] == ["batch-00002.parquet", "batch-00003.parquet"]
+    assert set(files[:-2]) == {"batch-00000.parquet", "batch-00001.parquet"}
 
 
 def test_checkpoint_inspection(spark, tmp_path):

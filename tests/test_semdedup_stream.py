@@ -11,6 +11,7 @@ import pytest
 from dbus_spark.datagen import generate_embeddings
 from dbus_spark.operators.dedup_stream import streaming_semdedup_filter
 from dbus_spark.operators.similarity import ivf_centroids
+from dbus_spark.pipeline.streaming import replay
 
 THR, DIM, NC = 0.4, 64, 16
 
@@ -68,54 +69,27 @@ def expected_keep(corpus):
     return keep
 
 
-def _run_stream(spark, corpus, tmp_path, n_files: int, **kw) -> set:
-    in_dir = tmp_path / f"in_{n_files}"
-    os.makedirs(in_dir)
-    parts = np.array_split(np.arange(len(corpus)), n_files)
-    for i, idx in enumerate(parts):
-        corpus.iloc[idx].to_parquet(
-            in_dir / f"b-{i:04d}.parquet", index=False
-        )
-    src = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
+def _run_stream(spark, corpus, n_files: int, **kw) -> set:
+    out = replay(
+        spark,
+        corpus,
+        "vec_id long, embedding array<float>, ts timestamp",
+        lambda src: streaming_semdedup_filter(
+            src, threshold=THR, dim=DIM, n_centroids=NC, **kw
+        ).select("vec_id", "cell"),
+        n_files,
     )
-    kept = streaming_semdedup_filter(
-        src, threshold=THR, dim=DIM, n_centroids=NC, **kw
-    )
-    got: list = []
-
-    def collect(batch_df, _epoch):
-        got.append(batch_df.select("vec_id", "cell").toPandas())
-
-    q = (
-        kept.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / f"ck_{n_files}"))
-        .foreachBatch(collect)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    out = pd.concat(got, ignore_index=True)
     assert out["vec_id"].is_unique  # a kept row is emitted exactly once
     return set(out["vec_id"])
 
 
-def test_stream_matches_replica_single_batch(
-    spark, corpus, expected_keep, tmp_path
-):
-    assert _run_stream(spark, corpus, tmp_path, 1) == expected_keep
+def test_stream_matches_replica_single_batch(spark, corpus, expected_keep):
+    assert _run_stream(spark, corpus, 1) == expected_keep
 
 
-def test_stream_matches_replica_multi_batch(
-    spark, corpus, expected_keep, tmp_path
-):
+def test_stream_matches_replica_multi_batch(spark, corpus, expected_keep):
     # arbitrary micro-batch splits must not change the keep set
-    assert _run_stream(spark, corpus, tmp_path, 5) == expected_keep
+    assert _run_stream(spark, corpus, 5) == expected_keep
 
 
 def test_kill_resume_exactly_once(spark, corpus, expected_keep, tmp_path):
@@ -166,7 +140,7 @@ def test_kill_resume_exactly_once(spark, corpus, expected_keep, tmp_path):
     assert set(out["vec_id"]) == expected_keep
 
 
-def test_cap_under_dedups_never_over_drops(spark, tmp_path):
+def test_cap_under_dedups_never_over_drops(spark):
     # 10 near-identical vectors in one cell with max_reps_per_cell=1:
     # the first is the only rep; all others are dups of IT (cap never
     # drops a non-dup)
@@ -178,10 +152,10 @@ def test_cap_under_dedups_never_over_drops(spark, tmp_path):
         v[1] = 0.001 * i
         rows.append((i, v))  # np.float32 -> parquet list<float>
     pdf = pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    pdf["ts"] = (
-        pd.Timestamp("2026-01-01") + pd.to_timedelta(np.arange(10), unit="s")
-    ).astype("datetime64[us]")
-    kept = _run_stream(spark, pdf, tmp_path, 2, max_reps_per_cell=1)
+    pdf["ts"] = pd.Timestamp("2026-01-01") + pd.to_timedelta(
+        np.arange(10), unit="s"
+    )
+    kept = _run_stream(spark, pdf, 2, max_reps_per_cell=1)
     assert kept == {0}
     # and a genuinely distinct vector still passes under the cap
     far = -base
@@ -189,16 +163,14 @@ def test_cap_under_dedups_never_over_drops(spark, tmp_path):
         [(0, base), (1, far)],
         columns=["vec_id", "embedding"],
     )
-    pdf2["ts"] = (
-        pd.Timestamp("2026-01-01") + pd.to_timedelta(np.arange(2), unit="s")
-    ).astype("datetime64[us]")
-    tmp2 = tmp_path / "cap2"
-    os.makedirs(tmp2)
-    kept2 = _run_stream(spark, pdf2, tmp2, 1, max_reps_per_cell=1)
+    pdf2["ts"] = pd.Timestamp("2026-01-01") + pd.to_timedelta(
+        np.arange(2), unit="s"
+    )
+    kept2 = _run_stream(spark, pdf2, 1, max_reps_per_cell=1)
     assert kept2 == {0, 1}  # overflow row passes as kept (under-dedup)
 
 
-def test_null_vector_kept_never_crashes(spark, tmp_path):
+def test_null_vector_kept_never_crashes(spark):
     """A null embedding must pass through as kept (no dup evidence)
     without killing the micro-batch or burning a rep slot."""
     base = np.zeros(DIM, dtype=np.float32)
@@ -207,10 +179,10 @@ def test_null_vector_kept_never_crashes(spark, tmp_path):
         [(0, base), (1, None), (2, base.copy())],
         columns=["vec_id", "embedding"],
     )
-    pdf["ts"] = (
-        pd.Timestamp("2026-01-01") + pd.to_timedelta(np.arange(3), unit="s")
-    ).astype("datetime64[us]")
-    kept = _run_stream(spark, pdf, tmp_path, 1)
+    pdf["ts"] = pd.Timestamp("2026-01-01") + pd.to_timedelta(
+        np.arange(3), unit="s"
+    )
+    kept = _run_stream(spark, pdf, 1)
     # 0 is the rep, 2 is its dup, 1 (null) passes as kept
     assert kept == {0, 1}
 
@@ -242,7 +214,7 @@ def test_emb_cell_state_format_versioned():
         assert m2.shape == (2, 4) and (m2 == mat).all()
 
 
-def test_streaming_semdedup_with_trained_centroids(spark, corpus, tmp_path):
+def test_streaming_semdedup_with_trained_centroids(spark, corpus):
     """The streaming filter composes with the k-means trainer: pass a
     trained quantizer and the replica (same centroids) still matches —
     the batch/stream assignment rule is centroid-agnostic."""
@@ -272,5 +244,5 @@ def test_streaming_semdedup_with_trained_centroids(spark, corpus, tmp_path):
         keep.add(row["vec_id"])
     assert 0 < len(keep) < len(corpus)
 
-    got = _run_stream(spark, corpus, tmp_path, 3, centroids=cents)
+    got = _run_stream(spark, corpus, 3, centroids=cents)
     assert got == keep

@@ -16,6 +16,8 @@ from dbus_spark.datagen import (
 )
 from dbus_spark.operators import windowed_agg, ordered_turns_stream
 from dbus_spark.operators.ordering import dedup_within_watermark
+from dbus_spark.pipeline.streaming import replay
+from dbus_spark.schema import TRANSCRIPT_SCHEMA
 from dbus_spark.sinks import IdempotentKeyedSink
 from dbus_spark.sources import transcript_file_stream
 from dbus_spark.streaming import MetricsListener
@@ -508,7 +510,7 @@ def test_streaming_doc_ingest_quality_dedup(spark, tmp_path):
     assert got["fp"].is_unique
 
 
-def test_streaming_session_windows_match_batch(spark, tmp_path):
+def test_streaming_session_windows_match_batch(spark):
     """sessionize() as a genuine streaming query (state-store-backed
     session_window + watermark, append mode): once the watermark passes
     every session's gap, the emitted sessions are row-identical to the
@@ -516,33 +518,18 @@ def test_streaming_session_windows_match_batch(spark, tmp_path):
     must merge in state, not emit fragments."""
     knobs = TranscriptKnobs(late_frac=0.0, dup_frac=0.0)
     pdf = generate_transcripts(n_convs=20, seed=31, knobs=knobs)
-    in_dir = tmp_path / "in"
-    write_stream_batches(pdf, str(in_dir), n_files=4)
+    from dbus_spark.operators import sessionize
+
     # two sentinels: the first advances the watermark past every
     # session's gap, the second triggers the state flush that emits
     far = pdf["ts"].max() + pd.Timedelta(hours=3)
-    _sentinel(far).to_parquet(in_dir / "batch-90000.parquet", index=False)
-    _sentinel(far + pd.Timedelta(minutes=1)).to_parquet(
-        in_dir / "batch-90001.parquet", index=False
+    got = replay(
+        spark,
+        pdf,
+        TRANSCRIPT_SCHEMA,
+        lambda src: sessionize(src, gap="2 minutes", watermark="2 hours"),
+        then=(_sentinel(far), _sentinel(far + pd.Timedelta(minutes=1))),
     )
-
-    from dbus_spark.operators import sessionize
-
-    src = transcript_file_stream(spark, str(in_dir), 1)
-    sessions = sessionize(
-        src, gap="2 minutes", watermark="2 hours"
-    )
-    coll = []
-    q = (
-        sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .foreachBatch(lambda d, b: coll.append(d.toPandas()))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    got = pd.concat(coll, ignore_index=True)
     got = got[got["conv_id"] != "zzz_sentinel"]
 
     batch = sessionize(

@@ -15,22 +15,15 @@ pipeline needs the full ladder:
 - SimHash: 32-bit sketch via bit-vote aggregation, hamming-adjacent
   buckets as the candidate filter.
 
-Every sketch operator takes ``hash_fn``:
-
-- ``"md5"`` (default): first 8 md5-hex chars → int. Chosen for
-  cross-engine reproducibility (same value in DuckDB:
-  ``('0x'||substr(md5(s),1,8))::BIGINT``) — the oracle-parity mode the
-  driver correctness gate pins.
-- ``"xxhash64"``: Spark's codegen'd non-cryptographic hash folded into
-  the same [0, 2^32) range — the production mode: at 100 TB the
-  per-shingle md5 is the dominant sketch CPU and buys nothing (dedup
-  needs uniformity, not collision resistance). Bucket assignments
-  differ between modes (different hash, different permutation), but
-  the verified near-dup answer is the same — pinned by an equivalence
-  test that verifies both modes' candidates against exact similarity.
-
-``ngram_jaccard_pairs`` has no hash at all (it joins raw shingles), so
-it takes no knob.
+Every sketch hashes with md5-h32: the first 8 md5-hex chars of the
+token, shingle or k-gram as an int in [0, 2^32) (15 chars, 60 bits,
+for SimHash sketches wider than 32 bits). DuckDB reproduces the same
+value as ``('0x'||substr(md5(s),1,8))::BIGINT``, so the driver's oracle
+rows check every sketch exactly. The sketches run as Arrow batch
+kernels that hash each distinct value once per batch
+(``tokenize.distinct_md5``); their Catalyst forms are the parity
+references in ``tests/test_arrow_kernels_parity.py``.
+``ngram_jaccard_pairs`` has no hash at all (it joins raw shingles).
 """
 
 from __future__ import annotations
@@ -42,32 +35,6 @@ from dbus_spark.operators import tokenize as tk
 from dbus_spark.operators.text import fingerprint, tokens
 from dbus_spark.operators.tokenize import MINHASH_P
 from dbus_spark.session import _n_partitions
-
-
-def _h32(c: Column, hash_fn: str = "md5") -> Column:
-    """Deterministic hash into [0, 2^32): md5-derived (reproducible in
-    ANSI SQL, the oracle mode) or xxhash64-derived (codegen'd JVM hash,
-    the production mode — several-fold cheaper per shingle)."""
-    if hash_fn == "md5":
-        return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(c), F.lit(1 << 32)).cast("long")
-    raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-
-
-def _hash_bits(c: Column, n_bits: int, hash_fn: str = "md5") -> Column:
-    """Deterministic hash with at least ``n_bits`` of entropy (≤ 60):
-    the 32-bit ``_h32`` for narrow sketches (oracle-parity form), a
-    60-bit md5 slice / folded xxhash64 for wide ones — a 32-bit base
-    hash under a wider sketch would leave every bit ≥ 32 voting
-    negative (zero entropy), which for the blocked near-dup tables
-    means whole blocks of always-colliding zero buckets."""
-    if n_bits <= 32:
-        return _h32(c, hash_fn)
-    if hash_fn == "md5":
-        # 15 hex chars = 60 bits, fits a signed long
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-    return F.pmod(F.xxhash64(c), F.lit(1 << 60)).cast("long")
 
 
 def exact_dedup_groups(
@@ -231,21 +198,29 @@ def ngram_jaccard_pairs(
     ).filter(F.col("jaccard") > threshold)
 
 
-def _winnow_fingerprints_arrow(
+def winnow_fingerprints(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    w: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 8,
+    w: int = 4,
 ) -> DataFrame:
-    """Arrow/numpy execution of the md5 winnowing pass — identical
-    rows to the Catalyst HOF form: same normalization (trim-spaces →
-    lower → Java-\\s runs to one space), same md5-h32 per character
-    k-gram, same w-window minima, per-doc distinct, explode_outer
-    (short/null docs emit a null fingerprint row). k-grams are
+    """Winnowing document fingerprints (the MOSS scheme): hash every
+    character ``k``-gram of the normalized text (the rolling hash —
+    here the md5-derived h32 so the oracle reproduces it), then keep
+    the minimum hash of every ``w``-wide window and dedup. Guarantees
+    any match of length ≥ w+k-1 shares a fingerprint, at ~2/(w+1)
+    selection density. Map-side — the shuffle, if any, belongs to the
+    downstream fingerprint join.
+
+    Normalization is trim-spaces → lower → Java-\\s runs to one space;
+    short/null docs emit one null fingerprint row (``explode_outer``
+    semantics). Execution (r7): an Arrow batch kernel. k-grams are
     extracted as fixed-width byte views (ASCII fast path) and uniqued
-    per batch before hashing — one md5 per DISTINCT k-gram instead of
-    one interpreted HOF step per position (``tokenize.distinct_md5``)."""
+    per batch before hashing — one md5 per DISTINCT k-gram
+    (``tokenize.distinct_md5``) plus numpy sliding-window minima,
+    instead of one interpreted md5+conv HOF step per character
+    position (~n_chars·2 steps/doc) in the Catalyst form."""
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
@@ -350,78 +325,55 @@ def _winnow_fingerprints_arrow(
     )
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Winnowing document fingerprints (the MOSS scheme): hash every
-    character ``k``-gram of the normalized text (the rolling hash —
-    here the md5-derived h32 so the oracle reproduces it), then keep
-    the minimum hash of every ``w``-wide window and dedup. Guarantees
-    any match of length ≥ w+k-1 shares a fingerprint, at ~2/(w+1)
-    selection density. Map-side either way — the shuffle, if any,
-    belongs to the downstream fingerprint join.
-
-    Execution (r7): the md5 mode runs as the Arrow batch kernel
-    (:func:`_winnow_fingerprints_arrow`) — same rows, one md5 per
-    distinct k-gram per batch + numpy sliding-window minima, instead
-    of one interpreted md5+conv HOF step per character position
-    (~n_chars·2 steps/doc). xxhash64 stays Catalyst (codegen'd hash,
-    no Python replica)."""
-    if hash_fn == "md5":
-        return _winnow_fingerprints_arrow(df, id_col, text_col, k, w)
-    return _winnow_fingerprints_catalyst(df, id_col, text_col, k, w, hash_fn)
+_PAIR_CHUNK = 4_000_000  # pairs per index chunk of _pair_chunks
 
 
-def _winnow_fingerprints_catalyst(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """The Catalyst HOF winnowing pass — the xxhash64 production mode,
-    and (with md5) the parity reference the Arrow kernel is pinned
-    against."""
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " "
-    )
+def _runs(keys: list) -> tuple:
+    """Run-length layout of a partition sorted on ``keys`` (equal-length
+    arrays): a segment is a run of rows equal on every key. Returns
+    ``(starts, lens, seg_of_row, pos)``: each segment's first row and
+    length, each row's segment and its position in it."""
+    import numpy as np
 
-    # Evaluation-order trap: referencing a per-row EXPRESSION inside a
-    # higher-order-function lambda inlines it per ELEMENT (the norm
-    # regex would run once per character position — measured O(n²),
-    # 292 s for 5 k docs at sf0.1). Binding it as a lambda VARIABLE via
-    # a singleton-array transform evaluates it once per row: lambda
-    # vars are bound values, not expressions. Same trick for the hash
-    # array before the window pass. 292 s → ~2 s, plan stays map-side.
-    def _once(expr: Column, body) -> Column:
-        return F.get(F.transform(F.array(expr), body), 0)
+    n = len(keys[0])
+    change = np.zeros(n, dtype=bool)
+    for a in keys:
+        change[1:] |= a[1:] != a[:-1]
+    starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
+    lens = np.diff(np.concatenate([starts, [n]]))
+    seg_of_row = np.repeat(np.arange(len(starts)), lens)
+    return starts, lens, seg_of_row, np.arange(n) - starts[seg_of_row]
 
-    def _grams(t: Column) -> Column:
-        idx = F.when(
-            F.length(t) >= k,
-            F.sequence(F.lit(1), F.length(t) - k + 1),
-        ).otherwise(F.array().cast("array<int>"))
-        return F.transform(idx, lambda i: _h32(t.substr(i, F.lit(k)), hash_fn))
 
-    def _window_mins(hs: Column) -> Column:
-        idx = F.when(
-            F.size(hs) >= w,
-            F.sequence(F.lit(1), F.size(hs) - w + 1),
-        ).otherwise(F.array().cast("array<int>"))
-        return F.array_distinct(
-            F.transform(idx, lambda j: F.array_min(F.slice(hs, j, w)))
+def _pair_chunks(rep: "object", base: "object", chunk: int = _PAIR_CHUNK):
+    """The pairs of a run-length layout: row i pairs with rows
+    ``base[i] .. base[i] + rep[i] - 1``. Yields ``(a_idx, b_idx)``
+    row-index arrays, built with the repeat/offset trick (zero Python
+    per row or segment), about ``chunk`` pairs at a time so the live
+    arrays stay bounded even when one segment is quadratic-hot. One
+    row's pairs are never split across chunks. Indices are int32
+    while the partition has fewer than 2^31 rows (half the gather
+    traffic)."""
+    import numpy as np
+
+    n = len(rep)
+    csum = np.concatenate([[0], np.cumsum(rep)])
+    idx_t = np.int32 if n < (1 << 31) else np.int64
+    lo_row = 0
+    while lo_row < n:
+        hi_row = int(
+            np.searchsorted(csum, csum[lo_row] + chunk, side="left")
         )
-
-    mins = _once(_once(norm, _grams), _window_mins)
-    return df.select(
-        F.col(id_col), F.explode_outer(mins).alias("fp")
-    )
+        hi_row = min(max(hi_row, lo_row + 1), n)
+        r = rep[lo_row:hi_row]
+        t = int(r.sum())
+        if t:
+            a_idx = np.repeat(np.arange(lo_row, hi_row, dtype=idx_t), r)
+            w = np.arange(t, dtype=idx_t) - np.repeat(
+                np.cumsum(np.concatenate([[0], r[:-1]])).astype(idx_t), r
+            )
+            yield a_idx, base[a_idx] + w
+        lo_row = hi_row
 
 
 def _segment_pairs(
@@ -461,57 +413,25 @@ def _segment_pairs(
             else pd.concat(chunks, ignore_index=True)
         )
         n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        for c in key_cols:
-            a = pdf[c].to_numpy()
-            change[1:] |= a[1:] != a[:-1]
-        starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
-        lens = np.diff(np.concatenate([starts, [n]]))
-        seg_of_row = np.repeat(np.arange(len(starts)), lens)
-        rep = lens[seg_of_row] - (np.arange(n) - starts[seg_of_row]) - 1
-        if max_df is not None:
-            rep = np.where(lens[seg_of_row] <= max_df, rep, 0)
+        _, lens, seg_of_row, pos = _runs(
+            [pdf[c].to_numpy() for c in key_cols]
+        )
+        seg_len = lens[seg_of_row]
+        alive = seg_len <= (n if max_df is None else max_df)
+        rep = np.where(alive, seg_len - pos - 1, 0)
         ids = pdf[id_col].to_numpy()
-        if emit_self:
-            alive = (
-                lens[seg_of_row] <= max_df
-                if max_df is not None
-                else np.ones(n, dtype=bool)
+        if emit_self and alive.any():
+            sid = ids[alive]
+            yield pd.DataFrame({"id_a": sid, "id_b": sid})
+        emitted = False
+        for a_idx, b_idx in _pair_chunks(rep, np.arange(1, n + 1)):
+            ia, ib = ids[a_idx], ids[b_idx]
+            emitted = True
+            yield pd.DataFrame(
+                {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib)}
             )
-            if alive.any():
-                sid = ids[alive]
-                yield pd.DataFrame({"id_a": sid, "id_b": sid})
-        csum = np.concatenate([[0], np.cumsum(rep)])
-        total = int(csum[-1])
-        if total == 0:
-            if not emit_self:
-                yield pd.DataFrame(
-                    {"id_a": ids[:0], "id_b": ids[:0]}
-                )
-            return
-        CHUNK = 4_000_000
-        lo_row = 0
-        while lo_row < n:
-            hi_row = int(
-                np.searchsorted(csum, csum[lo_row] + CHUNK, side="left")
-            )
-            hi_row = min(max(hi_row, lo_row + 1), n)
-            r = rep[lo_row:hi_row]
-            t = int(r.sum())
-            if t:
-                a_idx = np.repeat(np.arange(lo_row, hi_row), r)
-                w = np.arange(t) - np.repeat(
-                    np.cumsum(np.concatenate([[0], r[:-1]])), r
-                )
-                b_idx = a_idx + 1 + w
-                ia, ib = ids[a_idx], ids[b_idx]
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.minimum(ia, ib),
-                        "id_b": np.maximum(ia, ib),
-                    }
-                )
-            lo_row = hi_row
+        if not (emitted or emit_self):
+            yield pd.DataFrame({"id_a": ids[:0], "id_b": ids[:0]})
 
     # EXPLICIT partition count: a bare repartition(cols) is an AQE
     # coalescing target, and this shuffle's byte size wildly
@@ -538,7 +458,6 @@ def winnow_match_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_df: int | None = 50,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """The MOSS match step over :func:`winnow_fingerprints`: pairs of
     documents sharing at least ``min_shared`` selected fingerprints,
@@ -555,7 +474,7 @@ def winnow_match_pairs(
     fingerprint's document frequency — and emits exactly the join's
     pair multiset (per-doc fingerprints are distinct, so multiplicity
     per shared fp is 1; pinned by parity test)."""
-    base = winnow_fingerprints(df, id_col, text_col, k, w, hash_fn).filter(
+    base = winnow_fingerprints(df, id_col, text_col, k, w).filter(
         F.col("fp").isNotNull()
     )
     pairs = _segment_pairs(
@@ -638,9 +557,9 @@ def _bucketed_hamming_pairs(
     group; a per-group ``applyInPandas`` paid ~0.5 ms × tens of
     thousands of near-empty buckets, slower than the join it
     replaced). Hamming is SWAR popcount over the xor'd sketch pairs;
-    ``max_hamming`` filters, ``emit_hamming`` keeps the column.
-    Pair-list construction is chunked so the live arrays stay bounded
-    even when one bucket is quadratic-hot.
+    ``max_hamming`` filters, ``emit_hamming`` keeps the column. Pairs
+    come from :func:`_pair_chunks`, chunked so the live arrays stay
+    bounded even when one bucket is quadratic-hot.
 
     ``n_sub`` > 1 splits every bucket into ``n_sub`` deterministic
     id-hash sub-blocks and keys the shuffle on (bucket, sub-block
@@ -656,21 +575,30 @@ def _bucketed_hamming_pairs(
     # null sketches (null text) never join on their bucket in the join
     # form — drop them before pairing, same semantics
     sk = sk.filter(F.col("simhash").isNotNull())
-    # ``key_widths`` (bit width per key_col, caller-guaranteed bounds,
-    # all values non-negative): pack (keys, gi, gj, sub) into ONE long
-    # so the Arrow crossing ships 3 columns instead of 7 and the JVM
-    # sort compares one long — measured several-fold on the per-task
-    # read wall at 32 concurrent local tasks. Sort order of the packed
-    # long equals the multi-column (keys..., gi, gj, sub) order
-    # exactly (non-negative fields, high-to-low layout).
+    # ``key_widths`` (bit width per key_col; each key must lie in
+    # [0, 2^width), checked per row): pack (keys, gi, gj, sub) into
+    # ONE long so the Arrow crossing ships 3 columns instead of 7 and
+    # the JVM sort compares one long — measured several-fold on the
+    # per-task read wall at 32 concurrent local tasks. Sort order of
+    # the packed long equals the multi-column (keys..., gi, gj, sub)
+    # order exactly (non-negative fields, high-to-low layout).
     sb = max(1, (n_sub - 1).bit_length())  # bits for each of gi/gj/sub
     if len(key_widths) != len(key_cols):
         raise ValueError("key_widths must align with key_cols")
     if sum(key_widths) + 3 * sb > 62:
         raise ValueError("packed segment key exceeds 62 bits")
-    kp = F.col(key_cols[0]).cast("long")
-    for c, w in zip(key_cols[1:], key_widths[1:]):
-        kp = F.shiftleft(kp, w).bitwiseOR(F.col(c).cast("long"))
+    # an out-of-range key would spill into its neighbour's bits and
+    # pair rows of different segments: raise instead
+    keys = [
+        F.when((F.col(c) >= 0) & (F.col(c) < 2**w), F.col(c).cast("long"))
+        .otherwise(F.raise_error(
+            F.lit(f"packed segment key {c} out of range [0, 2^{w})")
+        ))
+        for c, w in zip(key_cols, key_widths)
+    ]
+    kp = keys[0]
+    for k, w in zip(keys[1:], key_widths[1:]):
+        kp = F.shiftleft(kp, w).bitwiseOR(k)
     if n_sub > 1:
         sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast(
             "long"
@@ -745,12 +673,7 @@ def _bucketed_hamming_pairs(
             if n and 0 <= sks.min() and sks.max() < (1 << 32)
             else None
         )
-        change = np.zeros(n, dtype=bool)
-        change[1:] = seg[1:] != seg[:-1]
-        starts = np.concatenate([[0], np.flatnonzero(change[1:]) + 1])
-        lens = np.diff(np.concatenate([starts, [n]]))
-        seg_of_row = np.repeat(np.arange(len(starts)), lens)
-        pos = np.arange(n) - starts[seg_of_row]
+        starts, lens, seg_of_row, pos = _runs([seg])
         if n_sub > 1:
             submask = (1 << sb) - 1
             seg_start = seg[starts]
@@ -775,51 +698,27 @@ def _bucketed_hamming_pairs(
         else:
             rep = lens[seg_of_row] - pos - 1
             base = np.arange(n) + 1
-        csum = np.concatenate([[0], np.cumsum(rep)])
-        total = int(csum[-1])
-        if total == 0:
-            yield _empty()
-            return
-        CHUNK = 4_000_000
         emitted = False
-        lo_row = 0
-        while lo_row < n:
-            hi_row = int(
-                np.searchsorted(csum, csum[lo_row] + CHUNK, side="left")
-            )
-            hi_row = min(max(hi_row, lo_row + 1), n)
-            r = rep[lo_row:hi_row]
-            t = int(r.sum())
-            if t:
-                idx_t = np.int32 if n < (1 << 31) else np.int64
-                a_idx = np.repeat(
-                    np.arange(lo_row, hi_row, dtype=idx_t), r
+        for a_idx, b_idx in _pair_chunks(rep, base):
+            if sks32 is not None:
+                ham = _popcount32(sks32[a_idx] ^ sks32[b_idx]).astype(
+                    np.int64
                 )
-                w = np.arange(t, dtype=idx_t) - np.repeat(
-                    np.cumsum(np.concatenate([[0], r[:-1]])).astype(idx_t),
-                    r,
-                )
-                b_idx = base[a_idx] + w
-                if sks32 is not None:
-                    ham = _popcount32(sks32[a_idx] ^ sks32[b_idx]).astype(
-                        np.int64
-                    )
-                else:
-                    ham = _popcount64(sks[a_idx] ^ sks[b_idx])
-                if max_hamming is not None:
-                    m = ham <= max_hamming
-                    a_idx, b_idx, ham = a_idx[m], b_idx[m], ham[m]
-                if len(a_idx):
-                    ia, ib = ids[a_idx], ids[b_idx]
-                    d = {
-                        "id_a": np.minimum(ia, ib),
-                        "id_b": np.maximum(ia, ib),
-                    }
-                    if emit_hamming:
-                        d["hamming"] = ham.astype(np.int32)
-                    emitted = True
-                    yield pd.DataFrame(d)
-            lo_row = hi_row
+            else:
+                ham = _popcount64(sks[a_idx] ^ sks[b_idx])
+            if max_hamming is not None:
+                m = ham <= max_hamming
+                a_idx, b_idx, ham = a_idx[m], b_idx[m], ham[m]
+            if len(a_idx):
+                ia, ib = ids[a_idx], ids[b_idx]
+                d = {
+                    "id_a": np.minimum(ia, ib),
+                    "id_b": np.maximum(ia, ib),
+                }
+                if emit_hamming:
+                    d["hamming"] = ham.astype(np.int32)
+                emitted = True
+                yield pd.DataFrame(d)
         if not emitted:
             yield _empty()
 
@@ -846,7 +745,6 @@ def simhash_candidate_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     prefix_bits: int = 16,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """SimHash near-dup candidates: docs whose sketches share the top
     ``prefix_bits`` bits land in one bucket and pair up — the cheap
@@ -863,7 +761,7 @@ def simhash_candidate_pairs(
     duplicate ids would previously have been collapsed by the
     distinct — that degenerate input is excluded by contract, as in
     the oracle.)"""
-    sk = simhash(df, id_col, text_col, hash_fn=hash_fn).withColumn(
+    sk = simhash(df, id_col, text_col).withColumn(
         "bucket", F.shiftright("simhash", 32 - prefix_bits)
     )
     return _bucketed_hamming_pairs(
@@ -878,7 +776,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     prefix_bits: int = 16,
     max_hamming: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """SimHash near-duplicates, candidate + verify: prefix-bucket
     candidates (the cheap filter of ``simhash_candidate_pairs``) pass
@@ -889,7 +786,7 @@ def simhash_neardup_pairs(
     prefix table as the (documented) recall trade-off: rotations/
     multi-prefix tables extend it the same way the SRP multi-table
     construction does in similarity.py."""
-    sk = simhash(df, id_col, text_col, hash_fn=hash_fn).withColumn(
+    sk = simhash(df, id_col, text_col).withColumn(
         "bucket", F.shiftright("simhash", 32 - prefix_bits)
     )
     # segment-wise pair enumeration + numpy popcount verify (r7): one
@@ -909,7 +806,6 @@ def simhash_neardup_pairs_blocked(
     text_col: str = "text",
     max_hamming: int = 3,
     n_bits: int = 32,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """SimHash near-duplicates with GUARANTEED full recall — the
     pigeonhole (blocked) construction of Manku/Jain/Das Sarma: split
@@ -934,7 +830,7 @@ def simhash_neardup_pairs_blocked(
         raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
     n_blocks = max_hamming + 1
     block_bits = n_bits // n_blocks
-    sk = simhash(df, id_col, text_col, n_bits, hash_fn)
+    sk = simhash(df, id_col, text_col, n_bits)
     entries = F.array(
         *[
             F.struct(
@@ -992,62 +888,20 @@ def minhash_signature(
     text_col: str = "text",
     n_hashes: int = 16,
     shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash signature: sig[i] = min over shingles of
     (h32(shingle) % p * a_i + b_i) % p. One md5 per shingle total;
     pure map-side -- no shuffle.
 
-    Execution (r7): the md5 mode runs as an Arrow batch kernel
-    (:func:`_minhash_signature_arrow`) — one md5 per DISTINCT shingle
-    per batch + numpy affine permutations and a segmented min, instead
-    of an interpreted md5+conv+mod HOF step per (shingle × permutation
-    evaluation) — value-identical incl. the [null]*n signature of
-    short/null docs (pinned by parity test and the DuckDB oracle).
-    xxhash64 stays Catalyst (codegen'd hash, no cheap Python
-    replica)."""
-    if hash_fn == "md5":
-        return _minhash_signature_arrow(
-            df, id_col, text_col, n_hashes, shingle_n
-        )
-    return minhash_signature_catalyst(
-        df, id_col, text_col, n_hashes, shingle_n, hash_fn
-    )
-
-
-def minhash_signature_catalyst(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_n: int = 3,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """The Catalyst HOF signature — the xxhash64 production mode, and
-    (with md5) the parity reference for the Arrow kernel."""
-    hashed = df.select(
-        F.col(id_col),
-        _shingle_hashes(text_col, shingle_n, hash_fn).alias("_hs"),
-    )
-    return hashed.select(
-        F.col(id_col), minhash_sig_col(F.col("_hs"), n_hashes).alias("sig")
-    )
-
-
-def _minhash_signature_arrow(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int,
-    shingle_n: int,
-) -> DataFrame:
-    """Arrow/numpy execution of the md5 MinHash signature — identical
-    values to the Catalyst HOF form: same tokenization (the Java-\\s
-    parity split), same per-doc DISTINCT word shingles, same
-    md5-h32 % p base hash and affine permutations; docs with no
-    shingles (fewer than ``shingle_n`` tokens, incl. null text) emit
-    the same all-null signature the Catalyst array_min-over-empty
-    produces."""
+    Tokenization is the Java-\\s parity split and shingles are
+    per-doc DISTINCT word shingles; docs with no shingles (fewer than
+    ``shingle_n`` tokens, incl. null text) get an all-null signature
+    (array_min over an empty array). Execution (r7): an Arrow batch
+    kernel — one md5 per DISTINCT shingle per batch + numpy affine
+    permutations and a segmented min, instead of an interpreted
+    md5+conv+mod HOF step per (shingle × permutation evaluation) in
+    the Catalyst form; value-identical (pinned by the parity test and
+    the DuckDB oracle)."""
     import numpy as np
     import pandas as pd
 
@@ -1085,36 +939,6 @@ def _minhash_signature_arrow(
 
     return df.select(id_col, text_col).mapInPandas(
         gen, schema=f"{id_col} {id_type}, sig array<long>"
-    )
-
-
-def _shingle_hashes(
-    text_col: str, shingle_n: int, hash_fn: str
-) -> Column:
-    """Base-hash every shingle once (the only md5/xxhash work in the
-    MinHash operators)."""
-    return F.transform(
-        word_shingles(text_col, shingle_n),
-        lambda s: _h32(s, hash_fn) % F.lit(MINHASH_P),
-    )
-
-
-def minhash_sig_col(hashes: Column, n_hashes: int) -> Column:
-    """The signature as a composable COLUMN over pre-hashed shingles —
-    the one implementation behind ``minhash_signature`` and the
-    streaming near-dup filter (which must keep its other columns)."""
-    coeffs = minhash_coeffs(n_hashes)
-
-    def _perm(a: int, b: int):
-        # must be a strictly unary lambda: pyspark counts every
-        # parameter (defaults included) as a lambda argument
-        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _perm(a, b)))
-            for (a, b) in coeffs
-        ]
     )
 
 
@@ -1169,12 +993,11 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     n_bands: int = 4,
     shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: split the signature into bands,
     bucket-join on (band_idx, band values). Shuffle volume is
     |docs|·n_bands, and only same-bucket docs ever meet."""
-    sigs = minhash_signature(df, id_col, text_col, n_hashes, shingle_n, hash_fn)
+    sigs = minhash_signature(df, id_col, text_col, n_hashes, shingle_n)
     return _band_candidates(sigs, n_hashes, n_bands, id_col)
 
 
@@ -1185,7 +1008,6 @@ def lsh_estimated_jaccard(
     n_hashes: int = 16,
     n_bands: int = 4,
     shingle_n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """The MinHash payoff: for each LSH candidate pair, ESTIMATE the
     Jaccard similarity as the fraction of agreeing signature slots —
@@ -1196,7 +1018,7 @@ def lsh_estimated_jaccard(
     verify for pipelines that tolerate ±1/√n estimation error, keeping
     the whole dedup decision sketch-resident."""
     sigs = minhash_signature(
-        df, id_col, text_col, n_hashes, shingle_n, hash_fn
+        df, id_col, text_col, n_hashes, shingle_n
     ).persist()
     cand = _band_candidates(sigs, n_hashes, n_bands, id_col)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sa"))
@@ -1221,18 +1043,30 @@ def lsh_estimated_jaccard(
     return out
 
 
-def _simhash_arrow(
+def simhash(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_bits: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_bits: int = 32,
 ) -> DataFrame:
-    """Arrow/numpy execution of the md5 SimHash sketch — identical
-    values to the Catalyst HOF form (same tokenization, same md5-slice
-    base hash, same ±1 bit votes and power-of-two packing), computed
-    per batch: tokens are uniqued before hashing (one md5 per DISTINCT
-    token per batch instead of one interpreted HOF step per token ×
-    bit), bit votes are one numpy reduceat over the token stream."""
+    """SimHash sketch: bit j is the sign of the ±1 vote over all token
+    hashes' j-th bits (token multiset, not distinct — classic SimHash).
+    Single pass over the token array per row, no shuffle. ``n_bits``
+    up to 60: the packed sketch must fit a signed long AND the base
+    hash supplies at most 60 bits of entropy (15 md5 hex chars, the
+    8-char h32 up to 32 bits) — bits beyond the base hash's width would
+    always vote negative and sit permanently at zero, the same
+    degenerate-bit class the long-arithmetic packing fix addressed.
+
+    Execution (r7): an Arrow ``mapInPandas`` batch kernel — tokens
+    are uniqued before hashing (one md5 per DISTINCT token per batch,
+    ``tokenize.distinct_md5``) and the bit votes are one numpy
+    reduceat over the token stream, instead of the Catalyst form's
+    interpreted ±1 vote per token × bit (~tokens×n_bits steps per
+    row); value-identical (pinned by the golden and parity tests). A
+    null text gives a null sketch."""
+    if not 1 <= n_bits <= 60:
+        raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
     import numpy as np
     import pandas as pd
 
@@ -1279,88 +1113,6 @@ def _simhash_arrow(
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int = 32,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """SimHash sketch: bit j is the sign of the ±1 vote over all token
-    hashes' j-th bits (token multiset, not distinct — classic SimHash).
-    Single pass over the token array per row, no shuffle. ``n_bits``
-    up to 60: the packed sketch must fit a signed long AND ``_hash_bits``
-    supplies at most 60 bits of entropy (15 md5 hex chars / pmod 2^60
-    on the xxhash64 path) — bits beyond the base hash's width would
-    always vote negative and sit permanently at zero, the same
-    degenerate-bit class the long-arithmetic packing fix addressed.
-
-    Execution (r7): the md5 mode runs as an Arrow ``mapInPandas``
-    batch kernel (:func:`_simhash_arrow`) — the Catalyst HOF form
-    evaluated an interpreted ±1 vote per token × bit (~tokens×n_bits
-    steps per row); the Arrow kernel hashes each DISTINCT token once
-    per batch and folds the votes in numpy, value-identical (pinned by
-    the golden and parity tests). The xxhash64 mode stays Catalyst —
-    Spark's codegen'd xxhash64 has no cheap Python replica."""
-    if not 1 <= n_bits <= 60:
-        raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
-    if hash_fn == "md5":
-        return _simhash_arrow(df, id_col, text_col, n_bits)
-    return _simhash_catalyst(df, id_col, text_col, n_bits, hash_fn)
-
-
-def _simhash_catalyst(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bits: int = 32,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """The Catalyst HOF SimHash — the xxhash64 production mode, and
-    (with md5) the parity reference for the Arrow kernel."""
-    if not 1 <= n_bits <= 60:
-        raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
-    toks = tokens(text_col)
-    # hash each token once, then fold the ±1 bit votes
-    hashes = F.transform(toks, lambda t: _hash_bits(t, n_bits, hash_fn))
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), n_bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1),
-                    )
-                    .otherwise(F.lit(-1))
-                    .cast("long")
-                    for j in range(n_bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # bit j set iff vote > 0 — each element 2^j is a single power of
-    # two (exactly representable in double for any j, then cast to
-    # long), and the SUM runs in long arithmetic: the previous packing
-    # summed in double, where a running total spanning >= 53 bits
-    # silently dropped the low bits
-    sh = F.aggregate(
-        F.zip_with(
-            votes,
-            F.sequence(F.lit(0), F.lit(n_bits - 1)),
-            lambda v, j: F.when(
-                v > 0, F.pow(F.lit(2.0), j).cast("long")
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return df.select(F.col(id_col), sh.alias("simhash"))
-
-
 def doc_neardup_groups(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1369,7 +1121,6 @@ def doc_neardup_groups(
     n_bands: int = 4,
     shingle_n: int = 3,
     min_est_jaccard: float = 0.5,
-    hash_fn: str = "md5",
     max_iter: int = 20,
     small_graph_threshold: int = 100_000,
 ) -> DataFrame:
@@ -1389,7 +1140,7 @@ def doc_neardup_groups(
     from dbus_spark.operators.graph import components_from_pairs
 
     edges = lsh_estimated_jaccard(
-        df, id_col, text_col, n_hashes, n_bands, shingle_n, hash_fn
+        df, id_col, text_col, n_hashes, n_bands, shingle_n
     ).filter(F.col("est_jaccard") >= min_est_jaccard)
     return components_from_pairs(
         edges,

@@ -13,7 +13,7 @@ bounded by a rep TTL + per-bucket cap — semantics mirroring
 Geometry (the 100 TB shape, reference parity: dbus declares a dedup
 store and never builds one — pkg/idempotent/repository.go:1-5):
 
-- map side: one signature per doc (``minhash_sig_col``), exploded
+- map side: one signature per doc (``minhash_sigs_pandas``), exploded
   into ``n_bands`` band rows keyed by xxhash64(band, band-values) —
   the SAME banded candidate scheme as the batch LSH ladder, so a pair
   findable by ``lsh_candidate_pairs`` is findable here;
@@ -63,12 +63,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from dbus_spark.operators import tokenize as tk
-from dbus_spark.operators.dedup import (
-    MINHASH_P,
-    _shingle_hashes,
-    minhash_coeffs,
-    minhash_sig_col,
-)
+from dbus_spark.operators.dedup import MINHASH_P, minhash_coeffs
 from dbus_spark.operators.state import callback, keyed_apply
 
 # polynomial-rolling base for combining token hashes into shingle
@@ -121,14 +116,15 @@ def minhash_sigs_pandas(
     """Vectorized (pandas/numpy) MinHash signatures — the streaming
     path's signature kernel, shared verbatim by the test replica so
     stream decisions and the sequential reference use identical
-    sketches. The Catalyst form (``minhash_sig_col``) costs ~0.65 ms
-    per document in interpreted HOF evaluation (measured: 8.2 s for a
+    sketches. The Catalyst HOF form it replaced cost ~0.65 ms per
+    document in interpreted evaluation (measured: 8.2 s for a
     12.5k-doc micro-batch — the whole operator's budget); this batches
     the same construction through C kernels. Hashing differs from the
-    Catalyst form (``tokenize.token_hashes`` vs xxhash64), which is fine:
-    the stateful operator only ever compares ITS OWN sketches — but it
-    also means the signature scheme is part of the checkpoint contract
-    (don't change n_hashes/shingle_n/hash on a live checkpoint).
+    batch ladder's md5 sketches (``tokenize.token_hashes`` rolled into
+    shingle hashes), which is fine: the stateful operator only ever
+    compares ITS OWN sketches — but it also means the signature
+    scheme is part of the checkpoint contract (don't change
+    n_hashes/shingle_n/hash on a live checkpoint).
 
     Documents with fewer than ``shingle_n`` tokens have no shingles;
     they get a per-doc unique sentinel signature so they never match
@@ -341,12 +337,10 @@ def streaming_neardup_verdicts(
     n_bands: int = 4,
     shingle_n: int = 3,
     min_est_jaccard: float = 0.5,
-    hash_fn: str = "xxhash64",
     watermark: str = "2 hours",
     rep_ttl_ms: int = 2 * 3600 * 1000,
     n_state_buckets: int = 64,
     max_reps_per_bucket: int = 100_000,
-    sig_mode: str = "arrow",
 ) -> DataFrame:
     """Per-(doc, band) near-dup verdicts: every input row fans out to
     ``n_bands`` state cells; the cells emit back the band-0 row (the
@@ -366,34 +360,16 @@ def streaming_neardup_verdicts(
             f"excluded from every band key"
         )
     rows_per_band = n_hashes // n_bands
-    if sig_mode == "arrow":
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def _sig_udf(texts: pd.Series, ids: pd.Series) -> pd.Series:
-            if not len(texts):
-                return pd.Series([], dtype=object)
-            return pd.Series(
-                list(minhash_sigs_pandas(texts, ids, n_hashes, shingle_n))
-            )
 
-        sig = _sig_udf(F.col(text_col), F.col(id_col))
-    elif sig_mode == "catalyst":
-        # the batch ladder's JVM form — ~0.65 ms/doc interpreted HOF
-        # evaluation, kept for A/B parity runs. A null text (or any
-        # doc with < shingle_n tokens) yields a null / null-element
-        # signature from array_min-over-empty; coalesce it to the same
-        # per-doc sentinel contract as the arrow kernel instead of
-        # crashing np.stack for the whole micro-batch (ADVICE r4).
-        raw_sig = minhash_sig_col(
-            _shingle_hashes(text_col, shingle_n, hash_fn), n_hashes
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def _sig_udf(texts: pd.Series, ids: pd.Series) -> pd.Series:
+        if not len(texts):
+            return pd.Series([], dtype=object)
+        return pd.Series(
+            list(minhash_sigs_pandas(texts, ids, n_hashes, shingle_n))
         )
-        sentinel = (
-            -F.pmod(F.xxhash64(F.col(id_col)), F.lit(2**62)) - F.lit(1)
-        )
-        sig = F.when(
-            F.element_at(raw_sig, 1).isNotNull(), raw_sig
-        ).otherwise(F.array_repeat(sentinel, n_hashes))
-    else:
-        raise ValueError(f"sig_mode must be arrow|catalyst: {sig_mode}")
+
+    sig = _sig_udf(F.col(text_col), F.col(id_col))
     entries = F.array(
         *[
             F.struct(

@@ -267,8 +267,7 @@ def fingerprint(
     32-hex-char string the DuckDB oracle can reproduce; ``'xxhash64'``
     gives a bigint — the production/streaming mode: the dedup state
     key shrinks 32-char string → 8 bytes and the hash itself is a
-    single codegen'd JVM op (same md5-vs-xxhash64 knob as the MinHash
-    ladder's ``hash_fn``)."""
+    single codegen'd JVM op."""
     c = F.col(col) if isinstance(col, str) else col
     norm = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
     if hash_fn == "xxhash64":
@@ -727,7 +726,7 @@ def hashed_ngram_features(
     feature string mod n_buckets, reproducible in the DuckDB oracle
     via ``('0x'||substr(md5(f),1,8))::BIGINT % n_buckets`` — same
     parity contract as the minhash shingle hash
-    (operators/dedup.py::_h32).
+    (``tokenize.distinct_md5``).
 
     Execution (r7): an Arrow batch kernel — tokenize and build bigrams
     with the shared primitives (``operators/tokenize.py``), and md5

@@ -310,19 +310,45 @@ def _parquet_output(options: dict) -> Callable:
     return fn
 
 
+def _idempotent_sink(options: dict):
+    """The ``IdempotentKeyedSink`` an ``IdempotentOutput``'s options
+    describe — the one reading of ``path``/``keys``/``dedup_mode``/
+    ``track_counts`` for the batch and the stream output."""
+    from dbus_spark.sinks import IdempotentKeyedSink
+
+    return IdempotentKeyedSink(
+        options["path"],
+        keys=options.get("keys", ["conv_id", "turn_idx"]),
+        dedup_mode=options.get("dedup_mode", "anti_join"),
+        track_counts=bool(options.get("track_counts", True)),
+    )
+
+
 def _idempotent_output(options: dict) -> Callable:
     """Batch form of the exactly-once keyed sink."""
 
     def fn(df: DataFrame, name: str):
-        from dbus_spark.sinks import IdempotentKeyedSink
-
-        sink = IdempotentKeyedSink(
-            options["path"],
-            keys=options.get("keys", ["conv_id", "turn_idx"]),
-            dedup_mode=options.get("dedup_mode", "anti_join"),
-            track_counts=bool(options.get("track_counts", True)),
+        return _idempotent_sink(options).write_batch(
+            df, int(options.get("batch_id", 0))
         )
-        return sink.write_batch(df, int(options.get("batch_id", 0)))
+
+    return fn
+
+
+def _kafka_output(options: dict) -> Callable:
+    """KafkaOutput analog, the write side of a Kafka mirror: the
+    routed rows go to ``topic`` on ``servers`` (the stream sink's
+    options). Needs the Kafka connector on the classpath, and a
+    ``value`` column (``key`` optional), as Spark's Kafka writer
+    does."""
+
+    def fn(df: DataFrame, name: str):
+        (
+            df.write.format("kafka")
+            .option("kafka.bootstrap.servers", options["servers"])
+            .option("topic", options["topic"])
+            .save()
+        )
 
     return fn
 
@@ -438,6 +464,7 @@ for _name, _factory in [
     ("RateInput", _rate_input),
     ("KafkaInput", _kafka_input),
     ("IdempotentOutput", _idempotent_output),
+    ("KafkaOutput", _kafka_output),
     ("RekeyFilter", _rekey_filter),
     ("PredicateFilter", _predicate_filter),
     ("RegexFilter", _regex_filter),

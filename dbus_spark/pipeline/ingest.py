@@ -13,9 +13,9 @@ Scale notes baked in (profiled on the micro-batch listener, r4):
   (``functions.vectorized.doc_enrich_v``): a deterministic pandas UDF
   is duplicated when Catalyst pushes the quality filter beneath the
   projection that computes it — measured 2x the Arrow cost.
-- ``hash_fn='xxhash64'`` is the production fingerprint mode: 8-byte
-  state key + codegen'd JVM hash (md5's 32-hex-char key exists for
-  oracle parity, see ``operators.text.fingerprint``).
+- the fingerprint is xxhash64 of the normalized text: an 8-byte
+  state key + one codegen'd JVM hash (md5's 32-hex-char key exists
+  for the oracle rows, see ``operators.text.fingerprint``).
 - state-partition sizing is the caller's launch decision, NOT set
   here: per-partition state-store commit is fixed overhead, so size
   ``spark.sql.shuffle.partitions`` to the expected distinct-key
@@ -93,7 +93,6 @@ def doc_ingest_stream(
     watermark: str = "2 hours",
     ts_col: str = "ts",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
     dedup: bool = True,
     bench_ngram_hashes=None,
     ngram_n: int = 8,
@@ -132,7 +131,7 @@ def doc_ingest_stream(
             .filter((F.col("e.quality") >= quality_min) & F.col("e.clean"))
             .select("*", "e.quality", "e.n_tokens")
             .drop("e")
-            .withColumn("fp", fingerprint(text_col, hash_fn=hash_fn))
+            .withColumn("fp", fingerprint(text_col, hash_fn="xxhash64"))
         )
     else:
         out = (
@@ -140,7 +139,7 @@ def doc_ingest_stream(
             .filter(F.col("e.quality") >= quality_min)
             .select("*", "e.quality", "e.n_tokens")
             .drop("e")
-            .withColumn("fp", fingerprint(text_col, hash_fn=hash_fn))
+            .withColumn("fp", fingerprint(text_col, hash_fn="xxhash64"))
         )
     if dedup and out.isStreaming:
         out = out.withWatermark(ts_col, watermark)

@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from dbus_spark.datagen import write_stream_batches
-from dbus_spark.pipeline.dag import Pipeline
+from dbus_spark.pipeline.dag import Pipeline, _idempotent_sink
 from dbus_spark.schema import TRANSCRIPT_SCHEMA
-from dbus_spark.sinks import IdempotentKeyedSink
 from dbus_spark.streaming.checkpoint import recorded_source_count
 
 # class name → factory(options) -> fn(df, name, checkpoint) -> query
@@ -85,12 +84,7 @@ def _parquet_stream(options: dict) -> Callable:
 
 def _idempotent_stream(options: dict) -> Callable:
     def fn(df: DataFrame, name: str, ckpt: str) -> StreamingQuery:
-        sink = IdempotentKeyedSink(
-            options["path"],
-            keys=options.get("keys", ["conv_id", "turn_idx"]),
-            dedup_mode=options.get("dedup_mode", "anti_join"),
-            track_counts=bool(options.get("track_counts", True)),
-        )
+        sink = _idempotent_sink(options)
         return (
             df.writeStream.outputMode(options.get("output_mode", "append"))
             .foreachBatch(sink.foreach_batch())

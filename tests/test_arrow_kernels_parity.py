@@ -5,9 +5,9 @@ Every operator rewritten this round keeps its oracle check in
 test_entry_oracle.py (value-exact vs DuckDB on the fixtures); these
 tests pin the HOSTILE-INPUT corners the fixtures don't exercise —
 Java-vs-Python whitespace classes, empty/null texts, trailing
-separators, NUL characters, ties — against the still-present Catalyst
-reference implementations (two of them, used only here, live in this
-file)."""
+separators, NUL characters, ties — against Catalyst reference
+implementations, which live in this file (md5 only: the engine runs
+the Arrow kernels alone)."""
 
 import hashlib
 
@@ -61,6 +61,161 @@ def _rows(df, cols):
     )
 
 
+def _h32(c: Column) -> Column:
+    """md5-h32: the first 8 md5-hex chars as an int in [0, 2^32), the
+    value DuckDB computes as ``('0x'||substr(md5(s),1,8))::BIGINT``."""
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+
+
+def _hash_bits(c: Column, n_bits: int) -> Column:
+    """An md5 hash with at least ``n_bits`` of entropy (≤ 60): the
+    32-bit ``_h32`` for narrow sketches, a 60-bit md5 slice for wide
+    ones — a 32-bit base hash under a wider sketch would leave every
+    bit ≥ 32 voting negative (zero entropy)."""
+    if n_bits <= 32:
+        return _h32(c)
+    # 15 hex chars = 60 bits, fits a signed long
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def _winnow_fingerprints_catalyst(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 8,
+    w: int = 4,
+) -> DataFrame:
+    """The Catalyst HOF winnowing pass — the reference the Arrow
+    kernel ``dedup.winnow_fingerprints`` is pinned against."""
+    norm = F.regexp_replace(
+        F.lower(F.trim(F.col(text_col))), r"\s+", " "
+    )
+
+    # Evaluation-order trap: referencing a per-row EXPRESSION inside a
+    # higher-order-function lambda inlines it per ELEMENT (the norm
+    # regex would run once per character position — measured O(n²),
+    # 292 s for 5 k docs at sf0.1). Binding it as a lambda VARIABLE via
+    # a singleton-array transform evaluates it once per row: lambda
+    # vars are bound values, not expressions. Same trick for the hash
+    # array before the window pass. 292 s → ~2 s, plan stays map-side.
+    def _once(expr: Column, body) -> Column:
+        return F.get(F.transform(F.array(expr), body), 0)
+
+    def _grams(t: Column) -> Column:
+        idx = F.when(
+            F.length(t) >= k,
+            F.sequence(F.lit(1), F.length(t) - k + 1),
+        ).otherwise(F.array().cast("array<int>"))
+        return F.transform(idx, lambda i: _h32(t.substr(i, F.lit(k))))
+
+    def _window_mins(hs: Column) -> Column:
+        idx = F.when(
+            F.size(hs) >= w,
+            F.sequence(F.lit(1), F.size(hs) - w + 1),
+        ).otherwise(F.array().cast("array<int>"))
+        return F.array_distinct(
+            F.transform(idx, lambda j: F.array_min(F.slice(hs, j, w)))
+        )
+
+    mins = _once(_once(norm, _grams), _window_mins)
+    return df.select(
+        F.col(id_col), F.explode_outer(mins).alias("fp")
+    )
+
+
+def _shingle_hashes(text_col: str, shingle_n: int) -> Column:
+    """Base-hash every shingle once (the only md5 work of the MinHash
+    signature)."""
+    return F.transform(
+        D.word_shingles(text_col, shingle_n),
+        lambda s: _h32(s) % F.lit(TK.MINHASH_P),
+    )
+
+
+def minhash_sig_col(hashes: Column, n_hashes: int) -> Column:
+    """The signature as a COLUMN over pre-hashed shingles:
+    sig[i] = min over shingles of (h * a_i + b_i) % p."""
+    coeffs = D.minhash_coeffs(n_hashes)
+
+    def _perm(a: int, b: int):
+        # must be a strictly unary lambda: pyspark counts every
+        # parameter (defaults included) as a lambda argument
+        return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(TK.MINHASH_P)
+
+    return F.array(
+        *[
+            F.array_min(F.transform(hashes, _perm(a, b)))
+            for (a, b) in coeffs
+        ]
+    )
+
+
+def minhash_signature_catalyst(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_hashes: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """The Catalyst HOF signature — the reference the Arrow kernel
+    ``dedup.minhash_signature`` is pinned against."""
+    hashed = df.select(
+        F.col(id_col),
+        _shingle_hashes(text_col, shingle_n).alias("_hs"),
+    )
+    return hashed.select(
+        F.col(id_col), minhash_sig_col(F.col("_hs"), n_hashes).alias("sig")
+    )
+
+
+def _simhash_catalyst(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_bits: int = 32,
+) -> DataFrame:
+    """The Catalyst HOF SimHash — the reference the Arrow kernel
+    ``dedup.simhash`` is pinned against."""
+    toks = tokens(text_col)
+    # hash each token once, then fold the ±1 bit votes
+    hashes = F.transform(toks, lambda t: _hash_bits(t, n_bits))
+    votes = F.aggregate(
+        hashes,
+        F.array_repeat(F.lit(0).cast("long"), n_bits),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.array(
+                *[
+                    F.when(
+                        F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1,
+                        F.lit(1),
+                    )
+                    .otherwise(F.lit(-1))
+                    .cast("long")
+                    for j in range(n_bits)
+                ]
+            ),
+            lambda a, b: a + b,
+        ),
+    )
+    # bit j set iff vote > 0 — each element 2^j is a single power of
+    # two (exactly representable in double for any j, then cast to
+    # long), and the SUM runs in long arithmetic: summing in double,
+    # a running total spanning >= 53 bits silently drops the low bits
+    sh = F.aggregate(
+        F.zip_with(
+            votes,
+            F.sequence(F.lit(0), F.lit(n_bits - 1)),
+            lambda v, j: F.when(
+                v > 0, F.pow(F.lit(2.0), j).cast("long")
+            ).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return df.select(F.col(id_col), sh.alias("simhash"))
+
+
 def repetition_metrics_catalyst(
     df: DataFrame, id_col: str = "doc_id", col: str = "text"
 ) -> DataFrame:
@@ -112,8 +267,6 @@ def hashed_ngram_features_catalyst(
     """The JVM-side twin of :func:`hashed_ngram_features` (split +
     transform + md5-derived h32 per occurrence) — the parity reference
     the Arrow kernel is pinned against."""
-    from dbus_spark.operators.dedup import _h32
-
     toks = tokens(text_col)
     # bigrams: t[i] + ' ' + t[i+1]; guard size<2 — Spark's sequence(1,0)
     # would yield a DEScending [1,0], not an empty list
@@ -138,7 +291,7 @@ def hashed_ngram_features_catalyst(
 def test_simhash_arrow_matches_catalyst_md5(spark, hostile_df):
     got = _rows(D.simhash(hostile_df), ["doc_id", "simhash"])
     ref = _rows(
-        D._simhash_catalyst(hostile_df, "doc_id", "text", 32, "md5"),
+        _simhash_catalyst(hostile_df, "doc_id", "text", 32),
         ["doc_id", "simhash"],
     )
     assert got == ref
@@ -147,7 +300,7 @@ def test_simhash_arrow_matches_catalyst_md5(spark, hostile_df):
 def test_simhash_arrow_matches_catalyst_md5_wide(spark, hostile_df):
     got = _rows(D.simhash(hostile_df, n_bits=60), ["doc_id", "simhash"])
     ref = _rows(
-        D._simhash_catalyst(hostile_df, "doc_id", "text", 60, "md5"),
+        _simhash_catalyst(hostile_df, "doc_id", "text", 60),
         ["doc_id", "simhash"],
     )
     assert got == ref
@@ -156,7 +309,7 @@ def test_simhash_arrow_matches_catalyst_md5_wide(spark, hostile_df):
 def test_winnow_arrow_matches_catalyst_md5(spark, hostile_df):
     got = _rows(D.winnow_fingerprints(hostile_df), ["doc_id", "fp"])
     ref = _rows(
-        D._winnow_fingerprints_catalyst(hostile_df, "doc_id", "text"),
+        _winnow_fingerprints_catalyst(hostile_df, "doc_id", "text"),
         ["doc_id", "fp"],
     )
     assert got == ref
@@ -378,7 +531,7 @@ def test_minhash_signature_arrow_matches_catalyst(spark, hostile_df):
         )
         ref = sorted(
             (r["doc_id"], tuple(r["sig"]) if r["sig"] is not None else None)
-            for r in D.minhash_signature_catalyst(
+            for r in minhash_signature_catalyst(
                 hostile_df, shingle_n=shingle_n
             ).collect()
         )

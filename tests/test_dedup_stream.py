@@ -271,10 +271,10 @@ def test_bands_must_divide_hashes(spark):
         lsh_candidate_pairs(docs, n_hashes=16, n_bands=3)
 
 
-def test_catalyst_mode_null_and_short_text(spark, tmp_path):
-    """ADVICE r4: sig_mode='catalyst' with a null/short text used to
-    produce a null signature and crash np.stack for the whole
-    micro-batch; it now coalesces to the per-doc sentinel."""
+def test_null_and_short_text_are_kept(spark, tmp_path):
+    """ADVICE r4: a null or short text has no shingles; it must get
+    the per-doc sentinel signature (never a null one, which crashed
+    np.stack for the whole micro-batch), so it is always kept."""
     pdf = generate_documents(60, seed=13)[["doc_id", "text"]]
     pdf.loc[pdf.index[0], "text"] = None
     pdf.loc[pdf.index[1], "text"] = "one two"  # < 3 tokens, no shingles
@@ -282,7 +282,7 @@ def test_catalyst_mode_null_and_short_text(spark, tmp_path):
     pdf["ts"] = (
         base + pd.to_timedelta(np.arange(len(pdf)) * 3, unit="s")
     ).astype("datetime64[us]")
-    in_dir = tmp_path / "in_cat"
+    in_dir = tmp_path / "in_null"
     os.makedirs(in_dir)
     pdf.to_parquet(in_dir / "b-0000.parquet", index=False)
     src = (
@@ -290,9 +290,7 @@ def test_catalyst_mode_null_and_short_text(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(in_dir))
     )
-    v = streaming_neardup_verdicts(
-        src, min_est_jaccard=MIN_EST, sig_mode="catalyst"
-    )
+    v = streaming_neardup_verdicts(src, min_est_jaccard=MIN_EST)
     got: list = []
 
     def collect(batch_df, _epoch):
@@ -302,7 +300,7 @@ def test_catalyst_mode_null_and_short_text(spark, tmp_path):
 
     q = (
         v.writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_cat"))
+        .option("checkpointLocation", str(tmp_path / "ck_null"))
         .foreachBatch(collect)
         .start()
     )

@@ -388,7 +388,7 @@ def test_public_operator_signatures_unchanged():
         cep.streaming_match_absence: "(df: 'DataFrame', first: 'str', absent: 'str', within: 'str', key: 'str' = 'conv_id', order: 'str' = 'turn_idx', ts: 'str' = 'ts', sym: 'str' = 'sym', watermark: 'str' = '10 minutes', ttl_ms: 'int' = 600000, n_buckets: 'int' = 64) -> 'DataFrame'",
         cep.streaming_funnel: "(df: 'DataFrame', stages: 'list[tuple[str, Column | str]]', key: 'str' = 'conv_id', order: 'str' = 'turn_idx', ts: 'str' = 'ts', watermark: 'str' = '10 minutes', ttl_ms: 'int' = 600000, n_buckets: 'int' = 64) -> 'DataFrame'",
         cep.streaming_match_quantified: "(df: 'DataFrame', pattern: 'list[tuple]', key: 'str' = 'conv_id', order: 'str' = 'turn_idx', ts: 'str' = 'ts', sym: 'str' = 'sym', within: 'str | None' = None, watermark: 'str' = '10 minutes', ttl_ms: 'int' = 600000, n_buckets: 'int' = 64) -> 'DataFrame'",
-        dedup_stream.streaming_neardup_verdicts: "(df: 'DataFrame', id_col: 'str' = 'doc_id', text_col: 'str' = 'text', ts: 'str' = 'ts', n_hashes: 'int' = 16, n_bands: 'int' = 4, shingle_n: 'int' = 3, min_est_jaccard: 'float' = 0.5, hash_fn: 'str' = 'xxhash64', watermark: 'str' = '2 hours', rep_ttl_ms: 'int' = 7200000, n_state_buckets: 'int' = 64, max_reps_per_bucket: 'int' = 100000, sig_mode: 'str' = 'arrow') -> 'DataFrame'",
+        dedup_stream.streaming_neardup_verdicts: "(df: 'DataFrame', id_col: 'str' = 'doc_id', text_col: 'str' = 'text', ts: 'str' = 'ts', n_hashes: 'int' = 16, n_bands: 'int' = 4, shingle_n: 'int' = 3, min_est_jaccard: 'float' = 0.5, watermark: 'str' = '2 hours', rep_ttl_ms: 'int' = 7200000, n_state_buckets: 'int' = 64, max_reps_per_bucket: 'int' = 100000) -> 'DataFrame'",
         dedup_stream.streaming_semdedup_filter: "(df: 'DataFrame', threshold: 'float' = 0.4, dim: 'int' = 64, n_centroids: 'int' = 16, seed: 'int' = 11, centroids: \"'list[list[float]] | None'\" = None, id_col: 'str' = 'vec_id', vec_col: 'str' = 'embedding', ts: 'str' = 'ts', watermark: 'str' = '2 hours', rep_ttl_ms: 'int' = 7200000, max_reps_per_cell: 'int' = 100000) -> 'DataFrame'",
         join.streaming_asof_join: "(df: 'DataFrame', is_right, right_cols: 'list[str]', key: 'str' = 'conv_id', order: 'str' = 'turn_idx', ts: 'str' = 'ts', watermark: 'str' = '10 minutes', ttl_ms: 'int' = 600000, n_buckets: 'int' = 64) -> 'DataFrame'",
         corpus.streaming_token_budget_filter: "(df: 'DataFrame', budgets: 'Mapping[str, int]', strata_col: 'str' = 'lang', id_col: 'str' = 'doc_id', text_col: 'str' = 'text', ts: 'str' = 'ts') -> 'DataFrame'",

@@ -255,7 +255,7 @@ def test_avro_encode_gated(spark):
         assert "avro" in str(e).lower() or "AVRO" in str(e)
 
 
-# --- hash_fn production knob (md5 oracle mode vs xxhash64) --------------
+# --- near-dup recall on the fixture (md5 sketches) ---------------------
 
 
 def _shingle_sets(docs):
@@ -284,11 +284,9 @@ def _true_pairs(ss, threshold):
 
 
 def test_hash_fn_modes_equivalent_after_verify_minhash_lsh(spark):
-    """The production hash knob must not change the ANSWER, only the
-    cost: MinHash-LSH candidates differ per mode (different hash,
-    different permutations), but after exact-Jaccard verification both
-    modes recover the identical pair set — here the full brute-force
-    truth set (100% recall on the fixture's >=0.8 near-dups)."""
+    """MinHash-LSH candidates, after exact-Jaccard verification,
+    recover the full brute-force truth set (100% recall on the
+    fixture's >=0.8 near-dups)."""
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).repartition(32)
@@ -300,22 +298,18 @@ def test_hash_fn_modes_equivalent_after_verify_minhash_lsh(spark):
         sa, sb = ss[a], ss[b]
         return len(sa & sb) / len(sa | sb) if (sa or sb) else 1.0
 
-    verified = {}
-    for mode in ("md5", "xxhash64"):
-        cand = D.lsh_candidate_pairs(
-            docs, n_hashes=16, n_bands=4, hash_fn=mode
-        )
-        pairs = {(r.id_a, r.id_b) for r in cand.collect()}
-        verified[mode] = {p for p in pairs if jac(*p) >= 0.8}
-    assert verified["md5"] == verified["xxhash64"] == truth
+    cand = D.lsh_candidate_pairs(docs, n_hashes=16, n_bands=4)
+    pairs = {(r.id_a, r.id_b) for r in cand.collect()}
+    verified = {p for p in pairs if jac(*p) >= 0.8}
+    assert verified == truth
 
 
 def test_hash_fn_simhash_recall_is_mode_dependent_but_sound(spark):
-    """SimHash recall IS sketch-dependent (different hash, different
-    bit votes) — both modes are sound (every verified candidate is a
-    true near-dup) and each recovers a substantial share of the truth
-    set; equality is NOT expected and that trade-off is the documented
-    difference from the MinHash path."""
+    """SimHash recall IS sketch-dependent (it rests on where the bit
+    votes fall) — the single-prefix form is sound (every verified
+    candidate is a true near-dup) and recovers a substantial share of
+    the truth set; equality is NOT expected and that trade-off is the
+    documented difference from the MinHash path."""
     docs = spark.read.parquet(
         "/root/testdata/sf0.01/documents.parquet"
     ).repartition(32)
@@ -326,24 +320,89 @@ def test_hash_fn_simhash_recall_is_mode_dependent_but_sound(spark):
         sa, sb = ss[a], ss[b]
         return len(sa & sb) / len(sa | sb) if (sa or sb) else 1.0
 
-    for mode in ("md5", "xxhash64"):
-        cand = D.simhash_neardup_pairs(
-            docs, prefix_bits=16, max_hamming=3, hash_fn=mode
+    cand = D.simhash_neardup_pairs(docs, prefix_bits=16, max_hamming=3)
+    pairs = {(r.id_a, r.id_b) for r in cand.collect()}
+    verified = {p for p in pairs if jac(*p) >= 0.8}
+    assert verified <= truth  # sound: no false positives survive
+    assert len(verified) >= 5  # deterministic fixture recall floor
+
+
+def test_pair_chunks_match_nested_loops():
+    """The run-length pair enumerator shared by both pair kernels
+    emits exactly the nested-loop pair multiset at every chunk size
+    (chunk boundaries inside and between segments), never splits one
+    row's pairs over two chunks, and handles the diagonal layout
+    (i < j within a segment) and an n_sub cross segment (each a-row
+    with each b-row) in one partition."""
+    from collections import Counter
+
+    rng = np.random.default_rng(7)
+    lens = np.concatenate([[1, 1, 2], rng.integers(1, 9, size=20), [1]])
+    starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+    n_diag = int(lens.sum())
+    got_starts, got_lens, seg_of_row, pos = D._runs(
+        [np.repeat(np.arange(len(lens)) % 2, lens)]
+    )
+    assert got_starts.tolist() == starts.tolist()
+    assert got_lens.tolist() == lens.tolist()
+    # the diagonal segments, then one cross segment of n_a a-rows
+    # followed by n_b b-rows (b-rows and segment tails pair with none)
+    n_a, n_b = 4, 5
+    rep = np.concatenate(
+        [lens[seg_of_row] - pos - 1, [n_b] * n_a, [0] * n_b]
+    )
+    base = np.concatenate(
+        [np.arange(1, n_diag + 1), [n_diag + n_a] * (n_a + n_b)]
+    )
+    ref = Counter(
+        (s + i, s + j)
+        for s, m in zip(starts.tolist(), lens.tolist())
+        for i in range(m)
+        for j in range(i + 1, m)
+    )
+    ref.update(
+        (n_diag + i, n_diag + n_a + j)
+        for i in range(n_a)
+        for j in range(n_b)
+    )
+    for chunk in (1, 3, 7, D._PAIR_CHUNK):
+        got: Counter = Counter()
+        rows_per_chunk = []
+        for a_idx, b_idx in D._pair_chunks(rep, base, chunk=chunk):
+            got.update(zip(a_idx.tolist(), b_idx.tolist()))
+            rows_per_chunk.append(set(a_idx.tolist()))
+        assert got == ref, f"chunk={chunk}"
+        assert sum(map(len, rows_per_chunk)) == len(
+            set().union(*rows_per_chunk)
+        ), f"chunk={chunk}: a row's pairs split over chunks"
+
+
+def test_packed_segment_key_out_of_range_raises(spark):
+    """A segment key outside [0, 2^width) would spill into the
+    neighbouring packed field and pair rows of different buckets: it
+    raises, naming the column and its width. In-range keys pair."""
+
+    def pairs(rows, key_cols, key_widths, n_sub=1):
+        cols = ", ".join(f"{c} long" for c in key_cols)
+        sk = spark.createDataFrame(
+            rows, f"doc_id long, simhash long, {cols}"
         )
-        pairs = {(r.id_a, r.id_b) for r in cand.collect()}
-        verified = {p for p in pairs if jac(*p) >= 0.8}
-        assert verified <= truth  # sound: no false positives survive
-        assert len(verified) >= 5  # deterministic fixture recall floor
+        return {
+            (r.id_a, r.id_b)
+            for r in D._bucketed_hamming_pairs(
+                sk, key_cols, "doc_id", None, emit_hamming=False,
+                n_sub=n_sub, key_widths=key_widths,
+            ).collect()
+        }
 
-
-def test_hash_fn_rejects_unknown_mode():
-    import pytest as _pytest
-
-    from dbus_spark.operators.dedup import _h32
-    from pyspark.sql import functions as _F
-
-    with _pytest.raises(ValueError):
-        _h32(_F.lit("x"), hash_fn="sha999")
+    assert pairs([(1, 5, 15), (2, 6, 15)], ["bucket"], [4]) == {(1, 2)}
+    for bad in (16, -1):
+        with pytest.raises(Exception, match=r"bucket out of range \[0, 2\^4"):
+            pairs([(1, 5, bad), (2, 6, bad)], ["bucket"], [4])
+    with pytest.raises(Exception, match=r"tbl out of range \[0, 2\^2"):
+        pairs(
+            [(1, 5, 4, 0), (2, 6, 4, 0)], ["tbl", "bucket"], [2, 8], n_sub=8
+        )
 
 
 def test_asof_join_right_cols_come_from_one_row(spark):

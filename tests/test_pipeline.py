@@ -155,6 +155,20 @@ def test_duplicate_plugin_name_raises():
         Pipeline(cfg)
 
 
+def test_every_stream_sink_class_has_a_batch_plugin():
+    """A config that names a stream sink class must also build as a
+    batch Pipeline (KafkaOutput was registered for streams only)."""
+    from dbus_spark.pipeline.dag import PLUGIN_REGISTRY
+    from dbus_spark.pipeline.streaming import STREAM_SINKS
+
+    assert set(STREAM_SINKS) <= set(PLUGIN_REGISTRY)
+    Pipeline({"plugins": [
+        {"name": "in", "class": "MemoryInput"},
+        {"name": "k", "class": "KafkaOutput", "match": ["in"],
+         "options": {"servers": "x", "topic": "t"}},
+    ]})
+
+
 def test_wildcard_matcher_semantics(spark):
     """matcher_v2: '*' matches exactly one dot segment — including an
     empty one, exactly like the reference's strings.Split + equality

@@ -2344,7 +2344,7 @@ def _oracle_sql_all() -> dict[str, str | None]:
             "ex AS (SELECT doc_id, unnest(paras, recursive := true) "
             "  FROM ch), "
             "sg AS (SELECT doc_id, pos, span, "
-            "  regexp_split_to_array(trim(span), '\s+') AS stoks FROM ex), "
+            "  regexp_split_to_array(trim(span), '\\s+') AS stoks FROM ex), "
             "bt AS (SELECT toks[1:25] AS btoks FROM tk "
             "  WHERE doc_id % 13 = 0), "
             "bs AS (SELECT DISTINCT unnest([array_to_string("
@@ -2407,7 +2407,7 @@ def _oracle_sql_all() -> dict[str, str | None]:
         "doc_sample_tokens": (
             # longest draw-ordered prefix per lang whose cumsum fits
             "WITH tk AS (SELECT doc_id, lang, "
-            "  len(regexp_split_to_array(trim(text), '\s+')) AS t, "
+            "  len(regexp_split_to_array(trim(text), '\\s+')) AS t, "
             "  substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8) AS d "
             "  FROM documents), "
             "b AS (SELECT *, CASE lang WHEN 'en' THEN 4000 "

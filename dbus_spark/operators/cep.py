@@ -6,7 +6,8 @@ isolation (``pipeline/router.go``, ``plugins/filter/*``) — it has no
 cross-event pattern state, so this whole module is target-scope: the
 capability a transcript databus needs that the reference never built.
 
-Three batch operators plus one streaming twin:
+Batch operators, each with a streaming twin over a per-key in-order
+stream (``streaming_*``):
 
 - :func:`classify` — tag each event with a pattern symbol via chained
   Catalyst ``when`` predicates (codegen'd; no Python).
@@ -23,17 +24,23 @@ Three batch operators plus one streaming twin:
   cascade shuffles key-cardinality-sized frames, never the event log
   (the log is scanned once per stage, map-side filtered; AQE is free
   to broadcast the reached frame when it fits).
-- :func:`streaming_match_sequence` — the streaming twin of
-  :func:`match_sequence` over an in-order per-key stream: state per
-  coarsened key bucket carries each key's last ``L-1`` events so
-  matches spanning micro-batch boundaries still fire; idle keys are
-  evicted after an event-time TTL (documented under-match on
-  eviction, mirroring dedup_stream's under-dedup contract — state
-  must be bounded at 10^12 turns, so a key silent for longer than
-  the horizon may miss a pattern that straddles the gap).
+- :func:`match_quantified` / :func:`match_pattern` — Kleene
+  quantifiers over maximal runs, from a list or a pattern string.
+- :func:`match_absence` — timeout patterns (``first`` not followed by
+  ``absent`` within a bound).
 
-Both forms share one vectorized kernel (:func:`_match_block`) so the
-stream == batch-replay equivalence is structural, not coincidental.
+The streaming twins (sequence, absence, funnel, quantified) keep a
+bounded per-key state: the sequence twin carries each key's last
+``L-1`` events so matches spanning micro-batch boundaries still fire;
+idle keys are evicted after an event-time TTL (documented under-match
+on eviction, mirroring dedup_stream's under-dedup contract — state
+must be bounded at 10^12 turns, so a key silent for longer than the
+horizon may miss a pattern that straddles the gap).  The batch forms
+run on Catalyst windows (``lead()``, running mins, gaps-and-islands);
+the twins run numpy kernels (:func:`_match_block` for the sequence
+twin) over rows from the shared in-order intake of
+``operators/state.py``, and the equivalence tests pin stream ==
+batch replay.
 """
 
 from __future__ import annotations
@@ -46,7 +53,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dbus_spark.operators.state import callback, keyed_apply, to_columns
+from dbus_spark.operators.state import (
+    NEG,
+    callback,
+    empty_frame,
+    in_order_rows,
+    in_order_src,
+    keyed_apply,
+    to_columns,
+)
 
 
 def classify(
@@ -69,6 +84,21 @@ def classify(
     if expr is None:
         raise ValueError("classify() needs at least one symbol")
     return df.withColumn(sym_col, expr.otherwise(F.lit(default)))
+
+
+def _elem_cond(col: Column, elem) -> Column:
+    """A pattern element as a Catalyst predicate: a symbol, or an
+    alternation collection of symbols."""
+    if isinstance(elem, (list, tuple, set, frozenset)):
+        return col.isin(*sorted(elem))
+    return col == elem
+
+
+def _elem_ok(vals: np.ndarray, elem) -> np.ndarray:
+    """:func:`_elem_cond` over a numpy array of symbols."""
+    if isinstance(elem, (list, tuple, set, frozenset)):
+        return np.isin(vals, sorted(elem))
+    return vals == elem
 
 
 def match_sequence(
@@ -102,12 +132,6 @@ def match_sequence(
     L = len(pattern)
     w = Window.partitionBy(key).orderBy(*order_cols)
     out = df
-
-    def _elem_cond(col: Column, elem) -> Column:
-        if isinstance(elem, (list, tuple, set, frozenset)):
-            return col.isin(*sorted(elem))
-        return col == elem
-
     cond = _elem_cond(F.col(sym), pattern[0])
     for i in range(1, L):
         out = out.withColumn(f"_s{i}", F.lead(sym, i).over(w))
@@ -262,11 +286,6 @@ def match_quantified(
     L = len(pattern)
     w = Window.partitionBy(key).orderBy("_pos")
 
-    def _elem_cond(col: Column, elem) -> Column:
-        if isinstance(elem, (list, tuple, set, frozenset)):
-            return col.isin(*sorted(elem))
-        return col == elem
-
     def _len_cond(col: Column, mn: int, mx: int | None) -> Column:
         c = col >= mn
         return c if mx is None else c & (col <= mx)
@@ -395,19 +414,6 @@ def _interval_us(df: DataFrame, within: str | None) -> int | None:
     )
 
 
-def _stream_src(
-    df: DataFrame, key: str, value: Column, order: str, ts: str
-) -> DataFrame:
-    """The generic ``key, <value>, order, ts`` frame every streaming
-    twin feeds its state step."""
-    return df.select(
-        F.col(key).alias("key"),
-        value,
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-    )
-
-
 def _match_block(
     keys: np.ndarray,
     syms: np.ndarray,
@@ -427,11 +433,6 @@ def _match_block(
         z = np.array([], dtype=object)
         zi = np.array([], dtype=np.int64)
         return z, zi, zi, zi.astype("datetime64[us]"), zi.astype("datetime64[us]")
-    def _elem_ok(vals: np.ndarray, elem) -> np.ndarray:
-        if isinstance(elem, (list, tuple, set, frozenset)):
-            return np.isin(vals, sorted(elem))
-        return vals == elem
-
     m = n - L + 1
     ok = _elem_ok(syms[:m], pattern[0])
     for i in range(1, L):
@@ -458,25 +459,13 @@ def _deadline_swept(tail: pd.DataFrame, wm: int, emits: list):
     return tail, emits, tail["deadline"].min()
 
 
-def _empty_tail() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "key": np.array([], object),
-            "sym": np.array([], object),
-            "order": np.array([], np.int64),
-            "ts_us": np.array([], np.int64),
-            "deadline": np.array([], np.int64),
-        }
-    )
-
-
 def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
     L = len(pattern)
 
     def step(tail, new, wm):
         emits = []
         if new is not None:
-            ts_us = new["ts"].to_numpy("datetime64[us]").view(np.int64)
+            new = in_order_rows(new, sym=object)
             # deadline is EVENT-time based (row ts + ttl), not
             # watermark-based: the watermark starts at 0 and jumps to
             # epoch-scale after the first batch, so wm-anchored
@@ -485,15 +474,7 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
             # pattern is only ever missed if its internal spacing
             # exceeds ttl — so with within <= ttl no within-qualifying
             # match is ever lost to eviction.
-            new = pd.DataFrame(
-                {
-                    "key": new["key"].to_numpy(object),
-                    "sym": new["sym"].to_numpy(object),
-                    "order": new["order"].to_numpy(np.int64),
-                    "ts_us": ts_us,
-                    "deadline": ts_us // 1000 + np.int64(ttl_ms),
-                }
-            )
+            new = new.assign(deadline=new["ts_us"] // 1000 + np.int64(ttl_ms))
             touched = pd.unique(new["key"])
             on_t = tail["key"].isin(touched).to_numpy()
             allr = (
@@ -501,11 +482,9 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
                 if on_t.any()
                 else new
             )
-            # in-order input contract: tail rows already precede new
-            # rows in order; the sort is the cross-chunk merge plus a
-            # defensive restore, and drop_duplicates the redelivery
-            # guard (first = state copy wins, keeping emitted history
-            # stable)
+            # tail rows precede new rows in order; the sort merges
+            # them, and drop_duplicates keeps the state copy of a
+            # redelivered row (first wins, so emitted history is stable)
             allr = allr.sort_values(
                 ["key", "order"], kind="stable"
             ).drop_duplicates(["key", "order"])
@@ -525,7 +504,7 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
                 else pd.Series(dtype=np.int64)
             )
             if len(k) and len(prev_max):
-                thresh = prev_max.reindex(k, fill_value=np.int64(-(2**62)))
+                thresh = prev_max.reindex(k, fill_value=NEG)
                 fresh = eo > thresh.to_numpy(np.int64)
                 k, so, eo, sts, ets = k[fresh], so[fresh], eo[fresh], sts[fresh], ets[fresh]
             # new tail: last L-1 rows per key (vectorized tail-take),
@@ -548,7 +527,13 @@ def _make_cep_fn(pattern: list[str], within_us: int | None, ttl_ms: int):
             )
         return _deadline_swept(tail, wm, emits)
 
-    return callback(step, _empty_tail, pd.DataFrame, to_columns)
+    def empty():
+        return empty_frame(
+            key=object, sym=object, order=np.int64, ts_us=np.int64,
+            deadline=np.int64,
+        )
+
+    return callback(step, empty, pd.DataFrame, to_columns)
 
 
 def streaming_match_sequence(
@@ -575,7 +560,7 @@ def streaming_match_sequence(
     deployment has to pick, stated rather than hidden.
     """
     return keyed_apply(
-        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        in_order_src(df, key, order, ts, F.col(sym).alias("sym")),
         _make_cep_fn(list(pattern), _interval_us(df, within), ttl_ms),
         _MATCH_SCHEMA,
         "key",
@@ -652,20 +637,11 @@ def match_absence(
 
 
 def _empty_absence() -> tuple[pd.DataFrame, pd.DataFrame]:
-    pending = pd.DataFrame(
-        {
-            "key": np.array([], object),
-            "order": np.array([], np.int64),
-            "ts_us": np.array([], np.int64),
-            "deadline_us": np.array([], np.int64),
-        }
+    pending = empty_frame(
+        key=object, order=np.int64, ts_us=np.int64, deadline_us=np.int64
     )
-    frontier = pd.DataFrame(
-        {
-            "key": np.array([], object),
-            "max_order": np.array([], np.int64),
-            "last_ts_us": np.array([], np.int64),
-        }
+    frontier = empty_frame(
+        key=object, max_order=np.int64, last_ts_us=np.int64
     )
     return pending, frontier
 
@@ -698,22 +674,9 @@ def _make_absence_fn(
         wm_us = wm * 1000
         emits: list[pd.DataFrame] = []
         if new is not None:
-            new = pd.DataFrame(
-                {
-                    "key": new["key"].to_numpy(object),
-                    "sym": new["sym"].to_numpy(object),
-                    "order": new["order"].to_numpy(np.int64),
-                    "ts_us": new["ts"].to_numpy("datetime64[us]").view(np.int64),
-                }
-            ).sort_values(["key", "order"], kind="stable")
-            # redelivery guard: drop rows at-or-below the key frontier
-            if len(frontier):
-                fmax = frontier.set_index("key")["max_order"]
-                thresh = fmax.reindex(
-                    new["key"], fill_value=np.int64(-(2 ** 62))
-                ).to_numpy(np.int64)
-                new = new[new["order"].to_numpy() > thresh]
-            new = new.drop_duplicates(["key", "order"])
+            new = in_order_rows(
+                new, frontier.set_index("key")["max_order"], sym=object
+            )
             if len(new):
                 g = new.groupby("key", sort=False)
                 sym_arr = new["sym"].to_numpy(object)
@@ -763,9 +726,9 @@ def _make_absence_fn(
                     min_b = pd.Series(b_ts).groupby(
                         new["key"].to_numpy(object), sort=False
                     ).min()
-                    pb = min_b.reindex(
-                        pt["key"], fill_value=np.int64(2 ** 62)
-                    ).to_numpy(np.int64)
+                    pb = min_b.reindex(pt["key"], fill_value=INF).to_numpy(
+                        np.int64
+                    )
                     p_answered = pb <= pt["deadline_us"].to_numpy()
                     pending = pd.concat(
                         [pending[~touched], pt[~p_answered]],
@@ -775,9 +738,9 @@ def _make_absence_fn(
                 pool = pd.concat([pending, cand], ignore_index=True, copy=False)
                 # unanswered-final: the key's stream has passed the
                 # deadline (later rows can only be later still)
-                kl = key_last.reindex(
-                    pool["key"], fill_value=np.int64(-(2 ** 62))
-                ).to_numpy(np.int64)
+                kl = key_last.reindex(pool["key"], fill_value=NEG).to_numpy(
+                    np.int64
+                )
                 final = kl > pool["deadline_us"].to_numpy()
                 if final.any():
                     emits.append(_emit_frame(pool[final]))
@@ -855,7 +818,7 @@ def streaming_match_absence(
         ]
     )
     return keyed_apply(
-        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        in_order_src(df, key, order, ts, F.col(sym).alias("sym")),
         _make_absence_fn(first, absent, _interval_us(df, within), ttl_ms),
         out_schema,
         "key",
@@ -896,20 +859,6 @@ _FUNNEL_EMIT_SCHEMA = T.StructType(
     ]
 )
 
-_NEG_INF = np.int64(-(2**62))
-
-
-def _empty_funnel_state() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "key": np.array([], object),
-            "n_reached": np.array([], np.int64),
-            "last_ts_us": np.array([], np.int64),
-            "max_order": np.array([], np.int64),
-            "last_seen_us": np.array([], np.int64),
-        }
-    )
-
 
 def _make_funnel_fn(n_stages: int, ttl_ms: int):
     L = n_stages
@@ -917,22 +866,9 @@ def _make_funnel_fn(n_stages: int, ttl_ms: int):
     def step(st, new, wm):
         emits: list[pd.DataFrame] = []
         if new is not None:
-            new = pd.DataFrame(
-                {
-                    "key": new["key"].to_numpy(object),
-                    "mask": new["mask"].to_numpy(np.int64),
-                    "order": new["order"].to_numpy(np.int64),
-                    "ts_us": new["ts"].to_numpy("datetime64[us]").view(np.int64),
-                }
-            ).sort_values(["key", "order"], kind="stable")
-            # redelivery guard: drop rows at-or-below the key frontier
-            if len(st):
-                fmax = st.set_index("key")["max_order"]
-                thresh = fmax.reindex(
-                    new["key"], fill_value=_NEG_INF
-                ).to_numpy(np.int64)
-                new = new[new["order"].to_numpy() > thresh]
-            new = new.drop_duplicates(["key", "order"])
+            new = in_order_rows(
+                new, st.set_index("key")["max_order"], mask=np.int64
+            )
             if len(new):
                 # register unseen keys at stage 0
                 seen = (
@@ -951,10 +887,10 @@ def _make_funnel_fn(n_stages: int, ttl_ms: int):
                                         len(fresh), np.int64
                                     ),
                                     "last_ts_us": np.full(
-                                        len(fresh), _NEG_INF
+                                        len(fresh), NEG
                                     ),
                                     "max_order": np.full(
-                                        len(fresh), _NEG_INF
+                                        len(fresh), NEG
                                     ),
                                     "last_seen_us": np.zeros(
                                         len(fresh), np.int64
@@ -981,7 +917,7 @@ def _make_funnel_fn(n_stages: int, ttl_ms: int):
                     if not at_s.any():
                         continue
                     last_of = st["last_ts_us"].reindex(
-                        key_arr, fill_value=_NEG_INF
+                        key_arr, fill_value=NEG
                     ).to_numpy(np.int64)
                     stage_of = st["n_reached"].reindex(
                         key_arr, fill_value=np.int64(-1)
@@ -1029,7 +965,13 @@ def _make_funnel_fn(n_stages: int, ttl_ms: int):
         st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
         return (st if len(st) else None), emits, wm + ttl_ms
 
-    return callback(step, _empty_funnel_state, pd.DataFrame, to_columns)
+    def empty():
+        return empty_frame(
+            key=object, n_reached=np.int64, last_ts_us=np.int64,
+            max_order=np.int64, last_seen_us=np.int64,
+        )
+
+    return callback(step, empty, pd.DataFrame, to_columns)
 
 
 def streaming_funnel(
@@ -1071,7 +1013,7 @@ def streaming_funnel(
         cond = F.expr(pred) if isinstance(pred, str) else pred
         mask = mask + F.when(cond, F.lit(1 << i)).otherwise(F.lit(0))
     out = keyed_apply(
-        _stream_src(df, key, mask.cast("long").alias("mask"), order, ts),
+        in_order_src(df, key, order, ts, mask.cast("long").alias("mask")),
         _make_funnel_fn(L, ttl_ms),
         _FUNNEL_EMIT_SCHEMA,
         "key",
@@ -1120,27 +1062,12 @@ def _quant_match_schema(L: int) -> T.StructType:
     )
 
 
-_RUN_COLS = [
-    "key", "sym", "len", "so", "eo", "sts_us", "ets_us", "pos",
-    "open", "deadline",
-]
-
-
-def _empty_runs() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "key": np.array([], object),
-            "sym": np.array([], object),
-            "len": np.array([], np.int64),
-            "so": np.array([], np.int64),
-            "eo": np.array([], np.int64),
-            "sts_us": np.array([], np.int64),
-            "ets_us": np.array([], np.int64),
-            "pos": np.array([], np.int64),
-            "open": np.array([], bool),
-            "deadline": np.array([], np.int64),
-        }
-    )
+# the run tail's columns and dtypes, in wire order
+_RUN_COLS = {
+    "key": object, "sym": object, "len": np.int64, "so": np.int64,
+    "eo": np.int64, "sts_us": np.int64, "ets_us": np.int64,
+    "pos": np.int64, "open": bool, "deadline": np.int64,
+}
 
 
 def _contract_batch(new: pd.DataFrame) -> pd.DataFrame:
@@ -1174,11 +1101,7 @@ def _contract_batch(new: pd.DataFrame) -> pd.DataFrame:
 
 
 def _quant_elem_ok(syms: np.ndarray, lens: np.ndarray, elem, mn, mx):
-    if isinstance(elem, (list, tuple, set, frozenset)):
-        ok = np.isin(syms, sorted(elem))
-    else:
-        ok = syms == elem
-    ok = ok & (lens >= mn)
+    ok = _elem_ok(syms, elem) & (lens >= mn)
     if mx is not None:
         ok = ok & (lens <= mx)
     return ok
@@ -1232,28 +1155,10 @@ def _make_quant_fn(pattern: list[tuple], within_us: int | None, ttl_ms: int):
     def step(tail, new, wm):
         emits = []
         if new is not None:
-            new = (
-                pd.DataFrame(
-                    {
-                        "key": new["key"].to_numpy(object),
-                        "sym": new["sym"].to_numpy(object),
-                        "order": new["order"].to_numpy(np.int64),
-                        "ts_us": new["ts"]
-                        .to_numpy("datetime64[us]")
-                        .view(np.int64),
-                    }
-                )
-                .sort_values(["key", "order"], kind="stable")
-                .drop_duplicates(["key", "order"])
+            # the key's frontier is its newest run end
+            new = in_order_rows(
+                new, tail.groupby("key", sort=False)["eo"].max(), sym=object
             )
-            # redelivery guard: in-order input, so anything at or below
-            # the key's newest run end has been seen already
-            if len(tail):
-                fmax = tail.groupby("key", sort=False)["eo"].max()
-                thresh = fmax.reindex(
-                    new["key"], fill_value=np.int64(-(2 ** 62))
-                ).to_numpy(np.int64)
-                new = new[new["order"].to_numpy() > thresh]
             if len(new):
                 fresh = _contract_batch(new)
                 touched = pd.unique(fresh["key"].to_numpy(object))
@@ -1347,7 +1252,7 @@ def _make_quant_fn(pattern: list[tuple], within_us: int | None, ttl_ms: int):
                     .to_numpy()
                 )
                 tail = pd.concat(
-                    [untouched, allr[g < L][_RUN_COLS]],
+                    [untouched, allr[g < L][list(_RUN_COLS)]],
                     ignore_index=True,
                     copy=False,
                 )
@@ -1355,7 +1260,9 @@ def _make_quant_fn(pattern: list[tuple], within_us: int | None, ttl_ms: int):
                     emits.append(out)
         return _deadline_swept(tail, wm, emits)
 
-    return callback(step, _empty_runs, pd.DataFrame, to_columns)
+    return callback(
+        step, lambda: empty_frame(**_RUN_COLS), pd.DataFrame, to_columns
+    )
 
 
 def streaming_match_quantified(
@@ -1388,7 +1295,7 @@ def streaming_match_quantified(
     for elem, mn, mx in pattern:
         _check_quantifier(mn, mx)
     return keyed_apply(
-        _stream_src(df, key, F.col(sym).alias("sym"), order, ts),
+        in_order_src(df, key, order, ts, F.col(sym).alias("sym")),
         _make_quant_fn(list(pattern), _interval_us(df, within), ttl_ms),
         _quant_match_schema(len(pattern)),
         "key",

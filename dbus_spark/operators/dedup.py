@@ -1122,7 +1122,6 @@ def doc_neardup_groups(
     shingle_n: int = 3,
     min_est_jaccard: float = 0.5,
     max_iter: int = 20,
-    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """Text-side near-duplicate GROUPS — the dedup decision step of a
     training-data pipeline: MinHash-LSH candidates → sketch-resident
@@ -1135,7 +1134,7 @@ def doc_neardup_groups(
     Scale shape: candidate generation is band-bounded (shuffle =
     docs×bands), the estimate join moves (id, sig) rows only, and the
     CC step is size-adaptive (driver union-find under
-    ``small_graph_threshold`` edges, distributed min-label propagation
+    ``graph._DRIVER_EDGES`` edges, distributed min-label propagation
     above — see ``graph.components_from_pairs``)."""
     from dbus_spark.operators.graph import components_from_pairs
 
@@ -1143,9 +1142,5 @@ def doc_neardup_groups(
         df, id_col, text_col, n_hashes, n_bands, shingle_n
     ).filter(F.col("est_jaccard") >= min_est_jaccard)
     return components_from_pairs(
-        edges,
-        df.select(F.col(id_col)),
-        id_col,
-        max_iter=max_iter,
-        small_graph_threshold=small_graph_threshold,
+        edges, df.select(F.col(id_col)), id_col, max_iter=max_iter
     )

@@ -10,7 +10,7 @@ Size-adaptive like a broadcast-join threshold (reference parity:
 dbus routes per-packet on one node; grouping is an analytics-side
 addition, no reference counterpart):
 
-- edge list ≤ ``small_graph_threshold``: union-find on the driver over
+- edge list ≤ ``_DRIVER_EDGES``: union-find on the driver over
   the (ids-only, bounded) collected pairs. Near-dup graphs are tiny
   relative to the corpus, and a distributed loop's per-round
   scheduling (~1 s/round measured here) dwarfs the actual work. The
@@ -31,13 +31,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# the largest edge list collected for driver-side union-find
+_DRIVER_EDGES = 100_000
+
 
 def components_from_pairs(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str,
     max_iter: int = 20,
-    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """Label every row of ``ids`` (a one-column frame of ``id_col``)
     with the min id of its connected component in ``pairs``
@@ -54,7 +56,7 @@ def components_from_pairs(
     pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
 
     n_edges = pairs.count()
-    if n_edges <= small_graph_threshold:
+    if n_edges <= _DRIVER_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -63,7 +65,7 @@ def components_from_pairs(
                 x = parent[x]
             return x
 
-        for r in pairs.collect():  # bounded by small_graph_threshold
+        for r in pairs.collect():  # bounded by _DRIVER_EDGES
             a, b = r.id_a, r.id_b
             parent.setdefault(a, a)
             parent.setdefault(b, b)

@@ -15,7 +15,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbus_spark.operators.state import callback, keyed_apply, to_columns
+from dbus_spark.operators.state import (
+    NEG,
+    callback,
+    empty_frame,
+    in_order_rows,
+    in_order_src,
+    keyed_apply,
+    to_columns,
+)
 
 
 def correlate_user_tool(
@@ -157,85 +165,42 @@ def asof_join(
 
 
 def _make_asof_fn(right_cols: list[str], ttl_ms: int):
-    NEG = np.int64(-(2**62))
+    right_dtypes = dict.fromkeys(right_cols, object)
 
-    def _empty_state() -> pd.DataFrame:
-        cols = {
-            "key": np.array([], object),
-            "r_ts_us": np.array([], np.int64),
-            "r_ord": np.array([], np.int64),
-            "max_order": np.array([], np.int64),
-            "last_seen_us": np.array([], np.int64),
-        }
-        for c in right_cols:
-            cols[c] = np.array([], object)
-        return pd.DataFrame(cols)
+    def empty() -> pd.DataFrame:
+        return empty_frame(
+            key=object, r_ts_us=np.int64, r_ord=np.int64,
+            max_order=np.int64, last_seen_us=np.int64, **right_dtypes,
+        )
 
     def step(st, new, wm):
         emits: list[pd.DataFrame] = []
         if new is not None:
-            new = pd.DataFrame(
-                {
-                    "key": new["key"].to_numpy(object),
-                    "order": new["order"].to_numpy(np.int64),
-                    "ts_us": new["ts"]
-                    .to_numpy("datetime64[us]")
-                    .view(np.int64),
-                    "_is_r": new["_is_r"].fillna(False).to_numpy(bool),
-                    **{c: new[c].to_numpy(object) for c in right_cols},
-                }
+            new = in_order_rows(
+                new,
+                st.set_index("key")["max_order"],
+                _is_r=bool,
+                **right_dtypes,
             )
-            if len(st):
-                fmax = st.set_index("key")["max_order"]
-                thresh = fmax.reindex(
-                    new["key"], fill_value=NEG
-                ).to_numpy(np.int64)
-                new = new[new["order"].to_numpy() > thresh]
-            new = new.drop_duplicates(["key", "order"])
             if len(new):
                 rights = new[new["_is_r"].to_numpy()]
                 # register rows from state ride as far-past rights
-                if len(st):
-                    st_r = st[st["r_ord"].to_numpy() > NEG]
-                else:
-                    st_r = st
+                st_r = st[st["r_ord"].to_numpy() > NEG]
+
+                def both(st_col, new_col, dt):
+                    return np.concatenate(
+                        [
+                            st_r[st_col].to_numpy(dt),
+                            rights[new_col].to_numpy(dt),
+                        ]
+                    )
+
                 r_all = pd.DataFrame(
                     {
-                        "key": np.concatenate(
-                            [
-                                st_r["key"].to_numpy(object)
-                                if len(st_r)
-                                else np.array([], object),
-                                rights["key"].to_numpy(object),
-                            ]
-                        ),
-                        "ts_us": np.concatenate(
-                            [
-                                st_r["r_ts_us"].to_numpy(np.int64)
-                                if len(st_r)
-                                else np.array([], np.int64),
-                                rights["ts_us"].to_numpy(np.int64),
-                            ]
-                        ),
-                        "_ord": np.concatenate(
-                            [
-                                st_r["r_ord"].to_numpy(np.int64)
-                                if len(st_r)
-                                else np.array([], np.int64),
-                                rights["order"].to_numpy(np.int64),
-                            ]
-                        ),
-                        **{
-                            c: np.concatenate(
-                                [
-                                    st_r[c].to_numpy(object)
-                                    if len(st_r)
-                                    else np.array([], object),
-                                    rights[c].to_numpy(object),
-                                ]
-                            )
-                            for c in right_cols
-                        },
+                        "key": both("key", "key", object),
+                        "ts_us": both("r_ts_us", "ts_us", np.int64),
+                        "_ord": both("r_ord", "order", np.int64),
+                        **{c: both(c, c, object) for c in right_cols},
                     }
                 ).sort_values(["ts_us", "_ord"], kind="stable")
                 lefts = new[~new["_is_r"].to_numpy()].sort_values(
@@ -326,7 +291,7 @@ def _make_asof_fn(right_cols: list[str], ttl_ms: int):
         st = st[st["last_seen_us"].to_numpy() // 1000 + ttl_ms > wm]
         return (st if len(st) else None), emits, wm + ttl_ms
 
-    return callback(step, _empty_state, pd.DataFrame, to_columns)
+    return callback(step, empty, pd.DataFrame, to_columns)
 
 
 def streaming_asof_join(
@@ -380,11 +345,10 @@ def streaming_asof_join(
             "the column before joining"
         )
     cond = F.expr(is_right) if isinstance(is_right, str) else is_right
-    src = df.select(
-        F.col(key).alias("key"),
-        F.col(order).cast("long").alias("order"),
-        F.col(ts).alias("ts"),
-        cond.alias("_is_r"),
+    # a null condition makes a probe row, as it fails a filter
+    src = in_order_src(
+        df, key, order, ts,
+        F.coalesce(cond, F.lit(False)).alias("_is_r"),
         *[F.col(c) for c in right_cols],
     )
     right_types = {

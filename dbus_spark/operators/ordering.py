@@ -76,7 +76,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbus_spark.operators.state import callback, keyed_apply, to_columns
+from dbus_spark.operators.state import (
+    callback,
+    empty_frame,
+    keyed_apply,
+    to_columns,
+)
 
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -137,15 +142,9 @@ def _empty_meta() -> pd.DataFrame:
 
 
 def _empty_pending() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "conv_id": pd.Series([], dtype=object),
-            "turn_idx": pd.Series([], dtype="int64"),
-            "role": pd.Series([], dtype=object),
-            "text": pd.Series([], dtype=object),
-            "tool": pd.Series([], dtype=object),
-            "ts": pd.Series([], dtype="datetime64[us]"),
-        }
+    return empty_frame(
+        conv_id=object, turn_idx="int64", role=object, text=object,
+        tool=object, ts="datetime64[us]",
     )
 
 

@@ -152,7 +152,7 @@ def neardup_pairs(
     ).select("_id", "_v", "_blk", F.col("_g.gi"), F.col("_g.gj"))
     margin = _round_gt_margin(threshold)
 
-    def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def verify(key, pdf):
         gi, gj = int(key[0]), int(key[1])
         if gi == gj:
             ids = pdf["_id"].to_numpy(np.int64)
@@ -524,6 +524,10 @@ def kmeanspp_init_local(
     return [c.tolist() for c in chosen]
 
 
+# the largest table kmeans_centroids collects to train on the driver
+_LOCAL_TRAIN_ROWS = 200_000
+
+
 def kmeans_centroids(
     df: DataFrame,
     dim: int,
@@ -533,7 +537,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     init: str = "seeded",
     id_col: str = "vec_id",
-    small_input_threshold: int = 200_000,
 ) -> list[list[float]]:
     """Spherical k-means (Lloyd's) over the embedding table — the
     training pass that turns the seeded IVF stand-ins into real
@@ -570,8 +573,8 @@ def kmeans_centroids(
     # sums to the driver).
     train = df.select(id_col, vec_col)
     # a LIMIT probe: only "at most the threshold?" matters
-    n_rows = train.limit(small_input_threshold + 1).count()
-    if n_rows <= small_input_threshold:
+    n_rows = train.limit(_LOCAL_TRAIN_ROWS + 1).count()
+    if n_rows <= _LOCAL_TRAIN_ROWS:
         pdf = train.toPandas()
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
@@ -954,19 +957,28 @@ def neardup_pairs_lsh(
         F.col(vec_col).alias("_v"),
         F.posexplode("_tb").alias("tbl", "bucket"),
     )
+    return _group_pairs(tb, ("tbl", "bucket"), threshold, max_bucket)
+
+
+def _group_pairs(
+    df: DataFrame, cols: tuple, threshold: float, cap: int | None = None
+) -> DataFrame:
+    """The verified pairs within each ``cols`` group of ``_id, _v``
+    rows, skipping groups over ``cap`` rows: one applyInPandas
+    computing the in-group cosine grid fold-exact, then ``distinct``
+    (a pair sharing several groups carries bitwise-equal ``_raw``)
+    and the Spark-side round + threshold."""
     margin = _round_gt_margin(threshold)
 
-    def verify(_key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2 or (
-            max_bucket is not None and len(pdf) > max_bucket
-        ):
+    def verify(_key, pdf):
+        if len(pdf) < 2 or (cap is not None and len(pdf) > cap):
             return _empty_pairs()
         ids = pdf["_id"].to_numpy(np.int64)
         V = _stack(pdf["_v"])
         nrm = _row_norms(V)
         return _pair_rows_grid(ids, V, nrm, ids, V, nrm, margin, True)
 
-    raw = _pin_groups(tb, "tbl", "bucket").groupBy("tbl", "bucket").applyInPandas(
+    raw = _pin_groups(df, *cols).groupBy(*cols).applyInPandas(
         verify, schema="id_a long, id_b long, _raw double"
     )
     return (
@@ -986,7 +998,6 @@ def neardup_pairs_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    max_cell: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via IVF cells — the second scale path
     beside SRP-LSH (``neardup_pairs_lsh``): each vector indexes into
@@ -1000,10 +1011,6 @@ def neardup_pairs_ivf(
     what makes this the preferred path when the corpus is clustered
     (IVF recall degrades gracefully with n_probes; SRP recall is fixed
     by plane count at index time).
-
-    ``max_cell`` mirrors ``max_bucket`` on the LSH path: drop cells
-    holding more vectors than the cap before pairing (off by default;
-    the oracle mirrors the uncapped construction).
 
     Execution (r7): same group-side generate-and-verify as
     :func:`neardup_pairs_lsh` — the vector rides the multi-probe
@@ -1036,26 +1043,7 @@ def neardup_pairs_ivf(
         F.col(vec_col).alias("_v"),
         F.explode(entries).alias("e"),
     ).select("_id", "_v", (-F.col("e.negc")).cast("int").alias("cell"))
-    margin = _round_gt_margin(threshold)
-
-    def verify(_key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2 or (
-            max_cell is not None and len(pdf) > max_cell
-        ):
-            return _empty_pairs()
-        ids = pdf["_id"].to_numpy(np.int64)
-        V = _stack(pdf["_v"])
-        nrm = _row_norms(V)
-        return _pair_rows_grid(ids, V, nrm, ids, V, nrm, margin, True)
-
-    raw = _pin_groups(probed, "cell").groupBy("cell").applyInPandas(
-        verify, schema="id_a long, id_b long, _raw double"
-    )
-    return (
-        raw.distinct()
-        .select("id_a", "id_b", F.round(F.col("_raw"), 4).alias("sim"))
-        .filter(F.col("sim") > threshold)
-    )
+    return _group_pairs(probed, ("cell",), threshold)
 
 
 def neardup_groups(
@@ -1068,7 +1056,6 @@ def neardup_groups(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_iter: int = 20,
-    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """Near-duplicate GROUPS: connected components over the verified
     LSH pair graph, labelling every vector with the minimum id
@@ -1078,7 +1065,7 @@ def neardup_groups(
     Two execution strategies, picked by measured edge count (the same
     size-adaptive philosophy as broadcast-join thresholds):
 
-    - edge list ≤ ``small_graph_threshold``: union-find on the driver
+    - edge list ≤ ``graph._DRIVER_EDGES``: union-find on the driver
       over the (ids-only, bounded) collected pairs — near-dup graphs
       are usually tiny relative to the corpus, and the distributed
       loop's per-round scheduling (~1 s/round here) dwarfs the actual
@@ -1102,11 +1089,7 @@ def neardup_groups(
         id_col, vec_col,
     )
     return components_from_pairs(
-        pairs,
-        df.select(F.col(id_col)),
-        id_col,
-        max_iter=max_iter,
-        small_graph_threshold=small_graph_threshold,
+        pairs, df.select(F.col(id_col)), id_col, max_iter=max_iter
     )
 
 
@@ -1190,11 +1173,11 @@ def semdedup(
     cell id, candidate count is sum of cell-size², never corpus².
     The cluster count is the knob (the paper uses ~100k clusters at
     web scale, keeping cells ~1e4 rows); centroid assignment is one
-    map-side Arrow pass.  Hot-cell skew mitigations are the IVF
-    family's (cap or split oversized cells — `neardup_pairs_ivf`'s
-    ``max_cell``).  Centroid norms are injected as literals computed
-    once at plan time, so the Spark plan and the SQL oracle consume
-    bit-identical constants.
+    map-side Arrow pass.  Hot-cell skew is the IVF family's to
+    mitigate (split oversized cells, or cap them as
+    ``neardup_pairs_lsh``'s ``max_bucket`` caps buckets).  Centroid
+    norms are injected as literals computed once at plan time, so the
+    Spark plan and the SQL oracle consume bit-identical constants.
 
     Execution (r7): the within-cell pair join + anti-join became ONE
     groupBy(cell).applyInPandas — each cell sorts its rows by the
@@ -1235,7 +1218,7 @@ def semdedup(
         )
     )
 
-    def keep(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def keep(key, pdf):
         cell = int(key[0])
         # rows with a null vector OR NaN cent_sim (zero-norm vectors)
         # sit outside the drop rule entirely: every (cs, id) comparison

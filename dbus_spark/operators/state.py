@@ -57,6 +57,19 @@ read and write, one Python call per key per micro-batch) is paid per
 bucket (sizing rule in ``ordering.py``). The bucket count and the
 column name are part of a checkpoint's state key, so both stay fixed
 across restarts.
+
+In-order twins
+--------------
+The four CEP twins and the as-of join read a per-key in-order stream,
+delivered at least once: a failed micro-batch is replayed whole. They
+share one intake. :func:`in_order_src` selects ``key``, the payload
+columns, ``order`` (long) and ``ts``; in ``step``,
+:func:`in_order_rows` types the rows (``ts`` becomes int64 ``ts_us``)
+and applies the redelivery rule: a ``(key, order)`` is processed once,
+the first copy to arrive wins, and nothing at or below the key's
+frontier (the greatest order already processed) is processed again.
+:data:`NEG` is the "no order yet" sentinel, and :func:`empty_frame`
+builds a typed empty state frame.
 """
 
 from __future__ import annotations
@@ -64,6 +77,7 @@ from __future__ import annotations
 import pickle
 from typing import Callable, Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,6 +87,9 @@ FORMAT_V1 = b"\x01"
 _LEGACY_PICKLE = b"\x80"
 
 STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
+
+# below any real order or timestamp, with headroom for the arithmetic
+NEG = np.int64(-(2**62))
 
 
 class StateFormatError(ValueError):
@@ -99,6 +116,48 @@ def to_columns(frame: pd.DataFrame) -> dict:
     """Payload form of a state frame: one numpy array per column
     (``pd.DataFrame`` of the dict restores it)."""
     return {c: frame[c].to_numpy() for c in frame.columns}
+
+
+def empty_frame(**dtypes) -> pd.DataFrame:
+    """An empty frame with one typed column per keyword, in order."""
+    return pd.DataFrame({c: np.array([], dt) for c, dt in dtypes.items()})
+
+
+def in_order_src(
+    df: DataFrame, key: str, order: str, ts: str, *payload
+) -> DataFrame:
+    """The ``key, *payload, order, ts`` frame an in-order twin feeds
+    its state step (``payload`` are aliased Columns)."""
+    return df.select(
+        F.col(key).alias("key"),
+        *payload,
+        F.col(order).cast("long").alias("order"),
+        F.col(ts).alias("ts"),
+    )
+
+
+def in_order_rows(
+    new: pd.DataFrame, frontier: pd.Series | None = None, /, **payload
+) -> pd.DataFrame:
+    """A key group's rows from :func:`in_order_src`, typed and guarded:
+    ``key``, the ``payload`` columns (``name=dtype``, in order),
+    ``order`` and ``ts_us`` (int64 µs), sorted by ``(key, order)``.
+    Rows at or below ``frontier`` (key -> greatest order processed) are
+    dropped, and of a repeated ``(key, order)`` the first copy stays."""
+    rows = pd.DataFrame(
+        {
+            "key": new["key"].to_numpy(object),
+            **{c: new[c].to_numpy(dt) for c, dt in payload.items()},
+            "order": new["order"].to_numpy(np.int64),
+            "ts_us": new["ts"].to_numpy("datetime64[us]").view(np.int64),
+        }
+    )
+    if frontier is not None and len(frontier):
+        thresh = frontier.reindex(rows["key"], fill_value=NEG)
+        rows = rows[rows["order"].to_numpy() > thresh.to_numpy(np.int64)]
+    return rows.sort_values(["key", "order"], kind="stable").drop_duplicates(
+        ["key", "order"]
+    )
 
 
 def _concat_rows(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame | None:

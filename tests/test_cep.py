@@ -420,6 +420,37 @@ def test_stream_absence_split_equivalence(spark, turns_pd):
     assert _run_absence_stream(spark, turns_pd, 7) == exp
 
 
+def test_stream_absence_dedups_redelivered_rows(spark, turns_pd):
+    """Exact (key, order) redelivery in a later file must not emit a
+    ``first`` event twice (frontier guard).  The watermark delay
+    exceeds the fixture's time span, so Spark's late-row filter keeps
+    the redelivered rows and only the guard can drop them."""
+    from dbus_spark.operators.cep import streaming_match_absence
+
+    ordered = turns_pd.sort_values("ts")
+    delay = pd.Timedelta(hours=24)
+    assert ordered["ts"].max() - ordered["ts"].min() < delay
+    with _no_data_batches(spark):
+        out = replay(
+            spark,
+            ordered,
+            TURNS,
+            lambda src: streaming_match_absence(
+                src, first="user", absent="tool", within="5 minutes",
+                key="conv_id", order="turn_idx", sym="role",
+                watermark="24 hours", n_buckets=8, ttl_ms=86_400_000,
+            ),
+            n_files=1,
+            then=(ordered.head(len(ordered) // 2),),
+        )
+    assert not out.duplicated(["key", "start_order"]).any()
+    exp = _pd_absence_emitted(
+        turns_pd, "user", "tool", pd.Timedelta(minutes=5), delay
+    )
+    assert len(exp) > 10
+    assert {(r.key, r.start_order) for r in out.itertuples(index=False)} == exp
+
+
 def test_stream_absence_kill_resume(spark, turns_pd, tmp_path):
     from dbus_spark.operators.cep import streaming_match_absence
 

@@ -5,9 +5,10 @@ Pins, with no Spark session, that the wire format stays readable in
 both directions (what earlier releases wrote still loads, and what is
 written now is byte-identical to the tagged format those releases
 wrote), and that a blob of unknown format raises ``StateFormatError``
-at every site, also under ``python -O``. The last test resumes an
-``ordered_turns_stream`` checkpoint whose state schema names its field
-``state`` (the name earlier releases recorded).
+at every site, also under ``python -O``; and that the in-order
+intake of the CEP and as-of twins applies one redelivery rule. The
+last test resumes an ``ordered_turns_stream`` checkpoint whose state
+schema names its field ``state`` (the name earlier releases recorded).
 """
 
 import inspect
@@ -396,6 +397,45 @@ def test_public_operator_signatures_unchanged():
     }
     for fn, sig in want.items():
         assert str(inspect.signature(fn)) == sig, fn.__name__
+
+
+# --- the in-order intake ---------------------------------------------------
+
+
+def test_in_order_rows_types_sorts_and_guards():
+    """One redelivery rule for the five in-order twins: rows at or
+    below the key's frontier go, the first copy of a ``(key, order)``
+    stays, and the rest come back typed and sorted."""
+    ts = pd.to_datetime(["2026-01-01 00:00:0%d" % i for i in range(7)])
+    new = pd.DataFrame(
+        {
+            "key": ["b", "a", "a", "b", "a", "c", "b"],
+            "sym": ["x", "p", "q", "y", "r", "s", "dup"],
+            "order": [5, 3, 2, 4, 1, -5, 5],
+            "mask": np.arange(7, dtype=np.int32),
+            "ts": ts,
+        }
+    )
+    frontier = pd.Series({"a": 2, "b": 3})
+    got = S.in_order_rows(new, frontier, sym=object)
+    assert list(got.columns) == ["key", "sym", "order", "ts_us"]
+    assert list(got.dtypes) == [object, object, np.int64, np.int64]
+    # a@2 sits AT its frontier and goes with a@1; c has no frontier
+    # (NEG fill) and keeps order -5; b@5's first copy "x" wins
+    assert list(got.itertuples(index=False, name=None)) == [
+        ("a", "p", 3, ts[1].value // 1000),
+        ("b", "y", 4, ts[3].value // 1000),
+        ("b", "x", 5, ts[0].value // 1000),
+        ("c", "s", -5, ts[5].value // 1000),
+    ]
+    # without a frontier only the duplicate goes
+    assert len(S.in_order_rows(new, sym=object)) == 6
+    # everything at or below its frontier: an empty, still typed, frame
+    frontier = pd.Series({"a": 9, "b": 9, "c": -5})
+    none = S.in_order_rows(new, frontier, mask=np.int64, sym=object)
+    assert len(none) == 0
+    assert list(none.columns) == ["key", "mask", "sym", "order", "ts_us"]
+    assert none["mask"].dtype == np.int64 and none["ts_us"].dtype == np.int64
 
 
 # --- resume across the state field rename ----------------------------------

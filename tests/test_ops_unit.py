@@ -433,9 +433,10 @@ def test_asof_join_right_cols_come_from_one_row(spark):
     assert out["L2"] == (3, "c")
 
 
-def test_neardup_groups_strategies_agree(spark):
+def test_neardup_groups_strategies_agree(spark, monkeypatch):
     """The driver union-find fast path (small graphs) and the
     distributed min-label loop must produce identical group labels."""
+    from dbus_spark.operators import graph
     from dbus_spark.operators import similarity as S
 
     emb = spark.read.parquet(
@@ -445,11 +446,10 @@ def test_neardup_groups_strategies_agree(spark):
         (r.vec_id, r.grp)
         for r in S.neardup_groups(emb, threshold=0.4, dim=64).collect()
     }
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
     loop = {
         (r.vec_id, r.grp)
-        for r in S.neardup_groups(
-            emb, threshold=0.4, dim=64, small_graph_threshold=0
-        ).collect()
+        for r in S.neardup_groups(emb, threshold=0.4, dim=64).collect()
     }
     assert fast == loop and len(fast) == 500
 
@@ -704,13 +704,14 @@ def test_doc_neardup_groups_keep_one(spark):
     assert g["grp"].nunique() < len(g)
 
 
-def test_components_from_pairs_chain_and_singletons(spark):
+def test_components_from_pairs_chain_and_singletons(spark, monkeypatch):
     """The shared CC core directly: a long chain collapses to one
     min-label group in BOTH strategies, edge-free nodes stay
     singletons, and the non-convergence guard warns instead of
     silently under-merging."""
     import warnings
 
+    from dbus_spark.operators import graph
     from dbus_spark.operators.graph import components_from_pairs
 
     # chain 0-1-2-...-9 plus isolated nodes 100, 101
@@ -721,29 +722,28 @@ def test_components_from_pairs_chain_and_singletons(spark):
         [(i,) for i in list(range(10)) + [100, 101]], "vec_id long"
     )
     for thr in (100_000, 0):  # union-find path, then distributed loop
+        monkeypatch.setattr(graph, "_DRIVER_EDGES", thr)
         got = {
             (r.vec_id, r.grp)
-            for r in components_from_pairs(
-                pairs, ids, "vec_id", small_graph_threshold=thr
-            ).collect()
+            for r in components_from_pairs(pairs, ids, "vec_id").collect()
         }
         expected = {(i, 0) for i in range(10)} | {(100, 100), (101, 101)}
         assert got == expected, f"threshold={thr}"
 
-    # diameter > max_iter: the loop must WARN about split components
+    # diameter > max_iter (on the distributed loop, _DRIVER_EDGES still
+    # 0): the loop must WARN about split components
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        components_from_pairs(
-            pairs, ids, "vec_id", small_graph_threshold=0, max_iter=2
-        ).collect()
+        components_from_pairs(pairs, ids, "vec_id", max_iter=2).collect()
     assert any("did not converge" in str(x.message) for x in w)
 
-def test_components_from_pairs_id_col_no_collision(spark):
+def test_components_from_pairs_id_col_no_collision(spark, monkeypatch):
     """ADVICE r4: internal join columns must not collide with the
     caller's id_col — id_col='id' or 'label' used to raise ambiguous
     AnalysisException; 'grp'/_cc_* are validated away explicitly."""
     import pytest
 
+    from dbus_spark.operators import graph
     from dbus_spark.operators.graph import components_from_pairs
 
     pairs = spark.createDataFrame(
@@ -754,11 +754,10 @@ def test_components_from_pairs_id_col_no_collision(spark):
             [(i,) for i in (0, 1, 2, 9)], f"{col} long"
         )
         for thr in (100_000, 0):
+            monkeypatch.setattr(graph, "_DRIVER_EDGES", thr)
             got = {
                 (r[col], r.grp)
-                for r in components_from_pairs(
-                    pairs, ids, col, small_graph_threshold=thr
-                ).collect()
+                for r in components_from_pairs(pairs, ids, col).collect()
             }
             assert got == {(0, 0), (1, 0), (2, 0), (9, 9)}, (col, thr)
 

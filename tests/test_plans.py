@@ -168,10 +168,8 @@ def test_kmeans_size_probe_picks_the_path_at_the_threshold(
     )
     for threshold, on_driver in ((n, True), (n - 1, False)):
         del local_calls[:]
-        cs = S.kmeans_centroids(
-            emb, dim=64, n_centroids=8, n_iter=2,
-            small_input_threshold=threshold,
-        )
+        monkeypatch.setattr(S, "_LOCAL_TRAIN_ROWS", threshold)
+        cs = S.kmeans_centroids(emb, dim=64, n_centroids=8, n_iter=2)
         assert bool(local_calls) == on_driver
         assert cs == cl
 
@@ -427,6 +425,25 @@ def test_semdedup_no_cartesian_cell_keyed(spark):
     plan = _plan(q)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_similarity_plans_build_without_eval_type_warning(spark):
+    """PySpark warns "Cannot infer the eval type from type hints" on
+    every plan build whose grouped-map callback annotates only some of
+    its arguments; the pair and SemDeDup callbacks annotate none."""
+    import warnings
+
+    from dbus_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        S.neardup_pairs(emb, threshold=0.4)
+        S.neardup_pairs_lsh(emb, threshold=0.4, dim=64)
+        S.neardup_pairs_ivf(emb, threshold=0.4, dim=64)
+        S.semdedup(emb, threshold=0.4, dim=64)
+    msgs = [str(x.message) for x in w]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
 
 
 def test_shard_plan_one_window_no_global_sort(spark):

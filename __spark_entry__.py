@@ -16,6 +16,7 @@ dedup.py docstring).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1897,12 +1898,7 @@ def _neardup_ivf_oracle(
 
     if cents is None:
         cents = ivf_centroids(n_centroids, 64, seed=11)
-    dots = ", ".join(
-        "list_dot_product(embedding::DOUBLE[], [{c}]::DOUBLE[])".format(
-            c=", ".join(repr(float(x)) for x in cent)
-        )
-        for cent in cents
-    )
+    dots = _cent_dots_sql(cents)
     sim = (
         "list_cosine_similarity(x.embedding::DOUBLE[], "
         "y.embedding::DOUBLE[])"
@@ -1937,12 +1933,7 @@ def _knn_ivf_oracle(
 
     if cents is None:
         cents = ivf_centroids(n_centroids, 64, seed=11)
-    dots = ", ".join(
-        "list_dot_product(embedding::DOUBLE[], [{c}]::DOUBLE[])".format(
-            c=", ".join(repr(float(x)) for x in cent)
-        )
-        for cent in cents
-    )
+    dots = _cent_dots_sql(cents)
     return (
         f"WITH d AS (SELECT vec_id, embedding, [{dots}] AS dots "
         "FROM embeddings), "
@@ -1967,19 +1958,17 @@ def _knn_ivf_oracle(
     )
 
 
-def _knn_ivf_trained_oracle() -> str | None:
-    """Oracle for the trained-IVF query: centroids come from the numpy
-    replica of the Spark k-means (bit-identical by the 6-decimal
-    rounding protocol), trained on the sf0.01 table — the ONLY scale
-    the driver's correctness gate compares at (the Spark query trains
-    on whatever sf_dir it gets; at any other scale this oracle would
-    not correspond, which is why it is pinned to the gate's scale).
-    Cached so repeated oracle_sql() calls train once; returns None
-    (query falls back to the rows-only check) when the fixture is
-    absent instead of failing every oracle lookup."""
-    global _IVF_TRAINED_ORACLE_CACHE
-    if _IVF_TRAINED_ORACLE_CACHE is not _UNSET:
-        return _IVF_TRAINED_ORACLE_CACHE
+@functools.cache
+def _trained_cents() -> list[list[float]] | None:
+    """Centroids for the two trained-IVF oracles: the numpy replica of
+    the Spark k-means (bit-identical by the 6-decimal rounding
+    protocol), trained on the sf0.01 table — the ONLY scale the
+    driver's correctness gate compares at (the Spark queries train on
+    whatever sf_dir they get; at any other scale these oracles would
+    not correspond, which is why they are pinned to the gate's scale).
+    Trained once per process; None (the queries fall back to the
+    rows-only check) when the fixture is absent, instead of failing
+    every oracle lookup."""
     try:
         import numpy as np
         import pandas as pd
@@ -1989,7 +1978,7 @@ def _knn_ivf_trained_oracle() -> str | None:
         pdf = pd.read_parquet(
             "/root/testdata/sf0.01/embeddings.parquet"
         )
-        cents = kmeans_centroids_local(
+        return kmeans_centroids_local(
             np.stack(pdf["embedding"].to_numpy()),
             n_centroids=16,
             seed=11,
@@ -1997,45 +1986,19 @@ def _knn_ivf_trained_oracle() -> str | None:
             init="kpp",
             ids=pdf["vec_id"].to_numpy(),
         )
-        _IVF_TRAINED_ORACLE_CACHE = _knn_ivf_oracle(cents=cents)
     except (FileNotFoundError, OSError):
-        _IVF_TRAINED_ORACLE_CACHE = None
-    return _IVF_TRAINED_ORACLE_CACHE
+        return None
 
 
-def _neardup_ivf_trained_oracle() -> str | None:
-    """Trained-quantizer variant of the IVF near-dup oracle — same
-    numpy-replica centroid protocol (and the same sf0.01 pinning
-    rationale) as :func:`_knn_ivf_trained_oracle`."""
-    global _ND_IVF_TRAINED_ORACLE_CACHE
-    if _ND_IVF_TRAINED_ORACLE_CACHE is not _UNSET:
-        return _ND_IVF_TRAINED_ORACLE_CACHE
-    try:
-        import numpy as np
-        import pandas as pd
-
-        from dbus_spark.operators.similarity import kmeans_centroids_local
-
-        pdf = pd.read_parquet(
-            "/root/testdata/sf0.01/embeddings.parquet"
+def _cent_dots_sql(cents: list[list[float]]) -> str:
+    """DuckDB list of ``embedding``'s dot product with each centroid,
+    the centroids inlined as literals."""
+    return ", ".join(
+        "list_dot_product(embedding::DOUBLE[], [{c}]::DOUBLE[])".format(
+            c=", ".join(repr(float(x)) for x in cent)
         )
-        cents = kmeans_centroids_local(
-            np.stack(pdf["embedding"].to_numpy()),
-            n_centroids=16,
-            seed=11,
-            n_iter=5,
-            init="kpp",
-            ids=pdf["vec_id"].to_numpy(),
-        )
-        _ND_IVF_TRAINED_ORACLE_CACHE = _neardup_ivf_oracle(cents=cents)
-    except (FileNotFoundError, OSError):
-        _ND_IVF_TRAINED_ORACLE_CACHE = None
-    return _ND_IVF_TRAINED_ORACLE_CACHE
-
-
-_UNSET = object()
-_IVF_TRAINED_ORACLE_CACHE = _UNSET
-_ND_IVF_TRAINED_ORACLE_CACHE = _UNSET
+        for cent in cents
+    )
 
 
 _LANG_SCORES = """
@@ -2059,12 +2022,7 @@ def _semdedup_oracle(
     from dbus_spark.operators.similarity import ivf_centroids
 
     cents = ivf_centroids(n_centroids, 64, seed=11)
-    dots = ", ".join(
-        "list_dot_product(embedding::DOUBLE[], [{c}]::DOUBLE[])".format(
-            c=", ".join(repr(float(x)) for x in cent)
-        )
-        for cent in cents
-    )
+    dots = _cent_dots_sql(cents)
     cnorms = ", ".join(
         repr(float(np.sqrt(np.dot(np.asarray(c), np.asarray(c)))))
         for c in cents
@@ -2132,6 +2090,7 @@ def oracle_sql() -> dict[str, str]:
 
 
 def _oracle_sql_all() -> dict[str, str | None]:
+    cents = _trained_cents()
     return {
         "route_exact": (
             "SELECT event_id, event_type AS ident FROM events "
@@ -2979,10 +2938,14 @@ def _oracle_sql_all() -> dict[str, str | None]:
         "emb_knn_lsh": _knn_lsh_oracle(),
         "emb_neardup_lsh": _neardup_lsh_oracle(),
         "emb_neardup_ivf": _neardup_ivf_oracle(),
-        "emb_neardup_ivf_trained": _neardup_ivf_trained_oracle(),
+        "emb_neardup_ivf_trained": (
+            None if cents is None else _neardup_ivf_oracle(cents=cents)
+        ),
         "emb_neardup_groups": _neardup_groups_oracle(),
         "emb_knn_ivf": _knn_ivf_oracle(),
-        "emb_knn_ivf_trained": _knn_ivf_trained_oracle(),
+        "emb_knn_ivf_trained": (
+            None if cents is None else _knn_ivf_oracle(cents=cents)
+        ),
         "multimodal_frames": (
             # content repeats the 16-byte md5 digest 16x, so every
             # 16-byte-aligned frame IS the digest; frame_fp =

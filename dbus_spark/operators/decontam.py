@@ -119,8 +119,8 @@ def hash_bench_ngrams(
 ) -> "object":
     """Benchmark n-gram set as a SORTED int64 hash array (the
     polynomial-roll scheme shared with the streaming near-dup kernel,
-    ``dedup_stream.ngram_hash_arrays``) for
-    ``streaming_decontam_filter(..., mode='hash')``.  ~8 bytes per
+    ``dedup_stream.ngram_hash_arrays``), the hash arm of
+    :func:`streaming_decontam_filter`.  ~8 bytes per
     gram instead of a Python string — both smaller to ship and ~10x
     cheaper to probe."""
     import numpy as np
@@ -141,7 +141,6 @@ def streaming_decontam_filter(
     text_col: str = "text",
     n: int = 8,
     max_frac: float = 0.0,
-    mode: str = "exact",
 ) -> DataFrame:
     """Streaming-safe decontamination: drop rows whose benchmark
     n-gram overlap fraction exceeds ``max_frac``.
@@ -159,36 +158,47 @@ def streaming_decontam_filter(
     Same verdict per doc as ``ngram_contamination(...)
     .filter(contam_frac > max_frac)`` — pinned by a test.
 
-    ``mode='exact'`` (default, with a frozenset from
-    :func:`collect_bench_ngrams`) matches gram STRINGS — the
-    oracle-parity arm.  ``mode='hash'`` (with the sorted int64 array
-    from :func:`hash_bench_ngrams`) compares polynomial-roll hashes
-    via a vectorized probe — the 100 TB arm (the near-dup kernel
-    lesson: per-row gram-string building dominates; rolling int64
-    hashes through C kernels removes it).  Verdicts agree short of a
-    hash collision (pinned by a test): the token hashes are
-    ``tokenize.token_hashes``, exact on NUL-bearing tokens too, and
-    the verdict is ``tokenize.contamination_verdict``.
-    ``mode='bloom'`` (with the bitset from :func:`bloom_bench_ngrams`)
-    is the giant-exclusion-set arm: ~4.6x smaller closure than the
-    hash array, one-sided error — every doc hash-mode drops,
-    bloom-mode drops (no false PASSES; pinned by a test), plus an
-    FP-rate's worth of clean docs over-dropped."""
+    The arm follows the type of ``bench_ngrams``:
+
+    - a frozenset (or set) of gram strings from
+      :func:`collect_bench_ngrams` matches gram STRINGS — the
+      oracle-parity arm;
+    - a sorted int64 ndarray from :func:`hash_bench_ngrams` compares
+      polynomial-roll hashes via a vectorized probe — the 100 TB arm
+      (the near-dup kernel lesson: per-row gram-string building
+      dominates; rolling int64 hashes through C kernels removes it).
+      Verdicts agree short of a hash collision (pinned by a test): the
+      token hashes are ``tokenize.token_hashes``, exact on NUL-bearing
+      tokens too, and the verdict is ``tokenize.contamination_verdict``;
+    - a ``(bits, m_bits, k)`` tuple from :func:`bloom_bench_ngrams` is
+      the giant-exclusion-set arm: ~4.6x smaller closure than the hash
+      array, one-sided error — every doc the hash arm drops, the bloom
+      arm drops (no false PASSES; pinned by a test), plus an FP-rate's
+      worth of clean docs over-dropped.
+
+    Any other type raises ``TypeError``."""
+    from functools import partial
+
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     bench = bench_ngrams  # closure capture; ships once per executor
-    if mode not in ("exact", "hash", "bloom"):
-        raise ValueError(f"mode must be exact|hash|bloom: {mode}")
-
-    if mode in ("hash", "bloom"):
-        from dbus_spark.operators.dedup_stream import ngram_hash_arrays
-
-        probe = (
-            (lambda g: np.isin(g, bench))
-            if mode == "hash"
-            else (lambda g: bloom_probe(g, bench))
+    if isinstance(bench, (frozenset, set)):
+        probe = None
+    elif isinstance(bench, np.ndarray) and bench.dtype == np.int64:
+        probe = partial(np.isin, test_elements=bench)
+    elif isinstance(bench, tuple) and len(bench) == 3:
+        probe = partial(bloom_probe, bloom=bench)
+    else:
+        raise TypeError(
+            "bench_ngrams must be a frozenset of gram strings "
+            "(collect_bench_ngrams), a sorted int64 ndarray "
+            "(hash_bench_ngrams) or a (bits, m_bits, k) tuple "
+            f"(bloom_bench_ngrams), not {type(bench).__name__}"
         )
+
+    if probe is not None:
+        from dbus_spark.operators.dedup_stream import ngram_hash_arrays
 
         @pandas_udf("boolean")
         def _clean(texts: pd.Series) -> pd.Series:
@@ -328,8 +338,8 @@ def bloom_bench_ngrams(
     bits_per_gram: int = 14,
 ) -> tuple:
     """Benchmark n-gram set as a BLOOM bitset: ``(bits, m_bits, k)``
-    with ``bits`` a packed uint64 array — for
-    ``streaming_decontam_filter(..., mode='bloom')``.
+    with ``bits`` a packed uint64 array, the bloom arm of
+    :func:`streaming_decontam_filter`.
 
     The regime: :func:`hash_bench_ngrams` ships 8 bytes per gram,
     fine for MB-scale eval sets; a full eval-SUITE exclusion list (or

@@ -20,10 +20,10 @@ store and never builds one — pkg/idempotent/repository.go:1-5):
 - state: ``applyInPandasWithState`` over ``pmod(bucket,
   n_state_buckets)`` coarse groups (the ordering operator's
   key-coarsening idiom — a handful of fat state cells instead of one
-  tiny cell per LSH bucket). Each cell holds per-bucket rep
-  signatures as plain numpy arrays, saved, versioned and timed out by
-  the shared keyed-state scaffold (``operators/state.py``: wire
-  format, legacy rule, step contract);
+  tiny cell per LSH bucket). Each cell maps an LSH bucket to its rep
+  set, saved, versioned and timed out by the shared keyed-state
+  scaffold (``operators/state.py``: wire format, legacy rule, step
+  contract);
 - verdicts: each band row comes back with ``is_dup``; a doc is a
   duplicate iff ANY band says so. All of a doc's band rows are
   produced from the same input batch, so the OR is a plain batch
@@ -52,6 +52,18 @@ Recall is the banded-LSH bound (same bands as the batch ladder); the
 decision rule (signature agreement ≥ ``min_est_jaccard``) is the
 ``lsh_estimated_jaccard`` estimator, sketch-resident — text is never
 re-read from state.
+
+State, shared with the SemDeDup twin (``streaming_semdedup_filter``):
+
+- a rep set is one triple ``(ids, mat, last)``: the reps' ids, one
+  feature row each (an int64 signature or a unit float32 vector) and
+  the watermark-clock ms of each rep's last sighting. ``_expire`` is
+  the one TTL rule, ``_load_reps``/``_dump_reps`` the one reshape to
+  and from the saved form (``mat`` flattened);
+- ``_admit`` is the one admission kernel: rows vs reps, the blockwise
+  in-batch pass and the capped append above. A twin supplies only its
+  near-duplicate predicate ``hits(A, B)`` and its intake (the MinHash
+  cell calls it once per bucket, the SemDeDup cell once per cell).
 """
 
 from __future__ import annotations
@@ -170,29 +182,115 @@ def minhash_sigs_pandas(
     return out
 
 
+# ---------------------------------------------------------------------------
+# The rep set and its admission kernel, shared by both twins
+# ---------------------------------------------------------------------------
+
+# rows per block of the in-batch novel-vs-novel pass
+_CHUNK = 256
+
+
+def _load_reps(raw: tuple) -> tuple:
+    ids, mat, last = raw
+    return ids, mat.reshape(len(ids), -1), last
+
+
+def _dump_reps(reps: tuple) -> tuple:
+    ids, mat, last = reps
+    return ids, np.ascontiguousarray(mat).reshape(-1), last
+
+
+def _expire(reps: tuple, cutoff_ms: int) -> "tuple | None":
+    """Drop the reps last sighted before ``cutoff_ms``; None if none
+    is left."""
+    ids, mat, last = reps
+    keep = last >= cutoff_ms
+    if not keep.any():
+        return None
+    return reps if keep.all() else (ids[keep], mat[keep], last[keep])
+
+
+def _admit(
+    X: np.ndarray,
+    ids: np.ndarray,
+    ts_ms: np.ndarray,
+    reps: "tuple | None",
+    hits,
+    max_reps: int,
+) -> "tuple[np.ndarray, tuple | None]":
+    """First-arrived-wins admission of one rep set's rows, given in
+    arrival order (``X`` one feature row per row). ``hits(A, B)`` is
+    the twin's near-duplicate predicate, a ``len(A) x len(B)`` bool
+    matrix. A row is a dup iff it hits an existing rep (refreshing
+    that rep's last sighting) or a SURVIVING earlier row of the batch;
+    the survivors join the reps up to ``max_reps`` (overflow is not
+    stored: under-dedup, never over-drop). Returns ``(dup, reps')``,
+    ``reps'`` None when it holds no rep."""
+    if reps is None:
+        reps = (np.empty(0, np.int64), X[:0], np.empty(0, np.int64))
+    r_ids, r_mat, r_last = reps
+    dup = np.zeros(len(X), dtype=bool)
+    # ALL rows vs existing reps in one broadcast compare (the
+    # steady-state path: on a re-ingest every row hits here); the
+    # residual python loop only walks rows that matched NO existing
+    # rep, because in-batch dup decisions depend on which earlier rows
+    # survived. Measured: the per-row form was ~4s/batch on the
+    # re-ingest fixture, this is ~0.
+    if len(r_mat):
+        hit = hits(X, r_mat)
+        hit_mask = hit.any(axis=1)
+        if hit_mask.any():
+            upd = np.where(
+                hit[hit_mask], ts_ms[hit_mask, None], np.int64(0)
+            ).max(axis=0)
+            r_last = np.maximum(r_last, upd)
+            dup[hit_mask] = True
+        residual = np.flatnonzero(~hit_mask)
+    else:
+        residual = np.arange(len(X))
+    # in-batch novel-vs-novel pass, BLOCKWISE (r5): the per-row python
+    # form was O(novel^2) with a numpy call per row — a degenerate
+    # first batch funneling one hot bucket crawled. Blocks keep the
+    # forward data dependency (a row is dup iff it hits a SURVIVING
+    # earlier row) while doing all compares as two vectorized ops per
+    # block: block-vs-accumulated-novel, then a precomputed in-block
+    # triangle walked with plain bool lookups.
+    novel = np.empty(0, dtype=np.int64)
+    for c0 in range(0, len(residual), _CHUNK):
+        chunk = residual[c0 : c0 + _CHUNK]
+        cs = X[chunk]
+        if len(novel):
+            hit_prev = hits(cs, X[novel]).any(axis=1)
+        else:
+            hit_prev = np.zeros(len(chunk), dtype=bool)
+        am = hits(cs, cs)
+        keep_local: list[int] = []
+        for j in range(len(chunk)):
+            if hit_prev[j] or (keep_local and am[j, keep_local].any()):
+                dup[chunk[j]] = True
+            else:
+                keep_local.append(j)
+        if keep_local:
+            novel = np.concatenate([novel, chunk[keep_local]])
+    take = novel[: max(0, max_reps - len(r_ids))]
+    if len(take):
+        r_ids = np.concatenate([r_ids, ids[take]])
+        r_mat = np.vstack([r_mat, X[take]])
+        r_last = np.concatenate([r_last, ts_ms[take]])
+    return dup, ((r_ids, r_mat, r_last) if len(r_ids) else None)
+
+
+# ---------------------------------------------------------------------------
+# Streaming MinHash near-dup filter
+# ---------------------------------------------------------------------------
+
+
 def _load_cell(raw: list) -> dict:
-    return {
-        b: (ids, mat.reshape(len(ids), -1), last)
-        for b, ids, mat, last in raw
-    }
+    return {b: _load_reps(reps) for b, *reps in raw}
 
 
 def _dump_cell(cell: dict) -> list:
-    return [
-        (b, ids, np.ascontiguousarray(mat).reshape(-1), last)
-        for b, (ids, mat, last) in cell.items()
-    ]
-
-
-def _prune_cell(cell: dict, cutoff_ms: int) -> dict:
-    out = {}
-    for b, (ids, mat, last) in cell.items():
-        keep = last >= cutoff_ms
-        if keep.all():
-            out[b] = (ids, mat, last)
-        elif keep.any():
-            out[b] = (ids[keep], mat[keep], last[keep])
-    return out
+    return [(b, *_dump_reps(reps)) for b, reps in cell.items()]
 
 
 def _make_cell_fn(
@@ -202,8 +300,16 @@ def _make_cell_fn(
     max_reps: int,
     ts_col: str = "ts",
 ):
+    def hits(A, B):  # signature agreement, the lsh_estimated_jaccard rule
+        return (A[:, None, :] == B[None, :, :]).mean(axis=2) >= min_est
+
     def step(cell, batch, wm):
-        cell = _prune_cell(cell, wm - rep_ttl_ms)
+        cutoff = wm - rep_ttl_ms
+        cell = {
+            b: kept
+            for b, reps in cell.items()
+            if (kept := _expire(reps, cutoff)) is not None
+        }
         if batch is None:
             return (cell or None), [], wm + rep_ttl_ms
         # earlier-arrived order: (ts, id) — ties break on id
@@ -239,80 +345,14 @@ def _make_cell_fn(
         for u_i in range(len(uniq)):
             b = uniq[u_i]
             rows = order[bounds[u_i]:bounds[u_i + 1]]
-            reps = cell.get(b)
+            dup[rows], reps = _admit(
+                sig_mat[rows], ids[rows], ts_ms[rows], cell.get(b), hits,
+                max_reps,
+            )
             if reps is not None:
-                r_ids, r_mat, r_last = reps
+                cell[b] = reps
             else:
-                r_ids = np.array([], dtype=np.int64)
-                r_mat = np.empty((0, sig_mat.shape[1]), dtype=np.int64)
-                r_last = np.array([], dtype=np.int64)
-            # ALL rows vs existing reps in one broadcast compare (the
-            # steady-state path: on a re-ingest every row hits here);
-            # the residual python loop only walks rows that matched NO
-            # existing rep, because in-batch dup decisions depend on
-            # which earlier rows survived. Measured: the per-row form
-            # was ~4s/batch on the re-ingest fixture, this is ~0.
-            if len(r_mat):
-                agree = (
-                    sig_mat[rows][:, None, :] == r_mat[None, :, :]
-                ).mean(axis=2)
-                hit_mask = (agree >= min_est).any(axis=1)
-                if hit_mask.any():
-                    matched = agree[hit_mask] >= min_est  # nb_hit × r
-                    upd = np.where(
-                        matched, ts_ms[rows][hit_mask, None], np.int64(0)
-                    ).max(axis=0)
-                    r_last = np.maximum(r_last, upd)
-                    dup[rows[hit_mask]] = True
-                residual = rows[~hit_mask]
-            else:
-                residual = rows
-            # in-batch novel-vs-novel pass, BLOCKWISE (r5): the per-row
-            # python form was O(novel^2) with a numpy call per row — a
-            # degenerate first batch funneling one hot bucket crawled.
-            # Chunks of 256 keep the forward data dependency (a row is
-            # dup iff it matches a SURVIVING earlier row) while doing
-            # all signature compares as two vectorized ops per chunk:
-            # chunk-vs-accumulated-novel, then a precomputed in-chunk
-            # triangle walked with plain bool lookups.
-            novel_rows = np.empty(0, dtype=residual.dtype)
-            _CHUNK = 256
-            for c0 in range(0, len(residual), _CHUNK):
-                chunk = residual[c0 : c0 + _CHUNK]
-                cs = sig_mat[chunk]
-                if len(novel_rows):
-                    a = (
-                        cs[:, None, :] == sig_mat[novel_rows][None, :, :]
-                    ).mean(axis=2)
-                    hit_prev = (a >= min_est).any(axis=1)
-                else:
-                    hit_prev = np.zeros(len(chunk), dtype=bool)
-                am = (cs[:, None, :] == cs[None, :, :]).mean(
-                    axis=2
-                ) >= min_est
-                keep_local: list[int] = []
-                for j in range(len(chunk)):
-                    if hit_prev[j] or (
-                        keep_local and am[j, keep_local].any()
-                    ):
-                        dup[chunk[j]] = True
-                    else:
-                        keep_local.append(j)
-                if keep_local:
-                    novel_rows = np.concatenate(
-                        [novel_rows, chunk[keep_local]]
-                    )
-            if len(novel_rows):
-                room = max(0, max_reps - len(r_ids))
-                take = novel_rows[:room]  # overflow: under-dedup, documented
-                if len(take):
-                    r_ids = np.concatenate([r_ids, ids[take]])
-                    r_mat = np.vstack([r_mat, sig_mat[take]])
-                    r_last = np.concatenate([r_last, ts_ms[take]])
-            if len(r_ids):
-                cell[b] = (r_ids, r_mat, r_last)
-            elif b in cell:
-                del cell[b]
+                cell.pop(b, None)
 
         # emit only rows that can change the resolve outcome: the
         # band-0 row (payload carrier — guarantees every doc appears)
@@ -470,24 +510,6 @@ def neardup_filter_foreach_batch(sink_fn, id_col: str = "doc_id"):
 # ---------------------------------------------------------------------------
 
 
-def _empty_emb_cell() -> tuple:
-    return (
-        np.array([], dtype=np.int64),
-        np.empty((0, 0), dtype=np.float32),
-        np.array([], dtype=np.int64),
-    )
-
-
-def _load_emb_cell(raw: tuple) -> tuple:
-    ids, mat, last = raw
-    return ids, mat.reshape(len(ids), -1), last
-
-
-def _dump_emb_cell(cell: tuple) -> tuple:
-    ids, mat, last = cell
-    return ids, np.ascontiguousarray(mat).reshape(-1), last
-
-
 def _make_emb_cell_fn(
     out_cols: list[str],
     threshold: float,
@@ -498,18 +520,14 @@ def _make_emb_cell_fn(
 ):
     thr = np.float32(threshold)
 
-    def step(cell, batch, wm):
-        r_ids, r_mat, r_last = cell
-        keep = r_last >= wm - rep_ttl_ms
-        if not keep.all():
-            r_ids, r_mat, r_last = r_ids[keep], r_mat[keep], r_last[keep]
+    def hits(A, B):  # cosine of unit float32 vectors
+        return (A @ B.T) >= thr
 
-        def result(emits):
-            kept = (r_ids, r_mat, r_last) if len(r_ids) else None
-            return kept, emits, wm + rep_ttl_ms
-
+    def step(reps, batch, wm):
+        if reps is not None:
+            reps = _expire(reps, wm - rep_ttl_ms)
         if batch is None:
-            return result([])
+            return reps, [], wm + rep_ttl_ms
         # earlier-arrived order, then collapse same-id redeliveries
         # inside the batch (an id names content; cross-batch copies
         # match their own rep at cosine ~1.0)
@@ -527,69 +545,25 @@ def _make_emb_cell_fn(
             null_rows = batch.loc[nullv, out_cols].copy()
             batch = batch.loc[~nullv].reset_index(drop=True)
             if not len(batch):
-                return result([null_rows])
+                return reps, [null_rows], wm + rep_ttl_ms
         else:
             null_rows = None
         V = np.stack(batch["_sdvec"].to_numpy()).astype(np.float32)
         nrm = np.linalg.norm(V, axis=1, keepdims=True)
         nrm[nrm == 0] = 1.0  # zero vectors: cos 0 vs all — always novel
         V /= nrm
-        if r_mat.size == 0:
-            r_mat = np.empty((0, V.shape[1]), dtype=np.float32)
         ts_ms = (
             batch[ts_col].to_numpy().astype("datetime64[ms]").astype(np.int64)
         )
-        dup = np.zeros(len(batch), dtype=bool)
-        # steady-state: every row vs existing reps in one matmul
-        if len(r_mat):
-            sims = V @ r_mat.T
-            hit = sims >= thr
-            hit_mask = hit.any(axis=1)
-            if hit_mask.any():
-                upd = np.where(
-                    hit[hit_mask], ts_ms[hit_mask, None], np.int64(0)
-                ).max(axis=0)
-                r_last = np.maximum(r_last, upd)
-                dup[hit_mask] = True
-            residual = np.flatnonzero(~hit_mask)
-        else:
-            residual = np.arange(len(batch))
-        # in-batch novel-vs-novel, blockwise (forward data dependency:
-        # a row is dup iff it matches a SURVIVING earlier row) — the
-        # text filter's chunk idiom with matmuls for agreement
-        novel = np.empty(0, dtype=np.int64)
-        _CHUNK = 256
-        for c0 in range(0, len(residual), _CHUNK):
-            chunk = residual[c0 : c0 + _CHUNK]
-            cs = V[chunk]
-            if len(novel):
-                hit_prev = ((cs @ V[novel].T) >= thr).any(axis=1)
-            else:
-                hit_prev = np.zeros(len(chunk), dtype=bool)
-            am = (cs @ cs.T) >= thr
-            keep_local: list[int] = []
-            for j in range(len(chunk)):
-                if hit_prev[j] or (keep_local and am[j, keep_local].any()):
-                    dup[chunk[j]] = True
-                else:
-                    keep_local.append(j)
-            if keep_local:
-                novel = np.concatenate([novel, chunk[keep_local]])
-        if len(novel):
-            room = max(0, max_reps - len(r_ids))
-            take = novel[:room]  # overflow: under-dedup, documented
-            if len(take):
-                r_ids = np.concatenate(
-                    [r_ids, batch[id_field].to_numpy()[take]]
-                )
-                r_mat = np.vstack([r_mat, V[take]])
-                r_last = np.concatenate([r_last, ts_ms[take]])
+        dup, reps = _admit(
+            V, batch[id_field].to_numpy(), ts_ms, reps, hits, max_reps
+        )
         out = batch.loc[~dup, out_cols]
         if null_rows is not None:
             out = pd.concat([out, null_rows], ignore_index=True)
-        return result([out.copy()])
+        return reps, [out.copy()], wm + rep_ttl_ms
 
-    return callback(step, _empty_emb_cell, _load_emb_cell, _dump_emb_cell)
+    return callback(step, lambda: None, _load_reps, _dump_reps)
 
 
 def streaming_semdedup_filter(

@@ -545,7 +545,6 @@ def lm_quality_filter(
     max_logppl: float,
     oov_lp6: int,
     text_col: str = "text",
-    mode: str = "exact",
 ) -> DataFrame:
     """Streaming-safe LM-perplexity quality cut: keep rows whose
     unigram cross-entropy under a HELD-OUT LM is ``<= max_logppl``
@@ -563,18 +562,22 @@ def lm_quality_filter(
     quality; the batch op emits no row for them so they can never
     exceed the cut — dropping them is a different policy knob).
 
-    ``mode='exact'`` takes the dict from :func:`collect_unigram_lm`
-    (string-keyed, oracle-parity); ``mode='hash'`` takes the arrays
-    from :func:`hash_unigram_lm` (vectorized searchsorted probe, the
-    at-scale arm: ``tokenize.lm_verdict``)."""
+    The arm follows the type of ``lm``: the dict from
+    :func:`collect_unigram_lm` is the string-keyed, oracle-parity arm;
+    the ``(hashes, lp6)`` tuple from :func:`hash_unigram_lm` is the
+    at-scale arm (vectorized searchsorted probe,
+    ``tokenize.lm_verdict``).  Any other type raises ``TypeError``."""
     from pyspark.sql.functions import pandas_udf
 
-    if mode not in ("exact", "hash"):
-        raise ValueError(f"mode must be exact|hash: {mode}")
+    if not isinstance(lm, (dict, tuple)):
+        raise TypeError(
+            "lm must be a {token: lp6} dict (collect_unigram_lm) or a "
+            f"(hashes, lp6) tuple (hash_unigram_lm), not {type(lm).__name__}"
+        )
     oov = int(oov_lp6)
     cut = float(max_logppl)
 
-    if mode == "hash":
+    if isinstance(lm, tuple):
 
         @pandas_udf("boolean")
         def _keep(texts: pd.Series) -> pd.Series:

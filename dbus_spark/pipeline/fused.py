@@ -51,7 +51,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from dbus_spark.functions.vectorized import doc_enrich_v
 from dbus_spark.operators.dedup_stream import (
@@ -259,7 +259,3 @@ def drain_fused(qa, qb, qc=None):
         qc.processAllAvailable()
         qc.stop()
         qc.awaitTermination(120)
-
-
-def fused_output(spark: SparkSession, out_sink: IdempotentKeyedSink) -> DataFrame:
-    return out_sink.read(spark)

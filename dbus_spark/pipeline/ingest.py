@@ -154,7 +154,6 @@ def doc_policy_stage(
     bench_ngrams=None,
     ngram_n: int = 8,
     max_contam_frac: float = 0.0,
-    decontam_mode: str = "exact",
     mixture_rates: "dict[str, float] | None" = None,
     strata_col: str = "lang",
     sample_seed: int = 0,
@@ -163,7 +162,6 @@ def doc_policy_stage(
     lm=None,
     lm_max_logppl: float | None = None,
     lm_oov_lp6: int | None = None,
-    lm_mode: str = "exact",
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -198,12 +196,12 @@ def doc_policy_stage(
 
         out = lm_quality_filter(
             out, lm, max_logppl=lm_max_logppl, oov_lp6=lm_oov_lp6,
-            text_col=text_col, mode=lm_mode,
+            text_col=text_col,
         )
     if bench_ngrams is not None:
         out = streaming_decontam_filter(
             out, bench_ngrams, text_col=text_col, n=ngram_n,
-            max_frac=max_contam_frac, mode=decontam_mode,
+            max_frac=max_contam_frac,
         )
     if redact:
         out = redact_pii(out, text_col=text_col)

@@ -239,7 +239,7 @@ def test_hash_mode_matches_exact_mode(spark):
         b = {
             r.doc_id
             for r in streaming_decontam_filter(
-                docs, hashed, n=3, max_frac=max_frac, mode="hash"
+                docs, hashed, n=3, max_frac=max_frac
             ).select("doc_id").collect()
         }
         assert a == b, max_frac
@@ -271,7 +271,7 @@ def test_fused_ingest_policy_matches_staged(spark, tmp_path):
     staged = {
         r.doc_id
         for r in doc_ingest_stream(
-            streaming_decontam_filter(df, grams, n=3, mode="hash"),
+            streaming_decontam_filter(df, grams, n=3),
             quality_min=0.0, dedup=False,
         ).select("doc_id").collect()
     }
@@ -299,10 +299,10 @@ def test_bloom_mode_never_passes_contaminated(spark):
     hb = hash_bench_ngrams(bench, n=8)
     bb = bloom_bench_ngrams(bench, n=8)
     kept_h = {r.doc_id for r in
-              streaming_decontam_filter(df, hb, n=8, mode="hash")
+              streaming_decontam_filter(df, hb, n=8)
               .select("doc_id").collect()}
     kept_b = {r.doc_id for r in
-              streaming_decontam_filter(df, bb, n=8, mode="bloom")
+              streaming_decontam_filter(df, bb, n=8)
               .select("doc_id").collect()}
     assert kept_b <= kept_h          # no false passes, ever
     assert len(kept_h) > 0           # the test corpus has clean docs
@@ -379,8 +379,8 @@ def test_fused_ingest_policy_lm_matches_staged(spark):
         r.doc_id
         for r in doc_ingest_stream(
             streaming_decontam_filter(
-                lm_quality_filter(df, lm, cut, oov_lp6=oov, mode="hash"),
-                grams, n=3, mode="hash",
+                lm_quality_filter(df, lm, cut, oov_lp6=oov),
+                grams, n=3,
             ),
             quality_min=0.0, dedup=False,
         ).select("doc_id").collect()
@@ -396,3 +396,16 @@ def test_fused_ingest_policy_lm_matches_staged(spark):
         ).select("doc_id").collect()
     }
     assert fused < no_lm
+
+
+def test_map_side_filters_refuse_unknown_input_type(spark):
+    """The decontam and LM filters pick their arm from the type of the
+    closure input; a plain list is none of the accepted forms."""
+    from dbus_spark.operators.decontam import streaming_decontam_filter
+    from dbus_spark.operators.text import lm_quality_filter
+
+    df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(TypeError, match="hash_bench_ngrams"):
+        streaming_decontam_filter(df, ["a b c"], n=3)
+    with pytest.raises(TypeError, match="hash_unigram_lm"):
+        lm_quality_filter(df, [("a", -1)], 3.0, oov_lp6=-10)

@@ -470,3 +470,110 @@ def test_minhash_sketch_of_nul_text_is_batch_independent():
     )
     assert list(alone[0]) == list(after[1])
     assert list(after[0]) != list(after[1])
+
+
+def _admit_reference(X, ids, ts_ms, reps, hits, max_reps):
+    """First-arrived-wins, one row at a time: a row is a dup iff it
+    hits an existing rep (refreshing that rep's last sighting) or a
+    SURVIVING earlier row of the batch; the survivors then join the
+    reps in arrival order, up to ``max_reps``."""
+    r_ids, r_mat, r_last = (list(a) for a in reps)
+    n_old = len(r_ids)
+    dup, survivors = [], []
+    for i in range(len(X)):
+        old = np.flatnonzero(hits(X[i : i + 1], np.stack(r_mat[:n_old]))[0])
+        for k in old:
+            r_last[k] = max(r_last[k], ts_ms[i])
+        prev = hits(X[i : i + 1], X[survivors])[0].any()
+        dup.append(bool(len(old)) or bool(prev))
+        if not dup[-1]:
+            survivors.append(i)
+    for i in survivors[: max(0, max_reps - n_old)]:
+        r_ids.append(ids[i])
+        r_mat.append(X[i])
+        r_last.append(ts_ms[i])
+    return np.array(dup), np.array(r_ids), np.stack(r_mat), np.array(r_last)
+
+
+def _planted_rows(rng, fresh, chain, n=700, n_old=20):
+    """``n`` fresh rows plus ``n_old`` existing reps, with planted
+    chains ``a -> b -> c`` (b hits a, c hits b but not a) at gaps
+    inside and across 256-row blocks, some starting at an existing
+    rep, and exact copies of existing reps."""
+    X, old = fresh(n), fresh(n_old)
+    for k, p in enumerate(range(0, n - 610, 12)):
+        gap = 3 if k % 2 else 300
+        a, b, c = chain()
+        if k % 3 == 0:  # chain from an existing rep: b drops, c stays
+            old[k % n_old] = a
+            X[p], X[p + gap] = b, c
+        else:
+            X[p], X[p + gap], X[p + 2 * gap] = a, b, c
+    for p in range(5, n, 37):
+        X[p] = old[p % n_old]
+    return X, old
+
+
+@pytest.mark.parametrize("kind", ["minhash", "embedding"])
+def test_admit_matches_sequential_reference(kind):
+    """The admission kernel both streaming dedup twins share equals a
+    row-by-row reference on batches of more than 256 residual rows,
+    with existing reps and with a cap that overflows: same dup mask,
+    same rep ids, rows and last sightings."""
+    from dbus_spark.operators.dedup_stream import _CHUNK, _admit
+
+    rng = np.random.default_rng(3)
+    if kind == "minhash":
+        h = 16
+
+        def fresh(k):
+            return rng.integers(0, 2**31, size=(k, h)).astype(np.int64)
+
+        def chain():  # agreement a~b 10/16, b~c 10/16, a~c 4/16
+            a = fresh(1)[0]
+            b = a.copy()
+            b[:6] = fresh(1)[0][:6]
+            c = b.copy()
+            c[6:12] = fresh(1)[0][6:12]
+            return a, b, c
+
+        def hits(A, B):
+            return (A[:, None, :] == B[None, :, :]).mean(axis=2) >= 0.5
+
+    else:
+        d = 64
+
+        def fresh(k):
+            V = rng.normal(size=(k, d)).astype(np.float32)
+            return V / np.linalg.norm(V, axis=1, keepdims=True)
+
+        def chain():  # cos a~b 0.83, b~c 0.83, a~c 0.36
+            u, w = np.linalg.qr(rng.normal(size=(d, 2)))[0].T
+            return [
+                (np.cos(t) * u + np.sin(t) * w).astype(np.float32)
+                for t in (0.0, 0.6, 1.2)
+            ]
+
+        def hits(A, B):
+            return (A @ B.T) >= np.float32(0.7)
+
+    X, old = _planted_rows(rng, fresh, chain)
+    n = len(X)
+    ids = np.arange(1000, 1000 + n, dtype=np.int64)
+    ts_ms = 10**12 + 1000 * np.arange(n, dtype=np.int64)
+    reps = (
+        np.arange(len(old), dtype=np.int64),
+        old,
+        np.full(len(old), 10**12 - 5000, dtype=np.int64),
+    )
+    for max_reps in (len(old) + 300, 10**6):
+        dup, got = _admit(X, ids, ts_ms, reps, hits, max_reps)
+        want_dup, *want = _admit_reference(X, ids, ts_ms, reps, hits, max_reps)
+        assert (dup == want_dup).all()
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype and (g == w).all()
+        # three blocks of residual rows at least, and a cap overflow
+        n_survivors = n - dup.sum()
+        assert dup.any() and n_survivors > max(2 * _CHUNK, 300)
+        assert len(got[0]) == min(max_reps, len(old) + n_survivors)
+        assert (got[2][: len(old)] > reps[2]).any()  # refreshed sightings

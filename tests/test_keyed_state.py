@@ -334,7 +334,7 @@ _ADAPTERS = {
     "cep_funnel": (pd.DataFrame, S.to_columns),
     "cep_quantified": (pd.DataFrame, S.to_columns),
     "neardup": (dedup_stream._load_cell, dedup_stream._dump_cell),
-    "semdedup": (dedup_stream._load_emb_cell, dedup_stream._dump_emb_cell),
+    "semdedup": (dedup_stream._load_reps, dedup_stream._dump_reps),
     "asof_join": (pd.DataFrame, S.to_columns),
     "token_budget": (int, int),
     "shard_assign": (int, int),

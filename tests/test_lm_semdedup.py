@@ -174,7 +174,7 @@ def test_lm_filter_hash_mode_matches_exact(spark):
         ke = {r.doc_id for r in lm_quality_filter(
             raw, collect_unigram_lm(lm), cut, oov_lp6=oov).collect()}
         kh = {r.doc_id for r in lm_quality_filter(
-            raw, hash_unigram_lm(lm), cut, oov_lp6=oov, mode="hash"
+            raw, hash_unigram_lm(lm), cut, oov_lp6=oov
         ).collect()}
         assert ke == kh, cut
 

@@ -193,7 +193,7 @@ def test_emb_cell_state_format_versioned():
     wire-format contract the ordering/minhash cells already pin."""
     import pickle
 
-    from dbus_spark.operators.dedup_stream import _load_emb_cell
+    from dbus_spark.operators.dedup_stream import _load_reps
     from dbus_spark.operators.state import FORMAT_V1 as _STATE_FMT_V1
     from dbus_spark.operators.state import decode
 
@@ -209,7 +209,7 @@ def test_emb_cell_state_format_versioned():
     tagged = FakeState(_STATE_FMT_V1 + pickle.dumps(payload, protocol=5))
     legacy = FakeState(pickle.dumps(payload, protocol=5))
     for st in (tagged, legacy):
-        i2, m2, l2 = _load_emb_cell(decode(st.get[0]))
+        i2, m2, l2 = _load_reps(decode(st.get[0]))
         assert (i2 == ids).all() and (l2 == last).all()
         assert m2.shape == (2, 4) and (m2 == mat).all()
 
